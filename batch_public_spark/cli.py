@@ -173,12 +173,20 @@ def main(argv: list[str] | None = None) -> int:
             test_only=args.test,
             submit_only=async_mode and not args.test,
         )
+        # Blocking runs return the parse stage lazily; writing it is what
+        # runs the LLM and parse work the ledger already calls completed.
+        n_parsed = None
+        if result.parsed is not None:
+            path = os.path.join(args.output_dir, "parsed", f"{table}_{result.batch_id}")
+            result.parsed.write.parquet(path)
+            n_parsed = spark.read.parquet(path).count()
         print(json.dumps({
             "table": table,
             "batch_id": result.batch_id,
             "n_input": result.n_input,
             "n_requests": result.n_requests,
             "jsonl_path": result.jsonl_path,
+            "n_parsed": n_parsed,
             "skipped_reason": result.skipped_reason,
             "async": async_mode,
         }))

@@ -10,8 +10,8 @@ Families implemented (each designed around its 100 TB shuffle story):
   small Hamming distance. Signature build is one aggregation-free pass.
 - **N-gram Jaccard** — exact verification on candidate pairs (used as the
   verifier behind MinHash candidates; or standalone on bounded subsets).
-- **Embedding near-dup / ANN** — brute-force cosine (broadcast the small
-  side) and random-hyperplane LSH bucketing for the at-scale path.
+- **Embedding near-dup / ANN** — blocked-GEMM near-dup pairs, and one
+  map-side GEMM top-k kernel behind brute-force, LSH and IVF search.
 
 Everything is DataFrame-native (higher-order array functions, xxhash64,
 joins); no Python in the row path.
@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from batch_public_spark.operators.textops import normalized_text
+from batch_public_spark import util
 
 # ---------------------------------------------------------------------------
 # Shingles + exact Jaccard
@@ -670,6 +671,16 @@ def fused_cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
 # any legitimate sample.
 _CONTROL_PLANE_MAX_ROWS = 10_000
 
+# Per-task scratch ceiling of the top-k kernel. One (corpus row, query)
+# cell costs at most 32 bytes while a batch is scored: the float64 GEMM
+# output, its rounded copy and the candidate-mask temporaries. A batch
+# scores as many queries at a time as fit; the rest follow in slices.
+_TOPK_SCRATCH_BYTES = 64 << 20
+_TOPK_CELL_BYTES = 32
+
+# Seed of the engine's one hyperplane family (see _hyperplanes).
+_HYPERPLANE_SEED = 101
+
 
 def _collect_control_plane(df: DataFrame, what: str, cap: int = _CONTROL_PLANE_MAX_ROWS):
     """Collect a bounded control-plane frame (ANN query sample, centroid
@@ -689,6 +700,152 @@ def _collect_control_plane(df: DataFrame, what: str, cap: int = _CONTROL_PLANE_M
     return rows
 
 
+def _matrix(vecs) -> np.ndarray:
+    """Stack vectors as float64 rows; float32 widens exactly, as the
+    per-element ``cast("double")`` of the expression forms does."""
+    return np.vstack(vecs).astype(np.float64) if len(vecs) else np.empty((0, 0))
+
+
+def _unit_rows(m: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit norm; zero-norm rows stay zero, so they score
+    0.0 against everything (cosine()'s guard)."""
+    norms = np.linalg.norm(m, axis=1)
+    out = np.zeros_like(m)
+    nz = norms > 0
+    out[nz] = m[nz] / norms[nz, None]
+    return out
+
+
+def _rounded_sims(a_unit: np.ndarray, b_unit: np.ndarray, round_sim: int) -> np.ndarray:
+    """Cosines of every ``a`` row against every ``b`` row (one GEMM),
+    rounded half-away-from-zero at ``round_sim`` decimals — the F.round /
+    DuckDB ROUND rule (np.round would be half-to-even). In-place passes;
+    the trailing +0.0 turns copysign's -0.0 into F.round's +0.0."""
+    sims = a_unit @ b_unit.T
+    scale = 10.0**round_sim
+    r = np.abs(sims)
+    r *= scale
+    r += 0.5
+    np.floor(r, out=r)
+    np.copysign(r, sims, out=r)
+    r /= scale
+    r += 0.0
+    return r
+
+
+def _query_side(queries: DataFrame, id_col: str, vec_col: str, what: str):
+    """Collect the bounded query sample: ``(ids, float64 matrix)``."""
+    rows = _collect_control_plane(
+        valid_vectors(queries, vec_col).select(id_col, vec_col), what
+    )
+    return [r[0] for r in rows], _matrix([r[1] for r in rows])
+
+
+def _no_neighbors(vectors: DataFrame, id_col: str) -> DataFrame:
+    id_t = vectors.schema[id_col].dataType.simpleString()
+    return vectors.sparkSession.createDataFrame(
+        [], f"query_id {id_t}, neighbor_id {id_t}, sim double, rank int"
+    )
+
+
+def _gemm_topk(
+    vectors: DataFrame,
+    q_ids: list,
+    qmat: np.ndarray,
+    candidates=None,
+    *,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    round_sim: int,
+) -> DataFrame:
+    """The ANN family's one top-k kernel: ``(query_id, neighbor_id, sim,
+    rank)`` for the k nearest corpus rows of each query by cosine.
+
+    Shape: partition-local pruning, then a global merge. Building the plan
+    collects the bounded query side (``_query_side``; IVF also collects
+    its centroid list) to the driver; it ships in a ``mapInPandas``
+    closure. Each corpus Arrow batch scores against the queries with one
+    numpy GEMM per query slice (slices keep a task's scratch under
+    ``_TOPK_SCRATCH_BYTES``) and keeps a running per-query top-k, so a
+    task emits at most K·k rows however many corpus rows it scanned. The
+    corpus is never shuffled or amplified; the only exchange is the final
+    ``row_number`` merge of ≤ K·k·n_tasks rows.
+
+    ``candidates(m, lo, hi)`` narrows the search: given a batch's float64
+    vector matrix it returns the ``(rows × (hi - lo))`` mask of rows that
+    may pair with queries ``lo..hi-1``. Brute force passes none; LSH
+    passes its bucket match, IVF its probed inverted lists.
+
+    Parity discipline (what makes the GEMM results hash-equal to the
+    expression/DuckDB cosine): float32 widens to float64 exactly; sims
+    are rounded half-away-from-zero at ``round_sim`` decimals BEFORE any
+    ranking, which absorbs GEMM-vs-fold accumulation-order noise; -0.0
+    normalizes to +0.0; zero-norm vectors score 0.0; a query never
+    neighbors its own id; per-task selection and the final window use the
+    identical (sim DESC, neighbor_id ASC) total order, so the global top-k
+    equals the top-k of the unioned per-task top-ks exactly."""
+    if not q_ids:
+        return _no_neighbors(vectors, id_col)
+    util.ensure_workers_can_import(vectors.sparkSession)  # closure uses this module
+    id_t = vectors.schema[id_col].dataType.simpleString()
+    qunit = _unit_rows(qmat)
+    nq = len(q_ids)
+
+    def top(s, i):
+        if len(s) <= k:
+            return s, i
+        try:
+            order = np.lexsort((i, -s))  # s DESC, id ASC
+        except TypeError:  # non-numeric ids (object dtype)
+            order = np.array(sorted(range(len(s)), key=lambda j: (-s[j], i[j])))
+        order = order[:k]
+        return s[order], i[order]
+
+    def _task_topk(batches):
+        best: list = [None] * nq  # per query: (sims, ids) running top-k
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            ids = pdf[id_col].to_numpy()
+            m = _matrix(pdf[vec_col].to_numpy())
+            munit = _unit_rows(m)
+            step = max(1, _TOPK_SCRATCH_BYTES // (_TOPK_CELL_BYTES * len(ids)))
+            for lo in range(0, nq, step):
+                hi = min(lo + step, nq)
+                allowed = candidates(m, lo, hi) if candidates is not None else None
+                r = _rounded_sims(munit, qunit[lo:hi], round_sim)
+                for j in range(hi - lo):
+                    qi = lo + j
+                    mask = ids != q_ids[qi]
+                    if allowed is not None:
+                        mask &= allowed[:, j]
+                    s, i = r[mask, j], ids[mask]
+                    if best[qi] is not None:
+                        s = np.concatenate([best[qi][0], s])
+                        i = np.concatenate([best[qi][1], i])
+                    best[qi] = top(s, i)
+        out_q: list = []
+        out_n: list = []
+        out_s: list = []
+        for qi, hit in enumerate(best):
+            if hit is None or len(hit[0]) == 0:
+                continue
+            out_q.extend([q_ids[qi]] * len(hit[0]))
+            out_n.extend(list(hit[1]))
+            out_s.extend(list(hit[0]))
+        if out_q:
+            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "sim": out_s})
+
+    scored = (
+        valid_vectors(vectors, vec_col)
+        .select(id_col, vec_col)
+        .mapInPandas(_task_topk, f"query_id {id_t}, neighbor_id {id_t}, sim double")
+    )
+    w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def ann_bruteforce_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -698,114 +855,34 @@ def ann_bruteforce_topk(
     k: int = 5,
     round_sim: int = 6,
 ) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
+    """Exact top-k cosine neighbors for each query vector: the
+    :func:`_gemm_topk` kernel over every corpus row. Every caller passes a
+    FIXED-COUNT query sample (id-threshold or hash-rank top-K), never a
+    corpus fraction; the pre-r14 form ranked the full K×|corpus| pair
+    stream through the window exchange (measured 12 s → ~1 s on the
+    knn-graph audit at sf0.1)."""
+    q_ids, qmat = _query_side(queries, id_col, vec_col, "ann_bruteforce_topk query side")
+    return _gemm_topk(
+        vectors, q_ids, qmat, id_col=id_col, vec_col=vec_col, k=k, round_sim=round_sim
+    )
 
-    Scale shape (r14, the ann_ivf_topk discipline): every caller passes a
-    FIXED-COUNT query sample (id-threshold or hash-rank top-K — bounded
-    constants by construction, never a corpus fraction), so the query set
-    is a control-plane model like the IVF centroid table: collected once
-    (K×dim doubles) and shipped in a ``mapInPandas`` closure. Each corpus
-    Arrow batch scores against ALL queries with one numpy GEMM and keeps a
-    running per-query top-k ordered by (rounded sim DESC, neighbor_id ASC)
-    — so a task emits at most K·k rows no matter how many corpus rows it
-    scanned, and the final window merges ≤ K·k·n_tasks rows instead of
-    ranking the full K×|corpus| pair stream. The corpus is never shuffled
-    and never amplified; the pre-r14 form materialized all K×|corpus|
-    scored pairs through the window exchange and paid an interpreted
-    zip_with/aggregate fold per pair (measured 12 s → ~1 s on the
-    knn-graph audit at sf0.1).
 
-    Parity discipline (verbatim from ann_ivf_topk's GEMM assignment):
-    float32 inputs widen to float64 exactly as the old per-element
-    ``cast("double")`` did; sims are rounded half-away-from-zero at
-    ``round_sim`` decimals (the F.round / DuckDB ROUND rule) BEFORE any
-    ranking, which absorbs GEMM-vs-fold accumulation-order noise; +0.0 is
-    added so a negative sim rounding to zero emits +0.0 like F.round;
-    zero-norm vectors score 0.0 (cosine()'s guard); per-task selection
-    and the final window use the identical (sim DESC, neighbor_id ASC)
-    total order, so global top-k == top-k of unioned per-task top-ks
-    exactly.
-    """
-    vectors = valid_vectors(vectors, vec_col)
-    queries = valid_vectors(queries, vec_col)
-    spark = vectors.sparkSession
-    id_t = vectors.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_t}, neighbor_id {id_t}, sim double"
-    q_rows = _collect_control_plane(
-        queries.select(id_col, vec_col), "ann_bruteforce_topk query side"
-    )  # control plane: K×dim
-    if not q_rows:
-        return spark.createDataFrame([], out_schema + ", rank integer")
-    q_ids = [r[0] for r in q_rows]
-    qmat = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qunit = np.zeros_like(qmat)
-    nzq = qnorm > 0
-    qunit[nzq] = qmat[nzq] / qnorm[nzq, None]
-    scale = 10.0 ** round_sim
-    nq = len(q_ids)
-    kk = k
+def _hyperplanes(dim: int, tables: int, planes: int) -> np.ndarray:
+    """The engine's ONE hyperplane family: a seeded ±1 ``dim ×
+    tables·planes`` matrix, regenerated identically wherever it is needed
+    (no stored model, no broadcast). Corpus and query sides must both
+    bucket through it — mixing hash families yields zero recall."""
+    return np.random.RandomState(_HYPERPLANE_SEED).choice(
+        [-1.0, 1.0], size=(dim, tables * planes)
+    )
 
-    def _task_topk(batches):
-        sims_run = [np.empty(0, dtype=np.float64)] * nq
-        ids_run: list = [None] * nq
 
-        def top(s, i):
-            if len(s) <= kk:
-                return s, i
-            try:
-                order = np.lexsort((i, -s))  # s DESC, id ASC
-            except TypeError:  # non-numeric ids (object dtype)
-                order = np.array(
-                    sorted(range(len(s)), key=lambda j: (-s[j], i[j]))
-                )
-            order = order[:kk]
-            return s[order], i[order]
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            sims = np.zeros((len(ids), nq))
-            nz = norms > 0
-            if nz.any():
-                sims[nz] = (m[nz] / norms[nz, None]) @ qunit.T
-            # half-away-from-zero at round_sim decimals, matching F.round
-            # (the ann_ivf_topk in-place pass); the trailing +0.0
-            # normalizes any -0.0 from copysign to F.round's +0.0.
-            r = np.abs(sims)
-            r *= scale
-            r += 0.5
-            np.floor(r, out=r)
-            np.copysign(r, sims, out=r)
-            r /= scale
-            r += 0.0
-            for qi in range(nq):
-                mask = ids != q_ids[qi]
-                s = np.concatenate([sims_run[qi], r[mask, qi]])
-                i = (
-                    np.concatenate([ids_run[qi], ids[mask]])
-                    if ids_run[qi] is not None
-                    else ids[mask]
-                )
-                sims_run[qi], ids_run[qi] = top(s, i)
-        out_q: list = []
-        out_n: list = []
-        out_s: list = []
-        for qi in range(nq):
-            if ids_run[qi] is None or len(sims_run[qi]) == 0:
-                continue
-            out_q.extend([q_ids[qi]] * len(sims_run[qi]))
-            out_n.extend(list(ids_run[qi]))
-            out_s.extend(list(sims_run[qi]))
-        if out_q:
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "sim": out_s})
-
-    scored = vectors.select(id_col, vec_col).mapInPandas(_task_topk, out_schema)
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+def _signatures(m: np.ndarray, tables: int, planes: int) -> np.ndarray:
+    """``(rows × tables)`` bucket ids: each table's hyperplane-sign bits
+    packed into one int64, all tables from ONE ``(rows × dim) @ (dim ×
+    tables·planes)`` matmul."""
+    bits = (m @ _hyperplanes(m.shape[1], tables, planes)) > 0
+    return bits.reshape(len(m), tables, planes) @ (1 << np.arange(planes, dtype=np.int64))
 
 
 def hyperplane_signatures_gemm(
@@ -815,31 +892,17 @@ def hyperplane_signatures_gemm(
     vec_col: str,
     planes: int,
     tables: int,
-    dim: int = 64,
-    seed: int = 101,
 ) -> DataFrame:
     """Per-vector hyperplane-sign bucket ids for every hash table as ONE
-    ``array<long>`` column ``_sigs`` — zero-shuffle formulation.
+    ``array<long>`` column ``_sigs``, computed map-side per Arrow batch
+    (:func:`_signatures`). Replaces the posexplode → groupBy(tables·planes
+    sums) formulation, whose shuffle carries dim rows per vector
+    (measured ~3× faster at sf0.1, and the gap grows with corpus size)."""
+    util.ensure_workers_can_import(df.sparkSession)  # the UDF uses this module
 
-    This is the ONLY hyperplane family in the engine: corpus and query
-    sides must both bucket through it (mixing hash families yields zero
-    recall, so the earlier xxhash64-derived variants were removed rather
-    than left as a trap). The ±1 hyperplane matrix is regenerated
-    identically on every executor
-    from a seeded RandomState (no stored model, no broadcast), and all
-    ``tables × planes`` projections for an Arrow batch happen in a single
-    ``(batch × dim) @ (dim × tables·planes)`` numpy matmul. Replaces the
-    posexplode → groupBy(tables·planes sums) formulation, whose shuffle
-    carries dim rows per vector; this computes signatures entirely
-    map-side (measured ~3× faster at sf0.1, and the gap grows with
-    corpus size)."""
     @pandas_udf("array<long>")
     def _sigs(vecs: pd.Series) -> pd.Series:
-        mat = np.random.RandomState(seed).choice([-1.0, 1.0], size=(dim, tables * planes))
-        v = np.vstack(vecs.to_numpy()).astype(np.float64)
-        bits = (v @ mat) > 0  # (n, tables·planes)
-        packed = bits.reshape(len(v), tables, planes) @ (1 << np.arange(planes, dtype=np.int64))
-        return pd.Series(list(packed.astype(np.int64)))
+        return pd.Series(list(_signatures(_matrix(vecs.to_numpy()), tables, planes)))
 
     return df.select(F.col(id_col).alias("_hid"), _sigs(F.col(vec_col)).alias("_sigs"))
 
@@ -853,156 +916,32 @@ def ann_lsh_topk(
     k: int = 5,
     planes: int = 8,
     tables: int = 8,
-    dim: int = 64,
-    multiprobe: bool = True,
     round_sim: int = 6,
 ) -> DataFrame:
-    """Approximate top-k: candidates = same hyperplane-sign bucket in any of
-    ``tables`` independent hash tables, ranked by exact cosine.
+    """Approximate top-k: candidates share a hyperplane-sign bucket with
+    the query in any of ``tables`` hash tables, with multi-probe (buckets
+    within Hamming distance 1 of the query's also match), ranked by exact
+    cosine in :func:`_gemm_topk`. The query signatures are computed once
+    on the driver; each corpus batch computes its own. Recall tunes with
+    (planes↓, tables↑); ``planes`` should grow ~log(corpus) to keep bucket
+    occupancy flat."""
+    q_ids, qmat = _query_side(queries, id_col, vec_col, "ann_lsh_topk query side")
+    qsig = _signatures(qmat, tables, planes)
 
-    Scale shape (r15, the ann_bruteforce/ann_ivf GEMM discipline): the
-    query side is a bounded control-plane sample (enforced by
-    ``_collect_control_plane``), so its vectors AND its multiprobe bucket
-    sets are computed driver-side and shipped in a ``mapInPandas`` closure.
-    Each corpus Arrow batch then (a) computes its own hyperplane signatures
-    with the SAME seeded ±1 matrix ``hyperplane_signatures_gemm``
-    regenerates per task, (b) bucket-matches against the query probe table
-    in-memory (candidates = share ≥1 (table, bucket) — identical set to
-    the former banded equi-join, including the query-side Hamming-1
-    ``multiprobe`` flips), (c) scores only the matched rows against all
-    queries in one numpy GEMM, and (d) keeps a running per-query top-k, so
-    a task emits ≤ K·k rows no matter how many corpus rows it scanned.
-    The corpus is never shuffled and never amplified; the pre-r15 form
-    shuffled the candidate pair ids through a distinct, joined the corpus
-    vectors back by id (an exchange of the payloads), and paid an
-    interpreted zip_with/aggregate cosine fold per pair.
-
-    Parity discipline (verbatim from ann_bruteforce_topk): float64
-    widening as the old per-element ``cast("double")``; sims rounded
-    half-away-from-zero at ``round_sim`` decimals (the F.round rule)
-    BEFORE any ranking, absorbing GEMM-vs-fold accumulation-order noise;
-    +0.0 normalizes -0.0; zero-norm vectors score 0.0 (cosine()'s guard);
-    per-task selection and the final window share the identical
-    (sim DESC, neighbor_id ASC) total order, so global top-k == top-k of
-    unioned per-task top-ks exactly.
-
-    Recall tunes with (planes↓, tables↑, multiprobe); ``planes`` should
-    grow ~log(corpus) to keep bucket occupancy flat."""
-    vectors = valid_vectors(vectors, vec_col)
-    queries = valid_vectors(queries, vec_col)
-    spark = vectors.sparkSession
-    id_t = vectors.schema[id_col].dataType.simpleString()
-    out_schema = f"query_id {id_t}, neighbor_id {id_t}, sim double"
-    q_rows = _collect_control_plane(
-        queries.select(id_col, vec_col), "ann_lsh_topk query side"
-    )  # control plane: K×dim
-    if not q_rows:
-        return spark.createDataFrame([], out_schema + ", rank integer")
-    q_ids = [r[0] for r in q_rows]
-    qmat = np.array([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    nq = len(q_ids)
-    # Query-side hyperplane signatures, driver-side — the SAME seeded ±1
-    # matrix hyperplane_signatures_gemm regenerates on every executor
-    # (mixing hash families yields zero recall; seed kept in lockstep).
-    mat = np.random.RandomState(101).choice([-1.0, 1.0], size=(dim, tables * planes))
-    powers = 1 << np.arange(planes, dtype=np.int64)
-    qsig = ((qmat @ mat) > 0).reshape(nq, tables, planes) @ powers
-    # Multi-probe: every bucket within Hamming 1 of the query signature
-    # (flip each plane bit) probes too — derived by cheap XOR, query side
-    # only, corpus side untouched (the classic multi-probe LSH trick).
-    flips = [0] + [1 << p for p in range(planes)] if multiprobe else [0]
-    probe: dict = {}  # (table, bucket) -> [query indices]
-    for qi in range(nq):
+    def candidates(m, lo, hi):
+        # x = 0 (same bucket) or a single set bit (one plane flipped) ⇔
+        # x & (x - 1) == 0: the query's bucket plus its Hamming-1 probes.
+        sig = _signatures(m, tables, planes)
+        hit = np.zeros((len(m), hi - lo), dtype=bool)
         for t in range(tables):
-            for flip in flips:
-                probe.setdefault((t, int(qsig[qi, t]) ^ flip), []).append(qi)
-    tbl_keys = [
-        np.array(sorted({b for (t, b) in probe if t == ti}), dtype=np.int64)
-        for ti in range(tables)
-    ]
-    qnorm = np.linalg.norm(qmat, axis=1)
-    qunit = np.zeros_like(qmat)
-    nzq = qnorm > 0
-    qunit[nzq] = qmat[nzq] / qnorm[nzq, None]
-    scale = 10.0 ** round_sim
-    kk = k
+            x = sig[:, t, None] ^ qsig[None, lo:hi, t]
+            hit |= (x & (x - 1)) == 0
+        return hit
 
-    def _task_topk(batches):
-        sims_run = [np.empty(0, dtype=np.float64)] * nq
-        ids_run: list = [None] * nq
-
-        def top(s, i):
-            if len(s) <= kk:
-                return s, i
-            try:
-                order = np.lexsort((i, -s))  # s DESC, id ASC
-            except TypeError:  # non-numeric ids (object dtype)
-                order = np.array(
-                    sorted(range(len(s)), key=lambda j: (-s[j], i[j]))
-                )
-            order = order[:kk]
-            return s[order], i[order]
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy()
-            m = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            sig = ((m @ mat) > 0).reshape(len(ids), tables, planes) @ powers
-            # Bucket match: corpus row × query candidate iff they share a
-            # (table, bucket) — np.isin prunes to hit rows per table, the
-            # probe dict fans each hit out to its query indices.
-            match = np.zeros((len(ids), nq), dtype=bool)
-            for t in range(tables):
-                col = sig[:, t]
-                for ri in np.nonzero(np.isin(col, tbl_keys[t]))[0]:
-                    match[ri, probe[(t, int(col[ri]))]] = True
-            if not match.any():
-                continue
-            ridx = np.nonzero(match.any(axis=1))[0]
-            msub = m[ridx]
-            norms = np.linalg.norm(msub, axis=1)
-            sims = np.zeros((len(ridx), nq))
-            nz = norms > 0
-            if nz.any():
-                sims[nz] = (msub[nz] / norms[nz, None]) @ qunit.T
-            # half-away-from-zero at round_sim decimals, matching F.round;
-            # the trailing +0.0 normalizes -0.0 to F.round's +0.0.
-            r = np.abs(sims)
-            r *= scale
-            r += 0.5
-            np.floor(r, out=r)
-            np.copysign(r, sims, out=r)
-            r /= scale
-            r += 0.0
-            sub_ids = ids[ridx]
-            sub_match = match[ridx]
-            for qi in range(nq):
-                mask = sub_match[:, qi] & (sub_ids != q_ids[qi])
-                if not mask.any():
-                    continue
-                s = np.concatenate([sims_run[qi], r[mask, qi]])
-                i = (
-                    np.concatenate([ids_run[qi], sub_ids[mask]])
-                    if ids_run[qi] is not None
-                    else sub_ids[mask]
-                )
-                sims_run[qi], ids_run[qi] = top(s, i)
-        out_q: list = []
-        out_n: list = []
-        out_s: list = []
-        for qi in range(nq):
-            if ids_run[qi] is None or len(sims_run[qi]) == 0:
-                continue
-            out_q.extend([q_ids[qi]] * len(sims_run[qi]))
-            out_n.extend(list(ids_run[qi]))
-            out_s.extend(list(sims_run[qi]))
-        if out_q:
-            yield pd.DataFrame({"query_id": out_q, "neighbor_id": out_n, "sim": out_s})
-
-    scored = vectors.select(id_col, vec_col).mapInPandas(_task_topk, out_schema)
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _gemm_topk(
+        vectors, q_ids, qmat, candidates,
+        id_col=id_col, vec_col=vec_col, k=k, round_sim=round_sim,
+    )
 
 
 def ann_ivf_topk(
@@ -1017,153 +956,49 @@ def ann_ivf_topk(
     round_sim: int = 6,
     lloyd_iters: int = 0,
 ) -> DataFrame:
-    """IVF-style approximate top-k: partition the corpus into inverted
-    lists by nearest centroid, probe only the ``nprobe`` closest lists per
-    query, exact-cosine rerank inside them.
+    """IVF-style approximate top-k: each corpus row belongs to the
+    inverted list of its nearest centroid, and a query searches only its
+    ``nprobe`` nearest lists, exact-cosine ranked in :func:`_gemm_topk`.
 
-    Centroid selection is deterministic sampling (the ``n_centroids``
-    smallest md5(id) values — a uniform reproducible sample standing in
-    for k-means; ``ann_ivf_lloyd_topk`` below refines these with real
-    Lloyd iterations on the same plumbing). Scale shape: the centroid
-    model is collected once (k×dim doubles — control plane) and shipped
-    in a ``mapInPandas`` closure; corpus assignment is a map-side numpy
-    GEMM argmax with zero row amplification and zero exchange. The probe
-    is an equi-join on centroid_id — cost ∝ corpus×(nprobe/n_centroids)
-    per query instead of the full scan. Recall tunes with nprobe.
-    """
-    vectors = valid_vectors(vectors, vec_col)
-    queries = valid_vectors(queries, vec_col)
-    v = vectors.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_vv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
-
+    Centroids are the ``n_centroids`` smallest md5(id) rows — a uniform
+    reproducible sample standing in for k-means — optionally refined by
+    ``lloyd_iters`` Lloyd iterations (L2, fixed-precision means, the
+    oracle-checkable discipline of kmeans_lloyd). Nearest means the
+    oracle's order: rounded cosine DESC, then centroid_id ASC — the
+    centroid list is sorted by id, so a stable sort (probe ranking, on the
+    driver) and ``argmax`` (row assignment, per batch) both break ties by
+    the lowest id. Recall tunes with nprobe."""
+    corpus = valid_vectors(vectors, vec_col)
     if lloyd_iters > 0:
-        # Real k-means centroids: refine the md5 seed sample with Lloyd
-        # iterations (L2, fixed-precision means — the oracle-checkable
-        # discipline of kmeans_lloyd) before building the inverted lists.
         cents = lloyd_centroids(
-            vectors,
-            id_col=id_col,
-            vec_col=vec_col,
-            k=n_centroids,
-            iters=lloyd_iters,
+            corpus, id_col=id_col, vec_col=vec_col, k=n_centroids, iters=lloyd_iters
         ).select(F.col("cluster_id").alias("centroid_id"), F.col("cv").alias("_cv"))
     else:
         cents = (
-            vectors.select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("_cv"))
+            corpus.select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias("_cv"))
             .orderBy(F.md5(F.col("centroid_id").cast("string")))
             .limit(n_centroids)
         )
-
-    # Corpus → nearest centroid via a map-side GEMM argmax (the
-    # hyperplane_signatures_gemm pattern): the centroid model (k×dim
-    # doubles — tiny at any k a driver would hold) ships to executors in
-    # the UDF closure, and each Arrow batch scores against ALL centroids
-    # with one numpy matmul. ZERO row amplification and ZERO exchange for
-    # assignment — the previous formulation cross-joined the corpus with
-    # the centroid set and shuffled |corpus|×k scored rows (with vector
-    # payloads) through a row_number window just to pick rank 1; at scale
-    # that exchange was the whole job. Tie-break parity with the oracle's
-    # ORDER BY sim DESC, centroid_id: centroids are sorted by id and
-    # np.argmax returns the FIRST maximal index, and sims are rounded at
-    # round_sim before the argmax with the same half-away-from-zero rule
-    # as F.round / DuckDB ROUND (np.round would be half-to-even; the
-    # divergence needs an exact decimal half in binary doubles — all but
-    # unreachable, but the parity contract is kept literal anyway). The
-    # rounding absorbs fold-vs-GEMM accumulation-order noise.
     cent_rows = _collect_control_plane(
         cents.orderBy("centroid_id"), "ann_ivf_topk centroid model"
-    )  # control plane: k×dim
-    if not cent_rows:
-        # Empty corpus or n_centroids=0: no inverted lists, no candidates.
-        # (Without the guard, np.linalg.norm(..., axis=1) on a (0,) array
-        # raises at plan-build time; the lazy expression form returned
-        # empty.)
-        spark = vectors.sparkSession
-        id_t = vectors.schema[id_col].dataType.simpleString()
-        return spark.createDataFrame(
-            [], f"query_id {id_t}, neighbor_id {id_t}, sim double, rank int"
-        )
-    cent_ids = np.array([r["centroid_id"] for r in cent_rows])
-    cmat = np.array([np.asarray(r["_cv"], dtype=np.float64) for r in cent_rows])
-    cnorm = np.linalg.norm(cmat, axis=1)
-    cnorm[cnorm == 0] = 1.0  # zero-norm centroid → sims 0, matches cosine()
-    cunit = cmat / cnorm[:, None]
-
-    def _assign(batches: "pd.DataFrame"):  # mapInPandas: corpus stays put
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.vstack(pdf["_vv"].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(m, axis=1)
-            sims = np.zeros((len(pdf), len(cent_ids)))
-            nz = norms > 0
-            if nz.any():
-                sims[nz] = (m[nz] / norms[nz, None]) @ cunit.T
-            # half-away-from-zero at round_sim decimals, matching F.round.
-            # In-place passes (abs/mul/add/floor/copysign), and the final
-            # /scale is dropped: dividing by a positive constant is
-            # monotone, so the argmax is unchanged — measured 2.6× faster
-            # than the sign·floor·divide expression chain (r7 A/B; both
-            # produce identical indices on random batches).
-            scale = 10.0 ** round_sim
-            r = np.abs(sims)
-            r *= scale
-            r += 0.5
-            np.floor(r, out=r)
-            np.copysign(r, sims, out=r)
-            best = r.argmax(axis=1)
-            yield pd.DataFrame(
-                {
-                    "neighbor_id": pdf["neighbor_id"],
-                    "_vv": pdf["_vv"],
-                    "centroid_id": cent_ids[best],
-                }
-            )
-
-    vv_type = vectors.schema[vec_col].dataType.simpleString()
-    nid_type = vectors.schema[id_col].dataType.simpleString()
-    cid_type = cents.schema["centroid_id"].dataType.simpleString()
-    assigned = v.mapInPandas(
-        _assign, f"neighbor_id {nid_type}, _vv {vv_type}, centroid_id {cid_type}"
     )
+    q_ids, qmat = _query_side(queries, id_col, vec_col, "ann_ivf_topk query side")
+    if not cent_rows or not q_ids:
+        return _no_neighbors(vectors, id_col)
+    cunit = _unit_rows(_matrix([r["_cv"] for r in cent_rows]))
+    qsims = _rounded_sims(_unit_rows(qmat), cunit, round_sim)
+    probed = np.zeros(qsims.shape, dtype=bool)
+    nearest_q = np.argsort(-qsims, axis=1, kind="stable")[:, :nprobe]
+    np.put_along_axis(probed, nearest_q, True, axis=1)
 
-    # Queries → nprobe nearest centroids.
-    qa = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "_qv",
-            "centroid_id",
-            F.round(cosine(F.col("_qv"), F.col("_cv")), round_sim).alias("_cs"),
-        )
-    )
-    wq = W.partitionBy("query_id").orderBy(F.desc("_cs"), "centroid_id")
-    probes = (
-        qa.withColumn("_r", F.row_number().over(wq)).filter(F.col("_r") <= nprobe)
-        .select("query_id", "_qv", "centroid_id")
-    )
+    def candidates(m, lo, hi):
+        nearest = _rounded_sims(_unit_rows(m), cunit, round_sim).argmax(axis=1)
+        return probed[lo:hi, nearest].T
 
-    cand = (
-        # corpus norm computed once per assigned row (post-map projection),
-        # probe norm once per (query, probe) row — the candidate stream
-        # pays only the dot fold (row_norm/fused_cosine, bit-identical).
-        assigned.withColumn("_vn", row_norm(F.col("_vv")))
-        .join(
-            F.broadcast(probes.withColumn("_qn", row_norm(F.col("_qv")))),
-            "centroid_id",
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                fused_cosine(F.col("_qv"), F.col("_vv"), F.col("_qn"), F.col("_vn")),
-                round_sim,
-            ).alias("sim"),
-        )
+    return _gemm_topk(
+        vectors, q_ids, qmat, candidates,
+        id_col=id_col, vec_col=vec_col, k=k, round_sim=round_sim,
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), "neighbor_id")
-    return cand.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 def embedding_neardup_pairs(

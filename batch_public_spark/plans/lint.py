@@ -521,9 +521,11 @@ def _self_join_bucket_findings(plan: str) -> list[Finding]:
 
 
 def _duplicate_percentile_findings(plan: str) -> list[Finding]:
-    """WARN: 2+ separate ``percentile``/``approx_percentile`` buffers over
-    the SAME column expression inside one aggregate node. Each buffer
-    gathers the full value list independently; the array form
+    """WARN: 2+ separate buffers of the SAME function (``percentile`` or
+    ``approx_percentile``) over the SAME column expression inside one
+    aggregate node; buffers of different functions cannot be shared, so
+    they never pair. Each buffer gathers the full value list
+    independently; the array form
     ``percentile(col, array(p1, p2, ...))`` computes every requested
     quantile from ONE buffer with identical interpolation arithmetic
     (the r14 fusion, −15 to −55% on the touched queries)."""
@@ -533,7 +535,7 @@ def _duplicate_percentile_findings(plan: str) -> list[Finding]:
         stripped = line.strip().lstrip(":+- ")
         if "Aggregate" not in stripped.split("(")[0].split("[")[0]:
             continue
-        first_args: list[str] = []
+        keys: list[tuple[str, str]] = []  # (function, first argument)
         idx = 0
         while True:
             hit = None
@@ -549,11 +551,10 @@ def _duplicate_percentile_findings(plan: str) -> list[Finding]:
             if top and not top[min(1, len(top) - 1)].lstrip().startswith("["):
                 # scalar-percentage form only; the fused array form is
                 # exactly the fix and never flags
-                first_args.append(top[0])
+                keys.append((fn[:-1], top[0]))
             idx = j + len(fn)
-        dupes = {a for a in first_args if first_args.count(a) >= 2}
-        for a in dupes:
-            key = f"percentile×{first_args.count(a)} over {a}"
+        for fn_name, a in sorted({x for x in keys if keys.count(x) >= 2}):
+            key = f"{fn_name}×{keys.count((fn_name, a))} over {a}"
             if key not in seen:
                 seen.add(key)
                 findings.append(Finding("duplicate-percentile-buffers", key[:120]))

@@ -224,7 +224,7 @@ def llmops_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("llmops_ann_lsh", oracle=None)
 def llmops_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH approximate top-k (bucketed candidates → exact rank).
-    Recall vs brute force asserted in tests; rows-only here (xxhash64-seeded
+    Recall vs brute force asserted in tests; rows-only here (numpy-seeded
     hyperplanes are engine-specific)."""
     vecs = t(spark, sf_dir, "embeddings")
     # planes ≈ log2(corpus/target-bucket-size): 6 planes / 8 tables ⇒ 0.8
@@ -3004,10 +3004,8 @@ def llmops_ann_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds a 3-row VALUES dimension joined on probe rank ≤ nprobe so all
     three operating points share ONE assignment and ONE probe ranking.
 
-    Spark-first: same sharing — the corpus assignment (the expensive
-    leg) is computed once and localCheckpointed; the three probe widths
-    reuse it through the nested-probe join, so the sweep costs one IVF
-    build plus three candidate regroups, not three builds."""
+    Spark-first: each probe width is one map-side pass of the top-k
+    kernel (ann_ivf_topk), with no exchange before the per-query merge."""
     from batch_public_spark.operators.semantic import ann_bruteforce_topk, ann_ivf_topk
 
     vecs = t(spark, sf_dir, "embeddings")

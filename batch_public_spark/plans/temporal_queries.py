@@ -260,7 +260,8 @@ def dq_orders_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-first: two grouped exact-percentile aggregations (median, then
     MAD over re-joined deviations) + one conditional-count pass — three
     shuffles on the 5-value priority key, with the 5-row median/MAD tables
-    broadcast back. Both median and MAD are ROUNDED to 6 dp before the
+    broadcast back (no hint: adaptive execution picks the broadcast from
+    their runtime size). Both median and MAD are ROUNDED to 6 dp before the
     threshold comparison so a value at an interpolation boundary cannot
     flip the count across engines. At 100 TB swap percentile for
     approx_percentile(1e-4 accuracy): the plan shape is unchanged."""
@@ -277,7 +278,7 @@ def dq_orders_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     dev = (
-        o.join(F.broadcast(med), "o_orderpriority")
+        o.join(med, "o_orderpriority")
         .groupBy("o_orderpriority")
         .agg(
             F.round(
@@ -288,8 +289,8 @@ def dq_orders_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     thresh = F.round(F.lit(3) * F.lit(1.4826) * F.col("mad"), 6)
     return (
-        o.join(F.broadcast(med), "o_orderpriority")
-        .join(F.broadcast(dev), "o_orderpriority")
+        o.join(med, "o_orderpriority")
+        .join(dev, "o_orderpriority")
         .groupBy("o_orderpriority", "med", "mad")
         .agg(
             F.count("*").cast("bigint").alias("n_orders"),

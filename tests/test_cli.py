@@ -48,6 +48,25 @@ def test_dry_run_writes_jsonl_and_stops(spark, tmp_path, capsys):
     assert not os.path.exists(os.path.join(out_dir, "batch_watermark.json"))
 
 
+def test_blocking_run_writes_parsed_output(spark, tmp_path, capsys):
+    """A single-table blocking run does its LLM and parse work: the parsed
+    rows land under output_dir/parsed and their count is printed."""
+    out_dir = str(tmp_path / "out")
+    rc, out = _run(
+        capsys,
+        "--table", "documents", "--hours", "1e9",
+        "--data-dir", SF, "--output-dir", out_dir,
+    )
+    assert rc == 0
+    info = json.loads(out.strip().splitlines()[-1])
+    assert not info["async"] and info["batch_id"]
+    parsed = spark.read.parquet(os.path.join(out_dir, "parsed", f"documents_{info['batch_id']}"))
+    assert info["n_parsed"] == parsed.count() >= info["n_requests"] > 0
+    ids = {r["_source_custom_id"] for r in parsed.select("_source_custom_id").collect()}
+    assert len(ids) == info["n_requests"]
+    assert parsed.filter("is_raw").count() == 0
+
+
 def test_multi_table_forces_async_and_resume_closes(spark, tmp_path, capsys):
     out_dir = str(tmp_path / "out")
     rc, out = _run(

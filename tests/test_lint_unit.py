@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from batch_public_spark.plans.lint import (
     _balanced_args,
+    _duplicate_percentile_findings,
     _split_top_level,
     _window_partition_keys,
 )
@@ -334,3 +335,21 @@ def test_sf_scaled_tpch_dims_are_population_scale():
     )
     kinds = [f.kind for f in _unbounded_broadcast_findings(plan)]
     assert kinds == ["unbounded-broadcast"]
+
+
+_PCT_AGG = (
+    "+- ObjectHashAggregate(keys=[], functions=[percentile(x#1, 0.5, 1, 0, 0, false), "
+    "approx_percentile(x#1, 0.9, 10000, 0, 0)], output=[p#2, q#3])"
+)
+
+
+def test_percentile_and_approx_percentile_buffers_do_not_pair():
+    """Exact and approximate percentile buffers over one column cannot
+    share a buffer, so the pair is not a duplicate; two exact ones are."""
+    assert _duplicate_percentile_findings(_PCT_AGG) == []
+    two_exact = _PCT_AGG.replace(
+        "approx_percentile(x#1, 0.9, 10000, 0, 0)", "percentile(x#1, 0.9, 1, 0, 0, false)"
+    )
+    [f] = _duplicate_percentile_findings(two_exact)
+    assert f.kind == "duplicate-percentile-buffers"
+    assert f.detail == "percentile×2 over x#1"

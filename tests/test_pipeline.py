@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import Row
@@ -150,6 +151,57 @@ def test_parse_handles_all_stub_variants(spark):
     idx = {r["_source_list_index"] for r in rows}
     assert -1 in idx
     assert any(i >= 0 for i in idx)
+
+
+def test_parse_reads_llm_stage_once(spark):
+    """Scalar and array replies share one posexplode, so the plan runs the
+    LLM stage's MapInPandas once (a union of two branches ran it twice)."""
+    docs = spark.range(4).select(
+        F.col("id").cast("string").alias("id"), F.lit("some text").alias("text")
+    )
+    parsed = parse_batch_output(respond(build_requests(docs, text_col="text", id_col="id")))
+    p = parsed._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        parsed._jdf.queryExecution(), "formatted"
+    )
+    assert len(re.findall(r"\(\d+\) MapInPandas", p)) == 1, p
+    assert "Union" not in p, p
+
+
+def test_parse_reply_shapes(spark, tmp_path):
+    """Per reply shape: scalar → index -1; array → one row per element;
+    empty array → no rows; unparseable → raw_content, is_raw only there."""
+
+    def rec(cid, content):
+        return {
+            "id": cid,
+            "custom_id": cid,
+            "response": {
+                "status_code": 200,
+                "body": {"choices": [{"message": {"role": "assistant", "content": content}}]},
+            },
+        }
+
+    p = tmp_path / "out.jsonl"
+    recs = [
+        rec("obj", '{"a": 1}'),
+        rec("fixed", '```json\n{"a": 2,}\n```'),
+        rec("arr", '[{"a": 3}, {"a": 4}]'),
+        rec("empty", "[]"),
+        rec("raw", "not json at all"),
+    ]
+    p.write_text("\n".join(json.dumps(r) for r in recs) + "\n")
+    rows = parse_batch_output(read_batch_outputs(spark, str(p))).collect()
+    got = sorted(
+        (r["_source_custom_id"], r["_source_list_index"], dict(r["parsed"]), r["is_raw"])
+        for r in rows
+    )
+    assert got == [
+        ("arr", 0, {"a": "3"}, False),
+        ("arr", 1, {"a": "4"}, False),
+        ("fixed", -1, {"a": "2"}, False),
+        ("obj", -1, {"a": "1"}, False),
+        ("raw", -1, {"raw_content": "not json at all"}, True),
+    ]
 
 
 def test_join_outputs_to_inputs(spark):

@@ -49,25 +49,15 @@ ALLOWLIST: set[tuple[str, str]] = {
     # Lloyd centroid frames are exactly k = 32 rows: cluster_id's domain
     # is the literal-bounded seed set (vec_id < 32) on the OTHER side of
     # the argmin assignment join — alias resolution sees an id-typed key,
-    # not the bounded domain it ranges over. Same for the query×centroid
-    # probe frames (LIMIT-bounded queries × k centroids).
-    ("llmops_ann_ivf_lloyd_recall", "unbounded-broadcast"),
+    # not the bounded domain it ranges over.
     ("llmops_kmeans_lloyd", "unbounded-broadcast"),
+    # The recall join broadcasts the brute-force ground truth: ≤ K·k = 25
+    # rows (5 queries × k = 5), bounded through a rank-cap window.
+    ("llmops_ann_ivf_lloyd_recall", "unbounded-broadcast"),
     # --- unbounded-broadcast (r11): the LogicalRDD lint rule is
     # deliberately conservative — a localCheckpoint()/createDataFrame
     # frame is a lineage-less leaf, so a hint over one is flagged unless
     # allowlisted here with its structural bound stated. ---
-    # Literal driver-side parameter grids (createDataFrame of a few
-    # constants; size fixed at authoring time, independent of the data):
-    ("llmops_lsh_param_planner", "unbounded-broadcast"),  # (r,b) grid ≤ 24 rows
-    ("llmops_ann_nprobe_sweep", "unbounded-broadcast"),  # nprobe grid, 4 rows
-    ("llmops_best_of_n_curve", "unbounded-broadcast"),  # n grid ≤ 10 rows
-    ("llmops_sample_size_planner", "unbounded-broadcast"),  # mde grid ≤ 6 rows
-    ("events_journey_pattern_match", "unbounded-broadcast"),  # 1-row pattern
-    ("join_range_containment", "unbounded-broadcast"),  # 3-row literal promo dim
-    # 2-row literal dim whose broadcast hint is LOAD-BEARING: dynamic
-    # partition pruning requires the reused broadcast on the dim side.
-    ("join_dynamic_partition_pruning", "unbounded-broadcast"),
     # Checkpoint-cut frames with a structural bound upstream of the cut:
     # the near-dup anchor set is `doc_id < 150`-bounded before its
     # localCheckpoint (docstring documents the cap; the hint prevents a

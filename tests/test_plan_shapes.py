@@ -17,11 +17,14 @@ from batch_public_spark.plans import QUERIES
 from tests.conftest import SF_DIR
 
 
-def plan(spark, name: str) -> str:
-    df = QUERIES[name].fn(spark, SF_DIR)
+def plan_of(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def plan(spark, name: str) -> str:
+    return plan_of(QUERIES[name].fn(spark, SF_DIR))
 
 
 def test_filter_pushdown_reaches_scan(spark):
@@ -77,17 +80,32 @@ def test_semi_anti_joins_stay_joins(spark):
     assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_ann_lsh_is_mapside_gemm_single_exchange(spark):
-    """ann_lsh (r15): bucket match + cosine + per-task top-k all happen
-    map-side in one MapInPandas over the corpus scan (the query side is a
-    collected control-plane sample). The ONLY exchange left is the final
-    ≤K·k·n_tasks window merge on query_id — no candidate-pair distinct,
-    no join shuffling the vector payloads back in."""
-    p = plan(spark, "llmops_ann_lsh")
-    assert "MapInPandas" in p, p
-    assert "SortMergeJoin" not in p and "CartesianProduct" not in p, p
+@pytest.mark.parametrize(
+    "name", ["llmops_ann_bruteforce", "llmops_ann_lsh", "llmops_ann_ivf"]
+)
+def test_ann_topk_is_mapside_gemm_single_exchange(spark, name):
+    """The ANN top-k kernel: candidate selection + cosine + per-task top-k
+    all happen map-side in one MapInPandas over the corpus scan (the query
+    side and IVF's centroid list are collected control-plane samples). The
+    ONLY exchange left is the final ≤K·k·n_tasks window merge on query_id
+    — no candidate-pair distinct, no join shuffling the vector payloads."""
+    p = plan(spark, name)
+    assert len(re.findall(r"\(\d+\) MapInPandas", p)) == 1, p
+    assert "Join" not in p and "CartesianProduct" not in p, p
     assert len(re.findall(r"\(\d+\) Exchange\b", p)) == 1, p
     assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 1, p
+
+
+def test_mad_outlier_stats_broadcast_at_runtime(spark):
+    """dq_orders_mad_outliers joins its 5-row median and MAD frames back
+    without a broadcast hint; adaptive execution must still broadcast both
+    (no sort-merge join on the orders side) once their sizes are known."""
+    df = QUERIES["dq_orders_mad_outliers"].fn(spark, SF_DIR)
+    df.collect()
+    p = plan_of(df)
+    final = p.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    assert "SortMergeJoin" not in final, final
+    assert len(re.findall(r"BroadcastHashJoin", final)) == 2, final
 
 
 @pytest.mark.parametrize(
