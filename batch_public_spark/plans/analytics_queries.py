@@ -24,6 +24,7 @@ from batch_public_spark.plans.lint import bounded_window_key
 from batch_public_spark.plans.registry import query
 from batch_public_spark.sources.tables import inline_rows
 from batch_public_spark.sources.tables import load_table as t
+from batch_public_spark.sources.tables import scratch_dir
 from batch_public_spark.sources.tables import spread
 
 SESSION_GAP_US = 600 * 1_000_000  # 10 minutes
@@ -56,32 +57,6 @@ def _capped_presence(pres: DataFrame, *keys: str) -> DataFrame:
         .filter(F.col("rn") <= PRESENCE_BUCKET_CAP)
         .drop("rn")
     )
-
-
-_SCRATCH_DIRS: set = set()
-
-
-def _scratch_dir(spark: SparkSession, sf_dir: str, tag: str) -> str:
-    """Session-scoped scratch path for write→read round-trip queries:
-    keyed by the Spark applicationId so concurrent sessions (bench +
-    pytest on one box) never overwrite each other's intermediates, and
-    stable within a session so re-runs reuse mode('overwrite'). Every
-    path handed out is removed at interpreter exit — per-session names
-    would otherwise accumulate in /tmp unboundedly across runs."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
-    app = spark.sparkContext.applicationId.replace("-", "_")
-    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    path = os.path.join(tempfile.gettempdir(), f"bps_{tag}_{sf}_{app}")
-    if not _SCRATCH_DIRS:
-        atexit.register(
-            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH_DIRS]
-        )
-    _SCRATCH_DIRS.add(path)
-    return path
 
 
 def _const_partition(col: str):
@@ -1401,7 +1376,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism. CSV remains the slowest lake format (no pushdown, no
     column pruning, full-row parse) — this query is the migration/export
     path, not the storage recommendation."""
-    out_dir = _scratch_dir(spark, sf_dir, "csv_roundtrip")
+    out_dir = scratch_dir(spark, sf_dir, "csv_roundtrip")
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderstatus",
@@ -1440,7 +1415,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path so a lake migrating between the two keeps bit-identical
     aggregates. Decimals travel as real DECIMAL(15,4) — no float
     round-trip."""
-    out_dir = _scratch_dir(spark, sf_dir, "orc_roundtrip")
+    out_dir = scratch_dir(spark, sf_dir, "orc_roundtrip")
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
@@ -1953,7 +1928,7 @@ def source_kvscan_segmented(spark: SparkSession, sf_dir: str) -> DataFrame:
     from batch_public_spark.sources.kvscan import register_kv_source
 
     register_kv_source(spark)
-    out_dir = _scratch_dir(spark, sf_dir, "kvscan")
+    out_dir = scratch_dir(spark, sf_dir, "kvscan")
     e = t(spark, sf_dir, "events").select(
         "event_id", F.unix_micros("ts").alias("ts_us"), "event_type", "value"
     )
@@ -2011,7 +1986,7 @@ def source_partitioned_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtering. Partition keys must be low-cardinality (types, dates,
     tenants); high-cardinality keys produce the small-file problem that
     sources.maintenance.compact_parquet exists to fix."""
-    out_dir = _scratch_dir(spark, sf_dir, "part_prune")
+    out_dir = scratch_dir(spark, sf_dir, "part_prune")
     e = t(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "value")
     e.write.mode("overwrite").partitionBy("event_type").parquet(out_dir)
     # explicit schema: empty-input safety (F7) — with zero rows the
@@ -2561,7 +2536,7 @@ def join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from batch_public_spark.sources.bucketing import read_bucketed, write_bucketed
 
-    root = _scratch_dir(spark, sf_dir, "bucketed")
+    root = scratch_dir(spark, sf_dir, "bucketed")
     # table names must be session-unique too (shared in-memory catalog is
     # per-session, but the external paths under root must pair with them)
     tag = os.path.basename(root).replace(".", "_")
@@ -3506,7 +3481,7 @@ def source_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no float round-trip); write and read are per-partition parallel.
     PERMISSIVE-mode malformed-line tolerance for untrusted inputs is
     covered separately by pipeline_parse_outputs."""
-    out_dir = _scratch_dir(spark, sf_dir, "jsonl_roundtrip")
+    out_dir = scratch_dir(spark, sf_dir, "jsonl_roundtrip")
     e = t(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
@@ -4700,7 +4675,7 @@ def source_binaryfile_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     content into mapInPandas decoders (operators/multimodal.py) and caps
     file size (spark.sql.sources.binaryFile.maxLength guards the 2 GiB
     row limit)."""
-    out_dir = _scratch_dir(spark, sf_dir, "binaryfile_ingest")
+    out_dir = scratch_dir(spark, sf_dir, "binaryfile_ingest")
     d = t(spark, sf_dir, "documents").select("source", "doc_id", "text")
     (
         d.repartition("source")
@@ -5322,7 +5297,7 @@ def source_schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame
     scale note: on 100 TB datasets set the merged schema on the TABLE
     definition instead, which is why this stays an explicit per-read
     opt-in). The read itself stays fully parallel with pushdown intact."""
-    out_dir = _scratch_dir(spark, sf_dir, "schema_evolution")
+    out_dir = scratch_dir(spark, sf_dir, "schema_evolution")
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
@@ -5372,7 +5347,7 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     every partition of the fact table. The companion
     source_partitioned_pruning pins STATIC pruning (literal predicates);
     this pins the runtime variant."""
-    out_dir = _scratch_dir(spark, sf_dir, "dpp_fact")
+    out_dir = scratch_dir(spark, sf_dir, "dpp_fact")
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority"
     )
@@ -6518,7 +6493,7 @@ def source_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFra
     task (DROPMALFORMED would silently shrink counts — the audit row
     here is the difference between tolerant and lossy); text write/read
     is per-partition parallel."""
-    out_dir = _scratch_dir(spark, sf_dir, "csv_malformed")
+    out_dir = scratch_dir(spark, sf_dir, "csv_malformed")
     o = t(spark, sf_dir, "orders")
     lines = o.select(
         F.concat_ws(

@@ -54,6 +54,7 @@ from batch_public_spark.plans.lint import bounded_window_key
 from batch_public_spark.plans.registry import query
 from batch_public_spark.sources.tables import inline_rows
 from batch_public_spark.sources.tables import load_table as t
+from batch_public_spark.sources.tables import scratch_dir
 from batch_public_spark.sources.tables import spread
 
 # Shared SQL fragments mirroring the Spark expressions exactly.
@@ -4602,14 +4603,13 @@ def llmops_minhash_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     rejected — every output column multi-valued."""
     import os
 
-    from batch_public_spark.plans.analytics_queries import _scratch_dir
     from batch_public_spark.sources.bucketing import read_bucketed, write_bucketed
 
     d, idx, inc = _inc_banded_frames(spark, sf_dir)
     bkey = F.concat_ws(":", F.col("band").cast("string"), "bh").alias("bkey")
 
     # --- job 1: build + persist the bucketed band index ---
-    root = _scratch_dir(spark, sf_dir, "mh_index")
+    root = scratch_dir(spark, sf_dir, "mh_index")
     tag = os.path.basename(root).replace(".", "_")
     tbl = f"bps_mh_band_index_{tag}"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}")
@@ -4713,14 +4713,13 @@ def llmops_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     generations."""
     import os
 
-    from batch_public_spark.plans.analytics_queries import _scratch_dir
     from batch_public_spark.sources.bucketing import read_bucketed, write_bucketed
 
     d, banded = _banded_docs(spark, sf_dir)
     bkey = F.concat_ws(":", F.col("band").cast("string"), "bh").alias("bkey")
     gen = F.col("doc_id") % 3
 
-    root = _scratch_dir(spark, sf_dir, "mh_index_merge")
+    root = scratch_dir(spark, sf_dir, "mh_index_merge")
     tag = os.path.basename(root).replace(".", "_")
     t1, t2 = f"bps_mh_idx_v1_{tag}", f"bps_mh_idx_v2_{tag}"
     for tb in (t1, t2):
@@ -5738,14 +5737,13 @@ def llmops_minhash_index_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate on the stored column."""
     import os
 
-    from batch_public_spark.plans.analytics_queries import _scratch_dir
     from batch_public_spark.sources.bucketing import read_bucketed, write_bucketed
 
     d, banded = _banded_docs(spark, sf_dir)
     bkey = F.concat_ws(":", F.col("band").cast("string"), "bh").alias("bkey")
     gen = F.col("doc_id") % 3
 
-    root = _scratch_dir(spark, sf_dir, "mh_index_expire")
+    root = scratch_dir(spark, sf_dir, "mh_index_expire")
     tag = os.path.basename(root).replace(".", "_")
     t2, t3 = f"bps_mh_exp_v2_{tag}", f"bps_mh_exp_v3_{tag}"
     for tb in (t2, t3):

@@ -49,7 +49,7 @@ def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     DATE while Spark's window.start is TIMESTAMP — the r9 native-value
     comparator caught the pandas-masked type drift)."""
     s = tumbling_counts(read_events_stream(spark, sf_dir), window="1 day", watermark="1 day")
-    out = run_available_now(s, output_mode="complete", shuffle_partitions=8)
+    out = run_available_now(s, output_mode="complete")
     return out.withColumn(
         "window_start", F.date_format("window_start", "yyyy-MM-dd")
     )
@@ -71,7 +71,7 @@ def stream_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = sliding_counts(
         read_events_stream(spark, sf_dir), window="1 day", slide="12 hours", watermark="1 day"
     )
-    return run_available_now(s, output_mode="complete", shuffle_partitions=8)
+    return run_available_now(s, output_mode="complete")
 
 
 @query(
@@ -93,7 +93,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the classic gaps-and-islands rewrite (session end = last event +
     gap, matching session_window semantics)."""
     s = session_counts(read_events_stream(spark, sf_dir), gap="12 hours", watermark="1 day")
-    return run_available_now(s, output_mode="complete", shuffle_partitions=8)
+    return run_available_now(s, output_mode="complete")
 
 
 @query(
@@ -108,7 +108,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = dedup_within_watermark(
         read_events_stream(spark, sf_dir), ["user_id", "event_type"], watermark="1 day"
     ).select("user_id", "event_type")
-    return run_available_now(s, output_mode="append", shuffle_partitions=8)
+    return run_available_now(s, output_mode="append")
 
 
 @query(
@@ -123,7 +123,7 @@ def stream_stateful_running_max(spark: SparkSession, sf_dir: str) -> DataFrame:
     max + count. One availableNow batch ⇒ the emitted update equals the
     final converged state, which the batch oracle reproduces."""
     s = running_max_per_key(read_events_stream(spark, sf_dir))
-    return run_available_now(s, output_mode="update", shuffle_partitions=8)
+    return run_available_now(s, output_mode="update")
 
 
 @query(
@@ -158,7 +158,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_value"),
     )
-    return run_available_now(agg, output_mode="complete", shuffle_partitions=8)
+    return run_available_now(agg, output_mode="complete")
 
 
 @query(
@@ -192,7 +192,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         within="1 hour",
         watermark="1 day",
     )
-    return run_available_now(s, output_mode="append", shuffle_partitions=8)
+    return run_available_now(s, output_mode="append")
 
 
 @query(
@@ -258,7 +258,7 @@ def stream_stream_leftouter(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="1 hour",
         how="left_outer",
     )
-    out = run_available_now(s, output_mode="append", shuffle_partitions=8)
+    out = run_available_now(s, output_mode="append")
     # NULL-extended ids encode as -1: a nullable BIGINT column round-trips
     # through the driver's pandas compare as float NaN (hash poison);
     # -1 is outside the event_id domain and stays integer in both engines.
@@ -330,7 +330,7 @@ def stream_chained_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_hours",
         "n_events",
     )
-    return run_available_now(out, output_mode="append", shuffle_partitions=8)
+    return run_available_now(out, output_mode="append")
 
 
 @query(
@@ -399,7 +399,7 @@ def stream_stream_fullouter(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="1 hour",
         how="full_outer",
     )
-    out = run_available_now(s, output_mode="append", shuffle_partitions=8)
+    out = run_available_now(s, output_mode="append")
     return out.select(
         "user_id",
         F.coalesce("click_id", F.lit(-1)).cast("bigint").alias("click_id"),
@@ -451,7 +451,7 @@ def stream_stream_leftsemi(spark: SparkSession, sf_dir: str) -> DataFrame:
         watermark="1 hour",
         how="left_semi",
     )
-    return run_available_now(s, output_mode="append", shuffle_partitions=8)
+    return run_available_now(s, output_mode="append")
 
 
 @query(
@@ -464,33 +464,31 @@ def stream_stream_leftsemi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_changelog_tail_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUSTOM STREAMING SOURCE round-trip (sources/changelog.py): the
-    documents table is materialized as an append-only JSONL changelog,
-    tailed back through ``readStream.format("kvchangelog")`` — the Spark 4
-    Python streaming Data Source API, byte-offset incremental, the
-    streaming twin of the reference's high-water-mark pull (reference
-    batch/state.py watermark store + main.py look-back; the batch twin is
+    """CUSTOM STREAMING SOURCE round-trip (sources/kvscan.py): the
+    documents table is materialized as one append-only JSONL changelog
+    file, tailed back through ``readStream.format("kvsnapshot")`` — the
+    Spark 4 Python streaming Data Source API, byte-frontier incremental,
+    the streaming face of the reference's high-water-mark pull (reference
+    batch/state.py watermark store + main.py look-back; the batch face is
     source_kvscan_segmented) — and aggregated per source. The oracle
     aggregates the ORIGINAL parquet, so the JSON encode, the offset-bounded
     streaming read, and the stateful aggregation are all value-hashed.
 
     Incremental semantics (run 2 reads ONLY appended bytes, truncated
     tails are never consumed early, checkpoint restart) are pinned in
-    tests/test_changelog_stream.py; this query hashes the single-pass
-    contents. Scale: the changelog here is a control-plane feed (one
-    file, driver-side tail with prefetch); the corpus-scale evolution —
-    partition-planning DataSourceStreamReader, one partition per log
-    segment — is documented in the module docstring, with the same
-    offset/replay contract."""
+    tests/test_kvscan.py; this query hashes the single-pass contents. A
+    single file is a one-entry frontier map: each micro-batch reads its
+    advanced byte range as one executor partition (the directory form is
+    stream_changelog_segmented_agg)."""
     import glob
     import os
 
-    from batch_public_spark.plans.analytics_queries import _scratch_dir
-    from batch_public_spark.sources.changelog import register_changelog_source
+    from batch_public_spark.sources.kvscan import register_kv_source
     from batch_public_spark.sources.tables import load_table as t
+    from batch_public_spark.sources.tables import scratch_dir
 
-    register_changelog_source(spark)
-    out_dir = _scratch_dir(spark, sf_dir, "changelog")
+    register_kv_source(spark)
+    out_dir = scratch_dir(spark, sf_dir, "changelog")
     # Deterministic changelog: one JSON line per doc. coalesce(1) is
     # changelog-construction scaffolding (a changelog IS a single
     # append-ordered file); production tails a log it didn't write.
@@ -511,7 +509,7 @@ def stream_changelog_tail_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     log = glob.glob(os.path.join(out_dir, "part-*"))[0]
     stream = (
-        spark.readStream.format("kvchangelog")
+        spark.readStream.format("kvsnapshot")
         .schema("k bigint, v bigint, src string")
         .option("path", log)
         .load()
@@ -521,7 +519,7 @@ def stream_changelog_tail_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("v").cast("bigint").alias("sum_chars"),
         )
     )
-    return run_available_now(stream, output_mode="complete", shuffle_partitions=8)
+    return run_available_now(stream, output_mode="complete")
 
 
 @query(
@@ -537,32 +535,28 @@ def stream_changelog_segmented_agg(spark: SparkSession, sf_dir: str) -> DataFram
     """SEGMENTED changelog streaming round-trip — the corpus-scale twin of
     stream_changelog_tail_agg: the documents table is materialized as a
     DIRECTORY of append-only JSONL segments (4 here; one per log shard at
-    scale) and tailed back through ``readStream.format(
-    "kvchangelog_segments")`` — the partition-planning
-    ``DataSourceStreamReader`` (sources/changelog.py
-    :class:`_SegmentedChangelogStreamReader`): per-segment byte frontiers
-    as the stream offset, one EXECUTOR-read input partition per advancing
-    segment per micro-batch, so ingest parallelism scales with segment
-    count instead of funneling through the driver (the Simple reader's
-    limit, which is why that variant is the control-plane shape). The
-    oracle aggregates the ORIGINAL parquet, so segment planning, the
-    byte-range executor reads, the shared JSONL record contract, and the
-    stateful aggregation are all value-hashed.
+    scale) and tailed back through ``readStream.format("kvsnapshot")``
+    (sources/kvscan.py :class:`KVSnapshotStreamReader`): per-file byte
+    frontiers as the stream offset, one EXECUTOR-read input partition per
+    advancing segment per micro-batch, so ingest parallelism scales with
+    segment count instead of funneling through the driver. The oracle
+    aggregates the ORIGINAL parquet, so segment planning, the byte-range
+    executor reads, the shared JSONL record contract, and the stateful
+    aggregation are all value-hashed.
 
     Multi-segment incremental semantics (only advanced byte ranges are
     re-read across restarts, truncated tails are never consumed, new
-    segments join the frontier at 0) are pinned in
-    tests/test_changelog_stream.py::test_segmented_changelog_*; this
-    query hashes the single-pass contents."""
+    segments join the frontier at 0) are pinned in tests/test_kvscan.py;
+    this query hashes the single-pass contents."""
     import glob
     import os
 
-    from batch_public_spark.plans.analytics_queries import _scratch_dir
-    from batch_public_spark.sources.changelog import register_changelog_source
+    from batch_public_spark.sources.kvscan import register_kv_source
     from batch_public_spark.sources.tables import load_table as t
+    from batch_public_spark.sources.tables import scratch_dir
 
-    register_changelog_source(spark)
-    out_dir = _scratch_dir(spark, sf_dir, "changelog_segs")
+    register_kv_source(spark)
+    out_dir = scratch_dir(spark, sf_dir, "changelog_segs")
     # Deterministic segmented changelog: 4 append-ordered shards, sharded
     # by a stable key hash (repartition would round-robin rows
     # nondeterministically across runs; the CONTENTS per segment don't
@@ -586,7 +580,7 @@ def stream_changelog_segmented_agg(spark: SparkSession, sf_dir: str) -> DataFram
     )
     assert glob.glob(os.path.join(out_dir, "part-*")), out_dir
     stream = (
-        spark.readStream.format("kvchangelog_segments")
+        spark.readStream.format("kvsnapshot")
         .schema("k bigint, v bigint, src string")
         .option("path", out_dir)
         .load()
@@ -596,4 +590,4 @@ def stream_changelog_segmented_agg(spark: SparkSession, sf_dir: str) -> DataFram
             F.sum("v").cast("bigint").alias("sum_chars"),
         )
     )
-    return run_available_now(stream, output_mode="complete", shuffle_partitions=8)
+    return run_available_now(stream, output_mode="complete")

@@ -1,44 +1,84 @@
-"""Segmented KV-snapshot data source (Spark 4 Python Data Source API).
+"""KV-snapshot JSONL data source (Spark 4 Python Data Source API): one
+format, ``kvsnapshot``, for snapshot scans and changelog tails.
 
-The reference's primary source is a paginated key-value table scan
-(reference ``batch/dynamo_fetcher.py:282-291`` — a sequential
-``table.scan`` loop following ``ExclusiveStartKey`` pages). Its
-Spark-native re-expression is a *custom data source* whose scan is
-**parallel by construction**: the snapshot is split into byte-range
-partitions (DynamoDB's own scale story for this is ``Scan`` with
-``Segment``/``TotalSegments`` — one segment per Spark task), and the
-reference's client-side temporal filter (main.py look-back window) becomes
-**filter pushdown** evaluated inside the source instead of a post-scan
-Spark filter.
+The reference's primary source is a paginated key-value table scan read
+incrementally past a persisted high-water mark (reference
+``batch/dynamo_fetcher.py:282-291`` — a sequential ``table.scan`` loop
+following ``ExclusiveStartKey`` pages — plus the ``batch/state.py``
+watermark store). Its Spark-native re-expression is this source:
 
-Registered as ``spark.read.format("kvsnapshot")`` via
-:func:`register_kv_source`. Reads a directory (or single file) of JSONL
-records with a flat scalar schema; supports:
+* ``spark.read.format("kvsnapshot")`` is **parallel by construction**: the
+  snapshot is split into byte-range partitions (DynamoDB's own scale story
+  is ``Scan`` with ``Segment``/``TotalSegments`` — one segment per Spark
+  task), and the reference's client-side look-back filter becomes **filter
+  pushdown** evaluated inside the source.
+* ``spark.readStream.format("kvsnapshot")`` tails the same files: the
+  stream offset is a per-file byte frontier ``{"files": {name: pos}}``, so
+  the "where did the last run stop" bookkeeping the reference hand-rolls
+  is Structured Streaming's own checkpointed offset log (exactly-once per
+  micro-batch, resumable across restarts).
 
-* ``segments`` option — target number of byte-range input partitions
+Both read a directory (or one file) of JSONL records with a flat scalar
+schema, through the same pieces: one file lister (:func:`_data_files`;
+names starting with ``_`` or ``.`` are skipped, a missing path reads as
+empty), one byte-range partition (:class:`RangePartition`), one line
+reader (:func:`_read_lines`) and one record decoder
+(:meth:`_JsonlDecoder.read`, which yields Arrow batches). Options:
+
+* ``segments`` (batch) — target number of byte-range input partitions
   (line-aligned splits, Hadoop LineRecordReader semantics: a line belongs
   to the split containing the byte before its first byte).
-* Filter pushdown for ``=``, ``<``, ``<=``, ``>``, ``>=``, ``IS (NOT)
-  NULL`` on top-level columns — consumed filters are fully evaluated in
-  ``read()`` so Spark can drop them from the plan.
-* ``mode=strict`` (default: malformed JSON raises) or ``mode=permissive``
-  (malformed lines are skipped — the reference tolerates dirty records the
-  same way in its JSONL parse half, batch_parse/parser.py).
-* A task-commit writer: tasks emit temp files, the driver commit renames
-  them into place (and in ``overwrite`` mode retires prior parts) — the
-  standard two-phase sink protocol. Local/POSIX filesystem only, same
-  caveat as sources.maintenance.compact_parquet.
+* ``mode`` — ``strict`` (default: a bad record raises) or ``permissive``
+  (a bad record is dropped and counted in one warning per partition).
+* ``arrow_batch_size`` — records per Arrow batch handed to Spark.
+
+Record contract (one rule for batch and stream). A line must be a JSON
+object; its top-level fields are matched by name, missing fields are
+NULL, extra fields are ignored. A value is accepted iff Arrow converts it
+to the declared type; anything Arrow rejects (including an integer too
+large for the column) is a type mismatch. With ``k bigint, v bigint, src
+string``:
+
+====================  ===============
+line                  result
+====================  ===============
+``{"k": 4}``          ``k = 4``
+``{"k": 1.5}``        ``k = 1``
+``{"k": "4"}``        type mismatch
+``{"src": 5}``        type mismatch
+``{"k": true}``       type mismatch
+``{"k": 2**70}``      type mismatch
+``not json``          malformed
+====================  ===============
+
+Pushed filters (``=``, ``<``, ``<=``, ``>``, ``>=``, ``IS (NOT) NULL`` on
+top-level columns) are evaluated on the converted Arrow values, so a batch
+read with pushdown returns what a post-scan Spark filter would.
+
+Stream contract: a file's frontier is just past its last newline, so a
+half-written tail record is never consumed early; new files join at
+offset 0; each micro-batch plans one executor-read partition per file
+whose frontier advanced. Files are append-only: a committed file that
+shrank or vanished (e.g. a ``kvsnapshot`` overwrite under a running
+stream) raises rather than re-ingesting or skipping data.
+
+The writer is a task-commit sink: tasks emit ``_tmp-*`` files, the driver
+commit renames them into place (and in ``overwrite`` mode retires prior
+parts) — the standard two-phase protocol, and the reason a renamed part
+file is visible to the stream only whole. Local/POSIX filesystem only,
+same caveat as sources.maintenance.compact_parquet.
 
 100 TB notes: byte-range splitting is what makes a text snapshot
 scan-parallel without a pre-shuffle; pushdown keeps the look-back filter
 from materializing cold pages into Spark rows. For a *real* remote KV
-store the partition planner would emit one partition per store segment
-instead of byte ranges — ``partitions()`` is the single place that
-changes.
+store the partition planners would emit one partition per store segment
+instead of byte ranges — the two ``partitions()`` methods are the only
+places that change.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import logging
 import os
@@ -46,10 +86,13 @@ import uuid
 from dataclasses import dataclass
 from typing import Iterator, List, Sequence
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamReader,
     EqualTo,
     Filter,
     GreaterThan,
@@ -59,11 +102,8 @@ from pyspark.sql.datasource import (
     IsNull,
     LessThan,
     LessThanOrEqual,
-    SimpleDataSourceStreamReader,
     WriterCommitMessage,
 )
-import pyarrow as pa
-
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -77,6 +117,11 @@ class RangePartition(InputPartition):
     end: int
 
 
+# An empty path reads nothing: Spark needs >= 1 partition even when there
+# is nothing to read (empty snapshot, no file advanced).
+_EMPTY = RangePartition(path="", start=0, end=0)
+
+
 @dataclass
 class KVCommitMessage(WriterCommitMessage):
     tmp_path: str
@@ -85,6 +130,8 @@ class KVCommitMessage(WriterCommitMessage):
 def _data_files(path: str) -> List[str]:
     if os.path.isfile(path):
         return [path]
+    if not os.path.isdir(path):
+        return []
     out = []
     for name in sorted(os.listdir(path)):
         if name.startswith(("_", ".")):
@@ -113,10 +160,31 @@ def _plan_ranges(files: Sequence[str], segments: int) -> List[RangePartition]:
     return parts
 
 
+def _last_newline_end(path: str) -> int:
+    """Byte offset just past the LAST newline in the file — a file's
+    stream frontier. Scans backwards in bounded chunks so a multi-GB file
+    costs one tail read, not a full scan."""
+    size = os.path.getsize(path)
+    chunk = 1 << 16
+    with open(path, "rb") as f:
+        hi = size
+        while hi > 0:
+            lo = max(0, hi - chunk)
+            f.seek(lo)
+            buf = f.read(hi - lo)
+            cut = buf.rfind(b"\n")
+            if cut >= 0:
+                return lo + cut + 1
+            hi = lo
+    return 0
+
+
 def _read_lines(part: RangePartition) -> Iterator[bytes]:
     """Line-aligned byte-range read: a line belongs to the partition that
     contains the byte immediately preceding its first byte (the first line
-    of the file belongs to the partition with start == 0)."""
+    of the file belongs to the partition with start == 0). A range between
+    two stream frontiers is therefore read exactly: both ends sit just past
+    a newline."""
     with open(part.path, "rb") as f:
         if part.start > 0:
             f.seek(part.start - 1)
@@ -128,100 +196,72 @@ def _read_lines(part: RangePartition) -> Iterator[bytes]:
             yield line
 
 
-_SUPPORTED_FILTERS = (
-    EqualTo,
-    GreaterThan,
-    GreaterThanOrEqual,
-    LessThan,
-    LessThanOrEqual,
-    IsNull,
-    IsNotNull,
-)
+_COMPARISONS = {
+    EqualTo: pc.equal,
+    GreaterThan: pc.greater,
+    GreaterThanOrEqual: pc.greater_equal,
+    LessThan: pc.less,
+    LessThanOrEqual: pc.less_equal,
+}
+_PUSHABLE = (*_COMPARISONS, IsNull, IsNotNull)
 
 
-def _passes(flt: Filter, rec: dict) -> bool:
-    col = flt.attribute[0]
-    v = rec.get(col)
+def _keep_mask(flt: Filter, batch: "pa.RecordBatch") -> "pa.Array":
+    """Boolean mask of rows passing one pushed filter. A NULL comparison
+    result (NULL operand) is dropped by ``RecordBatch.filter``, matching
+    SQL's "comparisons with NULL are never true"."""
+    col = batch.column(flt.attribute[0])
     if isinstance(flt, IsNull):
-        return v is None
+        return pc.is_null(col)
     if isinstance(flt, IsNotNull):
-        return v is not None
-    if v is None:
-        return False  # comparisons with NULL are never true
-    if isinstance(flt, EqualTo):
-        return v == flt.value
-    if isinstance(flt, GreaterThan):
-        return v > flt.value
-    if isinstance(flt, GreaterThanOrEqual):
-        return v >= flt.value
-    if isinstance(flt, LessThan):
-        return v < flt.value
-    if isinstance(flt, LessThanOrEqual):
-        return v <= flt.value  # pragma: no cover - exhaustive above
-    raise AssertionError(f"unsupported filter leaked through pushFilters: {flt}")
+        return pc.is_valid(col)
+    return _COMPARISONS[type(flt)](col, flt.value)
 
+
+# What Arrow raises for a value it cannot convert to the declared type.
+_TYPE_MISMATCH = (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError)
 
 _LOG = logging.getLogger(__name__)
 
 
-class KVSnapshotReader(DataSourceReader):
+class _JsonlDecoder:
+    """The record decoder shared by the batch and stream readers: reads one
+    :class:`RangePartition` and yields ``pyarrow.RecordBatch`` chunks.
+
+    Arrow batches skip the per-row pickle round-trip between the Python
+    worker and the JVM (one columnar buffer per ~``arrow_batch_size``
+    records instead of one serialized tuple per record). JSON parsing
+    stays per-line; type conversion and pushed filters run per batch.
+
+    Permissive-mode drops must be observable: counters accumulate per
+    partition and are flushed as ONE warning line at end-of-read (count +
+    first offending sample, truncated). Spark's PERMISSIVE JSON mode
+    surfaces offenders via _corrupt_record; a custom scalar source can't
+    add a column the user didn't declare, so the executor log is the
+    diagnosable channel."""
+
     def __init__(self, schema: StructType, options: dict):
-        # Permissive-mode drop accounting (r7 ADVICE): data loss must be
-        # observable. Counters accumulate per task and are flushed as ONE
-        # warning line per partition at end-of-read — Spark's PERMISSIVE
-        # JSON mode surfaces offenders via _corrupt_record; a custom scalar
-        # source can't add a column the user didn't declare, so the
-        # executor log line (count + first offending sample, truncated) is
-        # the diagnosable channel.
-        self.dropped_parse = 0
-        self.dropped_type = 0
-        self._first_dropped: str | None = None
         self.path = options.get("path")
         if not self.path:
             raise ValueError("kvsnapshot requires option 'path'")
-        self.segments = int(options.get("segments", 8))
-        if self.segments < 1:
-            raise ValueError("segments must be >= 1")
         self.permissive = options.get("mode", "strict").lower() == "permissive"
-        self.fields = [f.name for f in schema.fields]
         self.spark_schema = schema
         self.arrow_batch_size = int(options.get("arrow_batch_size", 4096))
         if self.arrow_batch_size < 1:
             raise ValueError("arrow_batch_size must be >= 1")
         self.pushed: List[Filter] = []
-
-    def pushFilters(self, filters: List[Filter]):  # noqa: N802 (API name)
-        for flt in filters:
-            if isinstance(flt, _SUPPORTED_FILTERS) and len(flt.attribute) == 1:
-                self.pushed.append(flt)  # fully evaluated in read()
-            else:
-                yield flt  # Spark keeps evaluating it post-scan
-
-    def partitions(self) -> Sequence[InputPartition]:
-        parts = _plan_ranges(_data_files(self.path), self.segments)
-        # Always at least one (possibly empty) partition so empty snapshots
-        # still produce an empty DataFrame instead of a planning error.
-        return parts or [RangePartition(path="", start=0, end=0)]
+        self.dropped_parse = 0
+        self.dropped_type = 0
+        self._first_dropped: str | None = None
 
     def read(self, partition: RangePartition) -> Iterator["pa.RecordBatch"]:
-        """Yield ``pyarrow.RecordBatch`` chunks instead of per-row tuples.
-
-        The Python Data Source API accepts either; Arrow batches skip the
-        per-row pickle round-trip between the Python worker and the JVM
-        (one columnar buffer per ~``arrow_batch_size`` rows instead of one
-        serialized tuple per record) — the same reason mapInArrow beats
-        row UDFs. Parsing and pushed-filter evaluation stay per-record
-        (they are dict-shaped by nature); only the transport is columnar.
-        """
-        if not partition.path:
-            return
-        # Per-partition counters: one deserialized reader instance may
-        # serve several partitions, so reset at entry or the flushed
-        # warning would report CUMULATIVE drops labeled with the last
-        # partition's byte range.
+        # One deserialized reader instance may serve several partitions:
+        # reset at entry so each warning reports THIS partition's drops.
         self.dropped_parse = 0
         self.dropped_type = 0
         self._first_dropped = None
+        if not partition.path or partition.end <= partition.start:
+            return
         arrow_schema = to_arrow_schema(self.spark_schema)
         batch: List[dict] = []
         for raw in _read_lines(partition):
@@ -233,22 +273,16 @@ class KVSnapshotReader(DataSourceReader):
                 if not isinstance(rec, dict):
                     raise ValueError("record is not a JSON object")
             except ValueError:
-                if self.permissive:
-                    self.dropped_parse += 1
-                    if self._first_dropped is None:
-                        sample = raw[:200]
-                        self._first_dropped = (
-                            sample.decode("utf-8", "replace")
-                            if isinstance(sample, bytes)
-                            else sample
-                        )
-                    continue
-                raise
-            if all(_passes(flt, rec) for flt in self.pushed):
-                batch.append({name: rec.get(name) for name in self.fields})
-                if len(batch) >= self.arrow_batch_size:
-                    yield from self._to_arrow(batch, arrow_schema)
-                    batch = []
+                if not self.permissive:
+                    raise
+                self.dropped_parse += 1
+                if self._first_dropped is None:
+                    self._first_dropped = raw[:200].decode("utf-8", "replace")
+                continue
+            batch.append(rec)
+            if len(batch) >= self.arrow_batch_size:
+                yield from self._to_arrow(batch, arrow_schema)
+                batch = []
         if batch:
             yield from self._to_arrow(batch, arrow_schema)
         if self.dropped_parse or self.dropped_type:
@@ -268,18 +302,13 @@ class KVSnapshotReader(DataSourceReader):
     def _to_arrow(
         self, batch: List[dict], arrow_schema: "pa.Schema"
     ) -> Iterator["pa.RecordBatch"]:
-        """Convert a buffered batch to one RecordBatch.
-
-        Permissive mode covers type mismatches too, not just parse errors:
-        a well-formed JSON record whose field type defies the schema (e.g.
-        a string in a BIGINT column) raises ``pa.ArrowInvalid`` /
-        ``pa.ArrowTypeError`` at batch construction — without this fallback
-        one bad record would fail the whole buffered batch of up to
-        ``arrow_batch_size`` otherwise-good rows. On failure we retry
-        per-record and drop only the offenders."""
+        """Convert a buffered batch to one RecordBatch, then apply the
+        pushed filters. In permissive mode a failed conversion is retried
+        per record so only the offenders are dropped, not the whole
+        buffered batch of otherwise-good records."""
         try:
-            yield pa.RecordBatch.from_pylist(batch, schema=arrow_schema)
-        except (pa.ArrowInvalid, pa.ArrowTypeError):
+            out = pa.RecordBatch.from_pylist(batch, schema=arrow_schema)
+        except _TYPE_MISMATCH:
             if not self.permissive:
                 raise
             good: List[dict] = []
@@ -287,13 +316,82 @@ class KVSnapshotReader(DataSourceReader):
                 try:
                     pa.RecordBatch.from_pylist([rec], schema=arrow_schema)
                     good.append(rec)
-                except (pa.ArrowInvalid, pa.ArrowTypeError):
+                except _TYPE_MISMATCH:
                     self.dropped_type += 1
                     if self._first_dropped is None:
                         self._first_dropped = repr(rec)[:200]
-                    continue
-            if good:
-                yield pa.RecordBatch.from_pylist(good, schema=arrow_schema)
+            out = pa.RecordBatch.from_pylist(good, schema=arrow_schema)
+        if self.pushed:
+            out = out.filter(
+                functools.reduce(pc.and_, (_keep_mask(f, out) for f in self.pushed))
+            )
+        if out.num_rows:
+            yield out
+
+
+class KVSnapshotReader(_JsonlDecoder, DataSourceReader):
+    """Batch scan: byte-range partitions over the snapshot's files, with
+    filter pushdown."""
+
+    def __init__(self, schema: StructType, options: dict):
+        super().__init__(schema, options)
+        self.segments = int(options.get("segments", 8))
+        if self.segments < 1:
+            raise ValueError("segments must be >= 1")
+
+    def pushFilters(self, filters: List[Filter]):  # noqa: N802 (API name)
+        for flt in filters:
+            if isinstance(flt, _PUSHABLE) and len(flt.attribute) == 1:
+                self.pushed.append(flt)  # fully evaluated in read()
+            else:
+                yield flt  # Spark keeps evaluating it post-scan
+
+    def partitions(self) -> Sequence[InputPartition]:
+        return _plan_ranges(_data_files(self.path), self.segments) or [_EMPTY]
+
+
+class KVSnapshotStreamReader(_JsonlDecoder, DataSourceStreamReader):
+    """Stream tail: the offset is ``{"files": {basename: frontier}}`` and
+    ``partitions(start, end)`` plans one byte range ``[start, end)`` per
+    file whose frontier advanced, read on executors. Replay is exact: a
+    partition is a frozen byte range, re-read verbatim on task retry. A
+    single-file path is a one-entry frontier map."""
+
+    def initialOffset(self) -> dict:  # noqa: N802 (API name)
+        return {"files": {}}
+
+    def latestOffset(self) -> dict:  # noqa: N802 (API name)
+        return {
+            "files": {
+                os.path.basename(p): _last_newline_end(p)
+                for p in _data_files(self.path)
+            }
+        }
+
+    def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
+        seen = start["files"]
+        frontier = end["files"]
+        # A committed file must still exist and its frontier must not move
+        # backwards: a truncated, replaced or deleted file is DATA LOSS —
+        # surface it instead of silently replanning around it.
+        regressed = {
+            name: (pos, frontier.get(name))
+            for name, pos in seen.items()
+            if frontier.get(name, -1) < pos
+        }
+        if regressed:
+            raise RuntimeError(
+                "kvsnapshot: append-only contract violated — committed "
+                "offsets exceed the current frontier (file truncated, "
+                f"replaced or deleted): {regressed}"
+            )
+        root = os.path.dirname(self.path) if os.path.isfile(self.path) else self.path
+        parts = [
+            RangePartition(os.path.join(root, name), seen.get(name, 0), pos)
+            for name, pos in sorted(frontier.items())
+            if pos > seen.get(name, 0)
+        ]
+        return parts or [_EMPTY]
 
 
 class KVSnapshotWriter(DataSourceArrowWriter):
@@ -308,7 +406,6 @@ class KVSnapshotWriter(DataSourceArrowWriter):
         self.path = options.get("path")
         if not self.path:
             raise ValueError("kvsnapshot requires option 'path'")
-        self.fields = [f.name for f in schema.fields]
         self.overwrite = overwrite
         # Per-write token: committed part names are unique across writes,
         # so append mode can never clobber a previous generation's parts.
@@ -345,74 +442,8 @@ class KVSnapshotWriter(DataSourceArrowWriter):
                 os.remove(msg.tmp_path)
 
 
-class KVSnapshotStreamReader(SimpleDataSourceStreamReader):
-    """File-granular streaming reader: each micro-batch ingests the part
-    files that appeared since the last offset (the writer promotes files
-    atomically via rename, so a file is either fully visible or absent —
-    the same contract Spark's own file stream source relies on).
-
-    Offsets are the sorted list of consumed file names — JSON-simple,
-    replayable (``readBetweenOffsets`` re-reads exactly the files between
-    two offsets for exactly-once recovery after a failed batch). This is
-    the streaming face of the reference's cron-cadence incremental scan
-    (dynamo fetch + high-water mark): the offset IS the watermark, kept
-    by the engine's checkpoint instead of a side file."""
-
-    def __init__(self, schema: StructType, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("kvsnapshot requires option 'path'")
-        self.permissive = options.get("mode", "strict").lower() == "permissive"
-        self.fields = [f.name for f in schema.fields]
-
-    def initialOffset(self) -> dict:
-        return {"seen": []}
-
-    def _parse_file(self, full: str) -> Iterator[tuple]:
-        with open(full, "rb") as f:
-            for raw in f:
-                raw = raw.strip()
-                if not raw:
-                    continue
-                try:
-                    rec = json.loads(raw)
-                    if not isinstance(rec, dict):
-                        raise ValueError("record is not a JSON object")
-                except ValueError:
-                    if self.permissive:
-                        continue
-                    raise
-                yield tuple(rec.get(name) for name in self.fields)
-
-    def _read_names(self, names) -> list:
-        # Materialized, not a generator: the Simple stream API prefetches
-        # on the driver and caches batch entries with copy.copy, which
-        # cannot copy generators. (This API is the low-throughput path by
-        # design — per-batch data lives on the driver either way; a
-        # partition-parallel DataSourceStreamReader is the upgrade when
-        # batches outgrow driver memory.)
-        out = []
-        for name in names:
-            out.extend(self._parse_file(os.path.join(self.path, name)))
-        return out
-
-    def read(self, start: dict):
-        seen = set(start.get("seen", []))
-        current = [os.path.basename(p) for p in _data_files(self.path)]
-        new = sorted(n for n in current if n not in seen)
-        end = {"seen": sorted(seen | set(new))}
-        return self._read_names(new), end
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> list:
-        delta = sorted(set(end.get("seen", [])) - set(start.get("seen", [])))
-        return self._read_names(delta)
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets live in the engine checkpoint; nothing to release
-
-
 class KVSnapshotDataSource(DataSource):
-    """``spark.read.format("kvsnapshot")`` — see module docstring."""
+    """``format("kvsnapshot")`` — see module docstring."""
 
     @classmethod
     def name(cls) -> str:
@@ -427,7 +458,7 @@ class KVSnapshotDataSource(DataSource):
     def writer(self, schema: StructType, overwrite: bool) -> KVSnapshotWriter:
         return KVSnapshotWriter(schema, dict(self.options), overwrite)
 
-    def simpleStreamReader(self, schema: StructType) -> KVSnapshotStreamReader:
+    def streamReader(self, schema: StructType) -> KVSnapshotStreamReader:  # noqa: N802
         return KVSnapshotStreamReader(schema, dict(self.options))
 
 

@@ -31,7 +31,10 @@ only for small frames whose recompute-on-loss is acceptable.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 import weakref
 
 from pyspark.sql import DataFrame, SparkSession
@@ -118,6 +121,27 @@ _NTZ_AS_UTC = (
     "make_timestamp(year(ts), month(ts), day(ts), hour(ts), minute(ts), "
     "extract(SECOND FROM ts), 'UTC')"
 )
+
+
+_SCRATCH_DIRS: set = set()
+
+
+def scratch_dir(spark: SparkSession, sf_dir: str, tag: str) -> str:
+    """Session-scoped scratch path for write→read round-trip queries:
+    keyed by the Spark applicationId so concurrent sessions (bench +
+    pytest on one box) never overwrite each other's intermediates, and
+    stable within a session so re-runs reuse mode('overwrite'). Every
+    path handed out is removed at interpreter exit — per-session names
+    would otherwise accumulate in the temp directory across runs."""
+    app = spark.sparkContext.applicationId.replace("-", "_")
+    sf = os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
+    path = os.path.join(tempfile.gettempdir(), f"bps_{tag}_{sf}_{app}")
+    if not _SCRATCH_DIRS:
+        atexit.register(
+            lambda: [shutil.rmtree(p, ignore_errors=True) for p in _SCRATCH_DIRS]
+        )
+    _SCRATCH_DIRS.add(path)
+    return path
 
 
 def inline_rows(spark: SparkSession, schema: str, rows: list[tuple]) -> DataFrame:

@@ -37,6 +37,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 # Schema memo for the footer probe below: {session → {abs path → schema}}.
 # Weak keys so entries die with their session (the load_table pattern);
@@ -288,31 +289,48 @@ def interval_join_pairs(
     )
 
 
-@contextlib.contextmanager
-def _scoped_shuffle_partitions(spark: SparkSession, n: int | None):
-    """Temporarily pin ``spark.sql.shuffle.partitions`` while a streaming
-    query STARTS (the value is snapshotted into the query — and into its
-    checkpoint — at start), restoring the session value afterwards.
+# Shuffle partitions every stream runs with, pinned while the query STARTS
+# (the value is snapshotted into the query and its checkpoint). Every
+# stateful operator materializes one state-store instance per shuffle
+# partition PER micro-batch, a fixed per-partition overhead (store
+# open/commit/snapshot) that dwarfs the data at availableNow scale. The
+# session's batch tuning is restored right after start. On a real cluster
+# the right value instead scales with state size (state must fit
+# per-executor memory); partition count never changes results, only where
+# state lives.
+_STREAM_SHUFFLE_PARTITIONS = 8
 
-    Why: every stateful streaming operator materializes one state-store
-    instance per shuffle partition PER micro-batch, a fixed per-partition
-    overhead (store open/commit/snapshot) that dwarfs the data at
-    availableNow/test scale — a 32-partition stream-stream join over a few
-    thousand events spends its whole runtime on store bookkeeping. Scoping
-    the value to the query keeps the session's batch tuning untouched. On a
-    real cluster the right value instead scales with state size (state must
-    fit per-executor memory) — this knob sets whatever the caller decides,
-    it does not hardcode "small"."""
-    if n is None:
-        yield
+
+@contextlib.contextmanager
+def _checkpoint(checkpoint_dir: str | None):
+    """The caller's checkpoint directory, or a temporary one that is
+    removed when the run ends (a caller without a directory cannot resume,
+    so nothing in it outlives the run)."""
+    if checkpoint_dir:
+        yield checkpoint_dir
         return
+    with tempfile.TemporaryDirectory(prefix="bps_ckpt_", ignore_cleanup_errors=True) as d:
+        yield d
+
+
+def _run_to_completion(writer: DataStreamWriter, spark: SparkSession, timeout_s: int) -> None:
+    """Start ``writer`` with Trigger.AvailableNow and wait for it to finish.
+
+    Raises ``TimeoutError`` if the run does not finish within ``timeout_s``
+    — returning a partial sink as if complete would silently truncate."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    spark.conf.set(key, str(n))
+    spark.conf.set(key, str(_STREAM_SHUFFLE_PARTITIONS))
     try:
-        yield
+        q = writer.trigger(availableNow=True).start()
     finally:
         spark.conf.set(key, prev)
+    try:
+        if not q.awaitTermination(timeout_s):  # pragma: no cover — pathological slowness
+            raise TimeoutError(f"streaming run exceeded {timeout_s}s; sink is partial")
+    finally:
+        if q.isActive:  # pragma: no cover — timeout safety net
+            q.stop()
 
 
 def run_incremental(
@@ -322,34 +340,22 @@ def run_incremental(
     *,
     output_mode: str = "append",
     timeout_s: int = 300,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Cron-cadence incremental run (reference main.py:658-702 + X4): process
     everything new since the checkpoint into a parquet sink, then exit.
     Unlike the memory sink, the file sink is fault-tolerant — re-running with
     the same checkpoint resumes exactly-once from where the last run left
     off (the reference's watermark-ledger incrementality for free).
-    Returns the accumulated sink contents.
-
-    Raises ``TimeoutError`` if the run does not finish within ``timeout_s``
-    — returning the partial sink as if complete would silently truncate."""
-    with _scoped_shuffle_partitions(stream_df.sparkSession, shuffle_partitions):
-        q = (
-            stream_df.writeStream.format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:  # pragma: no cover — only on pathological slowness
-            raise TimeoutError(f"streaming run exceeded {timeout_s}s; sink is partial")
-    finally:
-        if q.isActive:  # pragma: no cover — timeout safety net
-            q.stop()
-    return stream_df.sparkSession.read.parquet(output_dir)
+    Returns the accumulated sink contents."""
+    spark = stream_df.sparkSession
+    writer = (
+        stream_df.writeStream.format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(output_mode)
+    )
+    _run_to_completion(writer, spark, timeout_s)
+    return spark.read.parquet(output_dir)
 
 
 def run_available_now(
@@ -358,38 +364,29 @@ def run_available_now(
     output_mode: str = "append",
     checkpoint_dir: str | None = None,
     timeout_s: int = 300,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion with Trigger.AvailableNow
     into a memory sink; return the sink contents as a batch DataFrame.
 
     This is the reference's cron cadence (main.py:658-702): process
     everything available, then exit; re-running with the same checkpoint
-    resumes incrementally (X4 recovery for free).
-
-    ``shuffle_partitions`` scopes the state-store partition count to this
-    query (see ``_scoped_shuffle_partitions``); partition count never
-    changes results, only where state lives."""
+    resumes incrementally (X4 recovery for free). The sink's temp view is
+    dropped once the returned frame is resolved: the frame holds the sink
+    itself, so it still reads after the drop and the catalog keeps no
+    per-run table."""
+    spark = stream_df.sparkSession
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="bps_ckpt_")
-    with _scoped_shuffle_partitions(stream_df.sparkSession, shuffle_partitions):
-        q = (
+    with _checkpoint(checkpoint_dir) as checkpoint:
+        writer = (
             stream_df.writeStream.format("memory")
             .queryName(name)
             .outputMode(output_mode)
             .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
         )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:  # pragma: no cover — only on pathological slowness
-            raise TimeoutError(f"streaming run exceeded {timeout_s}s; sink is partial")
-    finally:
-        if q.isActive:  # pragma: no cover — timeout safety net
-            q.stop()
-    spark = stream_df.sparkSession
-    return spark.table(name)
+        _run_to_completion(writer, spark, timeout_s)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def run_foreach_batch(
@@ -398,7 +395,6 @@ def run_foreach_batch(
     *,
     checkpoint_dir: str | None = None,
     timeout_s: int = 300,
-    shuffle_partitions: int | None = None,
 ) -> None:
     """Custom-sink cadence via ``foreachBatch`` + Trigger.AvailableNow:
     each micro-batch arrives as a BATCH DataFrame with its epoch id, so
@@ -410,20 +406,9 @@ def run_foreach_batch(
 
     Scale note: ``foreachBatch`` hands the sink a distributed DataFrame —
     the sink decides what stays distributed (df.write) vs what gates on
-    the driver (ledger row). Raises ``TimeoutError`` on overrun like the
-    other runners rather than returning with a partial sink."""
-    checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix="bps_ckpt_")
-    with _scoped_shuffle_partitions(stream_df.sparkSession, shuffle_partitions):
-        q = (
-            stream_df.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
+    the driver (ledger row)."""
+    with _checkpoint(checkpoint_dir) as checkpoint:
+        writer = stream_df.writeStream.foreachBatch(sink).option(
+            "checkpointLocation", checkpoint
         )
-    try:
-        finished = q.awaitTermination(timeout_s)
-        if not finished:  # pragma: no cover — only on pathological slowness
-            raise TimeoutError(f"streaming run exceeded {timeout_s}s; sink is partial")
-    finally:
-        if q.isActive:  # pragma: no cover — timeout safety net
-            q.stop()
+        _run_to_completion(writer, stream_df.sparkSession, timeout_s)

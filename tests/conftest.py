@@ -1,8 +1,10 @@
 from __future__ import annotations
 
+import glob
 import math
 import os
 import sys
+import tempfile
 from pathlib import Path
 
 import duckdb
@@ -24,6 +26,17 @@ def spark():
         "batch_public_spark-tests", extra_conf={"spark.sql.shuffle.partitions": "8"}
     )
     yield s
+
+
+@pytest.fixture(scope="session", autouse=True)
+def no_leaked_stream_checkpoints():
+    """Fail the session if the suite leaves new temporary streaming
+    checkpoint directories behind (streaming.ops removes its own)."""
+    pattern = os.path.join(tempfile.gettempdir(), "bps_ckpt_*")
+    before = set(glob.glob(pattern))
+    yield
+    leaked = sorted(set(glob.glob(pattern)) - before)
+    assert not leaked, f"leaked streaming checkpoint dirs: {leaked}"
 
 
 @pytest.fixture(scope="session")

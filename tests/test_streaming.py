@@ -303,3 +303,23 @@ def test_interval_join_how_normalization_and_rejects(spark):
         interval_join_pairs(events, events, how="right_outer")
     with _pytest.raises(ValueError, match="unsupported how"):
         interval_join_pairs(events, events, how="cross")
+
+
+def test_stream_build_leaves_no_view_or_checkpoint(spark):
+    """Building a streaming query leaves no memory-sink temp view and no
+    temporary checkpoint directory behind, and the returned frame still
+    reads (twice, same rows) after its view is dropped."""
+    import glob
+    import tempfile
+
+    from batch_public_spark.plans import QUERIES
+    from tests.conftest import SF_DIR
+
+    ckpts = os.path.join(tempfile.gettempdir(), "bps_ckpt_*")
+    views = {t.name for t in spark.catalog.listTables()}
+    dirs = set(glob.glob(ckpts))
+    out = QUERIES["stream_tumbling_counts"].fn(spark, SF_DIR)
+    assert {t.name for t in spark.catalog.listTables()} == views
+    assert set(glob.glob(ckpts)) <= dirs
+    first = sorted(map(tuple, out.collect()))
+    assert first and first == sorted(map(tuple, out.collect()))

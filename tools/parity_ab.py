@@ -5,7 +5,9 @@ tool, not part of the bench contract).
 Usage: python tools/parity_ab.py TREE_A TREE_B SF_DIR NAME [NAME ...]
 
 Runs each named query in ONE session per tree (subprocess isolation so the
-two trees' modules never mix), collects sorted rows, and diffs them."""
+two trees' modules never mix), collects sorted rows, and diffs them. Each
+subprocess runs from its tree's root: Spark's Python workers import the
+package from the working directory, not from the driver's sys.path."""
 
 from __future__ import annotations
 
@@ -31,7 +33,7 @@ print("PARITY_JSON:" + json.dumps(out))
 def run_tree(tree: str, sf_dir: str, names: list[str]) -> dict:
     p = subprocess.run(
         [sys.executable, "-c", SNIPPET, tree, sf_dir, *names],
-        capture_output=True, text=True, timeout=1800,
+        capture_output=True, text=True, timeout=1800, cwd=tree,
     )
     for line in p.stdout.splitlines():
         if line.startswith("PARITY_JSON:"):
