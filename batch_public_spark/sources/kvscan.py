@@ -30,7 +30,6 @@ reader (:func:`_read_lines`) and one record decoder
   to the split containing the byte before its first byte).
 * ``mode`` — ``strict`` (default: a bad record raises) or ``permissive``
   (a bad record is dropped and counted in one warning per partition).
-* ``arrow_batch_size`` — records per Arrow batch handed to Spark.
 
 Record contract (one rule for batch and stream). A line must be a JSON
 object; its top-level fields are matched by name, missing fields are
@@ -144,19 +143,11 @@ def _data_files(path: str) -> List[str]:
 
 def _plan_ranges(files: Sequence[str], segments: int) -> List[RangePartition]:
     sizes = {f: os.path.getsize(f) for f in files}
-    total = sum(sizes.values())
-    if total == 0:
-        return [RangePartition(f, 0, 0) for f in files[:1]] or []
-    chunk = max(1, -(-total // segments))  # ceil division
+    chunk = max(1, -(-sum(sizes.values()) // segments))  # ceil division
     parts: List[RangePartition] = []
     for f in files:
-        size = sizes[f]
-        if size == 0:
-            continue
-        start = 0
-        while start < size:
-            parts.append(RangePartition(f, start, min(start + chunk, size)))
-            start += chunk
+        for start in range(0, sizes[f], chunk):
+            parts.append(RangePartition(f, start, min(start + chunk, sizes[f])))
     return parts
 
 
@@ -223,13 +214,16 @@ _TYPE_MISMATCH = (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError)
 
 _LOG = logging.getLogger(__name__)
 
+# Records per Arrow batch handed to Spark.
+_ARROW_BATCH_ROWS = 4096
+
 
 class _JsonlDecoder:
     """The record decoder shared by the batch and stream readers: reads one
     :class:`RangePartition` and yields ``pyarrow.RecordBatch`` chunks.
 
     Arrow batches skip the per-row pickle round-trip between the Python
-    worker and the JVM (one columnar buffer per ~``arrow_batch_size``
+    worker and the JVM (one columnar buffer per ~``_ARROW_BATCH_ROWS``
     records instead of one serialized tuple per record). JSON parsing
     stays per-line; type conversion and pushed filters run per batch.
 
@@ -246,9 +240,6 @@ class _JsonlDecoder:
             raise ValueError("kvsnapshot requires option 'path'")
         self.permissive = options.get("mode", "strict").lower() == "permissive"
         self.spark_schema = schema
-        self.arrow_batch_size = int(options.get("arrow_batch_size", 4096))
-        if self.arrow_batch_size < 1:
-            raise ValueError("arrow_batch_size must be >= 1")
         self.pushed: List[Filter] = []
         self.dropped_parse = 0
         self.dropped_type = 0
@@ -280,7 +271,7 @@ class _JsonlDecoder:
                     self._first_dropped = raw[:200].decode("utf-8", "replace")
                 continue
             batch.append(rec)
-            if len(batch) >= self.arrow_batch_size:
+            if len(batch) >= _ARROW_BATCH_ROWS:
                 yield from self._to_arrow(batch, arrow_schema)
                 batch = []
         if batch:

@@ -29,13 +29,19 @@ def spark():
 
 
 @pytest.fixture(scope="session", autouse=True)
-def no_leaked_stream_checkpoints():
-    """Fail the session if the suite leaves new temporary streaming
-    checkpoint directories behind (streaming.ops removes its own)."""
-    pattern = os.path.join(tempfile.gettempdir(), "bps_ckpt_*")
-    before = set(glob.glob(pattern))
-    yield
-    leaked = sorted(set(glob.glob(pattern)) - before)
+def no_leaked_stream_checkpoints(tmp_path_factory):
+    """Fail the session if the suite leaves temporary streaming checkpoint
+    directories behind (streaming.ops removes its own). The session's
+    temporary files go to a private directory, so another process's
+    running stream in the shared temp directory is not mistaken for a
+    leak."""
+    private = tmp_path_factory.mktemp("tempdir")
+    saved, tempfile.tempdir = tempfile.tempdir, str(private)
+    try:
+        yield
+    finally:
+        tempfile.tempdir = saved
+    leaked = sorted(glob.glob(os.path.join(private, "bps_ckpt_*")))
     assert not leaked, f"leaked streaming checkpoint dirs: {leaked}"
 
 

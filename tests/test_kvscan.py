@@ -298,8 +298,9 @@ def test_line_ownership_exactly_once_property(tmp_path_factory, line_lengths, n_
 )
 def test_plan_ranges_tiles_exactly_property(tmp_path_factory, sizes, segments):
     """For ANY set of file sizes and ANY segment target: ranges tile each
-    non-empty file exactly (no gap, no overlap, full coverage), and empty
-    files contribute no ranges."""
+    non-empty file exactly (no gap, no overlap, full coverage), empty
+    files contribute no ranges, and the reader still plans >= 1 partition
+    for an all-empty snapshot (empty DataFrame, not a planning error)."""
     tmp = tmp_path_factory.mktemp("kv")
     files = []
     for i, n in enumerate(sizes):
@@ -308,11 +309,9 @@ def test_plan_ranges_tiles_exactly_property(tmp_path_factory, sizes, segments):
             f.write(b"a" * n)
         files.append(p)
     parts = _plan_ranges(files, segments)
-    if sum(sizes) == 0:
-        # all-empty snapshot → one (0,0) placeholder so planning still
-        # yields >= 1 partition (empty DataFrame, not a planning error)
-        assert [(p.start, p.end) for p in parts] == [(0, 0)]
-        return
+    reader = KVSnapshotReader(_schema(), {"path": str(tmp), "segments": segments})
+    planned = reader.partitions()
+    assert planned == (parts or [RangePartition("", 0, 0)])
     by_file = defaultdict(list)
     for p in parts:
         by_file[p.path].append((p.start, p.end))
