@@ -74,9 +74,12 @@ def normalize_ts(col: Column) -> Column:
     sec_eastern = (F.unix_timestamp(naive_eastern) + offset_s).cast("long")
 
     # Branch 3: ISO-8601; trailing Z normalized to an explicit offset, naive
-    # interpreted in the (UTC) session zone.
-    sec_iso = F.unix_timestamp(
-        F.try_to_timestamp(F.regexp_replace(s, r"Z$", "+00:00"))
+    # interpreted in the (UTC) session zone. Only strings that start with a
+    # full date: Spark would complete a bare time with today's date and a
+    # year-month with day 1, where the reference's fromisoformat rejects both.
+    sec_iso = F.when(
+        s.rlike(r"^\d{4}-\d{2}-\d{2}"),
+        F.unix_timestamp(F.try_to_timestamp(F.regexp_replace(s, r"Z$", "+00:00"))),
     ).cast("long")
 
     return (

@@ -13,7 +13,7 @@ reference numbering for compat when needed.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -83,13 +83,16 @@ def positional_custom_ids(requests: DataFrame, order_col: str) -> DataFrame:
 def write_jsonl(requests: DataFrame, path: str, *, max_records_per_file: int | None = None) -> int:
     """JSONL sink (reference K1): one compact JSON per line, never
     overwrite (mode=error mirrors the reference's suffix-counter refusal to
-    clobber, jsonl_formatter.py:61-73). Returns written count.
+    clobber, jsonl_formatter.py:61-73). Returns the written count, observed
+    by the write job itself.
 
     ``maxRecordsPerFile`` maps to the OpenAI per-file batch limits at scale
     (SURVEY §4 design note)."""
+    written = Observation()
     jsonl = requests.select(F.to_json(F.struct(*requests.columns)).alias("value"))
+    jsonl = jsonl.observe(written, F.count(F.lit(1)).alias("n"))
     writer = jsonl.write.mode("error")
     if max_records_per_file:
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     writer.text(path)
-    return requests.count()
+    return written.get["n"]

@@ -6,10 +6,9 @@ status_checker.py:39-94). Two idiomatic Spark shapes are provided:
 
 1. **Synchronous pandas-UDF path** (``respond``): an ``mapInPandas`` stage
    calling a transport per Arrow batch — connection reuse per partition,
-   client-side micro-batching, bounded retry with linear backoff exactly
-   like the reference's ``max_retries=3`` / ``sleep(1+attempt)``
-   (batch_submitter.py:54-64). This is the BASELINE-prescribed
-   "DataFrame + UDF for OpenAI calls" route.
+   bounded retry with linear backoff exactly like the reference's
+   ``max_retries=3`` / ``sleep(1+attempt)`` (batch_submitter.py:54-64).
+   This is the BASELINE-prescribed "DataFrame + UDF for OpenAI calls" route.
 2. **Driver-side batch orchestration** (see orchestrator.py): faithful to
    the reference's async submit/poll/download lifecycle.
 
@@ -122,15 +121,13 @@ def openai_transport(**client_kwargs):  # pragma: no cover - needs network+key
 def respond(
     requests: DataFrame,
     transport_factory: Callable[[], Transport] = StubTransport,
-    *,
-    micro_batch: int = 64,
 ) -> DataFrame:
     """Synchronous LLM stage: request records → raw output records.
 
     ``mapInPandas`` so each task builds ONE transport (connection reuse) and
-    walks Arrow batches; ``micro_batch`` bounds per-call payloads. Output
-    schema matches the batch-output file format, so ``parse_batch_output``
-    consumes either path identically.
+    answers one output frame per input Arrow batch, one transport call per
+    request. Output schema matches the batch-output file format, so
+    ``parse_batch_output`` consumes either path identically.
     """
     from batch_public_spark.util import ensure_workers_can_import
 
@@ -145,13 +142,12 @@ def respond(
         transport = RetryingTransport(transport_factory(), sleep=lambda _s: None)
         for pdf in batches:
             rows = []
-            for _, r in pdf.iterrows():
-                body = r["body"]
+            for custom_id, body in zip(pdf["custom_id"], pdf["body"]):
                 if isinstance(body, str):
                     body = json.loads(body)
                 elif not isinstance(body, dict):
                     body = dict(body)  # Arrow struct → mapping
-                rec = transport.complete(r["custom_id"], body)
+                rec = transport.complete(custom_id, body)
                 rows.append(
                     {
                         "id": rec["id"],
@@ -159,7 +155,7 @@ def respond(
                         "response": rec["response"],
                     }
                 )
-            for i in range(0, len(rows), micro_batch):
-                yield pd.DataFrame(rows[i : i + micro_batch])
+            if rows:
+                yield pd.DataFrame(rows)
 
     return requests.select("custom_id", "body").mapInPandas(run, out_schema)

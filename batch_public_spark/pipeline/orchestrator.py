@@ -9,6 +9,14 @@ agent_api.py:12-35).
   X7] → watermark persist → LLM stage (X1, stub by default) → parse (EP3)
   → ledger updates (K4) → output↔input join (J1).
 
+One Spark pass per cycle: the JSONL write is the only job over the source
+(plus its dedup shuffle) and nothing is cached. Two ``Observation``s ride on
+that write: one before the filters counts every drop class (``counts`` on the
+ledger's submitted entry and in ``RunResult.extra``), one after dedup yields
+``n_input`` and the new watermark. The LLM stage then reads the JSONL that
+was written, as a provider reads the uploaded file, so the rows sent are
+exactly the rows written. An empty cycle removes its empty JSONL directory.
+
 Differences from the reference, by design (SURVEY §4):
 - watermark persist order is configurable (`persist_before_submit=True`
   reproduces the reference's at-most-once bias; False = commit-after-success
@@ -20,17 +28,19 @@ Differences from the reference, by design (SURVEY §4):
 
 from __future__ import annotations
 
+import functools
+import shutil
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from batch_public_spark.functions.text import dedup_key, extract_text
 from batch_public_spark.functions.timestamps import discover_event_ts
-from batch_public_spark.operators.dedup import first_wins, incremental_filter
+from batch_public_spark.operators.dedup import first_wins
 from batch_public_spark.pipeline.batch_api import (
     TERMINAL_STATES,
     BatchClient,
@@ -112,40 +122,69 @@ class Orchestrator:
         cutoff = now - int(hours * 3600)
         order = order_col or id_col
 
-        # F2 event-time discovery + F1 look-back filter (skip for static
-        # tables, reference dynamo_fetcher.py:311-314).
+        # F2 event-time discovery, then each row's drop class in filter order:
+        # F1 look-back and F3 watermark (static tables skip both, reference
+        # dynamo_fetcher.py:311-314), then F5 text extraction + F4 usability.
         work = df.withColumn("_event_ts", discover_event_ts(df))
+        ts = F.col("_event_ts")
+        keep: dict[str, Column] = {}  # drop class -> predicate a survivor passes
         if table_name not in self.no_ts_filter:
-            work = work.filter(
-                F.col("_event_ts").isNotNull() & (F.col("_event_ts") >= F.lit(cutoff))
-            )
-            # F3 incremental filter against the persisted high-water mark.
-            work = incremental_filter(work, "_event_ts", self.watermarks.last(table_name))
-
-        # F5 text extraction + F4 usability, then D1 first-wins dedup.
-        work = work.withColumn("_text", extract_text(df)).filter(F.col("_text").isNotNull())
+            keep["no_ts"] = ts.isNotNull()
+            keep["outside_window"] = ts >= F.lit(cutoff)
+            last = self.watermarks.last(table_name)
+            if last is not None:
+                keep["below_watermark"] = ts > F.lit(int(last))
+        keep["no_text"] = extract_text(df).isNotNull()
+        drop = F.lit(None).cast("string")  # the first predicate a row fails
+        for name, ok in reversed(keep.items()):
+            drop = F.when(~ok, name).otherwise(drop)
+        # The filter reads the drop class through the observation, so a
+        # predicate the optimizer folds to false (a table without text
+        # columns) cannot prune the observed scan away.
+        stages = Observation()
+        work = work.withColumn("_drop", drop).observe(
+            stages,
+            F.count(F.lit(1)).alias("rows_in"),
+            *(F.count_if(F.col("_drop") == name).alias(name) for name in keep),
+        )
+        work = work.filter(F.col("_drop").isNull()).drop("_drop")
+        work = work.withColumn("_text", extract_text(df))
+        # D1 first-wins dedup; n_input and the A1 watermark are observed in
+        # the same write job rather than by jobs of their own.
         work = first_wins(work, dedup_key(work), order)
-        work = work.cache()
-
-        n_input = work.count()
-        if n_input == 0:
-            # Early-exit parity (reference main.py:221-223).
-            return RunResult(None, table_name, 0, 0, skipped_reason="no new rows")
+        seen = Observation()
+        work = work.observe(seen, F.count(F.lit(1)).alias("n"), F.max(ts).alias("m"))
 
         requests = build_requests(work, text_col="_text", id_col=id_col, model_key=model_key)
 
         batch_id = f"batch_{uuid.uuid4().hex[:12]}"
         jsonl_path = f"{self.output_dir}/{'jsonl_test' if test_only else 'jsonl'}/{table_name}_{batch_id}"
         n_requests = write_jsonl(requests, jsonl_path)
+        n_input, new_wm = (seen.get[k] for k in ("n", "m"))
+        counts = dict.fromkeys(("rows_in", "no_ts", "outside_window", "below_watermark"), 0)
+        counts |= stages.get
+        dropped = sum(v for k, v in counts.items() if k != "rows_in")
+        counts.update(dup_dropped=counts["rows_in"] - dropped - n_input, requests=n_requests)
+        if n_input == 0:
+            # Early-exit parity (reference main.py:221-223): nothing is left
+            # behind, not even the empty JSONL directory.
+            shutil.rmtree(jsonl_path)
+            return RunResult(
+                None, table_name, 0, 0, skipped_reason="no new rows", extra={"counts": counts}
+            )
+        # The LLM stage reads the written file, as a provider reads the
+        # uploaded one: what is sent is exactly what was written.
+        requests = df.sparkSession.read.schema(requests.schema).json(jsonl_path)
+        result = functools.partial(
+            RunResult, table=table_name, n_input=n_input, n_requests=n_requests,
+            requests=requests, jsonl_path=jsonl_path, extra={"counts": counts},
+        )
 
         if test_only:
             # X7 dry-run: JSONL written to the quarantined dir, stop before
             # any external call (reference main.py:238-254).
-            return RunResult(
-                None, table_name, n_input, n_requests, requests=requests, jsonl_path=jsonl_path
-            )
+            return result(None)
 
-        new_wm = work.agg(F.max("_event_ts").alias("m")).collect()[0]["m"]  # A1
         # `is not None`: a legitimate watermark of 0 (epoch start) must still
         # advance — truthiness would silently skip it.
         advance_wm = table_name not in self.no_ts_filter and new_wm is not None
@@ -158,6 +197,7 @@ class Orchestrator:
             table_name=table_name,
             model=resolve(model_key),
             record_count=n_requests,
+            counts=counts,
             input_jsonl=jsonl_path,
             # Recorded BEFORE any provider call: a crash between here and
             # submit_jsonl_dir leaves a marked entry that resume() closes
@@ -189,10 +229,7 @@ class Orchestrator:
                         provider[0]["input_file_id"] if len(provider) == 1 else None
                     ),
                 )
-            return RunResult(
-                batch_id, table_name, n_input, n_requests,
-                requests=requests, jsonl_path=jsonl_path,
-            )
+            return result(batch_id)
 
         # X1 blocking path. With a provider client this is the reference's
         # wait=True orchestrate mode: real submit → poll to terminal →
@@ -206,26 +243,14 @@ class Orchestrator:
             entry = self.wait(batch_id)
             final = entry.get("final_status")
             if final != "completed":
-                return RunResult(
-                    batch_id, table_name, n_input, n_requests,
-                    requests=requests, jsonl_path=jsonl_path,
-                    skipped_reason=f"provider batch {final}",
-                )
-            parsed = self.parsed_outputs(df.sparkSession, batch_id)
-            return RunResult(
-                batch_id, table_name, n_input, n_requests,
-                requests=requests, parsed=parsed, jsonl_path=jsonl_path,
-            )
+                return result(batch_id, skipped_reason=f"provider batch {final}")
+            return result(batch_id, parsed=self.parsed_outputs(df.sparkSession, batch_id))
 
         raw = respond(requests, self.transport_factory)
         parsed = parse_batch_output(raw)
 
         self._close(batch_id)
-
-        return RunResult(
-            batch_id, table_name, n_input, n_requests,
-            requests=requests, parsed=parsed, jsonl_path=jsonl_path,
-        )
+        return result(batch_id, parsed=parsed)
 
     def run_tables(self, sources: dict[str, DataFrame], **kwargs) -> dict[str, RunResult]:
         """X5: loop orchestrate() over N tables (reference main.py:658-702).

@@ -39,6 +39,12 @@ TS_CASES = [
     ("2025-05-19 21:20:00.123 EST", None),  # malformed EST → NULL, no fallthrough
     ("garbage", None),
     (None, None),
+    # no full leading date: fromisoformat rejects these, Spark alone would
+    # fill in today's date (bare times) or day 1 (year-month)
+    ("12:00", None),
+    ("T12:00:00", None),
+    ("12:00:00Z", None),
+    ("2024-05", None),
 ]
 
 

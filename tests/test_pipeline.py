@@ -6,6 +6,7 @@ from __future__ import annotations
 import json
 import os
 import re
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import Row
@@ -94,9 +95,65 @@ def test_watermark_convergence_over_reruns(spark, source, orch):
     assert second.n_requests == 1
     assert [r["custom_id"] for r in second.requests.collect()] == ["row_2"]
     assert orch.watermarks.last("news") == NOW - 50
+    written = sorted(os.listdir(os.path.join(orch.output_dir, "jsonl")))
     third = orch.run_batch(source, table_name="news", hours=12, now=NOW)
     assert third.skipped_reason == "no new rows"
     assert orch.watermarks.last("news") == NOW - 50
+    # the empty cycle's write leaves no JSONL directory behind
+    assert sorted(os.listdir(os.path.join(orch.output_dir, "jsonl"))) == written
+
+
+def test_run_batch_counts_reconcile(spark, source, orch):
+    """Per-stage counts observed in the write job: rows in = requests + the
+    drop classes, on the ledger's submitted entry and the result."""
+    res = orch.run_batch(source, table_name="news", hours=12, now=NOW)
+    counts = res.extra["counts"]
+    assert counts == {
+        "rows_in": 6, "no_ts": 1, "outside_window": 1, "below_watermark": 0,
+        "no_text": 1, "dup_dropped": 1, "requests": 2,
+    }
+    drops = ("no_ts", "outside_window", "below_watermark", "no_text", "dup_dropped")
+    assert counts["rows_in"] == counts["requests"] + sum(counts[k] for k in drops)
+    assert orch.ledger.get(res.batch_id)["counts"] == counts
+    # a static table skips the time filters: only text and dedup drop rows
+    orch.no_ts_filter = {"static"}
+    static = orch.run_batch(source, table_name="static", hours=12, now=NOW)
+    assert static.extra["counts"] == {
+        "rows_in": 6, "no_ts": 0, "outside_window": 0, "below_watermark": 0,
+        "no_text": 1, "dup_dropped": 1, "requests": 4,
+    }
+    # no text column at all: the folded-away text filter must not prune the
+    # observed scan, and the empty cycle still reports its counts
+    bare = spark.createDataFrame([Row(id="7", timestamp=str(NOW - 5))])
+    empty = orch.run_batch(bare, table_name="news", hours=12, now=NOW)
+    assert empty.skipped_reason == "no new rows"
+    assert empty.extra["counts"]["no_text"] == empty.extra["counts"]["rows_in"] == 1
+
+
+def test_run_batch_one_pass(spark, source, orch):
+    """A blocking cycle runs the dedup shuffle and the JSONL write and
+    nothing else (the LLM stage stays lazy), and caches nothing."""
+    sc = spark.sparkContext
+    persisted = sc._jsc.getPersistentRDDs().size()  # noqa: SLF001
+    sc.setJobGroup("one_pass", "one_pass")
+    try:
+        res = orch.run_batch(source, table_name="news", hours=12, now=NOW)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("one_pass")) <= 2
+    assert res.n_requests == 2
+    assert sc._jsc.getPersistentRDDs().size() == persisted  # noqa: SLF001
+
+
+def test_requests_read_the_written_jsonl(spark, source, orch):
+    """The LLM stage reads the JSONL artifact, as a provider reads the
+    uploaded file, not a recomputation of the source."""
+    res = orch.run_batch(source, table_name="news", hours=12, now=NOW)
+    root = os.path.realpath(res.jsonl_path)
+    files = res.requests.inputFiles()
+    assert files
+    for f in files:
+        assert os.path.realpath(urlparse(f).path).startswith(root + os.sep), f
 
 
 def test_dry_run_writes_jsonl_only(spark, source, orch, tmp_path):
