@@ -1,9 +1,9 @@
 """Programmatic/agent entry points (reference agent_api.py:12-35).
 
-Thin façade over the Orchestrator for MCP/agent callers: ``run_batch``
-(blocking, returns the run summary) and ``resume_batch``. Same shapes as
-the reference's, with the Spark session + parquet catalog replacing the
-boto3 client."""
+Thin façade over the CLI's per-table run path for MCP/agent callers:
+``run_batch`` (blocking, returns the run summary) and ``resume_batch``.
+Same shapes as the reference's, with the Spark session + parquet catalog
+replacing the boto3 client."""
 
 from __future__ import annotations
 
@@ -12,19 +12,7 @@ from typing import Any, Optional
 
 from pyspark.sql import SparkSession
 
-from batch_public_spark.cli import _ID_COLS, _STATIC_TABLES
-from batch_public_spark.pipeline import JobLedger, Orchestrator, StubTransport, WatermarkStore
-from batch_public_spark.sources.tables import load_table
-
-
-def _default_orchestrator(output_dir: str = "output") -> Orchestrator:
-    return Orchestrator(
-        watermarks=WatermarkStore(os.path.join(output_dir, "batch_watermark.json")),
-        ledger=JobLedger(os.path.join(output_dir, "batch_status.json")),
-        transport_factory=StubTransport,
-        output_dir=output_dir,
-        no_ts_filter=_STATIC_TABLES,
-    )
+from batch_public_spark.cli import orchestrator, run_table
 
 
 def run_batch(
@@ -37,29 +25,18 @@ def run_batch(
     output_dir: str = "output",
     spark: Optional[SparkSession] = None,
 ) -> dict[str, Any]:
-    """Blocking orchestrated run for one table (reference run_batch)."""
+    """Blocking orchestrated run for one table (reference run_batch): the
+    CLI's summary dict, with the parse stage written under
+    ``{output_dir}/parsed``."""
     spark = spark or SparkSession.builder.appName("batch_public_spark-agent").getOrCreate()
     data_dir = data_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    orch = _default_orchestrator(output_dir)
-    result = orch.run_batch(
-        load_table(spark, data_dir, table),
-        table_name=table,
-        hours=hours,
-        model_key=model,
-        id_col=_ID_COLS.get(table, "id"),
-        test_only=test_only,
+    return run_table(
+        spark, orchestrator(output_dir), table,
+        data_dir=data_dir, hours=hours, model=model, test_only=test_only,
     )
-    return {
-        "batch_id": result.batch_id,
-        "table": result.table,
-        "n_input": result.n_input,
-        "n_requests": result.n_requests,
-        "jsonl_path": result.jsonl_path,
-        "skipped_reason": result.skipped_reason,
-    }
 
 
 def resume_batch(batch_id: str, *, output_dir: str = "output") -> Optional[dict]:
     """Close out / report a previously submitted batch (reference
     resume_batch — without the status_data NameError bug, main.py:407)."""
-    return _default_orchestrator(output_dir).resume(batch_id)
+    return orchestrator(output_dir).resume(batch_id)

@@ -12,6 +12,8 @@ Sources are parquet tables in ``--data-dir`` (the DynamoDB-scan role is
 played by the parquet catalog — see sources.tables for the 100 TB ingest
 story). State lives beside the output dir: ``batch_watermark.json`` +
 ``batch_status.json``, byte-compatible in spirit with the reference's.
+``orchestrator`` and ``run_table`` are the one per-table run path; the
+agent API (agent_api.py) calls them too.
 
 Usage::
 
@@ -104,6 +106,68 @@ def _data_tables(data_dir: str) -> list[str]:
     )
 
 
+def orchestrator(output_dir: str, *, batch_mock: bool = False) -> Orchestrator:
+    """The orchestrator every entry point runs: JSON state beside the
+    output dir, the stub transport, the catalog's static tables; with
+    ``batch_mock`` the durable mock provider under ``<output_dir>/mock_provider``."""
+    batch_client = None
+    if batch_mock:
+        from batch_public_spark.pipeline.batch_api import MockBatchClient
+
+        batch_client = MockBatchClient(state_dir=os.path.join(output_dir, "mock_provider"))
+    return Orchestrator(
+        watermarks=WatermarkStore(os.path.join(output_dir, "batch_watermark.json")),
+        ledger=JobLedger(os.path.join(output_dir, "batch_status.json")),
+        transport_factory=StubTransport,
+        output_dir=output_dir,
+        no_ts_filter=_STATIC_TABLES,
+        batch_client=batch_client,
+        poll_every=0 if batch_mock else 60,
+    )
+
+
+def run_table(
+    spark,
+    orch: Orchestrator,
+    table: str,
+    *,
+    data_dir: str,
+    hours: float = 12.0,
+    model: str = "nano",
+    id_col: str | None = None,
+    test_only: bool = False,
+    async_mode: bool = False,
+) -> dict:
+    """One table's cycle, returned as its summary dict. A blocking run
+    writes its parse stage to ``{output_dir}/parsed/{table}_{batch_id}``:
+    that write is what runs the LLM and parse work."""
+    result = orch.run_batch(
+        load_table(spark, data_dir, table),
+        table_name=table,
+        hours=hours,
+        model_key=model,
+        id_col=id_col or _ID_COLS.get(table, "id"),
+        test_only=test_only,
+        submit_only=async_mode and not test_only,
+    )
+    n_parsed = None
+    if result.parsed is not None:
+        path = os.path.join(orch.output_dir, "parsed", f"{table}_{result.batch_id}")
+        result.parsed.write.parquet(path)
+        n_parsed = spark.read.parquet(path).count()
+    return {
+        "table": table,
+        "batch_id": result.batch_id,
+        "n_input": result.n_input,
+        "n_requests": result.n_requests,
+        "jsonl_path": result.jsonl_path,
+        "n_parsed": n_parsed,
+        "skipped_reason": result.skipped_reason,
+        "async": async_mode,
+        "counts": result.extra.get("counts"),
+    }
+
+
 def main(argv: list[str] | None = None) -> int:
     args = _build_parser().parse_args(argv)
 
@@ -119,22 +183,7 @@ def main(argv: list[str] | None = None) -> int:
             print(t)
         return 0
 
-    watermarks = WatermarkStore(os.path.join(args.output_dir, "batch_watermark.json"))
-    ledger = JobLedger(os.path.join(args.output_dir, "batch_status.json"))
-    batch_client = None
-    if args.batch_mock:
-        from batch_public_spark.pipeline.batch_api import MockBatchClient
-
-        batch_client = MockBatchClient(
-            state_dir=os.path.join(args.output_dir, "mock_provider")
-        )
-    orch = Orchestrator(
-        watermarks=watermarks, ledger=ledger,
-        transport_factory=StubTransport, output_dir=args.output_dir,
-        no_ts_filter=_STATIC_TABLES,
-        batch_client=batch_client,
-        poll_every=0 if args.batch_mock else 60,
-    )
+    orch = orchestrator(args.output_dir, batch_mock=args.batch_mock)
 
     if args.resume:
         entry = orch.resume(args.resume)
@@ -150,9 +199,6 @@ def main(argv: list[str] | None = None) -> int:
         print("no tables selected (use --table or a config file)", file=sys.stderr)
         return 2
 
-    # >1 table forces async, reference main.py:686-693.
-    async_mode = args.async_mode or len(tables) > 1
-
     from pyspark.sql import SparkSession  # deferred: --list-* paths need no JVM
 
     spark = (
@@ -161,36 +207,18 @@ def main(argv: list[str] | None = None) -> int:
         .getOrCreate()
     )
 
+    # X5: one cycle per table, sequential like the reference
+    # (main.py:658-702); >1 table forces async (main.py:686-693).
     rc = 0
     for table in tables:
-        df = load_table(spark, args.data_dir, table)
-        result = orch.run_batch(
-            df,
-            table_name=table,
-            hours=args.hours,
-            model_key=args.model,
-            id_col=args.id_col or _ID_COLS.get(table, "id"),
-            test_only=args.test,
-            submit_only=async_mode and not args.test,
+        summary = run_table(
+            spark, orch, table,
+            data_dir=args.data_dir, hours=args.hours, model=args.model,
+            id_col=args.id_col, test_only=args.test,
+            async_mode=args.async_mode or len(tables) > 1,
         )
-        # Blocking runs return the parse stage lazily; writing it is what
-        # runs the LLM and parse work the ledger already calls completed.
-        n_parsed = None
-        if result.parsed is not None:
-            path = os.path.join(args.output_dir, "parsed", f"{table}_{result.batch_id}")
-            result.parsed.write.parquet(path)
-            n_parsed = spark.read.parquet(path).count()
-        print(json.dumps({
-            "table": table,
-            "batch_id": result.batch_id,
-            "n_input": result.n_input,
-            "n_requests": result.n_requests,
-            "jsonl_path": result.jsonl_path,
-            "n_parsed": n_parsed,
-            "skipped_reason": result.skipped_reason,
-            "async": async_mode,
-        }))
-        if result.skipped_reason not in (None, "no new rows"):
+        print(json.dumps(summary))
+        if summary["skipped_reason"] not in (None, "no new rows"):
             rc = 1
     return rc
 

@@ -10,16 +10,10 @@ from batch_public_spark.pipeline.batch_api import (
 from batch_public_spark.pipeline.formatter import (
     SYSTEM_PROMPT,
     build_requests,
-    positional_custom_ids,
     request_struct,
     write_jsonl,
 )
-from batch_public_spark.pipeline.llm import (
-    RetryingTransport,
-    StubTransport,
-    Transport,
-    respond,
-)
+from batch_public_spark.pipeline.llm import StubTransport, Transport, respond
 from batch_public_spark.pipeline.models import ALIASES, CATALOG, resolve
 from batch_public_spark.pipeline.orchestrator import NO_TS_FILTER, Orchestrator, RunResult
 from batch_public_spark.pipeline.parser import (
@@ -42,7 +36,6 @@ __all__ = [
     "wait_for_completion",
     "OUTPUT_SCHEMA",
     "Orchestrator",
-    "RetryingTransport",
     "RunResult",
     "CATALOG",
     "SYSTEM_PROMPT",
@@ -53,7 +46,6 @@ __all__ = [
     "build_requests",
     "join_outputs_to_inputs",
     "parse_batch_output",
-    "positional_custom_ids",
     "read_batch_outputs",
     "request_struct",
     "resolve",

@@ -4,7 +4,8 @@ Reference semantics reproduced exactly (batch_submitter.py:48-118,
 status_checker.py:39-94):
 
 - ``upload``: JSONL file → file_id, 3 attempts, linear ``sleep(1+attempt)``
-  backoff (batch_submitter.py:52-64).
+  backoff (batch_submitter.py:52-64); ``with_retries`` is the one retry
+  policy, also used per request by the LLM stage (llm.respond).
 - ``create``: batch over the uploaded file with ``endpoint`` +
   ``completion_window="24h"`` — the model travels inside each JSONL line,
   never in the create call (batch_submitter.py:67-118).
@@ -25,11 +26,11 @@ lifecycle in-memory with REAL state transitions (validating → in_progress →
 … → completed, output file materialized only at completion) so tests and CI
 exercise the genuine poll loop rather than an always-done shortcut.
 
-Scale note: the JSONL sink writes a directory of part files;
+Scale note: the JSONL sink writes a directory of part files, each capped at
+the provider's 50k requests per file (formatter._REQUESTS_PER_FILE);
 ``submit_jsonl_dir`` maps one uploaded file + one provider batch per part
-file, which is exactly how the OpenAI per-batch limits (50k requests /
-200 MB per file) are respected at 100 TB — ``maxRecordsPerFile`` on the
-sink is the sizing lever.
+file, which is how the OpenAI per-batch limits (50k requests / 200 MB per
+file) are respected at 100 TB.
 """
 
 from __future__ import annotations
@@ -50,6 +51,8 @@ TERMINAL_STATES = JobLedger.TERMINAL
 
 ENDPOINT = "/v1/chat/completions"
 
+_ATTEMPTS = 3
+
 
 class BatchClient(Protocol):
     """Minimal provider contract for the batch lifecycle."""
@@ -65,19 +68,20 @@ class BatchClient(Protocol):
     def download(self, file_id: str) -> bytes: ...
 
 
-def _with_retries(fn: Callable[[], Any], what: str, *, max_retries: int = 3, sleep=time.sleep):
-    """Reference retry shape: ``attempt`` loop, linear ``sleep(1+attempt)``
-    (batch_submitter.py:52-64, 83-118)."""
-    attempt = 0
-    while attempt < max_retries:
+def with_retries(fn: Callable[[], Any], what: str, *, sleep=time.sleep):
+    """The one retry policy, for the provider calls and the LLM stage alike
+    (reference batch_submitter.py:52-64, 83-118): ``_ATTEMPTS`` attempts
+    with a linear ``sleep(1+attempt)`` between them; when all fail, a
+    ``RuntimeError`` chained to the last attempt's exception, which its
+    message repeats (PySpark's simplified worker traceback drops the chain,
+    so a failed task would not otherwise name the cause)."""
+    for attempt in range(1, _ATTEMPTS + 1):
         try:
             return fn()
-        except Exception:  # noqa: BLE001 — mirror the reference's blanket retry
-            attempt += 1
-            if attempt >= max_retries:
-                raise RuntimeError(f"{what} failed after {max_retries} attempts")
+        except Exception as exc:  # noqa: BLE001 — mirror the reference's blanket retry
+            if attempt == _ATTEMPTS:
+                raise RuntimeError(f"{what} failed after {_ATTEMPTS} attempts: {exc!r}") from exc
             sleep(1 + attempt)
-    raise RuntimeError(f"{what} failed after {max_retries} attempts")  # pragma: no cover
 
 
 def submit_jsonl_dir(
@@ -107,10 +111,10 @@ def submit_jsonl_dir(
 
     out: list[dict] = []
     for f in files:
-        file_id = _with_retries(
+        file_id = with_retries(
             lambda f=f: client.upload_file(f, purpose="batch"), f"upload {f}", sleep=sleep
         )
-        batch = _with_retries(
+        batch = with_retries(
             lambda file_id=file_id: client.create_batch(
                 file_id, endpoint=endpoint, completion_window=completion_window
             ),

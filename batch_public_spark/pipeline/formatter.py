@@ -1,22 +1,21 @@
 """Batch-request construction + JSONL sink (reference ops P1, P2, K1).
 
 Reference shape (jsonl_formatter.py:150-179): one JSON object per line —
-``{"custom_id": "row_N", "method": "POST", "url": "/v1/chat/completions",
+``{"custom_id": "row_N", "method": "POST", "url": ENDPOINT,
 "body": {"messages": [...], "model": ..., "user": ...}}``.
 
 Design change for scale (SURVEY §7 risk P2): ``custom_id`` is derived from
 the source primary key, not the 1-based written position — a positional id
 requires a global total order (single-task sort at 100 TB) and makes the
-output↔input join fragile. ``positional_custom_ids`` reproduces the exact
-reference numbering for compat when needed.
+output↔input join fragile.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from batch_public_spark.pipeline.batch_api import ENDPOINT
 from batch_public_spark.pipeline.models import resolve
 
 # Reference jsonl_formatter.py:17-21, verbatim prompt constant (data, not code).
@@ -26,7 +25,9 @@ SYSTEM_PROMPT = (
     "Your job is to transform this raw data into a clean, verified, and structured intelligence report in JSON format for later use in batch analytics and dashboards.\n"
 )
 
-ENDPOINT = "/v1/chat/completions"
+# The provider accepts at most 50,000 requests per batch input file
+# (batch_api docstring); no JSONL part file holds more.
+_REQUESTS_PER_FILE = 50_000
 
 
 def request_struct(text_col: Column, *, model_key: str = "nano", user_col: Column | None = None) -> Column:
@@ -69,30 +70,14 @@ def build_requests(
     )
 
 
-def positional_custom_ids(requests: DataFrame, order_col: str) -> DataFrame:
-    """Compat shim: exact reference numbering ``row_{n}``, 1-based over
-    written rows (jsonl_formatter.py:168-173). Requires a global order ⇒
-    single-partition window — fine for ≤ millions of rows, deliberately NOT
-    the default at 100 TB."""
-    w = W.orderBy(order_col)
-    return requests.withColumn(
-        "custom_id", F.concat(F.lit("row_"), F.row_number().over(w).cast("string"))
-    )
-
-
-def write_jsonl(requests: DataFrame, path: str, *, max_records_per_file: int | None = None) -> int:
+def write_jsonl(requests: DataFrame, path: str) -> int:
     """JSONL sink (reference K1): one compact JSON per line, never
     overwrite (mode=error mirrors the reference's suffix-counter refusal to
-    clobber, jsonl_formatter.py:61-73). Returns the written count, observed
-    by the write job itself.
-
-    ``maxRecordsPerFile`` maps to the OpenAI per-file batch limits at scale
-    (SURVEY §4 design note)."""
+    clobber, jsonl_formatter.py:61-73), at most ``_REQUESTS_PER_FILE`` lines
+    per part file so each part is one acceptable provider batch. Returns the
+    written count, observed by the write job itself."""
     written = Observation()
     jsonl = requests.select(F.to_json(F.struct(*requests.columns)).alias("value"))
     jsonl = jsonl.observe(written, F.count(F.lit(1)).alias("n"))
-    writer = jsonl.write.mode("error")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.text(path)
+    jsonl.write.mode("error").option("maxRecordsPerFile", _REQUESTS_PER_FILE).text(path)
     return written.get["n"]

@@ -6,8 +6,9 @@ status_checker.py:39-94). Two idiomatic Spark shapes are provided:
 
 1. **Synchronous pandas-UDF path** (``respond``): an ``mapInPandas`` stage
    calling a transport per Arrow batch — connection reuse per partition,
-   bounded retry with linear backoff exactly like the reference's
-   ``max_retries=3`` / ``sleep(1+attempt)`` (batch_submitter.py:54-64).
+   each request retried by the one retry policy the provider calls use
+   (``batch_api.with_retries``, reference batch_submitter.py:54-64);
+   inside a task the attempts run back to back, without the sleeps.
    This is the BASELINE-prescribed "DataFrame + UDF for OpenAI calls" route.
 2. **Driver-side batch orchestration** (see orchestrator.py): faithful to
    the reference's async submit/poll/download lifecycle.
@@ -19,14 +20,17 @@ transport is gated behind an import-try.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
-import time
 from collections.abc import Iterator
 from typing import Callable, Protocol
 
 import pandas as pd
 from pyspark.sql import DataFrame
+
+from batch_public_spark.pipeline.batch_api import with_retries
+from batch_public_spark.pipeline.parser import OUTPUT_SCHEMA
 
 
 class Transport(Protocol):
@@ -70,23 +74,6 @@ class StubTransport:
         }
 
 
-class RetryingTransport:
-    """X3 semantics: 3 attempts, linear ``sleep(1+attempt)`` backoff."""
-
-    def __init__(self, inner: Transport, max_retries: int = 3, sleep: Callable = time.sleep):
-        self.inner, self.max_retries, self._sleep = inner, max_retries, sleep
-
-    def complete(self, custom_id: str, body: dict) -> dict:
-        last: Exception | None = None
-        for attempt in range(self.max_retries):
-            try:
-                return self.inner.complete(custom_id, body)
-            except Exception as exc:  # noqa: BLE001 — mirror blanket retry
-                last = exc
-                self._sleep(1 + attempt)
-        raise last  # type: ignore[misc]
-
-
 def openai_transport(**client_kwargs):  # pragma: no cover - needs network+key
     """Real synchronous OpenAI transport (import-gated; not used in CI)."""
     try:
@@ -126,20 +113,15 @@ def respond(
 
     ``mapInPandas`` so each task builds ONE transport (connection reuse) and
     answers one output frame per input Arrow batch, one transport call per
-    request. Output schema matches the batch-output file format, so
+    request (up to three when it raises). Output schema matches the batch-output file format, so
     ``parse_batch_output`` consumes either path identically.
     """
     from batch_public_spark.util import ensure_workers_can_import
 
     ensure_workers_can_import(requests.sparkSession)
 
-    out_schema = (
-        "id string, custom_id string, "
-        "response struct<status_code int, body struct<"
-        "choices array<struct<message struct<role string, content string>>>>>"
-    )
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        transport = RetryingTransport(transport_factory(), sleep=lambda _s: None)
+        transport = transport_factory()
         for pdf in batches:
             rows = []
             for custom_id, body in zip(pdf["custom_id"], pdf["body"]):
@@ -147,7 +129,11 @@ def respond(
                     body = json.loads(body)
                 elif not isinstance(body, dict):
                     body = dict(body)  # Arrow struct → mapping
-                rec = transport.complete(custom_id, body)
+                rec = with_retries(
+                    functools.partial(transport.complete, custom_id, body),
+                    f"LLM request {custom_id}",
+                    sleep=lambda _s: None,
+                )
                 rows.append(
                     {
                         "id": rec["id"],
@@ -158,4 +144,4 @@ def respond(
             if rows:
                 yield pd.DataFrame(rows)
 
-    return requests.select("custom_id", "body").mapInPandas(run, out_schema)
+    return requests.select("custom_id", "body").mapInPandas(run, OUTPUT_SCHEMA)

@@ -56,11 +56,6 @@ CATALOG: dict[str, str] = {
 }
 
 
-def kinds(kind: str) -> list[str]:
-    """All catalog ids of a given kind ("chat" / "embedding"), sorted."""
-    return sorted(m for m, k in CATALOG.items() if k == kind)
-
-
 def resolve(model_key: str) -> str:
     """Expand an alias, pass through a known concrete id, and fall back to
     the default alias for anything unrecognized (never error on a typo —

@@ -107,7 +107,6 @@ class Orchestrator:
         hours: float = 12.0,
         model_key: str = "nano",
         id_col: str = "id",
-        order_col: str | None = None,
         test_only: bool = False,
         submit_only: bool = False,
         now: Optional[int] = None,
@@ -120,7 +119,6 @@ class Orchestrator:
 
         now = int(now if now is not None else time.time())
         cutoff = now - int(hours * 3600)
-        order = order_col or id_col
 
         # F2 event-time discovery, then each row's drop class in filter order:
         # F1 look-back and F3 watermark (static tables skip both, reference
@@ -151,7 +149,7 @@ class Orchestrator:
         work = work.withColumn("_text", extract_text(df))
         # D1 first-wins dedup; n_input and the A1 watermark are observed in
         # the same write job rather than by jobs of their own.
-        work = first_wins(work, dedup_key(work), order)
+        work = first_wins(work, dedup_key(work), id_col)
         seen = Observation()
         work = work.observe(seen, F.count(F.lit(1)).alias("n"), F.max(ts).alias("m"))
 
@@ -251,14 +249,6 @@ class Orchestrator:
 
         self._close(batch_id)
         return result(batch_id, parsed=parsed)
-
-    def run_tables(self, sources: dict[str, DataFrame], **kwargs) -> dict[str, RunResult]:
-        """X5: loop orchestrate() over N tables (reference main.py:658-702).
-        Sequential like the reference; Spark scheduler pools would overlap
-        them on a real cluster."""
-        return {
-            name: self.run_batch(df, table_name=name, **kwargs) for name, df in sources.items()
-        }
 
     def _close(self, batch_id: str, final_status: str = "completed") -> dict:
         """Terminal ledger transition. In commit-after-success mode the

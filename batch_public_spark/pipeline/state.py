@@ -8,13 +8,9 @@ tmp-file + ``os.replace`` — reproduced here exactly, because this state is
 *driver* state: a handful of rows that gate incremental runs. Putting it
 through a distributed write would add latency and give nothing.
 
-At cluster scale the upgrade path is a Delta/Iceberg ledger table with
-``MERGE INTO`` (ACID upsert ≈ the reference's update-or-insert fallback at
-main.py:350-362): :class:`DeltaJobLedger` below, gated behind an import-try
-since the local image carries no Delta jars. Its ledger semantics are
-contract-identical to :class:`JobLedger` and unit-tested through a
-dict-backed storage shim; the Delta backend itself only composes the
-CREATE/MERGE statements and runs where delta-spark is installed.
+At cluster scale the upgrade path is a Delta/Iceberg ledger table keyed by
+``batch_id`` and written with ``MERGE INTO`` (ACID upsert, like the
+reference's update-or-insert fallback at main.py:350-362).
 
 Commit-order semantics (SURVEY §4): the reference persists the watermark
 *before* submitting (at-most-once; duplicates impossible, loss possible,
@@ -116,234 +112,3 @@ class JobLedger:
         ``final_status`` key, main.py:462-470)."""
         return {k: v for k, v in _read_json(self.path).items() if "final_status" not in v}
 
-
-# ---------------------------------------------------------------------------
-# Delta-table ledger (the SURVEY §1 batch_status.json → Delta mapping)
-# ---------------------------------------------------------------------------
-
-
-def delta_available() -> bool:
-    """True when delta-spark is importable (it is not in this sandbox)."""
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-class MemoryLedgerBackend:
-    """Dict-backed stand-in with versioned MERGE-INTO upsert semantics,
-    used by the contract tests (and usable as a scratch ledger). Mirrors
-    the Delta MERGE exactly: the update applies only when the stored
-    version equals the writer's expected version (compare-and-swap), the
-    insert only when the row is absent and the writer expected absence."""
-
-    def __init__(self):
-        # batch_id -> (version, created_utc, final_status, payload)
-        self.rows: dict[str, tuple[int, str, Optional[str], str]] = {}
-
-    def upsert(
-        self,
-        batch_id: str,
-        created_utc: str,
-        final_status: Optional[str],
-        payload: str,
-        *,
-        expected_version: int,
-    ) -> bool:
-        cur = self.rows.get(batch_id)
-        cur_version = cur[0] if cur else 0
-        if cur_version != expected_version:
-            return False  # stale read — caller re-reads and retries
-        self.rows[batch_id] = (cur_version + 1, created_utc, final_status, payload)
-        return True
-
-    def lookup(self, batch_id: str) -> Optional[tuple[str, int]]:
-        row = self.rows.get(batch_id)
-        return (row[3], row[0]) if row else None
-
-    def scan(self, *, pending_only: bool = False):
-        for bid, (_v, _c, final_status, payload) in self.rows.items():
-            if pending_only and final_status is not None:
-                continue
-            yield bid, payload
-
-
-class DeltaLedgerBackend:
-    """Delta storage primitive: one ACID ``MERGE INTO`` per upsert, point
-    lookup / pending scan with ``final_status`` as a pushdown-able column.
-
-    Concurrency: Delta's optimistic concurrency control serializes the
-    MERGE commits, but the ledger's field-merge happens in Python between
-    a lookup and the MERGE — so each row carries a ``version`` and the
-    MERGE applies ONLY when the stored version equals the version the
-    writer read (compare-and-swap; insert requires expected version 0).
-    A stale writer's MERGE is a no-op, detected by the read-back in
-    :meth:`upsert`, and :meth:`DeltaJobLedger.record` re-reads and
-    retries — no lost updates, which neither OCC alone nor the JSON-file
-    ledger (two ``os.replace`` writers) can guarantee.
-    """
-
-    SCHEMA = (
-        "batch_id STRING, version BIGINT, created_utc STRING, "
-        "final_status STRING, payload STRING"
-    )
-
-    def __init__(self, spark, path: str):
-        if not delta_available():
-            raise ImportError(
-                "DeltaJobLedger requires the delta-spark package and Delta "
-                "jars on the Spark classpath; use JobLedger (JSON file) here"
-            )
-        self._spark = spark
-        self._path = path
-        spark.sql(self.create_sql(path))
-        # Upgrade path for ledgers created before the version column: the
-        # CREATE IF NOT EXISTS above no-ops on an existing 4-column table
-        # and every MERGE would then fail on t.version — add + backfill.
-        cols = spark.read.format("delta").load(path).columns
-        if "version" not in cols:
-            for stmt in self.migrate_sql(path):
-                spark.sql(stmt)
-
-    @staticmethod
-    def create_sql(path: str) -> str:
-        return (
-            f"CREATE TABLE IF NOT EXISTS delta.`{path}` "
-            f"({DeltaLedgerBackend.SCHEMA}) USING DELTA"
-        )
-
-    @staticmethod
-    def migrate_sql(path: str) -> list[str]:
-        """DDL to upgrade a pre-version ledger in place: add the column,
-        then backfill existing rows to version 1 (any live CAS writer sees
-        a consistent non-null version afterwards)."""
-        return [
-            f"ALTER TABLE delta.`{path}` ADD COLUMN (version BIGINT)",
-            f"UPDATE delta.`{path}` SET version = 1 WHERE version IS NULL",
-        ]
-
-    @staticmethod
-    def merge_sql(path: str) -> str:
-        # Compare-and-swap MERGE: update only from the version the writer
-        # read; insert only when the writer read absence (expected 0). A
-        # stale writer matches neither branch and the MERGE is a no-op.
-        return f"""
-            MERGE INTO delta.`{path}` AS t
-            USING _ledger_upsert_src AS s
-            ON t.batch_id = s.batch_id
-            WHEN MATCHED AND t.version = s.expected_version THEN UPDATE SET
-                t.version = s.expected_version + 1,
-                t.created_utc = s.created_utc,
-                t.final_status = s.final_status,
-                t.payload = s.payload
-            WHEN NOT MATCHED AND s.expected_version = 0 THEN INSERT
-                (batch_id, version, created_utc, final_status, payload)
-                VALUES (s.batch_id, 1, s.created_utc, s.final_status, s.payload)
-        """
-
-    def upsert(
-        self,
-        batch_id: str,
-        created_utc: str,
-        final_status: Optional[str],
-        payload: str,
-        *,
-        expected_version: int,
-    ) -> bool:
-        src = self._spark.createDataFrame(
-            [(batch_id, int(expected_version), created_utc, final_status, payload)],
-            "batch_id STRING, expected_version BIGINT, created_utc STRING, "
-            "final_status STRING, payload STRING",
-        )
-        src.createOrReplaceTempView("_ledger_upsert_src")
-        try:
-            self._spark.sql(self.merge_sql(self._path))
-        except Exception as exc:
-            # Delta OCC rejects one of two racing MERGE commits with a
-            # Concurrent*Exception rather than committing it as a no-op —
-            # for the CAS contract that is just a failed swap: report
-            # not-applied so record() re-reads and retries.
-            if "Concurrent" in type(exc).__name__ or "Concurrent" in str(exc):
-                return False
-            raise
-        # Applied iff the row now carries OUR payload at expected+1 — a
-        # concurrent writer advancing from the same base leaves a different
-        # payload there, which the caller's retry loop resolves.
-        row = self.lookup(batch_id)
-        return row is not None and row[1] == expected_version + 1 and row[0] == payload
-
-    def lookup(self, batch_id: str) -> Optional[tuple[str, int]]:
-        from pyspark.sql import functions as F
-
-        rows = (
-            self._spark.read.format("delta")
-            .load(self._path)
-            .where(F.col("batch_id") == batch_id)
-            .select("payload", "version")
-            .collect()
-        )
-        return (rows[0][0], rows[0][1]) if rows else None
-
-    def scan(self, *, pending_only: bool = False):
-        df = self._spark.read.format("delta").load(self._path)
-        if pending_only:
-            df = df.where("final_status IS NULL")
-        for row in df.select("batch_id", "payload").collect():
-            yield row[0], row[1]
-
-
-class DeltaJobLedger:
-    """:class:`JobLedger` contract on an ACID table backend.
-
-    ``record``/``get``/``all``/``pending`` behave identically to the JSON
-    ledger (field-merge on repeat record, ``created_utc`` defaulted once,
-    pending = no ``final_status``); only the storage primitive differs.
-    Default backend is :class:`DeltaLedgerBackend` (requires delta-spark);
-    tests inject :class:`MemoryLedgerBackend` to verify the contract in
-    environments without Delta jars.
-    """
-
-    TERMINAL = JobLedger.TERMINAL
-
-    def __init__(self, spark=None, path: Optional[str] = None, *, backend=None):
-        self._backend = backend if backend is not None else DeltaLedgerBackend(spark, path)
-
-    MAX_CAS_RETRIES = 8
-
-    def record(self, batch_id: str, **fields: Any) -> dict:
-        """Field-merge upsert as compare-and-swap: read (payload, version),
-        merge in Python, write back conditioned on the version still being
-        the one read; on conflict re-read and retry, so two drivers
-        updating different fields of the same batch both land."""
-        for _ in range(self.MAX_CAS_RETRIES):
-            row = self._backend.lookup(batch_id)
-            payload, version = row if row is not None else (None, 0)
-            entry: dict = json.loads(payload) if payload else {}
-            entry.update(fields)
-            entry.setdefault(
-                "created_utc", time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-            )
-            if self._backend.upsert(
-                batch_id,
-                entry["created_utc"],
-                entry.get("final_status"),
-                json.dumps(entry, sort_keys=True),
-                expected_version=version,
-            ):
-                return entry
-        raise RuntimeError(
-            f"ledger CAS conflict persisted for batch_id={batch_id!r} after "
-            f"{self.MAX_CAS_RETRIES} retries"
-        )
-
-    def get(self, batch_id: str) -> Optional[dict]:
-        row = self._backend.lookup(batch_id)
-        return json.loads(row[0]) if row is not None else None
-
-    def all(self) -> dict[str, dict]:
-        return {bid: json.loads(p) for bid, p in self._backend.scan()}
-
-    def pending(self) -> dict[str, dict]:
-        return {bid: json.loads(p) for bid, p in self._backend.scan(pending_only=True)}

@@ -387,8 +387,8 @@ def cdc_snapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (inserts / updates / deletes, derived deterministically from the
     orders table itself) onto a base snapshot via one full-outer join and
     per-row outcome classification — the exact row-matching logic of
-    Delta/Iceberg ``MERGE INTO`` (pipeline.state.DeltaJobLedger documents
-    the table-format version), runnable on any lake layout.
+    Delta/Iceberg ``MERGE INTO`` (the table-format upgrade path of the
+    pipeline ledger, pipeline.state), runnable on any lake layout.
 
     Spark-first: ONE full-outer sort-merge join on the key — never
     per-change point lookups; outcome classification and the audit

@@ -6,8 +6,8 @@ running-max query): typed state variables (value/list/map) instead of one
 opaque tuple, timers, TTL, and an initial-state hook. The Python worker
 side of the API needs ``protobuf`` to serialize state requests, which
 this container does not ship — so the SPARK WIRING is gated behind a
-dependency probe (same honest-gating pattern as pipeline.state.
-DeltaJobLedger and the multimodal codec sites), while the PROCESSOR
+dependency probe (same honest-gating pattern as the multimodal codec
+sites), while the PROCESSOR
 LOGIC is plain Python, fully unit-tested against a state shim
 (tests/test_tws.py).
 

@@ -13,10 +13,10 @@ from pyspark.sql import Row
 from batch_public_spark.pipeline import JobLedger, Orchestrator, WatermarkStore
 from batch_public_spark.pipeline.batch_api import (
     MockBatchClient,
-    _with_retries,
     download_results,
     submit_jsonl_dir,
     wait_for_completion,
+    with_retries,
 )
 
 NOW = 1_715_000_000
@@ -155,15 +155,18 @@ class TestMockLifecycle:
                 raise RuntimeError("transient")
             return "ok"
 
-        assert _with_retries(flaky, "op", sleep=sleeps.append) == "ok"
+        assert with_retries(flaky, "op", sleep=sleeps.append) == "ok"
         assert sleeps == [2, 3]  # reference sleep(1+attempt)
 
-        with pytest.raises(RuntimeError, match="after 3 attempts"):
-            _with_retries(
-                lambda: (_ for _ in ()).throw(RuntimeError("always")),
+        with pytest.raises(RuntimeError, match="after 3 attempts") as info:
+            with_retries(
+                lambda: (_ for _ in ()).throw(ValueError("always")),
                 "op",
                 sleep=lambda _s: None,
             )
+        # the retry error is chained to, and names, the last attempt's error
+        assert isinstance(info.value.__cause__, ValueError)
+        assert "ValueError('always')" in str(info.value)
 
 
 class TestOrchestratorAsyncLifecycle:
@@ -231,18 +234,22 @@ class TestOrchestratorAsyncLifecycle:
         assert orch.ledger.pending() == {}
 
     def test_multi_part_jsonl_maps_to_multiple_provider_batches(
-        self, spark, source, tmp_path
+        self, spark, source, tmp_path, monkeypatch
     ):
-        """maxRecordsPerFile sizing ⇒ several part files ⇒ one provider
-        batch per file (the OpenAI per-batch limit mapping at scale)."""
+        """Per-file request cap ⇒ several part files ⇒ one provider batch per
+        file (the OpenAI per-batch limit mapping at scale); the cap is
+        patched down from the provider's 50k to 1."""
+        from batch_public_spark.pipeline import formatter
         from batch_public_spark.pipeline.formatter import build_requests, write_jsonl
+
+        monkeypatch.setattr(formatter, "_REQUESTS_PER_FILE", 1)
 
         client = MockBatchClient(states=("validating", "completed"))
         reqs = build_requests(
             source.withColumn("text", source["summary"]), text_col="text", id_col="id"
         )
         path = str(tmp_path / "multi")
-        write_jsonl(reqs.repartition(1), path, max_records_per_file=1)
+        write_jsonl(reqs.repartition(1), path)
         provider = submit_jsonl_dir(client, path)
         assert len(provider) == 2
         for pb in provider:

@@ -44,6 +44,12 @@ def test_dry_run_writes_jsonl_and_stops(spark, tmp_path, capsys):
     assert info["n_requests"] > 0
     assert info["batch_id"] is None  # dry run: no submission
     assert "jsonl_test" in info["jsonl_path"]
+    # the printed drop counts reconcile: rows in = requests + every drop class
+    counts = info["counts"]
+    drops = ("no_ts", "outside_window", "below_watermark", "no_text", "dup_dropped")
+    assert counts["requests"] == info["n_requests"]
+    assert counts["rows_in"] == counts["requests"] + sum(counts[k] for k in drops)
+    assert all(counts[k] >= 0 for k in drops)
     # no watermark was persisted (dry-run never advances state)
     assert not os.path.exists(os.path.join(out_dir, "batch_watermark.json"))
 
@@ -98,6 +104,10 @@ def test_agent_api_roundtrip(spark, tmp_path):
         "documents", hours=1e9, test_only=False, data_dir=SF, output_dir=out_dir, spark=spark
     )
     assert res["batch_id"] and res["n_requests"] > 0
+    # the blocking run did its LLM and parse work, not only the JSONL write
+    parsed = os.path.join(out_dir, "parsed", f"documents_{res['batch_id']}")
+    assert os.path.isdir(parsed)
+    assert res["n_parsed"] >= res["n_requests"] > 0
     entry = agent_api.resume_batch(res["batch_id"], output_dir=out_dir)
     assert entry["final_status"] == "completed"
 

@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Measurement-only: split every registry query's time into fn()-build vs
-action, in one warm session mirroring bench.py's protocol (sorted sweep,
-q1 + full-width Arrow warm). Writes JSON to --out (default /tmp/profile_registry.json).
+action, in one warm session with bench.py's protocol (sorted sweep,
+``bench.warm``). Writes JSON to --out (default /tmp/profile_registry.json).
 
 Not part of the declared bench contract; bench.py remains the artifact.
 """
@@ -29,7 +29,7 @@ def main() -> None:
 
     from batch_public_spark.plans import QUERIES
     from batch_public_spark.session import get_spark
-    from tools.qbench import warm
+    from bench import warm
 
     spark = get_spark("profile_registry")
     warm(spark)

@@ -7,9 +7,9 @@ Usage:
 
 Times each named query in THIS fresh session with the noop sink
 (guide §1.4: eagerly computes every column, no optimizer pruning of the
-timed subtree, no sink cost), after the same warm protocol bench.py uses
-(q1 + full-width Arrow worker pool). Jobs are labelled with
-``setJobDescription`` (guide §1.5). Optionally writes
+timed subtree, no sink cost), after bench.py's own warm-up
+(``bench.warm``: q1 + full-width Arrow worker pool). Jobs are labelled
+with ``setJobDescription`` (guide §1.5). Optionally writes
 ``<dir>/<name>_{before,after}.txt`` with ``explain('formatted')`` output.
 
 This is a measurement tool, not part of the declared bench contract;
@@ -29,27 +29,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-def warm(spark):
-    from batch_public_spark.operators.semantic import minhash_signatures
-    from batch_public_spark.plans import QUERIES
-
-    QUERIES["q1_pricing_summary"].fn(spark, SF_DIR).count()
-    minhash_signatures(
-        spark.read.parquet(f"{SF_DIR}/documents.parquet").limit(64)
-    ).count()
-
-    def _arrow_noop(batches):
-        import numpy as np
-        import pandas as pd
-
-        for b in batches:
-            yield pd.DataFrame({"id": np.asarray(b["id"]) * 1})
-
-    width = os.cpu_count() or 32
-    for _ in range(2):
-        spark.range(0, width * 64, 1, width).mapInPandas(_arrow_noop, "id long").count()
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="+")
@@ -61,6 +40,7 @@ def main() -> None:
 
     from batch_public_spark.plans import QUERIES
     from batch_public_spark.session import get_spark
+    from bench import warm
 
     spark = get_spark("qbench")
     if not args.no_time:
