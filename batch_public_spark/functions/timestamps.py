@@ -16,8 +16,9 @@ Here the whole cascade is a single JVM-side column expression (no UDF):
 whole-stage codegen keeps it in the scan stage, so at 100 TB it rides along
 with the parquet read instead of forcing a Python exchange.
 
-Contract: the session timezone must be UTC for the naive-string branches
-(the engine's session factory pins it; query entry points re-pin at runtime).
+Naive wall times (the ISO branch without a zone designator, and the
+EST/EDT base) parse as ``TIMESTAMP_NTZ``, which ``unix_timestamp`` reads as
+UTC, so the result is the same in every session time zone.
 
 The canonical timestamp-attribute name set is shared with the watermark
 logic exactly as the reference shares ``TIMESTAMP_KEYS`` between fetch and
@@ -47,6 +48,12 @@ TIMESTAMP_KEYS: tuple[str, ...] = (
 )
 
 
+def _utc_wall(s: Column) -> Column:
+    """Epoch seconds of a naive wall-time string read as UTC (NULL when it
+    does not parse), independent of the session time zone."""
+    return F.unix_timestamp(s.try_cast("timestamp_ntz"))
+
+
 def normalize_ts(col: Column) -> Column:
     """Epoch-seconds (bigint) from any supported representation, else NULL."""
     s = F.trim(col.cast("string"))
@@ -66,21 +73,21 @@ def normalize_ts(col: Column) -> Column:
     # reference's early return.
     is_eastern = s.rlike(r" E[SD]T$")
     base = F.trim(F.regexp_replace(s, r" E[SD]T$", ""))
-    naive_eastern = F.coalesce(
-        F.try_to_timestamp(base, F.lit("yyyy-MM-dd HH:mm:ss")),
-        F.try_to_timestamp(base, F.lit("yyyy-MM-dd'T'HH:mm:ss")),
-    )
+    naive_eastern = F.when(base.rlike(r"^\d{4}-\d{2}-\d{2}[T ]\d{2}:\d{2}:\d{2}$"), base)
     offset_s = F.when(s.rlike(r" EST$"), F.lit(5 * 3600)).otherwise(F.lit(4 * 3600))
-    sec_eastern = (F.unix_timestamp(naive_eastern) + offset_s).cast("long")
+    sec_eastern = (_utc_wall(naive_eastern) + offset_s).cast("long")
 
-    # Branch 3: ISO-8601; trailing Z normalized to an explicit offset, naive
-    # interpreted in the (UTC) session zone. Only strings that start with a
-    # full date: Spark would complete a bare time with today's date and a
-    # year-month with day 1, where the reference's fromisoformat rejects both.
-    sec_iso = F.when(
-        s.rlike(r"^\d{4}-\d{2}-\d{2}"),
-        F.unix_timestamp(F.try_to_timestamp(F.regexp_replace(s, r"Z$", "+00:00"))),
-    ).cast("long")
+    # Branch 3: ISO-8601. A string with a zone designator keeps the
+    # zone-aware parse (trailing Z normalized to an explicit offset); a
+    # naive one is read as UTC. Only strings that start with a full date:
+    # Spark would complete a bare time with today's date and a year-month
+    # with day 1, where the reference's fromisoformat rejects both.
+    zoned = F.unix_timestamp(F.try_to_timestamp(F.regexp_replace(s, r"Z$", "+00:00")))
+    sec_iso = (
+        F.when(s.rlike(r"^\d{4}-\d{2}-\d{2}([T ][\d:.]*)?$"), _utc_wall(s))
+        .when(s.rlike(r"^\d{4}-\d{2}-\d{2}"), zoned)
+        .cast("long")
+    )
 
     return (
         F.when(num.isNotNull(), sec_num)

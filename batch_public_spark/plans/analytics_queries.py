@@ -19,6 +19,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from batch_public_spark.operators.graph import (
+    copresence_edges,
+    label_propagation,
+    pagerank_weighted,
+    symmetric,
+    term_cooccurrence,
+    triangles,
+)
 from batch_public_spark.operators.textops import token_count_bpe_ish, token_count_ws, tokens
 from batch_public_spark.plans.lint import bounded_window_key
 from batch_public_spark.plans.registry import query
@@ -28,36 +36,6 @@ from batch_public_spark.sources.tables import scratch_dir
 from batch_public_spark.sources.tables import spread
 
 SESSION_GAP_US = 600 * 1_000_000  # 10 minutes
-
-# Per-minute-bucket participant cap for the co-presence graph family
-# (graph_kcore_peel / graph_bfs_distance / graph_label_propagation /
-# graph_link_prediction). The bucket self-join emits m²/2 pairs per
-# bucket, so one hot minute (launch spike, bot storm) with m active users
-# is a quadratic task-killer on a single key at scale; capping each bucket
-# to a deterministic top-k by user id bounds every bucket at CAP²/2 pairs
-# regardless of skew. The cap is mirrored verbatim in every oracle
-# (row_number() OVER (PARTITION BY <bucket key> ORDER BY u) <= 256) so the
-# driver hash attests the CAPPED measure, not an uncapped ideal. Fixture
-# buckets sit far below the cap (sf0.1 max = 12 participants), so fixture
-# results are unchanged; the BINDING case is pinned by
-# tests/test_r9_invariants.py, which plants a synthetic hot bucket above
-# the cap and checks Spark against DuckDB on the capped edge list.
-PRESENCE_BUCKET_CAP = 256
-
-
-def _capped_presence(pres: DataFrame, *keys: str) -> DataFrame:
-    """Deterministic per-bucket participant cap for co-presence graphs:
-    keep the first PRESENCE_BUCKET_CAP users (ordered by user id) within
-    every bucket key group. One partitioned row_number whose exchange is
-    on the same bucket key the self-join shuffles on anyway, so the cap
-    adds no extra shuffle — the join reuses the window's partitioning."""
-    w = W.partitionBy(*keys).orderBy("u")
-    return (
-        pres.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= PRESENCE_BUCKET_CAP)
-        .drop("rn")
-    )
-
 
 def _const_partition(col: str):
     """Constant-valued but NON-FOLDABLE window partition key for ranking a
@@ -1054,44 +1032,13 @@ def llmops_term_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     fully-oracle-checked iterative algorithm (with semantic.kmeans_lloyd):
     per-iteration rounding makes the fixpoint math bit-reproducible.
 
-    Spark-first: vocabulary and edges are two aggregations; each PageRank
-    round is one edge⋈rank join + one aggregation, both shuffled on the
-    vertex key (operators.graph.pagerank_weighted — localCheckpoint per
-    round bounds lineage). At 100 TB the rank vector is ~|vocab| rows and
-    broadcasts; the edge list is the only large operand."""
-    from batch_public_spark.operators.graph import pagerank_weighted
-
-    d = t(spark, sf_dir, "documents")
-    dt = (
-        d.select(
-            "doc_id",
-            F.explode(F.transform(tokens(F.col("text")), F.lower)).alias("term"),
-        )
-        .distinct()
-        # two consumers (vocabulary pass + the vocab-filtered projection):
-        # cut the corpus explode+distinct once, lazily
-        .localCheckpoint(eager=False)
-    )
-    # Top-30 vocabulary by document frequency via TakeOrdered — at 100 TB
-    # the term vocabulary is tens of millions of rows; orderBy+limit keeps
-    # the selection a per-partition heap instead of a one-partition window.
-    vocab = (
-        dt.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .orderBy(F.desc("df"), "term")
-        .limit(30)
-        .select("term")
-    )
-    dv = dt.join(F.broadcast(vocab), "term").select("doc_id", "term")
-    a, b = dv.alias("a"), dv.alias("b")
-    pairs = (
-        a.join(b, (F.col("a.doc_id") == F.col("b.doc_id")) & (F.col("a.term") < F.col("b.term")))
-        .groupBy(F.col("a.term").alias("u"), F.col("b.term").alias("v"))
-        .agg(F.count("*").alias("w"))
-    )
-    sym = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"), "w")
-    )
+    Spark-first: edges from operators.graph.term_cooccurrence, mirrored by
+    symmetric; each PageRank round is one edge⋈rank join + one
+    aggregation, both shuffled on the vertex key (pagerank_weighted —
+    localCheckpoint per round bounds lineage). At 100 TB the rank vector
+    is ~|vocab| rows and broadcasts; the edge list is the only large
+    operand."""
+    sym = symmetric(term_cooccurrence(t(spark, sf_dir, "documents")), "u", "v")
     pr = pagerank_weighted(sym, src="u", dst="v", weight="w", iters=2)
     # TakeOrdered top-20, then rank the 20 survivors (window input <= 20 rows).
     top = pr.orderBy(F.desc("pr"), "vertex").limit(20)
@@ -1751,54 +1698,15 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic clustering-coefficient numerator and the third graph operator
     alongside connected components and PageRank.
 
-    Spark-first: edges are oriented by the vertex total order (u < v), so
-    each triangle {a,b,c} is enumerated exactly once as the wedge
-    (a,b)+(b,c) closed by (a,c) — two shuffled equi-joins on the edge
-    list, no DISTINCT-after-explosion. At general scale the standard
-    refinement is degree orientation (point each edge at the
-    higher-degree endpoint) so wedge counts are bounded by arboricity;
-    with a bounded vocabulary the term-order orientation is already
-    bounded. Per-vertex counts are one union + hash aggregate."""
-    d = t(spark, sf_dir, "documents")
-    dt = (
-        d.select(
-            "doc_id",
-            F.explode(F.transform(tokens(F.col("text")), F.lower)).alias("term"),
-        )
-        .distinct()
-        # two consumers (vocabulary pass + the vocab-filtered projection):
-        # cut the corpus explode+distinct once, lazily
+    Spark-first: edges from operators.graph.term_cooccurrence (oriented
+    u < v, cut once for their three join roles); operators.graph.triangles
+    closes each oriented wedge exactly once and counts per vertex."""
+    edges = (
+        term_cooccurrence(t(spark, sf_dir, "documents"))
+        .select("u", "v")
         .localCheckpoint(eager=False)
     )
-    vocab = (
-        dt.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .orderBy(F.desc("df"), "term")
-        .limit(30)
-        .select("term")
-    )
-    dv = dt.join(F.broadcast(vocab), "term").select("doc_id", "term")
-    a, b = dv.alias("a"), dv.alias("b")
-    edges = (
-        a.join(b, (F.col("a.doc_id") == F.col("b.doc_id")) & (F.col("a.term") < F.col("b.term")))
-        .select(F.col("a.term").alias("u"), F.col("b.term").alias("v"))
-        .distinct()
-        .localCheckpoint(eager=False)  # three join roles below
-    )
-    e1 = edges.alias("e1")
-    e2 = edges.select(F.col("u").alias("u2"), F.col("v").alias("v2")).alias("e2")
-    e3 = edges.select(F.col("u").alias("u3"), F.col("v").alias("v3")).alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.v") == F.col("e2.u2"))
-        .join(e3, (F.col("e3.u3") == F.col("e1.u")) & (F.col("e3.v3") == F.col("e2.v2")))
-        .select(F.col("e1.u").alias("a"), F.col("e1.v").alias("b"), F.col("e2.v2").alias("c"))
-    )
-    pv = (
-        tri.select(F.col("a").alias("term"))
-        .unionAll(tri.select(F.col("b").alias("term")))
-        .unionAll(tri.select(F.col("c").alias("term")))
-    )
-    return pv.groupBy("term").agg(F.count("*").cast("bigint").alias("n_triangles"))
+    return triangles(edges).withColumnRenamed("vertex", "term")
 
 
 @query(
@@ -3685,36 +3593,13 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     a production run loops until the round is a no-op, same plan per
     round.
 
-    Spark-first: the co-presence edge list reduces (DISTINCT on the
-    bounded (user, minute) grid, then a per-bucket participant cap —
-    row_number ≤ PRESENCE_BUCKET_CAP, mirrored in the oracle — then one
-    grouped self-equi-join on the bucket: never user×user, and no single
-    hot minute can emit more than CAP²/2 pairs); each peel round is one
-    degree aggregation
-    plus two semi-joins, and every round's edge set is lazily
-    checkpointed before fanning into the next round's three consumers
-    (degree count, both semi-join probes) so round N+1 never recomputes
-    round N — the iterative-graph discipline from operators/graph.py
-    (verdict-r6: single lazy-checkpointed edge materialization)."""
-    ev = t(spark, sf_dir, "events")
-    pres = _capped_presence(
-        ev.select(
-            F.col("user_id").alias("u"),
-            F.floor(F.unix_timestamp("ts") / 60).cast("bigint").alias("b"),
-        ).distinct(),
-        "b",
-    )
-    a = pres.select(F.col("u").alias("x"), "b")
-    b_ = pres.select(F.col("u").alias("y"), "b")
-    edges = (
-        a.join(b_, "b")
-        .filter(F.col("x") < F.col("y"))
-        .select("x", "y")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    Spark-first: edges from operators.graph.copresence_edges (untyped);
+    each peel round is one degree aggregation plus two semi-joins, and
+    every round's edge set is lazily checkpointed before fanning into the
+    next round's three consumers (degree count, both semi-join probes)
+    so round N+1 never recomputes round N."""
     rows = []
-    cur = edges
+    cur = copresence_edges(t(spark, sf_dir, "events"), typed=False)
     for rnd in (1, 2, 3):
         deg = (
             cur.select(F.col("x").alias("u"))
@@ -3797,40 +3682,16 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds are declared, not convergence — a production run loops the
     same per-round plan until the frontier empties.
 
-    Spark-first: edge construction caps each (minute, event_type) bucket
-    at PRESENCE_BUCKET_CAP deterministic participants (mirrored in the
-    oracle; non-binding at fixture SF — see _capped_presence), so no hot
-    bucket can emit a quadratic pair blowup. Each round is one equi-join
-    of the directed edge list
-    against the (tiny, broadcast) frontier, a DISTINCT, and a broadcast
+    Spark-first: edges from operators.graph.copresence_edges (typed),
+    mirrored by symmetric. Each round is one equi-join of the directed
+    edge list against the (tiny, broadcast) frontier, a DISTINCT, and an
     anti-join against the visited set; frontier and visited are lazily
-    checkpointed so round N+1 never replays round N's lineage (the
-    iterative-graph discipline of graph.py / graph_kcore_peel). The edge
+    checkpointed so round N+1 never replays round N's lineage. The edge
     list shuffles ONCE to build; rounds shuffle only frontier-sized
     sets. The fifth graph operator: CC and PageRank propagate values,
     k-core iterates a degree constraint, BFS iterates set expansion."""
-    ev = t(spark, sf_dir, "events")
-    pres = _capped_presence(
-        ev.select(
-            F.col("user_id").alias("u"),
-            F.floor(F.unix_timestamp("ts") / 60).cast("bigint").alias("b"),
-            F.col("event_type").alias("et"),
-        ).distinct(),
-        "b",
-        "et",
-    )
-    a = pres.select(F.col("u").alias("x"), "b", "et")
-    b_ = pres.select(F.col("u").alias("y"), "b", "et")
-    e0 = (
-        a.join(b_, ["b", "et"])
-        .filter(F.col("x") < F.col("y"))
-        .select("x", "y")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    edges = e0.unionAll(e0.select(F.col("y").alias("x"), F.col("x").alias("y"))).localCheckpoint(
-        eager=False
-    )
+    e0 = copresence_edges(t(spark, sf_dir, "events"), typed=True)
+    edges = symmetric(e0, "x", "y").localCheckpoint(eager=False)
     # 1-row landmark, no collect; the isNotNull filter drops the row (and
     # the whole BFS degenerates to zero counts) when the graph is empty —
     # the sf0.001 smoke fixture has no typed co-presence edges at all.
@@ -3916,68 +3777,15 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-propagation community detection (2 synchronized rounds,
-    deterministic tie-break) on the typed co-presence graph: every node
-    starts in its own community, then repeatedly adopts the most frequent
-    label among its neighbors — the classic near-linear community
-    algorithm (Raghavan et al. 2007). Vanilla LPA is nondeterministic
-    (random visit order, random tie-break); this variant is synchronous
-    and breaks count-ties toward the SMALLEST label via the
-    packed-integer argmin idiom ((100000 - c) * 1e9 + lab, minimized —
-    the dedup-survivorship discipline: no engine-specific max_by tie
-    behavior), so both engines compute the identical fixpoint prefix.
+    deterministic tie-break — operators.graph.label_propagation) on the
+    typed co-presence graph (copresence_edges, mirrored by symmetric).
     Fixture-calibrated: 141 nodes → 78 communities after round 1 → 52
     after round 2, with a genuine size spread (19×1 ... 1×12). Output is
     the community-size histogram — the chart that says whether the graph
-    has real cluster structure before anyone pays for Louvain.
-
-    Spark-first: edge construction caps each (minute, event_type) bucket
-    at PRESENCE_BUCKET_CAP deterministic participants (mirrored in the
-    oracle; non-binding at fixture SF — see _capped_presence). Each round
-    is one edge⋈label equi-join (labels shuffle
-    on u, the same key the groupBy immediately reuses) + one grouped
-    min; label tables are lazily checkpointed per round so lineage never
-    replays (graph.py discipline). Packing bounds: c < 1e5 neighbors,
-    lab < 1e9 user ids — the packed key fits BIGINT with 4 orders of
-    margin."""
-    ev = t(spark, sf_dir, "events")
-    pres = _capped_presence(
-        ev.select(
-            F.col("user_id").alias("u"),
-            F.floor(F.unix_timestamp("ts") / 60).cast("bigint").alias("b"),
-            F.col("event_type").alias("et"),
-        ).distinct(),
-        "b",
-        "et",
-    )
-    a = pres.select(F.col("u").alias("x"), "b", "et")
-    b_ = pres.select(F.col("u").alias("y"), "b", "et")
-    e0 = (
-        a.join(b_, ["b", "et"])
-        .filter(F.col("x") < F.col("y"))
-        .select("x", "y")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    edges = e0.unionAll(e0.select(F.col("y").alias("x"), F.col("x").alias("y"))).localCheckpoint(
-        eager=False
-    )
-    labels = edges.select(F.col("x").alias("u")).distinct().select("u", F.col("u").alias("lab"))
-    for _ in range(2):
-        n = (
-            edges.join(labels.select(F.col("u").alias("y"), "lab"), "y")
-            .groupBy(F.col("x").alias("u"), "lab")
-            .agg(F.count("*").cast("bigint").alias("c"))
-        )
-        labels = (
-            n.groupBy("u")
-            .agg(
-                (
-                    F.min((F.lit(100000) - F.col("c")) * F.lit(1000000000) + F.col("lab"))
-                    % F.lit(1000000000)
-                ).alias("lab")
-            )
-            .localCheckpoint(eager=False)
-        )
+    has real cluster structure before anyone pays for Louvain."""
+    e0 = copresence_edges(t(spark, sf_dir, "events"), typed=True)
+    edges = symmetric(e0, "x", "y").localCheckpoint(eager=False)
+    labels = label_propagation(edges, rounds=2)
     sizes = labels.groupBy("lab").agg(F.count("*").cast("bigint").alias("sz"))
     return sizes.groupBy(F.col("sz").alias("community_size")).agg(
         F.count("*").cast("bigint").alias("n_communities")
@@ -4346,35 +4154,17 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     KL/entropy discipline) — then cast back and rounded to 6; the top-25
     cut is made deterministic by the (adamic_adar DESC, x, y) total order.
 
-    Spark-first: edge construction caps each minute bucket at
-    PRESENCE_BUCKET_CAP deterministic participants (mirrored in the
-    oracle — no hot minute can emit more than CAP²/2 pairs), and wedge
-    enumeration — the one quadratic step, Σ deg² pairs (16.4 M at sf0.1,
+    Spark-first: edges from operators.graph.copresence_edges (untyped,
+    per-bucket capped), and wedge enumeration — the one quadratic step, Σ deg² pairs (16.4 M at sf0.1,
     max degree 222) — shuffles on the witness w (never user×user) AND
     drops super-hub witnesses (deg(w) > 10³, mirrored in the oracle's
     adjw CTE), which Adamic-Adar already discounts to < 1/ln(10³) ≈ 0.14
     signal each — the same hot-key cap discipline as the MinHash bucket
     gather, now in the plan rather than the comments. Neither cap binds
     at fixture SF (max bucket 12, max degree 222); the binding case is
-    pinned in tests/test_r9_invariants.py. The existing-edge exclusion
+    pinned in tests/test_graph.py. The existing-edge exclusion
     is one anti-join on the pair key."""
-    ev = t(spark, sf_dir, "events")
-    pres = _capped_presence(
-        ev.select(
-            F.col("user_id").alias("u"),
-            F.floor(F.unix_timestamp("ts") / 60).cast("bigint").alias("b"),
-        ).distinct(),
-        "b",
-    )
-    a = pres.select(F.col("u").alias("x"), "b")
-    b_ = pres.select(F.col("u").alias("y"), "b")
-    edges0 = (
-        a.join(b_, "b")
-        .filter(F.col("x") < F.col("y"))
-        .select("x", "y")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges0 = copresence_edges(t(spark, sf_dir, "events"), typed=False)
     # The wedge stage's output is deg²-amplified (16.4 M rows from 220 k
     # inputs at sf0.1): AQE sizes exchanges by join INPUT bytes, and an
     # optimizer-inserted (ENSURE_REQUIREMENTS) exchange on `w` gets
@@ -4387,11 +4177,11 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pin used to sit above the degree join; once the hints were dropped,
     # EnsureRequirements pruned it as redundant against its own exchange,
     # which AQE then coalesced — a 2× regression at sf0.1, caught by the
-    # r11 A/B and pinned in tests/test_r11_invariants.py.)
+    # r11 A/B and pinned in tests/test_graph.py.)
     nshuf = int(spark.conf.get("spark.sql.shuffle.partitions"))
     adj = (
-        edges0.select(F.col("x").alias("w"), F.col("y").alias("v"))
-        .unionAll(edges0.select(F.col("y").alias("w"), F.col("x").alias("v")))
+        symmetric(edges0, "x", "y")
+        .select(F.col("x").alias("w"), F.col("y").alias("v"))
         .repartition(nshuf, "w")
     )
     deg = (
@@ -5501,6 +5291,90 @@ def llmops_bpe_apply_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _merge_train(docs: DataFrame, k: int, pick) -> DataFrame:
+    """The merge-trainer loop BPE and WordPiece share: k rounds of count
+    the weighted adjacent symbol pairs, let ``pick(sym_df, pc)`` choose the
+    1-row winner (``pair`` plus the count columns to emit) from the
+    symbol stream and its ``(pair, n_pair)`` counts, and rewrite the stream
+    with the winner merged. Emits one row per round (``iter, pair,
+    merged`` and the winner's columns) crossed with the final surviving
+    vocabulary's hash and size.
+
+    The CORPUS (``docs``) is scanned once into the token TYPE table
+    (spaced symbols, frequency) — the textbook decomposition: every round
+    runs over types, orders of magnitude smaller than the corpus at any
+    scale (Sennrich et al. 2016's word-frequency dict). Pairs fold in-row
+    via zip_with over the symbol array (no join), so each pair count is
+    one map-side-combinable aggregation. The type table and every round's
+    rewritten stream are cut lazily: without the per-round cut, round i's
+    winner subtree re-derives inside every later round's aggregations —
+    the lazy chain's recompute grows quadratically with k. That is also
+    the production shape: a trainer materializes the stream between
+    rounds. Past k≈50 a per-round driver-collected winner would replace
+    the lazy chain (one 1-row collect per round is control-plane, the
+    Lloyd-centroid convention).
+
+    Merges inherit llmops_bpe_apply_merges' convention: space-delimited
+    symbols, each merge rewrites with its surrounding spaces via
+    single-pass non-overlapping replace() — boundary-safe and
+    engine-identical ('a a a' → 'aa a'). The vocab hash is md5 over the
+    '|'-joined binary-sorted symbol set (collation-free in both
+    engines)."""
+    toks = docs.select(F.explode(F.transform(tokens(F.col("text")), F.lower)).alias("tok"))
+    chars = F.trim(F.regexp_replace("tok", "(.)", "$1 "))
+    sym_df = (
+        toks.groupBy("tok")
+        .agg(F.count("*").alias("freq"))
+        .select(F.concat(F.lit(" "), chars, F.lit(" ")).alias("sym"), "freq")
+        .localCheckpoint(eager=False)  # k rounds re-read this frame
+    )
+    syms = F.split(F.trim(F.col("sym")), " ")
+    n_sym = F.size(syms)
+    prs = F.zip_with(
+        F.slice(syms, 1, n_sym - 1),
+        F.slice(syms, 2, n_sym - 1),
+        lambda a, b: F.concat_ws(" ", a, b),
+    )
+    merged = F.replace(F.col("pair"), F.lit(" "), F.lit(""))
+    pat = F.concat(F.lit(" "), F.col("pair"), F.lit(" "))
+    rep = F.concat(F.lit(" "), merged, F.lit(" "))
+    winners = []
+    for i in range(1, k + 1):
+        pc = (
+            sym_df.filter(n_sym >= 2)
+            .select(F.explode(prs).alias("pair"), "freq")
+            .groupBy("pair")
+            .agg(F.sum("freq").cast("bigint").alias("n_pair"))
+        )
+        win = pick(sym_df, pc)
+        winners.append(
+            win.select(
+                F.lit(i).cast("bigint").alias("iter"),
+                "pair",
+                merged.alias("merged"),
+                *[c for c in win.columns if c != "pair"],
+            )
+        )
+        sym_df = (
+            sym_df.crossJoin(F.broadcast(win.select("pair")))
+            .select(F.replace(F.col("sym"), pat, rep).alias("sym"), "freq")
+            .localCheckpoint(eager=False)
+        )
+    vocab = (
+        sym_df.select(F.explode(F.split(F.trim("sym"), " ")).alias("s"))
+        .filter(F.length("s") >= 1)
+        .distinct()
+        .agg(
+            F.md5(F.concat_ws("|", F.array_sort(F.collect_list("s")))).alias("vocab_hash"),
+            F.count("*").cast("bigint").alias("vocab_size"),
+        )
+    )
+    out = winners[0]
+    for w_df in winners[1:]:
+        out = out.unionAll(w_df)
+    return out.crossJoin(F.broadcast(vocab))
+
+
 _BPE_TRAIN_K = 5
 
 
@@ -5572,100 +5446,21 @@ def llmops_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer team version-controls. Third iterative algorithm family
     beside pca_power and markov_stationary, same lazy-composition shape.
 
-    Spark-first, the textbook trainer decomposition: the CORPUS is
-    scanned once into the token TYPE table (distinct token, frequency) —
-    the iterative loop then runs entirely over types, which is orders of
-    magnitude smaller than the corpus at any scale (Sennrich et al.
-    2016's word-frequency dict). The type table localCheckpoints
-    (eager=False) so K iterations re-read a materialized frame, not the
-    parquet scan; each iteration is ONE map-side-combinable weighted
-    pair-count aggregation (pairs fold in-row via zip_with over the
-    symbol array — no join), a TakeOrdered-1 winner, and a broadcast
-    1-row rewrite — the pca_power v-broadcast shape. Trained on a
-    literal-bounded sample (doc_id < 400) because that is what trainers
-    do at corpus scale (a capped reservoir sample), and it keeps the
-    K-deep lazy plan fixture-priced. At 100 TB: same plan over a sampled
-    type table, with a per-iteration driver-collected winner replacing
-    the lazy chain past K≈50 (one 1-row collect per iteration is
-    control-plane, the Lloyd-centroid convention).
-
-    Merge application inherits llmops_bpe_apply_merges' pinned
-    convention: space-delimited symbols, each merge rewrites with its
-    surrounding spaces via single-pass non-overlapping replace() —
-    boundary-safe, engine-identical ('a a a' → 'aa a'). Counts are
-    exact integers; the vocab hash is md5 over the '|'-joined
-    binary-sorted symbol set (collation-free in both engines).
-    tests/test_r13_invariants.py pins that re-applying the learned merge
-    list in rank order reproduces the trainer's final segmentation."""
-    d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    toks = d.select(
-        F.explode(F.transform(tokens(F.col("text")), F.lower)).alias("tok")
+    Spark-first: the shared trainer loop (_merge_train — type table,
+    in-row pair fold, per-round cut, spaced-symbol rewrite, vocab hash);
+    BPE's pick is a TakeOrdered-1 over the raw weighted pair count.
+    Trained on a literal-bounded sample (doc_id < 400) because that is
+    what trainers do at corpus scale (a capped reservoir sample), and it
+    keeps the K-deep lazy plan fixture-priced. Counts are exact integers.
+    tests/test_llmops.py pins that re-applying the learned merge list in
+    rank order reproduces the trainer's final segmentation."""
+    return _merge_train(
+        t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400),
+        _BPE_TRAIN_K,
+        lambda sym_df, pc: pc.withColumnRenamed("n_pair", "n")
+        .orderBy(F.desc("n"), "pair")
+        .limit(1),
     )
-    types = (
-        toks.groupBy("tok")
-        .agg(F.count("*").alias("freq"))
-        .select(
-            F.concat(
-                F.lit(" "),
-                F.trim(F.regexp_replace("tok", "(.)", "$1 ")),
-                F.lit(" "),
-            ).alias("sym"),
-            "freq",
-        )
-        .localCheckpoint(eager=False)  # K iterations re-read this frame
-    )
-    sym_df = types
-    winners = []
-    for i in range(1, _BPE_TRAIN_K + 1):
-        syms = F.split(F.trim(F.col("sym")), " ")
-        n_sym = F.size(syms)
-        prs = F.zip_with(
-            F.slice(syms, 1, n_sym - 1),
-            F.slice(syms, 2, n_sym - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-        pc = (
-            sym_df.filter(F.size(F.split(F.trim(F.col("sym")), " ")) >= 2)
-            .select(F.explode(prs).alias("pair"), "freq")
-            .groupBy("pair")
-            .agg(F.sum("freq").cast("bigint").alias("n"))
-        )
-        win = pc.orderBy(F.desc("n"), "pair").limit(1)
-        winners.append(
-            win.select(
-                F.lit(i).cast("bigint").alias("iter"),
-                "pair",
-                F.replace(F.col("pair"), F.lit(" "), F.lit("")).alias("merged"),
-                "n",
-            )
-        )
-        pat = F.concat(F.lit(" "), F.col("pair"), F.lit(" "))
-        rep = F.concat(
-            F.lit(" "), F.replace(F.col("pair"), F.lit(" "), F.lit("")), F.lit(" ")
-        )
-        # Checkpoint between iterations (the wordpiece trainer's fix,
-        # applied here too): iteration i's winner subtree otherwise
-        # re-derives inside every later iteration's pair count.
-        sym_df = (
-            sym_df.crossJoin(F.broadcast(win.select("pair")))
-            .select(F.replace(F.col("sym"), pat, rep).alias("sym"), "freq")
-            .localCheckpoint(eager=False)
-        )
-    vocab = (
-        sym_df.select(F.explode(F.split(F.trim("sym"), " ")).alias("s"))
-        .filter(F.length("s") >= 1)
-        .distinct()
-        .agg(
-            F.md5(F.concat_ws("|", F.array_sort(F.collect_list("s")))).alias(
-                "vocab_hash"
-            ),
-            F.count("*").cast("bigint").alias("vocab_size"),
-        )
-    )
-    out = winners[0]
-    for w_df in winners[1:]:
-        out = out.unionAll(w_df)
-    return out.crossJoin(F.broadcast(vocab))
 
 
 _WP_TRAIN_K = 4
@@ -5752,128 +5547,51 @@ def llmops_wordpiece_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame
     difference is real and visible on this corpus: WordPiece's first
     merge is 'q u' (q is nearly always followed by u — the canonical
     WordPiece example) while BPE's is the much more frequent but less
-    predictive 'e r'; tests/test_r13_invariants.py pins the divergence.
+    predictive 'e r'; tests/test_llmops.py pins the divergence.
     Output: per-iteration winner with its pair/unigram counts and
     log-score, plus the final surviving-vocabulary hash/size.
 
-    Spark-first, same decomposition as the BPE trainer (one corpus scan
-    → localCheckpointed token-TYPE table; iterations run over types):
-    per iteration one weighted pair-count aggregation + one weighted
-    unigram aggregation (both map-side combinable over the small type
-    table), two broadcast joins to attach count(a)/count(b), a
-    TakeOrdered-1 winner, and the broadcast 1-row rewrite. The argmax
-    ORDERS BY the score as one double division of exact bigints —
-    identical IEEE operands in both engines (the round-6 emission is
-    display only); counts stay exact integers; same boundary-safe
-    spaced-replace convention and vocab-hash recipe as the BPE trainer.
-    At 100 TB: identical to the BPE trainer's scale note (sampled type
-    table, driver-collected winner past K≈50), with the score computed
-    in doubles because count products overflow int64 at corpus scale."""
-    d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
-    toks = d.select(
-        F.explode(F.transform(tokens(F.col("text")), F.lower)).alias("tok")
+    Spark-first, the same trainer loop as BPE (_merge_train); the pick
+    adds one weighted unigram aggregation (map-side combinable over the
+    small type table) and two broadcast joins to attach count(a)/count(b)
+    before the TakeOrdered-1 winner. The argmax ORDERS BY the score as
+    one double division of exact bigints — identical IEEE operands in
+    both engines (the round-6 emission is display only); counts stay
+    exact integers. At 100 TB the score is computed in doubles because
+    count products overflow int64 at corpus scale."""
+    return _merge_train(
+        t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400),
+        _WP_TRAIN_K,
+        _wordpiece_pick,
     )
-    types = (
-        toks.groupBy("tok")
-        .agg(F.count("*").alias("freq"))
+
+
+def _wordpiece_pick(sym_df: DataFrame, pc: DataFrame) -> DataFrame:
+    """WordPiece's winner: argmax of count(ab) / (count(a)·count(b)) over
+    the weighted pair counts ``pc``, with both unigram counts and the
+    log-score attached."""
+    ug = (
+        sym_df.select(F.explode(F.split(F.trim(F.col("sym")), " ")).alias("s"), "freq")
+        .groupBy("s")
+        .agg(F.sum("freq").cast("bigint").alias("n"))
+        .localCheckpoint(eager=False)  # joined twice (count(a), count(b))
+    )
+    ua = ug.select(F.col("s").alias("_a"), F.col("n").alias("na"))
+    ub = ug.select(F.col("s").alias("_b"), F.col("n").alias("nb"))
+    n_pair, na, nb = (F.col(c).cast("double") for c in ("n_pair", "na", "nb"))
+    return (
+        pc.join(ua, F.expr("split_part(pair, ' ', 1)") == F.col("_a"))
+        .join(ub, F.expr("split_part(pair, ' ', 2)") == F.col("_b"))
+        .orderBy(F.desc(n_pair / (na * nb)), "pair")
+        .limit(1)
         .select(
-            F.concat(
-                F.lit(" "),
-                F.trim(F.regexp_replace("tok", "(.)", "$1 ")),
-                F.lit(" "),
-            ).alias("sym"),
-            "freq",
-        )
-        .localCheckpoint(eager=False)
-    )
-    sym_df = types
-    winners = []
-    for i in range(1, _WP_TRAIN_K + 1):
-        syms = F.split(F.trim(F.col("sym")), " ")
-        n_sym = F.size(syms)
-        prs = F.zip_with(
-            F.slice(syms, 1, n_sym - 1),
-            F.slice(syms, 2, n_sym - 1),
-            lambda a, b: F.concat_ws(" ", a, b),
-        )
-        pc = (
-            sym_df.filter(F.size(F.split(F.trim(F.col("sym")), " ")) >= 2)
-            .select(F.explode(prs).alias("pair"), "freq")
-            .groupBy("pair")
-            .agg(F.sum("freq").cast("bigint").alias("n_pair"))
-        )
-        ug = (
-            sym_df.select(
-                F.explode(F.split(F.trim(F.col("sym")), " ")).alias("s"), "freq"
-            )
-            .groupBy("s")
-            .agg(F.sum("freq").cast("bigint").alias("n"))
-            .localCheckpoint(eager=False)  # joined twice (count(a), count(b))
-        )
-        ua = ug.select(F.col("s").alias("_a"), F.col("n").alias("na"))
-        ub = ug.select(F.col("s").alias("_b"), F.col("n").alias("nb"))
-        scored = (
-            pc.join(ua, F.expr("split_part(pair, ' ', 1)") == F.col("_a"))
-            .join(ub, F.expr("split_part(pair, ' ', 2)") == F.col("_b"))
-            .select(
-                "pair",
-                "n_pair",
-                "na",
-                "nb",
-                (
-                    F.col("n_pair").cast("double")
-                    / (F.col("na").cast("double") * F.col("nb").cast("double"))
-                ).alias("score"),
-            )
-        )
-        win = scored.orderBy(F.desc("score"), "pair").limit(1)
-        winners.append(
-            win.select(
-                F.lit(i).cast("bigint").alias("iter"),
-                "pair",
-                F.replace(F.col("pair"), F.lit(" "), F.lit("")).alias("merged"),
-                "n_pair",
-                "na",
-                "nb",
-                F.round(
-                    F.log(F.col("n_pair").cast("double"))
-                    - F.log(F.col("na").cast("double"))
-                    - F.log(F.col("nb").cast("double")),
-                    6,
-                ).alias("log_score"),
-            )
-        )
-        pat = F.concat(F.lit(" "), F.col("pair"), F.lit(" "))
-        rep = F.concat(
-            F.lit(" "), F.replace(F.col("pair"), F.lit(" "), F.lit("")), F.lit(" ")
-        )
-        # Checkpoint each iteration's rewritten stream: its subtree (the
-        # winner's pair/unigram joins) would otherwise re-derive inside
-        # EVERY later iteration's three aggregations — the lazy chain's
-        # recompute grows quadratically with K where the BPE trainer's
-        # (one agg per iteration) stays tolerable. This is also the
-        # production shape: a trainer materializes the stream between
-        # iterations.
-        sym_df = (
-            sym_df.crossJoin(F.broadcast(win.select("pair")))
-            .select(F.replace(F.col("sym"), pat, rep).alias("sym"), "freq")
-            .localCheckpoint(eager=False)
-        )
-    vocab = (
-        sym_df.select(F.explode(F.split(F.trim("sym"), " ")).alias("s"))
-        .filter(F.length("s") >= 1)
-        .distinct()
-        .agg(
-            F.md5(F.concat_ws("|", F.array_sort(F.collect_list("s")))).alias(
-                "vocab_hash"
-            ),
-            F.count("*").cast("bigint").alias("vocab_size"),
+            "pair",
+            "n_pair",
+            "na",
+            "nb",
+            F.round(F.log(n_pair) - F.log(na) - F.log(nb), 6).alias("log_score"),
         )
     )
-    out = winners[0]
-    for w_df in winners[1:]:
-        out = out.unionAll(w_df)
-    return out.crossJoin(F.broadcast(vocab))
 
 
 # Unigram-LM trainer constants: token-length training cap, max piece
@@ -6617,10 +6335,9 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     detector is the whole reason to compute one. Eighth graph operator:
     detection (LPA) and its quality gate both run engine-checked.
 
-    Construction is the LPA query verbatim (capped presence per
-    _capped_presence, 2 synchronized rounds, packed-integer argmin
-    tie-break) so the score grades exactly the partition the detector
-    emits. Parity discipline: L_c, d_c, m are exact BIGINTs; each
+    Construction is the LPA query's (copresence_edges, symmetric,
+    label_propagation with 2 rounds), so the score grades exactly the
+    partition the detector emits. Parity discipline: L_c, d_c, m are exact BIGINTs; each
     community's term is one float expression on exact inputs rounded to
     10 and summed as DECIMAL (order-free — the KL/entropy discipline);
     one rounded emission.
@@ -6629,45 +6346,9 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     vs |edges|); intra-edge counting and degree mass are hash aggregates
     on the community key; everything after the (shared, lazily
     checkpointed) edge build is bounded by |nodes|."""
-    ev = t(spark, sf_dir, "events")
-    pres = _capped_presence(
-        ev.select(
-            F.col("user_id").alias("u"),
-            F.floor(F.unix_timestamp("ts") / 60).cast("bigint").alias("b"),
-            F.col("event_type").alias("et"),
-        ).distinct(),
-        "b",
-        "et",
-    )
-    a = pres.select(F.col("u").alias("x"), "b", "et")
-    b_ = pres.select(F.col("u").alias("y"), "b", "et")
-    e0 = (
-        a.join(b_, ["b", "et"])
-        .filter(F.col("x") < F.col("y"))
-        .select("x", "y")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    edges = e0.unionAll(e0.select(F.col("y").alias("x"), F.col("x").alias("y"))).localCheckpoint(
-        eager=False
-    )
-    labels = edges.select(F.col("x").alias("u")).distinct().select("u", F.col("u").alias("lab"))
-    for _ in range(2):
-        n = (
-            edges.join(labels.select(F.col("u").alias("y"), "lab"), "y")
-            .groupBy(F.col("x").alias("u"), "lab")
-            .agg(F.count("*").cast("bigint").alias("c"))
-        )
-        labels = (
-            n.groupBy("u")
-            .agg(
-                (
-                    F.min((F.lit(100000) - F.col("c")) * F.lit(1000000000) + F.col("lab"))
-                    % F.lit(1000000000)
-                ).alias("lab")
-            )
-            .localCheckpoint(eager=False)
-        )
+    e0 = copresence_edges(t(spark, sf_dir, "events"), typed=True)
+    edges = symmetric(e0, "x", "y").localCheckpoint(eager=False)
+    labels = label_propagation(edges, rounds=2)
     m = e0.agg(F.count("*").cast("bigint").alias("m"))
     lx = labels.select(F.col("u").alias("x"), F.col("lab").alias("labx"))
     ly = labels.select(F.col("u").alias("y"), F.col("lab").alias("laby"))

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from batch_public_spark.operators.graph import term_cooccurrence, triangles
 from batch_public_spark.plans.lint import bounded_window_key
 from batch_public_spark.plans.registry import query
 from batch_public_spark.sources.tables import inline_rows
@@ -799,32 +800,8 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a broadcast left join on the bounded vocabulary —
     triangle-free vertices keep a 0 row, so the output covers every
     backbone vertex, not just triangle members."""
-    d = t(spark, sf_dir, "documents")
-    from batch_public_spark.operators.textops import tokens
-
-    dt = (
-        d.select(
-            "doc_id",
-            F.explode(F.transform(tokens(F.col("text")), F.lower)).alias("term"),
-        )
-        .distinct()
-        # two consumers (vocabulary pass + the vocab-filtered projection):
-        # cut the corpus explode+distinct once, lazily
-        .localCheckpoint(eager=False)
-    )
-    vocab = (
-        dt.groupBy("term")
-        .agg(F.count("*").alias("df"))
-        .orderBy(F.desc("df"), "term")
-        .limit(30)
-        .select("term")
-    )
-    dv = dt.join(F.broadcast(vocab), "term").select("doc_id", "term")
-    a, b = dv.alias("a"), dv.alias("b")
     edges = (
-        a.join(b, (F.col("a.doc_id") == F.col("b.doc_id")) & (F.col("a.term") < F.col("b.term")))
-        .groupBy(F.col("a.term").alias("u"), F.col("b.term").alias("v"))
-        .agg(F.count("*").alias("w"))
+        term_cooccurrence(t(spark, sf_dir, "documents"))
         .orderBy(F.desc("w"), "u", "v")
         .limit(200)
         .select("u", "v")
@@ -836,21 +813,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count("*").cast("bigint").alias("degree"))
     )
-    e1 = edges.alias("e1")
-    e2 = edges.select(F.col("u").alias("u2"), F.col("v").alias("v2")).alias("e2")
-    e3 = edges.select(F.col("u").alias("u3"), F.col("v").alias("v3")).alias("e3")
-    tri = (
-        e1.join(e2, F.col("e1.v") == F.col("e2.u2"))
-        .join(e3, (F.col("e3.u3") == F.col("e1.u")) & (F.col("e3.v3") == F.col("e2.v2")))
-        .select(F.col("e1.u").alias("a"), F.col("e1.v").alias("b"), F.col("e2.v2").alias("c"))
-    )
-    tcount = (
-        tri.select(F.col("a").alias("term"))
-        .unionAll(tri.select(F.col("b").alias("term")))
-        .unionAll(tri.select(F.col("c").alias("term")))
-        .groupBy("term")
-        .agg(F.count("*").cast("bigint").alias("n_triangles"))
-    )
+    tcount = triangles(edges).withColumnRenamed("vertex", "term")
     j = deg.join(F.broadcast(tcount), "term", "left").select(
         "term", "degree", F.coalesce("n_triangles", F.lit(0)).alias("n_triangles")
     )

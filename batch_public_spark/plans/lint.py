@@ -25,7 +25,7 @@ for the three antipatterns that are invisible at test scale and fatal at
   m²/2 pairs for a bucket with m rows — invisible at test scale, a
   quadratic single-task killer on one hot key at 100 TB (the
   co-presence-graph antipattern r8's verdict flagged; the fix template
-  is analytics_queries._capped_presence). Known blind spot: the shape is
+  is operators.graph._capped_presence). Known blind spot: the shape is
   detected by SHARED KEY NAME, so a true bucket self-join whose
   re-aliased side RENAMES the key escapes detection (and, conversely,
   two different tables sharing a column name can be flagged — handled
@@ -181,7 +181,7 @@ def _bucket_derived_names(plan: str) -> set[str]:
 
 def _row_number_capped_names(plan: str) -> set[str]:
     """Base names that appear as partition keys of a row_number window —
-    the deterministic per-bucket cap idiom (_capped_presence)."""
+    the deterministic per-bucket cap idiom (operators.graph._capped_presence)."""
     import re
 
     capped: set[str] = set()

@@ -70,7 +70,6 @@ _TS_FIXTURE = [
 def pipeline_ts_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F2: epoch/ms-heuristic/ISO-Z/naive-UTC/offset/EST/EDT cascade as one
     JVM expression (reference dynamo_fetcher.py:205-279)."""
-    _utc(spark)
     df = inline_rows(spark, "case_id int, v string", _TS_FIXTURE)
     return df.select(
         "case_id",

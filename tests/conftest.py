@@ -98,6 +98,8 @@ VACUOUS_OK: set[str] = {
     # emits no communities and BFS emits all-zero counts there. Both are
     # genuinely multi-valued at sf0.01, the driver's correctness SF
     # (LPA: 9 histogram rows; BFS: 1/6/12/35 reached + 87 unreached).
+    # tests/test_graph.py checks both against their oracles on a synthetic
+    # hot-bucket graph in the default lane.
     "graph_label_propagation",
     "graph_bfs_distance",
 }

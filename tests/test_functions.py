@@ -48,14 +48,21 @@ TS_CASES = [
 ]
 
 
-def test_normalize_ts_string_cascade(spark):
+@pytest.mark.parametrize("zone", ["UTC", "America/Los_Angeles"])
+def test_normalize_ts_string_cascade(spark, zone):
+    """Same epochs in any session time zone: naive strings read as UTC."""
     df = spark.createDataFrame(
         [Row(i=i, v=v) for i, (v, _) in enumerate(TS_CASES)], "i int, v string"
     )
-    got = {
-        r["i"]: r["e"]
-        for r in df.select("i", normalize_ts(F.col("v")).alias("e")).collect()
-    }
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", zone)
+    try:
+        got = {
+            r["i"]: r["e"]
+            for r in df.select("i", normalize_ts(F.col("v")).alias("e")).collect()
+        }
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
     for i, (v, expected) in enumerate(TS_CASES):
         assert got[i] == expected, f"case {v!r}: got {got[i]}, want {expected}"
 

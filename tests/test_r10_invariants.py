@@ -8,10 +8,9 @@ regression shows up even while every value still hashes green:
 * the kNN-audit query sample is a fixed COUNT (TakeOrdered top-K), not a
   corpus fraction, and the result's n_queries equals that constant;
 * the persisted MinHash band index is probed with NO exchange on the
-  index side — the bucketed layout is its shuffle;
-* the graph family carries no unbounded-broadcast lint finding (the
-  registry-wide sweep in test_plan_lint covers all queries; the explicit
-  re-assertion here documents the three r9-flagged names).
+  index side — the bucketed layout is its shuffle.
+
+(The graph family's unbounded-broadcast pin lives in tests/test_graph.py.)
 """
 
 from __future__ import annotations
@@ -19,7 +18,6 @@ from __future__ import annotations
 import re
 
 from batch_public_spark.plans import QUERIES
-from batch_public_spark.plans.lint import lint_plan
 from tests.conftest import SF_DIR
 
 
@@ -58,24 +56,6 @@ def test_minhash_index_probe_has_no_index_side_exchange(spark):
     # one bkey exchange (probe side); a second would mean the index
     # re-shuffled and the persisted bucketing bought nothing
     assert len(re.findall(r"hashpartitioning\(bkey", p)) == 1, p
-
-
-def test_graph_family_has_no_unbounded_broadcast(spark):
-    """The r9-flagged names must stay clean of the r10 lint finding after
-    their hints were dropped (the registry-wide gate also covers this;
-    the named re-assertion is the verdict's 'done' criterion)."""
-    for name in (
-        "graph_modularity_score",
-        "graph_bfs_distance",
-        "q17_small_quantity_revenue",
-        "llmops_containment_neardup",
-        # r11: the O(|V|) degree-table hints that hid behind the
-        # localCheckpoint lineage cut until the LogicalRDD lint rule.
-        "graph_link_prediction",
-    ):
-        df = QUERIES[name].fn(spark, SF_DIR)
-        kinds = [f.kind for f in lint_plan(df)]
-        assert "unbounded-broadcast" not in kinds, (name, kinds)
 
 
 def test_quarantine_bitmap_partitions_the_table(spark):

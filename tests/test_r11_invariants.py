@@ -302,24 +302,6 @@ def test_ips_value_carries_propensity_correction(spark):
     assert diffs > 0, "IPS degenerated to DM in every context"
 
 
-def test_link_prediction_wedge_repartition_survives(spark):
-    """The wedge stage's parallelism pin must be a USER repartition
-    (REPARTITION_BY_NUM) in the executed plan: when the r10 broadcast
-    hints were dropped, EnsureRequirements pruned the old
-    above-the-degree-join repartition as redundant against its own
-    ENSURE_REQUIREMENTS exchange, which AQE then coalesced to ~2 tasks —
-    serializing the deg²-amplified wedge join (a 2× regression at sf0.1).
-    The pin now sits below the degree join; if it ever gets pruned again,
-    REPARTITION_BY_NUM disappears from the plan and this fails."""
-    df = QUERIES["graph_link_prediction"].fn(spark, SF_DIR)
-    df.collect()
-    p = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
-    assert "isFinalPlan=true" in p, p[:500]
-    assert "REPARTITION_BY_NUM" in p, "wedge repartition pin was pruned"
-
-
 def test_did_cells_are_populated_and_se_positive(spark):
     """The DiD contrast must bind at fixture SF: every event type has all
     four (cohort × era) cells populated (n_min_cell > 0 — the midpoint

@@ -1,97 +1,13 @@
-"""Round-13 invariants: BPE merge training reproduces its own
-segmentation when the learned merges are re-applied, and the trainer's
-iteration-1 winner coincides with the character-pair ranking."""
+"""Round-13 invariants: corpus-build reconciliation, privacy and
+hypothesis-test operators, tokenizer statistics. (The BPE and WordPiece
+trainer tests live in tests/test_llmops.py.)"""
 
 from __future__ import annotations
-
-import hashlib
-
-import duckdb
 
 from pyspark.sql import functions as F
 
 from batch_public_spark.plans import QUERIES
 from tests.conftest import SF_DIR
-
-
-def _reapply_merges(sf_dir: str, merges: list[str]) -> tuple[set, int]:
-    """Independent (pure-Python) re-application of a learned merge list
-    over the trainer's exact fixture: token types from the same corpus
-    slice, spaced-symbol representation, each merge applied in rank
-    order via str.replace — the same single-pass non-overlapping
-    left-to-right convention both engines' replace() implements.
-    Returns the surviving-symbol vocabulary and its md5 fingerprint
-    input, for comparison against the query's emitted vocab_hash."""
-    con = duckdb.connect()
-    toks = con.sql(
-        rf"""
-        SELECT DISTINCT lower(tk.tok) AS tok
-        FROM '{sf_dir}/documents.parquet',
-             UNNEST(list_filter(string_split_regex(trim(text), '\s+'),
-                                s -> length(s) > 0)) AS tk(tok)
-        WHERE doc_id < 400
-        """
-    ).fetchall()
-    vocab: set[str] = set()
-    for (tok,) in toks:
-        sym = " " + " ".join(tok) + " "
-        for pair in merges:
-            sym = sym.replace(f" {pair} ", " " + pair.replace(" ", "") + " ")
-        vocab.update(s for s in sym.split() if s)
-    return vocab, len(vocab)
-
-
-def test_bpe_train_reapplying_merges_reproduces_segmentation(spark):
-    """The trainer's emitted vocab_hash must equal the hash of the
-    vocabulary obtained by independently re-applying its merge list, in
-    rank order, to the fixture's token types — i.e. the learned merges
-    ARE sufficient to reproduce the trainer's final segmentation (the
-    apply-side contract of llmops_bpe_apply_merges, now pinned against
-    the learning loop)."""
-    rows = sorted(
-        QUERIES["llmops_bpe_train_merges"].fn(spark, SF_DIR).collect(),
-        key=lambda r: r.iter,
-    )
-    assert [r.iter for r in rows] == [1, 2, 3, 4, 5]
-    merges = [r.pair for r in rows]
-    assert all(r.merged == r.pair.replace(" ", "") for r in rows)
-    vocab, size = _reapply_merges(SF_DIR, merges)
-    assert size == rows[0].vocab_size
-    fingerprint = hashlib.md5("|".join(sorted(vocab)).encode()).hexdigest()
-    assert fingerprint == rows[0].vocab_hash
-
-
-def test_bpe_train_iteration1_matches_char_pair_ranking(spark):
-    """Before any merge exists, the trainer's candidate space IS the raw
-    character-pair space, so iteration 1's winner must be the
-    top-weighted character pair (count desc, pair asc) computed
-    independently; and the winner sequence must be strictly
-    non-increasing in count (a later merge can never outweigh an earlier
-    one at the time it was chosen... its RECORDED count is the max of a
-    shrinking candidate pool)."""
-    rows = sorted(
-        QUERIES["llmops_bpe_train_merges"].fn(spark, SF_DIR).collect(),
-        key=lambda r: r.iter,
-    )
-    counts = [r.n for r in rows]
-    assert counts == sorted(counts, reverse=True), counts
-    top_char_pair = duckdb.sql(
-        rf"""
-        WITH d AS (
-          SELECT lower(tk.tok) AS tok
-          FROM '{SF_DIR}/documents.parquet',
-               UNNEST(list_filter(string_split_regex(trim(text), '\s+'),
-                                  s -> length(s) > 0)) AS tk(tok)
-          WHERE doc_id < 400
-        )
-        SELECT substr(tok, i, 1) || ' ' || substr(tok, i + 1, 1) AS pair,
-               count(*) AS n
-        FROM d, UNNEST(generate_series(1, length(tok) - 1)) AS g(i)
-        WHERE length(tok) >= 2
-        GROUP BY pair ORDER BY n DESC, pair LIMIT 1
-        """
-    ).fetchall()[0]
-    assert (rows[0].pair, rows[0].n) == (top_char_pair[0], top_char_pair[1])
 
 
 def test_corpus_build_funnel_telescopes_and_matches_cascade(spark):
@@ -214,60 +130,6 @@ def test_dp_accountant_refuses_exactly_at_the_cap(spark):
     assert r1.release == "n_events"
     if r1.within_utility_bound:
         assert abs(r1.noisy_value - n_events) <= (1.0 / 0.8) * 6.907755 + 1e-6
-
-
-def test_wordpiece_objective_diverges_from_bpe_and_is_correct(spark):
-    """The WordPiece rule is real, not a renamed BPE: on this corpus the
-    two trainers choose DIFFERENT first merges (WordPiece picks the
-    high-likelihood 'q u' — q is nearly always followed by u — over
-    BPE's merely-frequent 'e r'); iteration 1's winner equals the
-    independent argmax of count(ab)/(count(a)·count(b)) over raw
-    character pairs; and every winner's log_score is consistent with
-    its emitted counts."""
-    import math
-
-    wp = sorted(
-        QUERIES["llmops_wordpiece_train_merges"].fn(spark, SF_DIR).collect(),
-        key=lambda r: r.iter,
-    )
-    bpe = sorted(
-        QUERIES["llmops_bpe_train_merges"].fn(spark, SF_DIR).collect(),
-        key=lambda r: r.iter,
-    )
-    assert [r.iter for r in wp] == [1, 2, 3, 4]
-    assert [r.pair for r in wp] != [r.pair for r in bpe[: len(wp)]]
-    assert wp[0].pair == "q u"  # the canonical WordPiece pick
-    for r in wp:
-        assert 0 < r.n_pair <= min(r.na, r.nb), r
-        expect = math.log(r.n_pair) - math.log(r.na) - math.log(r.nb)
-        assert abs(r.log_score - expect) < 1e-5, r
-    top = duckdb.sql(
-        rf"""
-        WITH d AS (
-          SELECT lower(tk.tok) AS tok
-          FROM '{SF_DIR}/documents.parquet',
-               UNNEST(list_filter(string_split_regex(trim(text), '\s+'),
-                                  s -> length(s) > 0)) AS tk(tok)
-          WHERE doc_id < 400
-        ), pc AS (
-          SELECT substr(tok, i, 1) || ' ' || substr(tok, i + 1, 1) AS pair,
-                 count(*) AS n
-          FROM d, UNNEST(generate_series(1, length(tok) - 1)) AS g(i)
-          WHERE length(tok) >= 2 GROUP BY pair
-        ), u AS (
-          SELECT substr(tok, i, 1) AS s, count(*) AS n
-          FROM d, UNNEST(generate_series(1, length(tok))) AS g(i)
-          GROUP BY s
-        )
-        SELECT pc.pair FROM pc
-        JOIN u ua ON ua.s = split_part(pc.pair, ' ', 1)
-        JOIN u ub ON ub.s = split_part(pc.pair, ' ', 2)
-        ORDER BY CAST(pc.n AS DOUBLE) / (CAST(ua.n AS DOUBLE) * CAST(ub.n AS DOUBLE))
-                 DESC, pc.pair
-        LIMIT 1
-        """
-    ).fetchall()[0][0]
-    assert wp[0].pair == top
 
 
 # ---------------------------------------------------------------------------

@@ -7,8 +7,6 @@ fixture.
 
 from __future__ import annotations
 
-import math
-
 from batch_public_spark.plans import QUERIES
 from tests.conftest import SF_DIR
 
@@ -29,17 +27,6 @@ def test_welch_t_sign_tracks_mean_gap(spark):
 def test_theil_sen_pair_count_is_grid_choose_2(spark):
     for r in _rows(spark, "agg_theil_sen_slope"):
         assert r.n_pairs == r.n_months * (r.n_months - 1) // 2, r
-
-
-def test_link_prediction_scores_are_bounded_and_open(spark):
-    rows = _rows(spark, "graph_link_prediction")
-    assert rows, "top-k must be non-empty"
-    for r in rows:
-        assert r.common_neighbors >= 1, r
-        assert 0 < r.jaccard <= 1, r
-        # each AA term is at most 1/ln 2 (witness degree >= 2)
-        assert 0 < r.adamic_adar <= r.common_neighbors / math.log(2) + 1e-9, r
-        assert r.x < r.y, r
 
 
 def test_holt_forecast_is_level_plus_trend(spark):
