@@ -13,6 +13,7 @@ from typing import Any, Optional
 from pyspark.sql import SparkSession
 
 from batch_public_spark.cli import orchestrator, run_table
+from batch_public_spark.session import get_spark
 
 
 def run_batch(
@@ -28,7 +29,7 @@ def run_batch(
     """Blocking orchestrated run for one table (reference run_batch): the
     CLI's summary dict, with the parse stage written under
     ``{output_dir}/parsed``."""
-    spark = spark or SparkSession.builder.appName("batch_public_spark-agent").getOrCreate()
+    spark = spark or get_spark("batch_public_spark-agent")
     data_dir = data_dir or os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     return run_table(
         spark, orchestrator(output_dir), table,

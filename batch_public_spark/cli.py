@@ -34,6 +34,7 @@ from batch_public_spark.pipeline import (
     WatermarkStore,
 )
 from batch_public_spark.pipeline.models import ALIASES, CATALOG
+from batch_public_spark.session import get_spark
 from batch_public_spark.sources.tables import load_table
 
 
@@ -199,13 +200,7 @@ def main(argv: list[str] | None = None) -> int:
         print("no tables selected (use --table or a config file)", file=sys.stderr)
         return 2
 
-    from pyspark.sql import SparkSession  # deferred: --list-* paths need no JVM
-
-    spark = (
-        SparkSession.builder.appName("batch_public_spark-cli")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    spark = get_spark("batch_public_spark-cli")
 
     # X5: one cycle per table, sequential like the reference
     # (main.py:658-702); >1 table forces async (main.py:686-693).

@@ -31,6 +31,22 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(F.trim(text), r"\s+"), lambda t: F.length(t) > 0)
 
 
+def bigrams(toks: Column) -> Column:
+    """Adjacent pairs of a token array as ``array<struct<w1, w2>>``, zipped
+    in-row from two slices (no positional self-join). NULL when the array
+    has fewer than 2 tokens (``slice`` rejects the negative length), so an
+    ``explode`` of it emits no row."""
+    n = F.size(toks) - 1
+    return F.when(
+        F.size(toks) >= 2,
+        F.zip_with(
+            F.slice(toks, 1, n),
+            F.slice(toks, 2, n),
+            lambda x, y: F.struct(x.alias("w1"), y.alias("w2")),
+        ),
+    )
+
+
 def token_count_ws(text: Column) -> Column:
     """Whitespace token count."""
     return F.size(tokens(text)).cast("bigint")

@@ -27,7 +27,12 @@ from batch_public_spark.operators.graph import (
     term_cooccurrence,
     triangles,
 )
-from batch_public_spark.operators.textops import token_count_bpe_ish, token_count_ws, tokens
+from batch_public_spark.operators.textops import (
+    bigrams,
+    token_count_bpe_ish,
+    token_count_ws,
+    tokens,
+)
 from batch_public_spark.plans.lint import bounded_window_key
 from batch_public_spark.plans.registry import query
 from batch_public_spark.sources.tables import inline_rows
@@ -1761,19 +1766,7 @@ def llmops_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("double").alias("c"))
     )
     ntok = uni.agg(F.sum("c").alias("n_tok"))
-    pairs = (
-        tk.filter(F.size("toks") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "zip_with(slice(toks, 1, size(toks) - 1),"
-                    "         slice(toks, 2, size(toks) - 1),"
-                    "         (x, y) -> struct(x AS w1, y AS w2))"
-                )
-            ).alias("p")
-        )
-        .select("p.w1", "p.w2")
-    )
+    pairs = tk.select(F.explode(bigrams(F.col("toks"))).alias("p")).select("p.w1", "p.w2")
     pc = (
         pairs.groupBy("w1", "w2")
         .agg(F.count("*").cast("double").alias("c_ab"))

@@ -18,13 +18,15 @@ SQL text evaluated by both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from batch_public_spark.operators.textops import (
+    bigrams,
     normalized_text,
     pii_count,
+    quality_score,
     redact_pii,
     tokens,
 )
@@ -156,6 +158,32 @@ def _tok_weight(var: str) -> str:
     return f"({_hex3(inner)} - 2048)"
 
 
+def _reward(toks: str) -> Column:
+    """BIGINT hashed-feature score of the token-array column ``toks``: the
+    exact integer sum of the per-token weights, folded in-row (no shuffle,
+    no float).
+
+    Every caller but llmops_best_of_n_curve wraps its documents scan in
+    spread(): tokenize + per-token md5 weights (+ the gate's quality_score
+    for the calibration pairs) is per-row text compute over the 1-task
+    fixture scan, and downstream lazy checkpoints materialize it at build
+    time under AQE, so the serialized stage is paid inside fn(). No-op on a
+    multi-file corpus (guide §2.5)."""
+    return F.expr(
+        f"aggregate(transform({toks}, t -> cast({_tok_weight('t')} as bigint)), "
+        "0L, (acc, x) -> acc + x)"
+    )
+
+
+def _quality_prob(n_tokens: Column, w_sum: Column) -> Column:
+    """llmops_quality_classifier's probability: the sigmoid of the
+    length-normalized weight sum, 0.5 for an empty document, rounded to 6."""
+    sig = F.lit(1.0) / (
+        F.lit(1.0) + F.exp(-(w_sum.cast("double") / (n_tokens * F.lit(410.0))))
+    )
+    return F.round(F.when(n_tokens > 0, sig).otherwise(F.lit(0.5)), 6)
+
+
 @query(
     "llmops_quality_classifier",
     oracle=f"""
@@ -186,34 +214,38 @@ def llmops_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheapest classifier there is: no model broadcast, no Python workers,
     no aggregation tree — a real trained-weights variant only adds a
     broadcast map lookup in place of the md5."""
-    # spread(): the scored projection (tokenize + per-token md5 weights +
-    # the gate's quality_score) is per-row text compute over the 1-task
-    # fixture scan, and the downstream lazy checkpoint materializes it at
-    # build time under AQE — the serialized stage is paid inside fn().
-    # No-op on a multi-file corpus (guide §2.5).
     d = spread(t(spark, sf_dir, "documents").select("doc_id", "source", "text")).withColumn(
         "toks", tokens(normalized_text(F.col("text")))
-    )
-    w_sum = F.expr(
-        f"aggregate(transform(toks, t -> cast({_tok_weight('t')} as bigint)), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    n_tok = F.size("toks")
-    score = F.lit(1.0) / (
-        F.lit(1.0) + F.exp(-(F.col("w_sum").cast("double") / (F.col("n_tokens") * F.lit(410.0))))
     )
     return (
         d.select(
             "doc_id",
             "source",
-            n_tok.cast("bigint").alias("n_tokens"),
-            w_sum.alias("w_sum"),
+            F.size("toks").cast("bigint").alias("n_tokens"),
+            _reward("toks").alias("w_sum"),
         )
-        .withColumn(
-            "quality_prob",
-            F.round(F.when(F.col("n_tokens") > 0, score).otherwise(F.lit(0.5)), 6),
-        )
+        .withColumn("quality_prob", _quality_prob(F.col("n_tokens"), F.col("w_sum")))
         .withColumn("keep", F.col("w_sum") > 0)
+    )
+
+
+def _calibration_pairs(spark: SparkSession, sf_dir: str, y_at: float) -> DataFrame:
+    """(pd, y) per document for the calibration queries: pd is
+    llmops_quality_classifier's probability as a DECIMAL(10,6), y is 1 when
+    the independent rule-based gate (llmops_quality_filter's round-6
+    score) reaches ``y_at``."""
+    d = spread(t(spark, sf_dir, "documents").select("text")).withColumn(
+        "toks", tokens(normalized_text(F.col("text")))
+    )
+    return d.select(
+        F.size("toks").alias("n_tokens"),
+        _reward("toks").alias("w_sum"),
+        (F.round(quality_score(F.col("text")), 6).cast("decimal(10,6)") >= y_at)
+        .cast("int")
+        .alias("y"),
+    ).select(
+        _quality_prob(F.col("n_tokens"), F.col("w_sum")).cast("decimal(10,6)").alias("pd"),
+        "y",
     )
 
 
@@ -288,44 +320,8 @@ def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan computes both mechanisms in-row (zero-shuffle
     scoring), one 10-key hash aggregation, two 1-row broadcast scalars.
     At 100 TB this replaces nothing — it IS the cheap way."""
-    # spread(): the scored projection (tokenize + per-token md5 weights +
-    # the gate's quality_score) is per-row text compute over the 1-task
-    # fixture scan, and the downstream lazy checkpoint materializes it at
-    # build time under AQE — the serialized stage is paid inside fn().
-    # No-op on a multi-file corpus (guide §2.5).
-    d = spread(t(spark, sf_dir, "documents").select("text")).withColumn(
-        "toks", tokens(normalized_text(F.col("text")))
-    )
-    w_sum = F.expr(
-        f"aggregate(transform(toks, t -> cast({_tok_weight('t')} as bigint)), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    n_tok = F.size("toks")
-    sig = F.lit(1.0) / (
-        F.lit(1.0)
-        + F.exp(-(F.col("w_sum").cast("double") / (F.col("n_tokens") * F.lit(410.0))))
-    )
-    from batch_public_spark.operators.textops import quality_score
-
-    scored = (
-        d.select(
-            n_tok.alias("n_tokens"),
-            w_sum.alias("w_sum"),
-            (
-                F.round(quality_score(F.col("text")), 6).cast("decimal(10,6)")
-                >= 0.5
-            )
-            .cast("int")
-            .alias("y"),
-        )
-        .select(
-            F.round(F.when(F.col("n_tokens") > 0, sig).otherwise(F.lit(0.5)), 6)
-            .cast("decimal(10,6)")
-            .alias("pd"),
-            "y",
-        )
-        .localCheckpoint(eager=False)  # feeds the bin agg AND the Brier agg
-    )
+    # feeds the bin agg AND the Brier agg
+    scored = _calibration_pairs(spark, sf_dir, 0.5).localCheckpoint(eager=False)
     bins = (
         scored.groupBy(
             F.least(F.floor(F.col("pd") * 10).cast("bigint"), F.lit(9).cast("bigint")).alias(
@@ -433,7 +429,7 @@ def eval_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     j..k) — mathematically identical to running PAV, but a pure
     nested-lambda expression over the <= 10-bin arrays that both
     engines evaluate bit-identically (a sequential pool-merge loop has
-    no SQL form; tests/test_r14_invariants.py additionally re-runs
+    no SQL form; tests/test_curation.py additionally re-runs
     REAL sequential PAV in Python and matches every iso_rate).
 
     Parity discipline: bin counts n/pos are exact BIGINTs; every
@@ -448,42 +444,7 @@ def eval_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     elements: control-plane arithmetic, no join, no window, no
     shuffle). At 100 TB the diagram aggregation is the only data-sized
     stage, unchanged from ECE."""
-    # spread(): the scored projection (tokenize + per-token md5 weights +
-    # the gate's quality_score) is per-row text compute over the 1-task
-    # fixture scan, and the downstream lazy checkpoint materializes it at
-    # build time under AQE — the serialized stage is paid inside fn().
-    # No-op on a multi-file corpus (guide §2.5).
-    d = spread(t(spark, sf_dir, "documents").select("text")).withColumn(
-        "toks", tokens(normalized_text(F.col("text")))
-    )
-    w_sum = F.expr(
-        f"aggregate(transform(toks, t -> cast({_tok_weight('t')} as bigint)), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    n_tok = F.size("toks")
-    sig = F.lit(1.0) / (
-        F.lit(1.0)
-        + F.exp(-(F.col("w_sum").cast("double") / (F.col("n_tokens") * F.lit(410.0))))
-    )
-    from batch_public_spark.operators.textops import quality_score
-
-    scored = d.select(
-        n_tok.alias("n_tokens"),
-        w_sum.alias("w_sum"),
-        (
-            F.round(quality_score(F.col("text")), 6).cast("decimal(10,6)")
-            >= 0.85
-        )
-        .cast("int")
-        .alias("y"),
-        F.col("text"),
-    ).select(
-        F.round(F.when(F.col("n_tokens") > 0, sig).otherwise(F.lit(0.5)), 6)
-        .cast("decimal(10,6)")
-        .alias("pd"),
-        "y",
-    )
-    bins = scored.groupBy(
+    bins = _calibration_pairs(spark, sf_dir, 0.85).groupBy(
         F.least(F.floor(F.col("pd") * 10).cast("bigint"), F.lit(9).cast("bigint")).alias(
             "bin"
         )
@@ -607,7 +568,7 @@ def eval_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     det = Swzz*Sw - Swz^2. The standard first iterate a production
     calibration job ships when it refuses an iterative optimizer in
     SQL; the raw gradients are emitted so a caller can verify the
-    step direction. tests/test_r14_invariants.py re-runs the algebra in
+    step direction. tests/test_curation.py re-runs the algebra in
     Python and checks the step REDUCES the training log-loss (the
     Newton-descent property at a smooth convex start).
 
@@ -625,40 +586,7 @@ def eval_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE map-side-combinable aggregation over the in-row
     scoring scan — six moment columns, no shuffle beyond the 1-row
     aggregate. The cheapest possible calibrator at 100 TB."""
-    # spread(): the scored projection (tokenize + per-token md5 weights +
-    # the gate's quality_score) is per-row text compute over the 1-task
-    # fixture scan, and the downstream lazy checkpoint materializes it at
-    # build time under AQE — the serialized stage is paid inside fn().
-    # No-op on a multi-file corpus (guide §2.5).
-    d = spread(t(spark, sf_dir, "documents").select("text")).withColumn(
-        "toks", tokens(normalized_text(F.col("text")))
-    )
-    w_sum = F.expr(
-        f"aggregate(transform(toks, t -> cast({_tok_weight('t')} as bigint)), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    n_tok = F.size("toks")
-    sig = F.lit(1.0) / (
-        F.lit(1.0)
-        + F.exp(-(F.col("w_sum").cast("double") / (F.col("n_tokens") * F.lit(410.0))))
-    )
-    from batch_public_spark.operators.textops import quality_score
-
-    scored = d.select(
-        n_tok.alias("n_tokens"),
-        w_sum.alias("w_sum"),
-        (
-            F.round(quality_score(F.col("text")), 6).cast("decimal(10,6)") >= 0.85
-        )
-        .cast("int")
-        .alias("y"),
-    ).select(
-        F.round(F.when(F.col("n_tokens") > 0, sig).otherwise(F.lit(0.5)), 6)
-        .cast("decimal(10,6)")
-        .alias("pd"),
-        "y",
-    )
-    jj = scored.select(
+    jj = _calibration_pairs(spark, sf_dir, 0.85).select(
         "pd",
         F.round(
             F.log(F.col("pd").cast("double") / (F.lit(1.0) - F.col("pd").cast("double"))),
@@ -1439,6 +1367,31 @@ def llmops_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _ranked_pairs(s: DataFrame) -> DataFrame:
+    """Rank-symmetric preference pairs of ``s`` (source, doc_id, reward and
+    any further columns): the i-th best (reward DESC, doc_id) of each source
+    joined on (source, i) to its i-th worst (reward, doc_id DESC), kept for
+    i <= n/2 with a strictly positive margin. Every column c of ``s`` but
+    source comes back as chosen_c and rejected_c, beside source and i."""
+    cols = [c for c in s.columns if c != "source"]
+    wb = W.partitionBy("source").orderBy(F.desc("reward"), "doc_id")
+    ww = W.partitionBy("source").orderBy("reward", F.desc("doc_id"))
+    best = s.select(
+        "source",
+        *[F.col(c).alias(f"chosen_{c}") for c in cols],
+        F.row_number().over(wb).alias("i"),
+        F.count("*").over(W.partitionBy("source")).cast("bigint").alias("n"),
+    )
+    worst = s.select(
+        "source",
+        *[F.col(c).alias(f"rejected_{c}") for c in cols],
+        F.row_number().over(ww).alias("i"),
+    )
+    return best.join(worst, ["source", "i"]).filter(
+        (F.col("i") * 2 <= F.col("n")) & (F.col("chosen_reward") > F.col("rejected_reward"))
+    )
+
+
 @query(
     "llmops_preference_pairs",
     oracle=f"""
@@ -1490,43 +1443,18 @@ def llmops_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages total, no driver-side pairing. At 100 TB the group key is the
     real prompt id and the same plan holds; the window is bounded by
     group size, not corpus size."""
-    # spread(): the tokenize + per-token md5 reward fold is per-row text
-    # compute over the 1-task fixture scan (guide §2.5); no-op at scale.
     d = spread(t(spark, sf_dir, "documents").select("doc_id", "source", "text")).withColumn(
         "toks", tokens(normalized_text(F.col("text")))
     )
-    reward = F.expr(
-        f"aggregate(transform(toks, t -> cast({_tok_weight('t')} as bigint)), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    s = d.select("doc_id", "source", reward.alias("reward"))
-    wb = W.partitionBy("source").orderBy(F.desc("reward"), "doc_id")
-    ww = W.partitionBy("source").orderBy("reward", F.desc("doc_id"))
-    best = s.select(
+    s = d.select("doc_id", "source", _reward("toks").alias("reward"))
+    return _ranked_pairs(s).select(
         "source",
-        F.col("doc_id").alias("chosen_id"),
-        F.col("reward").alias("chosen_reward"),
-        F.row_number().over(wb).alias("i"),
-        F.count("*").over(W.partitionBy("source")).cast("bigint").alias("n"),
-    )
-    worst = s.select(
-        "source",
-        F.col("doc_id").alias("rejected_id"),
-        F.col("reward").alias("rejected_reward"),
-        F.row_number().over(ww).alias("i"),
-    )
-    return (
-        best.join(worst, ["source", "i"])
-        .filter((F.col("i") * 2 <= F.col("n")) & (F.col("chosen_reward") > F.col("rejected_reward")))
-        .select(
-            "source",
-            F.col("i").cast("bigint").alias("pair_rank"),
-            "chosen_id",
-            "rejected_id",
-            "chosen_reward",
-            "rejected_reward",
-            (F.col("chosen_reward") - F.col("rejected_reward")).alias("margin"),
-        )
+        F.col("i").cast("bigint").alias("pair_rank"),
+        F.col("chosen_doc_id").alias("chosen_id"),
+        F.col("rejected_doc_id").alias("rejected_id"),
+        "chosen_reward",
+        "rejected_reward",
+        (F.col("chosen_reward") - F.col("rejected_reward")).alias("margin"),
     )
 
 
@@ -1561,16 +1489,10 @@ def llmops_uncertainty_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrderedAndProject (per-partition heap + driver merge of 25-row
     heads — no global sort materializes). At 100 TB this is the
     standard label-budget allocator: one scan, k rows out."""
-    # spread(): per-row token-weight scoring on the 1-task fixture scan
-    # (guide §2.5); no-op at scale.
     d = spread(t(spark, sf_dir, "documents").select("doc_id", "source", "text")).withColumn(
         "toks", tokens(normalized_text(F.col("text")))
     )
-    reward = F.expr(
-        f"aggregate(transform(toks, t -> cast({_tok_weight('t')} as bigint)), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    s = d.select("doc_id", "source", reward.alias("w_sum")).withColumn(
+    s = d.select("doc_id", "source", _reward("toks").alias("w_sum")).withColumn(
         "margin", F.abs("w_sum")
     )
     return s.orderBy("margin", "doc_id").limit(25).select(
@@ -1644,11 +1566,7 @@ def llmops_best_of_n_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").withColumn(
         "toks", tokens(normalized_text(F.col("text")))
     )
-    reward = F.expr(
-        f"aggregate(transform(toks, t -> cast({_tok_weight('t')} as bigint)), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    s = d.select("doc_id", "source", reward.alias("reward"))
+    s = d.select("doc_id", "source", _reward("toks").alias("reward"))
     wr = W.partitionBy("source").orderBy("reward", "doc_id")
     ranked = s.select(
         "source",
@@ -1758,43 +1676,18 @@ def llmops_response_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     reward fold, one shuffle on source for the two rank windows, a
     co-partitioned rank self-join), then one global integer-moment
     aggregation — the audit costs one extra reduce over the pairs."""
-    # spread(): per-row token-weight scoring on the 1-task fixture scan
-    # (guide §2.5); no-op at scale.
     d = spread(t(spark, sf_dir, "documents").select("doc_id", "source", "text")).withColumn(
         "toks", tokens(normalized_text(F.col("text")))
-    )
-    reward = F.expr(
-        f"aggregate(transform(toks, t -> cast({_tok_weight('t')} as bigint)), "
-        "0L, (acc, x) -> acc + x)"
     )
     s = d.select(
         "doc_id",
         "source",
-        reward.alias("reward"),
+        _reward("toks").alias("reward"),
         F.size("toks").cast("bigint").alias("n_toks"),
     )
-    wb = W.partitionBy("source").orderBy(F.desc("reward"), "doc_id")
-    ww = W.partitionBy("source").orderBy("reward", F.desc("doc_id"))
-    best = s.select(
-        "source",
-        F.col("reward").alias("rb"),
-        F.col("n_toks").alias("lb"),
-        F.row_number().over(wb).alias("i"),
-        F.count("*").over(W.partitionBy("source")).cast("bigint").alias("n"),
-    )
-    worst = s.select(
-        "source",
-        F.col("reward").alias("rw"),
-        F.col("n_toks").alias("lw"),
-        F.row_number().over(ww).alias("i"),
-    )
-    pairs = (
-        best.join(worst, ["source", "i"])
-        .filter((F.col("i") * 2 <= F.col("n")) & (F.col("rb") > F.col("rw")))
-        .select(
-            (F.col("rb") - F.col("rw")).alias("margin"),
-            (F.col("lb") - F.col("lw")).alias("len_delta"),
-        )
+    pairs = _ranked_pairs(s).select(
+        (F.col("chosen_reward") - F.col("rejected_reward")).alias("margin"),
+        (F.col("chosen_n_toks") - F.col("rejected_n_toks")).alias("len_delta"),
     )
     sums = pairs.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -1950,8 +1843,6 @@ def _teacher_labeled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Documents labeled by the corpus-mean quality gate (_NB_TEACHER_SQL's
     Spark twin): (doc_id, lang, pos, text). Shared by the NB distillation
     trainer and the DSIR selector — both learn to reproduce this teacher."""
-    from batch_public_spark.operators.textops import quality_score
-
     # spread(): everything downstream of this scan is per-row text compute
     # (quality_score here; tokenize + n-gram explode + per-occurrence md5 in
     # the DSIR/NB consumers — ~5M occurrence rows at sf0.1), and a
@@ -2287,19 +2178,14 @@ def llmops_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform(tokens(F.col("text")), F.lower).alias("toks"),
     )
     uni = tk.select("doc_id", "pos", F.explode("toks").alias("ng"))
-    bi = (
-        tk.filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            "pos",
-            F.explode(
-                F.expr(
-                    "zip_with(slice(toks, 1, size(toks) - 1),"
-                    "         slice(toks, 2, size(toks) - 1),"
-                    "         (x, y) -> concat(x, ' ', y))"
-                )
-            ).alias("ng"),
-        )
+    bi = tk.select(
+        "doc_id",
+        "pos",
+        F.explode(
+            F.transform(
+                bigrams(F.col("toks")), lambda p: F.concat(p["w1"], F.lit(" "), p["w2"])
+            )
+        ).alias("ng"),
     )
     occ = uni.unionAll(bi)
     bkt = occ.select(

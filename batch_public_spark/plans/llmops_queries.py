@@ -11,7 +11,10 @@ in tests/test_llmops.py.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import os
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -37,6 +40,7 @@ from batch_public_spark.operators.semantic import (
 from batch_public_spark.operators.textops import (
     PUNCT_CLASS,
     STOPWORDS_EN,
+    bigrams,
     fingerprint_md5,
     fingerprint_modp,
     fingerprint_winnow,
@@ -52,6 +56,7 @@ from batch_public_spark.operators.textops import (
 )
 from batch_public_spark.plans.lint import bounded_window_key
 from batch_public_spark.plans.registry import query
+from batch_public_spark.sources.bucketing import read_bucketed, write_bucketed
 from batch_public_spark.sources.tables import inline_rows
 from batch_public_spark.sources.tables import load_table as t
 from batch_public_spark.sources.tables import scratch_dir
@@ -1306,6 +1311,58 @@ def llmops_boilerplate_sentence_filter(spark: SparkSession, sf_dir: str) -> Data
     )
 
 
+def _dedup_waves(base: DataFrame):
+    """The dedup cascade's three waves over ``base`` (doc_id, text, ...):
+    returns (s1, s2, removed3) — the exact-dedup survivors, the
+    first-8-token prefix-group survivors among them, and the ids the exact
+    3-gram-Jaccard wave removes from the ``doc_id < 150`` anchor subset
+    (the larger id of every pair with J >= 0.5; min-id survivor policy
+    everywhere, matching operators.dedup).
+
+    Each survivor set feeds BOTH the next wave and its caller's funnel
+    count, so s1 and s2 are cut once (lazy — materialized by the first
+    consumer's job) and dedup_exact / the prefix agg run once, not once
+    per consumer. The waves use the standalone queries' tokenization
+    helpers (operators.textops), so the cascade's keys never drift from
+    dedup_exact's and prefix_dedup's."""
+    s1 = dedup_exact(base).select("doc_id").localCheckpoint(eager=False)
+    toks_lower = tokens(F.lower(F.col("text")))
+    s2 = (
+        base.join(s1, "doc_id")
+        .groupBy(F.array_join(F.slice(toks_lower, 1, 8), " ").alias("prefix"))
+        .agg(F.min("doc_id").alias("doc_id"))
+        .select("doc_id")
+        .localCheckpoint(eager=False)
+    )
+    toks_norm = tokens(normalized_text(F.col("text")))
+    sh = (
+        base.join(s2, "doc_id")
+        .filter(F.col("doc_id") < 150)
+        .select(
+            "doc_id",
+            F.array_distinct(
+                F.transform(
+                    F.sequence(F.lit(1), F.greatest(F.size(toks_norm) - 2, F.lit(1))),
+                    lambda i: F.array_join(F.slice(toks_norm, i, 3), " "),
+                )
+            ).alias("sh"),
+        )
+    ).localCheckpoint(eager=False)  # self-joined below: two consumers
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
+    union = F.size(F.array_distinct(F.concat(F.col("a.sh"), F.col("b.sh"))))
+    # Explicit broadcast: the anchor set is ≤150 rows but sits behind two
+    # joins, so Catalyst's size estimate balloons and it would otherwise
+    # plan a CartesianProduct (plans.lint flags those).
+    removed3 = (
+        a.join(F.broadcast(b), F.col("a.doc_id") < F.col("b.doc_id"))
+        .filter(inter * 2 >= union)
+        .select(F.col("b.doc_id").alias("doc_id"))
+        .distinct()
+    )
+    return s1, s2, removed3
+
+
 @query(
     "llmops_dedup_cascade_e2e",
     oracle=f"""
@@ -1368,50 +1425,7 @@ def llmops_dedup_cascade_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     and exploded into the three stage rows — one plan, one action, no
     driver-side count() round-trips."""
     base = t(spark, sf_dir, "documents").select("doc_id", "text")
-
-    # Each wave feeds BOTH the next wave and its own funnel count; cut
-    # each survivor set once (lazy — materialized by the first consumer's
-    # job) so dedup_exact / the prefix agg run once, not once per consumer.
-    s1 = dedup_exact(base).select("doc_id").localCheckpoint(eager=False)
-
-    # Same tokenization/normalization helpers as the standalone wave
-    # queries (operators.textops) — the cascade's keys must never drift
-    # from dedup_exact's and prefix_dedup's.
-    toks_lower = tokens(F.lower(F.col("text")))
-    s2 = (
-        base.join(s1, "doc_id")
-        .groupBy(F.array_join(F.slice(toks_lower, 1, 8), " ").alias("prefix"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-        .localCheckpoint(eager=False)
-    )
-
-    toks_norm = tokens(normalized_text(F.col("text")))
-    sh = (
-        base.join(s2, "doc_id")
-        .filter(F.col("doc_id") < 150)
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.greatest(F.size(toks_norm) - 2, F.lit(1))),
-                    lambda i: F.array_join(F.slice(toks_norm, i, 3), " "),
-                )
-            ).alias("sh"),
-        )
-    ).localCheckpoint(eager=False)  # self-joined below: two consumers
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.array_distinct(F.concat(F.col("a.sh"), F.col("b.sh"))))
-    # Explicit broadcast: the anchor set is ≤150 rows but sits behind two
-    # joins, so Catalyst's size estimate balloons and it would otherwise
-    # plan a CartesianProduct (plans.lint flags those).
-    removed3 = (
-        a.join(F.broadcast(b), F.col("a.doc_id") < F.col("b.doc_id"))
-        .filter(inter * 2 >= union)
-        .select(F.col("b.doc_id").alias("doc_id"))
-        .distinct()
-    )
+    s1, s2, removed3 = _dedup_waves(base)
 
     counts = (
         base.agg(F.count("*").alias("n0"))
@@ -1576,7 +1590,7 @@ def llmops_corpus_build_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stage keys, thresholds, and bounds are shared VERBATIM with the
     standalone queries (same textops helpers, same doc_id < 150 near-dup
     anchor, same %97 benchmark stand-in, same greatest(tok,1) packing
-    floor), so tests/test_r13_invariants.py can pin reconciliation: the
+    floor), so tests/test_llmops.py can pin reconciliation: the
     first three funnel rows equal llmops_dedup_cascade_e2e's output
     exactly, the funnel telescopes (each row's n_removed + n_remaining =
     the previous row's n_remaining), and the gate keeps a subset of the
@@ -1591,40 +1605,8 @@ def llmops_corpus_build_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     else is hash aggregations and broadcast semi-joins — no stage
     shuffles text except the two dedup key aggregations."""
     base = t(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
-
-    s1 = dedup_exact(base).select("doc_id").localCheckpoint(eager=False)
-    toks_lower = tokens(F.lower(F.col("text")))
-    s2 = (
-        base.join(s1, "doc_id")
-        .groupBy(F.array_join(F.slice(toks_lower, 1, 8), " ").alias("prefix"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-        .localCheckpoint(eager=False)
-    )
-    toks_norm = tokens(normalized_text(F.col("text")))
-    sh = (
-        base.join(s2, "doc_id")
-        .filter(F.col("doc_id") < 150)
-        .select(
-            "doc_id",
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.greatest(F.size(toks_norm) - 2, F.lit(1))),
-                    lambda i: F.array_join(F.slice(toks_norm, i, 3), " "),
-                )
-            ).alias("sh"),
-        )
-    ).localCheckpoint(eager=False)
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.array_distinct(F.concat(F.col("a.sh"), F.col("b.sh"))))
-    removed3 = (
-        a.join(F.broadcast(b), F.col("a.doc_id") < F.col("b.doc_id"))
-        .filter(inter * 2 >= union)
-        .select(F.col("b.doc_id").alias("doc_id"))
-        .distinct()
-        .localCheckpoint(eager=False)  # counted AND anti-joined below
-    )
+    s1, s2, removed3 = _dedup_waves(base)
+    removed3 = removed3.localCheckpoint(eager=False)  # counted AND anti-joined below
     s3 = s2.join(removed3, "doc_id", "left_anti")
 
     q6 = F.round(quality_score(F.col("text")), 6).cast("decimal(10,6)")
@@ -4494,13 +4476,13 @@ def llmops_minhash_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFr
     persisted bucketed on the band key, probe co-locating with no
     exchange on the index side); verification touches only candidate
     pairs."""
-    d, idx, inc = _inc_banded_frames(spark, sf_dir)
+    arrivals, idx, inc = _inc_banded_frames(spark, sf_dir)
     cand = (
         inc.join(idx, ["band", "bh"])
         .select("new_id", "old_id", "si", "so")
         .distinct()
     )
-    return _inc_verdict_rollup(d, cand)
+    return _inc_verdict_rollup(arrivals, cand)
 
 
 def _banded_docs(spark: SparkSession, sf_dir: str):
@@ -4536,44 +4518,80 @@ def _banded_docs(spark: SparkSession, sf_dir: str):
     return d, banded
 
 
+def _bucket_cap(banded: DataFrame) -> DataFrame:
+    """The index's hot-bucket cap: the first 50 entries by doc_id of each
+    (band, bh) bucket of ``banded`` (the containment-query hot-shingle
+    discipline; non-binding at fixture SF)."""
+    wcap = W.partitionBy("band", "bh").orderBy("doc_id")
+    return banded.withColumn("rn", F.row_number().over(wcap)).filter(F.col("rn") <= 50)
+
+
+def _bkey() -> Column:
+    """The persisted index's one bucketing column: the injective string
+    band || ':' || bucket-hash."""
+    return F.concat_ws(":", F.col("band").cast("string"), "bh").alias("bkey")
+
+
+def _index_tables(spark: SparkSession, sf_dir: str, scratch: str, *names: str):
+    """Scratch root and session-tagged catalog table names for a persisted
+    band index (one per name prefix), each dropped first so a re-run
+    rewrites it."""
+    root = scratch_dir(spark, sf_dir, scratch)
+    tag = os.path.basename(root).replace(".", "_")
+    tables = [f"{name}_{tag}" for name in names]
+    for tb in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {tb}")
+    return root, tables
+
+
+def _persist_index(df: DataFrame, table: str, path: str) -> None:
+    """Write one index version bucketed (and sorted) 8 ways on bkey, the
+    layout every version keeps so probes co-locate across rotations."""
+    write_bucketed(df, table, key="bkey", buckets=8, path=path)
+
+
 def _inc_banded_frames(spark: SparkSession, sf_dir: str):
     """Shared signature/banding construction for the two incremental-
     dedup shapes (in-job vs persisted-bucketed index) — ONE definition so
     the twins cannot drift (they share an oracle, and
-    tests/test_r10_invariants.py pins row-for-row equality): returns
-    (documents, capped index frame keyed (band, bh), arrivals frame)."""
+    tests/test_llmops.py pins row-for-row equality): returns
+    (arriving documents, capped index frame keyed (band, bh), arrivals'
+    band frame)."""
     d, banded = _banded_docs(spark, sf_dir)
-    wcap = W.partitionBy("band", "bh").orderBy("doc_id")
-    idx = (
-        banded.filter(F.col("doc_id") % 2 == 0)
-        .withColumn("rn", F.row_number().over(wcap))
-        .filter(F.col("rn") <= 50)
-        .select(F.col("doc_id").alias("old_id"), F.col("s").alias("so"), "band", "bh")
+    idx = _bucket_cap(banded.filter(F.col("doc_id") % 2 == 0)).select(
+        F.col("doc_id").alias("old_id"), F.col("s").alias("so"), "band", "bh"
     )
     inc = banded.filter(F.col("doc_id") % 2 == 1).select(
         F.col("doc_id").alias("new_id"), F.col("s").alias("si"), "band", "bh"
     )
-    return d, idx, inc
+    return d.filter(F.col("doc_id") % 2 == 1), idx, inc
 
 
-def _inc_verdict_rollup(d: DataFrame, cand: DataFrame) -> DataFrame:
-    """Shared exact-verify + per-arrival rollup for the incremental-dedup
-    twins (see _inc_banded_frames)."""
+def _inc_verdict_rollup(arrivals: DataFrame, cand: DataFrame, *extra: Column) -> DataFrame:
+    """Exact-verify + per-arrival rollup shared by every band-index probe:
+    each document of ``arrivals`` with its candidate count, verified-dup
+    count, best exact Jaccard and dup flag over its (new_id, old_id, si,
+    so) candidate pairs ``cand``, plus any ``extra`` aggregates over the
+    verified pairs."""
     inter = F.size(F.array_intersect("si", "so"))
     union = F.size(F.array_union("si", "so"))
     ver = cand.select(
         "new_id",
+        "old_id",
         F.when(inter * 2 >= union, 1).otherwise(0).alias("dup"),
         F.round(inter * F.lit(1.0) / union, 6).alias("j"),
     )
-    arrivals = d.filter(F.col("doc_id") % 2 == 1).select(
-        F.col("doc_id").alias("new_id")
-    )
-    return arrivals.join(ver, "new_id", "left").groupBy("new_id").agg(
-        F.count("j").cast("bigint").alias("n_candidates"),
-        F.coalesce(F.sum("dup"), F.lit(0)).cast("bigint").alias("n_dups"),
-        F.coalesce(F.max("j"), F.lit(0.0)).alias("best_jaccard"),
-        (F.coalesce(F.sum("dup"), F.lit(0)) > 0).alias("is_dup"),
+    return (
+        arrivals.select(F.col("doc_id").alias("new_id"))
+        .join(ver, "new_id", "left")
+        .groupBy("new_id")
+        .agg(
+            F.count("j").cast("bigint").alias("n_candidates"),
+            F.coalesce(F.sum("dup"), F.lit(0)).cast("bigint").alias("n_dups"),
+            F.coalesce(F.max("j"), F.lit(0.0)).alias("best_jaccard"),
+            (F.coalesce(F.sum("dup"), F.lit(0)) > 0).alias("is_dup"),
+            *extra,
+        )
     )
 
 
@@ -4590,7 +4608,7 @@ def llmops_minhash_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     in-row, and probes with ONE equi-join on the band key in which the
     INDEX SIDE NEEDS NO EXCHANGE — the bucketed layout IS its shuffle, so
     at 100 TB the daily probe moves only the arrivals
-    (tests/test_r10_invariants.py::
+    (tests/test_llmops.py::
     test_minhash_index_probe_has_no_index_side_exchange pins the plan
     under disabled broadcast). Semantics are IDENTICAL to the in-job
     variant — same oracle, same hash — so the round-trip also attests
@@ -4601,35 +4619,20 @@ def llmops_minhash_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFram
     concatenation collides never). Non-vacuity is the twin's: 250
     arrivals at sf0.01 → 14 banded candidates, 12 verify ≥ 0.5, 2
     rejected — every output column multi-valued."""
-    import os
-
-    from batch_public_spark.sources.bucketing import read_bucketed, write_bucketed
-
-    d, idx, inc = _inc_banded_frames(spark, sf_dir)
-    bkey = F.concat_ws(":", F.col("band").cast("string"), "bh").alias("bkey")
+    arrivals, idx, inc = _inc_banded_frames(spark, sf_dir)
 
     # --- job 1: build + persist the bucketed band index ---
-    root = scratch_dir(spark, sf_dir, "mh_index")
-    tag = os.path.basename(root).replace(".", "_")
-    tbl = f"bps_mh_band_index_{tag}"
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-    write_bucketed(
-        idx.select(bkey, "old_id", "so"),
-        tbl,
-        key="bkey",
-        buckets=8,
-        path=os.path.join(root, "idx"),
-    )
+    root, (tbl,) = _index_tables(spark, sf_dir, "mh_index", "bps_mh_band_index")
+    _persist_index(idx.select(_bkey(), "old_id", "so"), tbl, os.path.join(root, "idx"))
 
     # --- job 2: probe-only pass over the arrivals ---
-    idx_r = read_bucketed(spark, tbl)
     cand = (
-        inc.select(bkey, "new_id", "si")
-        .join(idx_r, "bkey")
+        inc.select(_bkey(), "new_id", "si")
+        .join(read_bucketed(spark, tbl), "bkey")
         .select("new_id", "old_id", "si", "so")
         .distinct()
     )
-    return _inc_verdict_rollup(d, cand)
+    return _inc_verdict_rollup(arrivals, cand)
 
 
 _MERGE_ORACLE = f"""
@@ -4702,7 +4705,7 @@ def llmops_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fixture: at sf0.01 the day-3 probe finds candidates from both
     generations (n_cand_day2 > 0 rows exist — pinned in
-    tests/test_r11_invariants.py alongside the bucketed-layout plan pin
+    tests/test_llmops.py alongside the bucketed-layout plan pin
     and a v1-vs-v2 probe difference check).
 
     Spark-first/100 TB: the daily cost is (a) banding the arrivals, (b)
@@ -4711,33 +4714,21 @@ def llmops_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     never re-shingled, re-signed, or re-shuffled; rotation preserves the
     bucket spec (8 on bkey) so consumers never repartition across index
     generations."""
-    import os
-
-    from batch_public_spark.sources.bucketing import read_bucketed, write_bucketed
-
     d, banded = _banded_docs(spark, sf_dir)
-    bkey = F.concat_ws(":", F.col("band").cast("string"), "bh").alias("bkey")
     gen = F.col("doc_id") % 3
-
-    root = scratch_dir(spark, sf_dir, "mh_index_merge")
-    tag = os.path.basename(root).replace(".", "_")
-    t1, t2 = f"bps_mh_idx_v1_{tag}", f"bps_mh_idx_v2_{tag}"
-    for tb in (t1, t2):
-        spark.sql(f"DROP TABLE IF EXISTS {tb}")
+    root, (t1, t2) = _index_tables(
+        spark, sf_dir, "mh_index_merge", "bps_mh_idx_v1", "bps_mh_idx_v2"
+    )
 
     # --- day 1: build + persist index v1 (same shape as the roundtrip) ---
-    wcap = W.partitionBy("band", "bh").orderBy("doc_id")
-    idx1 = (
-        banded.filter(gen == 0)
-        .withColumn("rn", F.row_number().over(wcap))
-        .filter(F.col("rn") <= 50)
-        .select(bkey, F.col("doc_id").alias("old_id"), F.col("s").alias("so"))
+    idx1 = _bucket_cap(banded.filter(gen == 0)).select(
+        _bkey(), F.col("doc_id").alias("old_id"), F.col("s").alias("so")
     )
-    write_bucketed(idx1, t1, key="bkey", buckets=8, path=os.path.join(root, "v1"))
+    _persist_index(idx1, t1, os.path.join(root, "v1"))
 
     # --- day 2: merge job — fold arrivals into the persisted index ---
     day2 = banded.filter(gen == 1).select(
-        bkey, F.col("doc_id").alias("old_id"), F.col("s").alias("so")
+        _bkey(), F.col("doc_id").alias("old_id"), F.col("s").alias("so")
     )
     unioned = read_bucketed(spark, t1).unionByName(day2)
     wmerge = W.partitionBy("bkey").orderBy(F.col("old_id") % 3, F.col("old_id"))
@@ -4746,38 +4737,22 @@ def llmops_minhash_index_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn") <= 50)
         .drop("rn")
     )
-    write_bucketed(merged, t2, key="bkey", buckets=8, path=os.path.join(root, "v2"))
+    _persist_index(merged, t2, os.path.join(root, "v2"))
 
     # --- day 3: probe-only pass against the merged index ---
     inc = banded.filter(gen == 2).select(
-        bkey, F.col("doc_id").alias("new_id"), F.col("s").alias("si")
+        _bkey(), F.col("doc_id").alias("new_id"), F.col("s").alias("si")
     )
     cand = (
         inc.join(read_bucketed(spark, t2), "bkey")
         .select("new_id", "old_id", "si", "so")
         .distinct()
     )
-    inter = F.size(F.array_intersect("si", "so"))
-    union = F.size(F.array_union("si", "so"))
-    ver = cand.select(
-        "new_id",
-        F.when(inter * 2 >= union, 1).otherwise(0).alias("dup"),
-        F.round(inter * F.lit(1.0) / union, 6).alias("j"),
-        F.when(F.col("old_id") % 3 == 1, 1).otherwise(0).alias("from_day2"),
-    )
-    arrivals = d.filter(gen == 2).select(F.col("doc_id").alias("new_id"))
-    return (
-        arrivals.join(ver, "new_id", "left")
-        .groupBy("new_id")
-        .agg(
-            F.count("j").cast("bigint").alias("n_candidates"),
-            F.coalesce(F.sum("dup"), F.lit(0)).cast("bigint").alias("n_dups"),
-            F.coalesce(F.max("j"), F.lit(0.0)).alias("best_jaccard"),
-            (F.coalesce(F.sum("dup"), F.lit(0)) > 0).alias("is_dup"),
-            F.coalesce(F.sum("from_day2"), F.lit(0))
-            .cast("bigint")
-            .alias("n_cand_day2"),
-        )
+    from_day2 = F.when(F.col("old_id") % 3 == 1, 1).otherwise(0)
+    return _inc_verdict_rollup(
+        d.filter(gen == 2),
+        cand,
+        F.coalesce(F.sum(from_day2), F.lit(0)).cast("bigint").alias("n_cand_day2"),
     )
 
 
@@ -5728,75 +5703,102 @@ def llmops_minhash_index_expire(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_candidates/best_jaccard for every arrival with a day-1 neighbor
     and hash-mismatch. The v2-vs-v3 probe DELTA — lost candidates are
     exactly the gen-0 ones, and at least one arrival really loses one —
-    is pinned engine-side in tests/test_r11_invariants.py.
+    is pinned engine-side in tests/test_llmops.py.
 
     Spark-first/100 TB: expiry costs ONE bucket-aligned scan + filter +
     re-bucket write (no shuffle beyond the write's own bucketing, no
     re-shingling, no probe-side change); retention by generation column
     beats per-entry TTL scans because the filter is a min/max-prunable
     predicate on the stored column."""
-    import os
-
-    from batch_public_spark.sources.bucketing import read_bucketed, write_bucketed
-
     d, banded = _banded_docs(spark, sf_dir)
-    bkey = F.concat_ws(":", F.col("band").cast("string"), "bh").alias("bkey")
     gen = F.col("doc_id") % 3
-
-    root = scratch_dir(spark, sf_dir, "mh_index_expire")
-    tag = os.path.basename(root).replace(".", "_")
-    t2, t3 = f"bps_mh_exp_v2_{tag}", f"bps_mh_exp_v3_{tag}"
-    for tb in (t2, t3):
-        spark.sql(f"DROP TABLE IF EXISTS {tb}")
+    root, (t2, t3) = _index_tables(
+        spark, sf_dir, "mh_index_expire", "bps_mh_exp_v2", "bps_mh_exp_v3"
+    )
 
     # --- reconstruct + persist v2 exactly as the merge step writes it ---
-    wcap = W.partitionBy("band", "bh").orderBy("doc_id")
-    idx1 = (
-        banded.filter(gen == 0)
-        .withColumn("rn", F.row_number().over(wcap))
-        .filter(F.col("rn") <= 50)
-        .select("band", "bh", "doc_id", "s")
-    )
+    idx1 = _bucket_cap(banded.filter(gen == 0)).select("band", "bh", "doc_id", "s")
     day2 = banded.filter(gen == 1).select("band", "bh", "doc_id", "s")
     wmerge = W.partitionBy("band", "bh").orderBy(F.col("doc_id") % 3, F.col("doc_id"))
     v2 = (
         idx1.unionByName(day2)
         .withColumn("rn", F.row_number().over(wmerge))
         .filter(F.col("rn") <= 50)
-        .select(bkey, F.col("doc_id").alias("old_id"), F.col("s").alias("so"))
+        .select(_bkey(), F.col("doc_id").alias("old_id"), F.col("s").alias("so"))
     )
-    write_bucketed(v2, t2, key="bkey", buckets=8, path=os.path.join(root, "v2"))
+    _persist_index(v2, t2, os.path.join(root, "v2"))
 
     # --- day 4: retention job — drop the aged generation, re-bucket ---
     v3 = read_bucketed(spark, t2).filter(F.col("old_id") % 3 != 0)
-    write_bucketed(v3, t3, key="bkey", buckets=8, path=os.path.join(root, "v3"))
+    _persist_index(v3, t3, os.path.join(root, "v3"))
 
     # --- probe day-3 traffic against the expired index ---
     inc = banded.filter(gen == 2).select(
-        bkey, F.col("doc_id").alias("new_id"), F.col("s").alias("si")
+        _bkey(), F.col("doc_id").alias("new_id"), F.col("s").alias("si")
     )
     cand = (
         inc.join(read_bucketed(spark, t3), "bkey")
         .select("new_id", "old_id", "si", "so")
         .distinct()
     )
-    inter = F.size(F.array_intersect("si", "so"))
-    union = F.size(F.array_union("si", "so"))
-    ver = cand.select(
-        "new_id",
-        F.when(inter * 2 >= union, 1).otherwise(0).alias("dup"),
-        F.round(inter * F.lit(1.0) / union, 6).alias("j"),
+    return _inc_verdict_rollup(d.filter(gen == 2), cand)
+
+
+def _bigram_lm_scores(
+    spark: SparkSession,
+    sf_dir: str,
+    log_probs: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """Per-document bigram count, cross-entropy, perplexity and the
+    mean + 1 sd flag under a word-bigram LM, shared by the add-k and
+    Kneser-Ney gates. They differ only in ``log_probs(pc, tk)``, which
+    returns the (w1, w2, lp) table from the bigram type table ``pc`` (w1,
+    w2, c_ab) and the lowercased token frame ``tk`` (doc_id, toks).
+
+    ``pc`` is cut once: it feeds every LM aggregation and the lm join, and
+    without the cut the tokenize + bigram-explode + count subtree re-inlines
+    into each (r15 measured 8 and 10 parquet scans in the executed plans).
+    It is the REDUCED type table (bounded by observed vocab², orders below
+    the bigram stream), so the pinned blocks stay small. The raw stream
+    (bg) is deliberately NOT cut: it re-streams once for the per-doc
+    scoring join."""
+    d = t(spark, sf_dir, "documents")
+    tk = d.select(
+        "doc_id", F.transform(tokens(F.col("text")), F.lower).alias("toks")
     )
-    arrivals = d.filter(gen == 2).select(F.col("doc_id").alias("new_id"))
-    return (
-        arrivals.join(ver, "new_id", "left")
-        .groupBy("new_id")
+    bg = tk.select("doc_id", F.explode(bigrams(F.col("toks"))).alias("p")).select(
+        "doc_id", "p.w1", "p.w2"
+    )
+    pc = (
+        bg.groupBy("w1", "w2")
+        .agg(F.count("*").cast("bigint").alias("c_ab"))
+        .localCheckpoint(eager=False)
+    )
+    doc = (
+        bg.join(log_probs(pc, tk), ["w1", "w2"])
+        .groupBy("doc_id")
         .agg(
-            F.count("j").cast("bigint").alias("n_candidates"),
-            F.coalesce(F.sum("dup"), F.lit(0)).cast("bigint").alias("n_dups"),
-            F.coalesce(F.max("j"), F.lit(0.0)).alias("best_jaccard"),
-            (F.coalesce(F.sum("dup"), F.lit(0)) > 0).alias("is_dup"),
+            F.count("*").cast("bigint").alias("n_bigrams"),
+            (F.sum("lp").cast("double") / F.count("*")).alias("ce"),
         )
+    )
+    ce6 = F.round(F.col("ce"), 6).cast("decimal(18,6)")
+    mom = doc.agg(
+        (F.sum(ce6).cast("double") / F.count("*")).alias("m"),
+        F.sqrt(
+            F.try_divide(
+                F.sum(ce6 * ce6).cast("double")
+                - F.sum(ce6).cast("double") * F.sum(ce6).cast("double") / F.count("*"),
+                F.count("*") - 1,
+            )
+        ).alias("sd"),
+    )
+    return doc.crossJoin(F.broadcast(mom)).select(
+        "doc_id",
+        "n_bigrams",
+        F.round("ce", 6).alias("cross_entropy"),
+        F.round(F.exp("ce"), 6).alias("perplexity"),
+        (F.col("ce") > F.col("m") + F.col("sd")).alias("flagged"),
     )
 
 
@@ -5884,81 +5886,31 @@ def llmops_ngram_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (AQE skew-split territory, the llmops_pmi_collocations note), one
     per-doc aggregation, one 1-row moment aggregate broadcast back.
     Nothing exceeds the TF-IDF/BM25 family's footprint."""
-    d = t(spark, sf_dir, "documents")
-    tk = d.select(
-        "doc_id", F.transform(tokens(F.col("text")), F.lower).alias("toks")
-    )
-    bg = (
-        tk.filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "zip_with(slice(toks, 1, size(toks) - 1),"
-                    "         slice(toks, 2, size(toks) - 1),"
-                    "         (x, y) -> struct(x AS w1, y AS w2))"
+
+    def add_half(pc: DataFrame, tk: DataFrame) -> DataFrame:
+        # c(w1) from the type table by exact-integer SUM: the sum over w2
+        # of c(w1,w2) IS the bigram count of w1. The unigram vocab reads
+        # tk (a single-token doc carries no bigram, so V is NOT derivable
+        # from pc).
+        cc = pc.groupBy("w1").agg(F.sum("c_ab").cast("bigint").alias("c_a"))
+        vv = tk.select(F.explode("toks").alias("w")).agg(
+            F.countDistinct("w").cast("bigint").alias("v")
+        )
+        return (
+            pc.join(cc, "w1")
+            .crossJoin(F.broadcast(vv))
+            .select(
+                "w1",
+                "w2",
+                F.round(
+                    -F.log((F.col("c_ab") + 0.5) / (F.col("c_a") + 0.5 * F.col("v"))), 6
                 )
-            ).alias("p"),
-        )
-        .select("doc_id", "p.w1", "p.w2")
-    )
-    # r15: the bigram type table is cut once (multi-consumer discipline,
-    # scale posture in sources/tables.py) and c(w1) derived from it by
-    # exact-integer SUM — sum over w2 of c(w1,w2) IS the bigram count of
-    # w1 (the identity the KN variant already documents as "one shuffle
-    # cheaper") — instead of a second aggregation over the raw bigram
-    # stream. Before: the tokenize + explode subtree re-inlined into pc,
-    # cc AND the per-doc scoring join (8 parquet scans in the executed
-    # plan). The unigram vocab still reads tk directly (docs with a
-    # single token carry no bigram, so V is NOT derivable from pc).
-    pc = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count("*").cast("bigint").alias("c_ab"))
-        .localCheckpoint(eager=False)
-    )
-    cc = pc.groupBy("w1").agg(F.sum("c_ab").cast("bigint").alias("c_a"))
-    vv = tk.select(F.explode("toks").alias("w")).agg(
-        F.countDistinct("w").cast("bigint").alias("v")
-    )
-    lm = (
-        pc.join(cc, "w1")
-        .crossJoin(F.broadcast(vv))
-        .select(
-            "w1",
-            "w2",
-            F.round(
-                -F.log((F.col("c_ab") + 0.5) / (F.col("c_a") + 0.5 * F.col("v"))), 6
+                .cast("decimal(18,6)")
+                .alias("lp"),
             )
-            .cast("decimal(18,6)")
-            .alias("lp"),
         )
-    )
-    doc = (
-        bg.join(lm, ["w1", "w2"])
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_bigrams"),
-            (F.sum("lp").cast("double") / F.count("*")).alias("ce"),
-        )
-    )
-    ce6 = F.round(F.col("ce"), 6).cast("decimal(18,6)")
-    mom = doc.agg(
-        (F.sum(ce6).cast("double") / F.count("*")).alias("m"),
-        F.sqrt(
-            F.try_divide(
-                F.sum(ce6 * ce6).cast("double")
-                - F.sum(ce6).cast("double") * F.sum(ce6).cast("double") / F.count("*"),
-                F.count("*") - 1,
-            )
-        ).alias("sd"),
-    )
-    return doc.crossJoin(F.broadcast(mom)).select(
-        "doc_id",
-        "n_bigrams",
-        F.round("ce", 6).alias("cross_entropy"),
-        F.round(F.exp("ce"), 6).alias("perplexity"),
-        (F.col("ce") > F.col("m") + F.col("sd")).alias("flagged"),
-    )
+
+    return _bigram_lm_scores(spark, sf_dir, add_half)
 
 
 @query(
@@ -6035,7 +5987,7 @@ def llmops_kn_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     discounted term positive without the max(·,0) clamp. Per-document
     cross-entropy / perplexity / mean+1sd flagging are shared with the
     add-k twin so the two gates are directly comparable; the KN ≤ add-k
-    ordering on the corpus is pinned in tests/test_r14_invariants.py.
+    ordering on the corpus is pinned in tests/test_llmops.py.
 
     Parity discipline (the add-k twin's, verbatim): log-probs are
     computed ONCE per distinct bigram TYPE from exact-integer ratios —
@@ -6045,97 +5997,44 @@ def llmops_kn_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-6 exact DECIMAL, so per-doc sums cannot drift with summation
     order.
 
-    Scale shape: identical to the add-k twin EXCEPT one shuffle
-    cheaper — c(w1) and N1+(w1,·) both come from ONE re-aggregation of
-    the (already aggregated, much smaller) bigram-type table rather
-    than a second pass over the raw bigram stream; N1+(·,w2) is a
-    second type-table aggregation; T a broadcast scalar. The per-doc
-    scoring join is the same Zipf-headed AQE-skew-split shape."""
-    d = t(spark, sf_dir, "documents")
-    tk = d.select(
-        "doc_id", F.transform(tokens(F.col("text")), F.lower).alias("toks")
-    )
-    bg = (
-        tk.filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "zip_with(slice(toks, 1, size(toks) - 1),"
-                    "         slice(toks, 2, size(toks) - 1),"
-                    "         (x, y) -> struct(x AS w1, y AS w2))"
+    Scale shape: the add-k twin's (both run _bigram_lm_scores) — c(w1)
+    and N1+(w1,·) both come from ONE re-aggregation of the (already
+    aggregated, much smaller) bigram-type table, as add-k's c(w1) does;
+    N1+(·,w2) is a second type-table aggregation and T a broadcast
+    scalar, where add-k instead counts its vocab over the token stream.
+    The per-doc scoring join is the same Zipf-headed AQE-skew-split
+    shape."""
+
+    def kneser_ney(pc: DataFrame, tk: DataFrame) -> DataFrame:
+        ctx = pc.groupBy("w1").agg(
+            F.sum("c_ab").cast("bigint").alias("c_a"),
+            F.count("*").cast("bigint").alias("nf"),
+        )
+        cont = pc.groupBy("w2").agg(F.count("*").cast("bigint").alias("np"))
+        tt = pc.agg(F.count("*").cast("bigint").alias("t"))
+        return (
+            pc.join(ctx, "w1")
+            .join(cont, "w2")
+            .crossJoin(F.broadcast(tt))
+            .select(
+                "w1",
+                "w2",
+                F.round(
+                    -F.log(
+                        ((F.col("c_ab") - 0.75) / F.col("c_a"))
+                        + (
+                            (0.75 * F.col("nf") * F.col("np"))
+                            / (F.col("c_a") * F.col("t"))
+                        )
+                    ),
+                    6,
                 )
-            ).alias("p"),
-        )
-        .select("doc_id", "p.w1", "p.w2")
-    )
-    # The bigram TYPE table feeds FOUR consumers (ctx, cont, tt, and the
-    # lm join) — without a cut the tokenize + bigram-explode + count
-    # subtree re-inlines into each (r15 measured: 10 parquet scans in the
-    # executed plan). localCheckpoint cut per the multi-consumer
-    # discipline (scale posture: sources/tables.py): pc is the REDUCED
-    # type table (bounded by observed vocab², orders below the bigram
-    # stream), so the pinned blocks stay small; the raw stream (bg) is
-    # deliberately NOT cut — it re-streams once for the per-doc scoring
-    # join exactly as the add-k twin does.
-    pc = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count("*").cast("bigint").alias("c_ab"))
-        .localCheckpoint(eager=False)
-    )
-    ctx = pc.groupBy("w1").agg(
-        F.sum("c_ab").cast("bigint").alias("c_a"),
-        F.count("*").cast("bigint").alias("nf"),
-    )
-    cont = pc.groupBy("w2").agg(F.count("*").cast("bigint").alias("np"))
-    tt = pc.agg(F.count("*").cast("bigint").alias("t"))
-    lm = (
-        pc.join(ctx, "w1")
-        .join(cont, "w2")
-        .crossJoin(F.broadcast(tt))
-        .select(
-            "w1",
-            "w2",
-            F.round(
-                -F.log(
-                    ((F.col("c_ab") - 0.75) / F.col("c_a"))
-                    + (
-                        (0.75 * F.col("nf") * F.col("np"))
-                        / (F.col("c_a") * F.col("t"))
-                    )
-                ),
-                6,
+                .cast("decimal(18,6)")
+                .alias("lp"),
             )
-            .cast("decimal(18,6)")
-            .alias("lp"),
         )
-    )
-    doc = (
-        bg.join(lm, ["w1", "w2"])
-        .groupBy("doc_id")
-        .agg(
-            F.count("*").cast("bigint").alias("n_bigrams"),
-            (F.sum("lp").cast("double") / F.count("*")).alias("ce"),
-        )
-    )
-    ce6 = F.round(F.col("ce"), 6).cast("decimal(18,6)")
-    mom = doc.agg(
-        (F.sum(ce6).cast("double") / F.count("*")).alias("m"),
-        F.sqrt(
-            F.try_divide(
-                F.sum(ce6 * ce6).cast("double")
-                - F.sum(ce6).cast("double") * F.sum(ce6).cast("double") / F.count("*"),
-                F.count("*") - 1,
-            )
-        ).alias("sd"),
-    )
-    return doc.crossJoin(F.broadcast(mom)).select(
-        "doc_id",
-        "n_bigrams",
-        F.round("ce", 6).alias("cross_entropy"),
-        F.round(F.exp("ce"), 6).alias("perplexity"),
-        (F.col("ce") > F.col("m") + F.col("sd")).alias("flagged"),
-    )
+
+    return _bigram_lm_scores(spark, sf_dir, kneser_ney)
 
 
 # Heaps-law checkpoints: doc_id prefixes at which cumulative trigram

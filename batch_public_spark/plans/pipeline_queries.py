@@ -32,10 +32,6 @@ from batch_public_spark.sources.tables import inline_rows
 from batch_public_spark.sources.tables import load_table as t
 
 
-def _utc(spark: SparkSession) -> None:
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-
-
 # ---------------------------------------------------------------------------
 # F2 — timestamp normalization cascade
 # ---------------------------------------------------------------------------
@@ -186,14 +182,14 @@ def pipeline_dedup_first_wins(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pipeline_watermark_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F3: drop rows at-or-below the persisted high-water mark (strictly
     greater survives, reference main.py:219). Watermark pinned to
-    2024-01-15T00:00:00Z epoch."""
-    _utc(spark)
+    2024-01-15T00:00:00Z epoch. unix_timestamp and unix_micros of a
+    TIMESTAMP are epoch values, whatever the session time zone."""
     e = t(spark, sf_dir, "events").withColumn("_ts_s", F.unix_timestamp("ts"))
     kept = incremental_filter(e, "_ts_s", 1705276800)
     return kept.groupBy("event_type").agg(
         F.count("*").alias("n"),
-        # load_table normalizes ts to TimestampType under a pinned-UTC
-        # session zone, whatever the file's physical type.
+        # load_table normalizes ts to TimestampType whatever the file's
+        # physical type.
         F.max(F.unix_micros(F.col("ts"))).alias("max_ts_us"),
     )
 

@@ -1424,12 +1424,12 @@ def events_dow_hour_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Portability: ISO weekday numbering only (Monday=1 … Sunday=7 — both
     engines' default ``dayofweek`` start Sunday at different ordinals,
     a classic cross-engine trap) and a zero-padded hour parsed as an
-    integer. hour()/weekday() read LTZ timestamps through the session
-    timezone, so it is pinned to UTC (the oracle reads naive UTC wall
-    times) — same defensive pin as pipeline_queries._utc. One hash
-    aggregation; the total broadcasts back."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    e = t(spark, sf_dir, "events")
+    integer. hour()/weekday() of an LTZ timestamp read it in the session
+    time zone, so both read the UTC wall time ``convert_timezone('UTC',
+    ts)`` instead (the oracle reads naive UTC wall times), and the builder
+    leaves the session zone alone. One hash aggregation; the total
+    broadcasts back."""
+    e = t(spark, sf_dir, "events").select(F.expr("convert_timezone('UTC', ts)").alias("ts"))
     cells = e.groupBy(
         (F.expr("weekday(ts)") + 1).cast("bigint").alias("dow"),
         F.hour("ts").cast("bigint").alias("hr"),

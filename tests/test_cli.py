@@ -112,6 +112,21 @@ def test_agent_api_roundtrip(spark, tmp_path):
     assert entry["final_status"] == "completed"
 
 
+def test_get_spark_returns_the_active_session_unchanged(spark):
+    """A second get_spark() hands back the running session without
+    rewriting its conf (the CLI and the agent façade both call it)."""
+    from batch_public_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    try:
+        assert get_spark().conf.get(key) == "7"
+        assert spark.conf.get(key) == "7"
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_no_tables_selected_errors(tmp_path, capsys):
     rc = main(["--config", str(tmp_path / "missing.json"), "--data-dir", SF])
     assert rc == 2

@@ -67,6 +67,21 @@ def test_normalize_ts_string_cascade(spark, zone):
         assert got[i] == expected, f"case {v!r}: got {got[i]}, want {expected}"
 
 
+@pytest.mark.parametrize("name", ["pipeline_watermark_filter", "events_dow_hour_profile"])
+def test_builder_keeps_the_session_time_zone(spark, ddb, name):
+    """Under a non-UTC session the builder's rows still match the oracle,
+    and the builder leaves the caller's session time zone as it was."""
+    from batch_public_spark.plans import QUERIES
+    from tests.conftest import SF_DIR, assert_parity
+
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    try:
+        assert_parity(QUERIES[name].fn(spark, SF_DIR), ddb.sql(QUERIES[name].oracle), name)
+        assert spark.conf.get("spark.sql.session.timeZone") == "America/Los_Angeles"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
 def test_normalize_ts_numeric_types(spark):
     df = spark.createDataFrame(
         [Row(i=1715000000, f=1715000123456.0, d=None)],

@@ -13,6 +13,9 @@ for the cases where the GLOBAL operator itself is the query's subject.
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 from pyspark.sql import functions as F
 
 from batch_public_spark.plans import QUERIES
@@ -59,12 +62,13 @@ ALLOWLIST: set[tuple[str, str]] = {
     # frame is a lineage-less leaf, so a hint over one is flagged unless
     # allowlisted here with its structural bound stated. ---
     # Checkpoint-cut frames with a structural bound upstream of the cut:
-    # the near-dup anchor set is `doc_id < 150`-bounded before its
-    # localCheckpoint (docstring documents the cap; the hint prevents a
-    # CartesianProduct on the <-join).
+    # the near-dup anchor set of `llmops_queries._dedup_waves` is
+    # `doc_id < 150`-bounded before its localCheckpoint (docstring
+    # documents the cap; the hint prevents a CartesianProduct on the
+    # <-join).
     ("llmops_dedup_cascade_e2e", "unbounded-broadcast"),
     # Same near-dup anchor, same bound, same reason — the corpus build
-    # composes the cascade verbatim (r13): `doc_id < 150` upstream of the
+    # runs the same `_dedup_waves` helper: `doc_id < 150` upstream of the
     # checkpoint cut; the hint prevents a CartesianProduct on the <-join.
     ("llmops_corpus_build_e2e", "unbounded-broadcast"),
     # MMR greedy picks are LIMIT-1 frames checkpointed between rounds
@@ -100,6 +104,40 @@ WARN_ALLOWLIST: set[tuple[str, str]] = {
     ("llmops_cdc_chunking", "distinct-agg-expand"),
     ("llmops_dataset_card", "distinct-agg-expand"),
 }
+
+
+# (module, function) sites under plans/ allowed to write session conf.
+CONF_WRITE_ALLOWLIST: set[tuple[str, str]] = {
+    # The scripting toggle: the battery needs spark.sql.scripting.enabled
+    # for its one spark.sql() call and restores the prior value (or unsets
+    # it) in a finally, so the caller's session is left as it was.
+    ("sql_surface.py", "sql_scripting_battery"),
+}
+
+
+def test_builders_do_not_write_session_conf():
+    """A builder leaves the caller's session conf alone: no module under
+    plans/ calls ``<x>.conf.set`` or ``<x>.conf.unset`` outside the
+    allowlist. A conf write in a builder changes every later query in the
+    session (a pinned time zone, for one)."""
+    plans = Path(__file__).resolve().parent.parent / "batch_public_spark" / "plans"
+    modules = sorted(plans.glob("*.py"))
+    assert len(modules) > 5, plans
+    found = []
+    for path in modules:
+        for top in ast.parse(path.read_text()).body:
+            owner = getattr(top, "name", "<module>")
+            for node in ast.walk(top):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in ("set", "unset")
+                    and isinstance(node.func.value, ast.Attribute)
+                    and node.func.value.attr == "conf"
+                    and (path.name, owner) not in CONF_WRITE_ALLOWLIST
+                ):
+                    found.append((path.name, owner, node.lineno))
+    assert not found, f"session conf written while building a plan: {sorted(set(found))}"
 
 
 def test_registry_plans_are_scale_clean(spark):

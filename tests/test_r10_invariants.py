@@ -40,24 +40,6 @@ def test_knn_audit_sample_is_fixed_count(spark):
     assert r.n_queries == 100, r
 
 
-def test_minhash_index_probe_has_no_index_side_exchange(spark):
-    """With broadcast disabled (forcing the at-scale SMJ path), the probe
-    join must read the persisted band index bucket-aligned: exactly ONE
-    side (the arrivals) exchanges on the band key — the index side's
-    bucketed layout IS its shuffle."""
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        p = _executed(spark, "llmops_minhash_index_roundtrip")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "SortMergeJoin" in p, p[:2000]
-    assert "SelectedBucketsCount" in p or "Bucketed: true" in p, p[:2000]
-    # one bkey exchange (probe side); a second would mean the index
-    # re-shuffled and the persisted bucketing bought nothing
-    assert len(re.findall(r"hashpartitioning\(bkey", p)) == 1, p
-
-
 def test_quarantine_bitmap_partitions_the_table(spark):
     """The bitmap groups must partition orders exactly: counts sum to
     |orders|, shares sum to 1, every bitmap value is a valid 4-rule
@@ -72,18 +54,6 @@ def test_quarantine_bitmap_partitions_the_table(spark):
         assert 0 <= r.rule_bitmap <= 15, r
         assert r.quarantined == (r.rule_bitmap != 0), r
         assert r.n_rows >= 1, r
-
-
-def test_minhash_roundtrip_equals_in_job_twin(spark):
-    """The persisted-index probe must be semantically IDENTICAL to the
-    in-job incremental variant — same candidates, same verdicts, row for
-    row (the two queries share one oracle; this pins the equivalence
-    engine-side without DuckDB in the loop)."""
-    a = QUERIES["llmops_minhash_incremental_dedup"].fn(spark, SF_DIR)
-    b = QUERIES["llmops_minhash_index_roundtrip"].fn(spark, SF_DIR)
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb
 
 
 def test_url_canonical_collapses_cosmetic_variants_only(spark):

@@ -83,56 +83,6 @@ def test_span_removal_splice_is_value_correct(spark):
         assert top.rewritten_md5 in candidates
 
 
-def _executed(spark, name: str) -> str:
-    df = QUERIES[name].fn(spark, SF_DIR)
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
-def test_index_merge_probe_reuses_bucketed_layout(spark):
-    """Day-3's probe of the MERGED index must look exactly like day-2's
-    probe of the original: under disabled broadcast, the index side reads
-    bucket-aligned (no exchange) and only the arrivals shuffle on the
-    band key — rotation preserved the layout. Both index generations must
-    be catalogued with the same bucket spec (8 buckets on bkey)."""
-    import re
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        p = _executed(spark, "llmops_minhash_index_merge")
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "SortMergeJoin" in p, p[:2000]
-    assert "SelectedBucketsCount" in p or "Bucketed: true" in p, p[:2000]
-    assert len(re.findall(r"hashpartitioning\(bkey", p)) == 1, p
-    tables = [t.name for t in spark.catalog.listTables() if "bps_mh_idx_" in t.name]
-    assert any("_v1_" in t for t in tables) and any("_v2_" in t for t in tables)
-    for t in tables:
-        desc = {r.col_name: r.data_type for r in spark.sql(f"DESCRIBE TABLE EXTENDED {t}").collect()}
-        assert desc.get("Num Buckets") == "8", (t, desc.get("Num Buckets"))
-        assert desc.get("Bucket Columns") == "[`bkey`]", (t, desc.get("Bucket Columns"))
-
-
-def test_index_merge_really_folds_day2(spark):
-    """The merge must be observable: some day-3 arrival's candidates come
-    from DAY-2 index entries (a stale-v1 probe would zero n_cand_day2
-    everywhere), day-1 entries still serve probes too (the merge did not
-    evict the old generation at fixture load), and the verdict columns
-    reconcile per row."""
-    rows = QUERIES["llmops_minhash_index_merge"].fn(spark, SF_DIR).collect()
-    assert rows
-    assert any(r.n_cand_day2 > 0 for r in rows), "merge contributed nothing"
-    assert any(r.n_candidates > r.n_cand_day2 for r in rows), "no day-1 hits"
-    for r in rows:
-        assert 0 <= r.n_cand_day2 <= r.n_candidates, r
-        assert r.n_dups <= r.n_candidates, r
-        assert r.is_dup == (r.n_dups > 0), r
-        if r.n_candidates == 0:
-            assert r.best_jaccard == 0.0, r
-
-
 def test_dehinted_tpch_dims_still_broadcast_under_aqe(spark):
     """Dropping the forced customer/supplier/part hints (r10 verdict #2)
     must cost nothing at fixture SF: after execution, AQE's FINAL plan
@@ -385,32 +335,6 @@ def test_aqe_skew_join_splits_hot_partition(spark):
     assert "isFinalPlan=true" in p, p[:500]
     assert "skew=true" in p, p[:2000]
     assert "Arguments: skewed" in p, p[:2000]
-
-
-def test_index_expire_delta_is_exactly_the_aged_generation(spark):
-    """Expiry semantics pinned against the merge step's own output: for
-    every day-3 arrival, candidates lost between the v2 probe (the merge
-    query) and the v3 probe (the expire query) are exactly the day-1-
-    generation candidates (n_candidates_v3 == n_candidates_v2 −
-    n_cand_gen0), the day-2 candidates all survive, and at least one
-    arrival really loses a candidate (the retention filter is
-    non-vacuous at fixture SF). Gen-2 entries are never indexed, so v2
-    candidates split exactly into day-1 (n_candidates − n_cand_day2)
-    and day-2 (n_cand_day2) generations."""
-    v2 = {r.new_id: r for r in QUERIES["llmops_minhash_index_merge"].fn(spark, SF_DIR).collect()}
-    v3 = {r.new_id: r for r in QUERIES["llmops_minhash_index_expire"].fn(spark, SF_DIR).collect()}
-    assert set(v2) == set(v3)
-    lost_any = False
-    for nid, r2 in v2.items():
-        r3 = v3[nid]
-        n_gen0 = r2.n_candidates - r2.n_cand_day2
-        assert r3.n_candidates == r2.n_cand_day2, (nid, r2, r3)
-        if n_gen0 > 0:
-            lost_any = True
-        if r3.n_candidates > 0:
-            assert r3.best_jaccard <= r2.best_jaccard + 1e-9, (nid, r2, r3)
-        assert r3.n_dups <= r2.n_dups, (nid, r2, r3)
-    assert lost_any, "no arrival had a day-1 candidate — expiry untested"
 
 
 def test_bradley_terry_mm_structure(spark):

@@ -118,22 +118,6 @@ def test_poisson_bootstrap_ci_brackets_point(spark):
         assert 0 < r.ci_hi - r.ci_lo < r.point_mean, r
 
 
-def test_ngram_lm_perplexity_reconciles(spark):
-    """LM-score internal consistency: perplexity == exp(cross_entropy)
-    (re-derived from emitted round-6 columns, loose tolerance), every
-    ce is positive and finite, and the flag rate is a proper upper-tail
-    fraction (0 < flagged < 25% of docs for a mean+1sd cut)."""
-    import math
-
-    rows = QUERIES["llmops_ngram_lm_perplexity"].fn(spark, SF_DIR).collect()
-    assert len(rows) > 100
-    flagged = sum(1 for r in rows if r.flagged)
-    assert 0 < flagged < 0.25 * len(rows), (flagged, len(rows))
-    for r in rows:
-        assert 0.0 < r.cross_entropy < 20.0, r
-        assert abs(r.perplexity - math.exp(r.cross_entropy)) <= 1e-4 * r.perplexity, r
-
-
 def test_dp_noisy_release_mechanism_math(spark):
     """The Laplace mechanism, re-derived independently (hashlib +
     inverse CDF in plain Python) and matched against the query's emitted

@@ -10,66 +10,6 @@ from batch_public_spark.plans import QUERIES
 from tests.conftest import SF_DIR
 
 
-def test_corpus_build_funnel_telescopes_and_matches_cascade(spark):
-    """Reconciliation (verdict-r12 item #5): (a) the corpus build's first
-    three funnel rows equal llmops_dedup_cascade_e2e's output exactly —
-    the composition reuses the cascade verbatim, so any drift in keys,
-    survivor policy, or the near-dup anchor shows up here; (b) the
-    funnel telescopes: every filtering row's n_removed + n_remaining ==
-    the previous row's n_remaining (docs are never invented or silently
-    dropped between stages); (c) the unit-change rows are consistent
-    (mixture/card keep the decontaminate survivor count; pack windows
-    cover the tokens implied by card's mean at >=50% fill)."""
-    build = {
-        r.stage: r
-        for r in QUERIES["llmops_corpus_build_e2e"].fn(spark, SF_DIR).collect()
-    }
-    cascade = {
-        r.stage: r
-        for r in QUERIES["llmops_dedup_cascade_e2e"].fn(spark, SF_DIR).collect()
-    }
-    assert set(build) == {
-        "exact", "prefix", "neardup", "quality_gate",
-        "decontaminate", "mixture", "pack", "card",
-    }
-    for s in ("exact", "prefix", "neardup"):
-        assert (build[s].n_removed, build[s].n_remaining) == (
-            cascade[s].n_removed,
-            cascade[s].n_remaining,
-        ), s
-    chain = ["exact", "prefix", "neardup", "quality_gate", "decontaminate"]
-    for prev, cur in zip(chain, chain[1:]):
-        assert (
-            build[cur].n_removed + build[cur].n_remaining
-            == build[prev].n_remaining
-        ), (prev, cur)
-    n_final = build["decontaminate"].n_remaining
-    assert build["mixture"].n_remaining == n_final
-    assert build["card"].n_remaining == n_final
-    # pack: windows hold all tokens (mean * docs), each window half-full+
-    total_tokens = build["card"].metric * n_final
-    n_windows = build["pack"].n_remaining
-    assert n_windows * 512 >= total_tokens - 1e-6
-    assert 0.0 < build["pack"].metric <= 1.0
-
-
-def test_corpus_build_gate_is_subset_of_standalone_filter(spark):
-    """The gate stage can only keep documents the standalone
-    llmops_quality_filter would keep: its keep-count over the cascade
-    survivors is bounded by the standalone filter's corpus-wide keeps,
-    and its survivor mean quality is >= 0.5 (the gate threshold)."""
-    build = {
-        r.stage: r
-        for r in QUERIES["llmops_corpus_build_e2e"].fn(spark, SF_DIR).collect()
-    }
-    standalone_keeps = sum(
-        r.n_keep
-        for r in QUERIES["llmops_quality_filter"].fn(spark, SF_DIR).collect()
-    )
-    assert build["quality_gate"].n_remaining <= standalone_keeps
-    assert build["quality_gate"].metric >= 0.5
-
-
 def test_mondrian_fallback_fires_exactly_for_small_groups(spark):
     """Coverage-per-group invariant beside the marginal gate (verdict-r12
     item #6): the skewed fixture's rare groups (rare_e / rare_f, 1/16 of
@@ -315,27 +255,6 @@ def test_nb_distill_beats_marginal_agreement(spark):
     for r in rows:
         assert 0 <= r.student_keep <= r.n_docs
         assert 0 <= r.n_agree <= r.n_docs
-
-
-def test_dsir_selection_skews_toward_target(spark):
-    """DSIR directional invariants, at the fixture SF: (a) the target
-    class's importance log-weights average positive and the raw-only
-    class's negative (the hashed-ngram ratio really detects the target
-    distribution); (b) the Gumbel-race selection keeps a strictly larger
-    share of the target class; (c) WITHIN each class the selected subset
-    has a higher mean log-weight than the class at large (selection is
-    monotone in the weight, not a uniform draw)."""
-    rows = {
-        r.is_target: r
-        for r in QUERIES["llmops_dsir_selection"].fn(spark, SF_DIR).collect()
-    }
-    assert set(rows) == {True, False}
-    tgt, raw = rows[True], rows[False]
-    assert tgt.mean_logw > 0.0 > raw.mean_logw
-    assert tgt.sel_share > raw.sel_share
-    for r in (tgt, raw):
-        assert 0 < r.n_selected < r.n_docs
-        assert r.mean_logw_selected > r.mean_logw, r
 
 
 def test_t_closeness_flags_injected_skewed_group(spark, tmp_path):

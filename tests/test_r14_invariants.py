@@ -12,80 +12,6 @@ from batch_public_spark.plans import QUERIES
 from tests.conftest import SF_DIR
 
 
-def test_kneser_ney_beats_addk_on_training_corpus(spark):
-    """KN ≤ add-k cross-entropy for the bulk of the corpus (r13 verdict
-    item #4): a self-trained LM evaluated on its own training text gives
-    most probability mass back to observed bigrams, and KN's fixed 0.75
-    discount takes less mass from an observed bigram than add-0.5
-    smoothing's ``+0.5·V`` denominator flattening — so per-document
-    cross-entropy under KN should be lower for a clear majority of
-    documents, and the advantage should be at least as strong on the
-    above-median-repetition slice (repeated bigrams concentrate count
-    mass exactly where the discount is proportionally cheapest).
-    Measured on the fixture: 81% global / 85% slice at sf0.001, 79%
-    global at sf0.01 — pinned with margin at 70%/75%.
-    """
-    kn = QUERIES["llmops_kn_lm_perplexity"].fn(spark, SF_DIR).select(
-        "doc_id", F.col("cross_entropy").alias("ce_kn"),
-        F.col("n_bigrams").alias("nb_kn"),
-    )
-    ak = QUERIES["llmops_ngram_lm_perplexity"].fn(spark, SF_DIR).select(
-        "doc_id", F.col("cross_entropy").alias("ce_ak"),
-        F.col("n_bigrams").alias("nb_ak"),
-    )
-    j = kn.join(ak, "doc_id", "full").cache()
-    try:
-        # Same document universe and identical bigram streams.
-        mismatch = j.filter(
-            F.col("ce_kn").isNull()
-            | F.col("ce_ak").isNull()
-            | (F.col("nb_kn") != F.col("nb_ak"))
-        ).count()
-        assert mismatch == 0
-
-        row = j.agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("ce_kn") < F.col("ce_ak")).cast("int")).alias("lower"),
-        ).first()
-        assert row["lower"] / row["n"] >= 0.70, row
-
-        # Repetition = 1 - distinct/total bigrams per doc; above-median
-        # slice must show at least the same KN advantage.
-        from batch_public_spark.operators.textops import tokens
-
-        d = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        tk = d.select(
-            "doc_id", F.transform(tokens(F.col("text")), F.lower).alias("toks")
-        )
-        bg = (
-            tk.filter(F.size("toks") >= 2)
-            .select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        "zip_with(slice(toks, 1, size(toks) - 1),"
-                        "         slice(toks, 2, size(toks) - 1),"
-                        "         (x, y) -> struct(x AS w1, y AS w2))"
-                    )
-                ).alias("p"),
-            )
-            .select("doc_id", "p.w1", "p.w2")
-        )
-        rep = bg.groupBy("doc_id").agg(
-            (1 - F.countDistinct("w1", "w2") / F.count("*")).alias("rep")
-        )
-        jr = j.join(rep, "doc_id")
-        med = jr.approxQuantile("rep", [0.5], 0.0)[0]
-        srow = jr.filter(F.col("rep") > med).agg(
-            F.count("*").alias("n"),
-            F.sum((F.col("ce_kn") < F.col("ce_ak")).cast("int")).alias("lower"),
-        ).first()
-        assert srow["n"] > 0
-        assert srow["lower"] / srow["n"] >= 0.75, srow
-    finally:
-        j.unpersist()
-
-
 def test_cox_score_is_negated_logrank_numerator(spark):
     """Textbook identity (r13 verdict item #7): with an indicator
     covariate, the Cox partial-likelihood score at beta=0 equals the
@@ -257,58 +183,6 @@ def test_bh_fdr_discovers_injected_effect_and_is_step_up(spark, tmp_path):
             )
 
 
-def test_isotonic_calibration_matches_sequential_pav(spark):
-    """eval_isotonic_calibration computes the isotonic fit by the
-    minimax characterization (a pure nested-lambda expression); REAL
-    pool-adjacent-violators is a sequential merge loop. They are
-    provably the same function — run actual PAV in Python over the
-    query's own (n, pos) bins and require every iso_rate to match,
-    plus monotonicity and the weighted-mean-preservation property
-    (sum n_i * iso_i == sum pos_i) that any isotonic regression of
-    rates must satisfy.
-    """
-    rows = sorted(
-        QUERIES["eval_isotonic_calibration"].fn(spark, SF_DIR).collect(),
-        key=lambda r: r["bin"],
-    )
-    assert len(rows) > 1
-    # Sequential weighted PAV over (pos/n, weight n).
-    pools = []  # [sum_pos, sum_n]
-    for r in rows:
-        pools.append([r["n_pos"], r["n_docs"]])
-        while len(pools) > 1 and (
-            pools[-2][0] * pools[-1][1] >= pools[-1][0] * pools[-2][1]
-        ):  # prev mean >= cur mean -> violator, merge (exact int cross-mult)
-            b = pools.pop()
-            pools[-1][0] += b[0]
-            pools[-1][1] += b[1]
-    # Expand pools back to per-bin values.
-    expanded = []
-    i = 0
-    for sp, sn in pools:
-        # count how many original bins this pool absorbed by matching n
-        acc = 0
-        start = i
-        while acc < sn:
-            acc += rows[i]["n_docs"]
-            i += 1
-        expanded.extend([sp / sn] * (i - start))
-    assert len(expanded) == len(rows)
-    for r, v in zip(rows, expanded):
-        assert abs(float(r["iso_rate"]) - round(v, 6)) <= 1e-6, (r, v)
-    # Monotone non-decreasing in bin.
-    iso = [float(r["iso_rate"]) for r in rows]
-    assert all(a <= b + 1e-12 for a, b in zip(iso, iso[1:]))
-    # Weighted means preserved within round-6 slack per bin.
-    lhs = sum(r["n_docs"] * float(r["iso_rate"]) for r in rows)
-    rhs = sum(r["n_pos"] for r in rows)
-    assert abs(lhs - rhs) <= 1e-6 * sum(r["n_docs"] for r in rows)
-    # The fit is non-vacuous: PAV actually pooled something (the raw
-    # rates are not already monotone on this fixture).
-    raw = [r["n_pos"] / r["n_docs"] for r in rows]
-    assert any(a > b for a, b in zip(raw, raw[1:]))
-
-
 def test_nelson_aalen_dominated_by_km_log_survival(spark):
     """Textbook ordering: -ln(S_KM(t)) >= H_NA(t) at every day, because
     per churn day -ln(1 - d/n) >= d/n (strict when d > 0) and both
@@ -400,79 +274,6 @@ def test_jackknife_ratio_matches_python_recompute(spark):
     assert out["ci_lo"] <= out["theta"] <= out["ci_hi"]
     assert out["se"] > 0
     assert abs(out["bias_est"]) < 0.1 * abs(out["theta"])
-
-
-def test_platt_step_reduces_logloss_and_matches_python(spark):
-    """One Newton step of a smooth convex loss from a non-degenerate
-    start must strictly reduce the training log-loss (full step is safe
-    here: logistic loss in 2 params over hundreds of points is locally
-    well-approximated). Recompute (a1, b1) in Python from the query's
-    own (pd, y) pairs and match; then evaluate NLL at (1, 0) vs
-    (a1, b1) and require a strict decrease. Also the identity start
-    means grad_b == sum(pd) - sum(y), a direct miscalibration reading.
-    """
-    import math
-
-    out = QUERIES["eval_platt_scaling"].fn(spark, SF_DIR).first()
-    # Rebuild (pd, y) via the isotonic query's construction to stay
-    # independent of the Platt internals (same pd; 0.85 label).
-    iso_rows = QUERIES["eval_isotonic_calibration"].fn(spark, SF_DIR).collect()
-    assert out["n_docs"] == sum(r["n_docs"] for r in iso_rows)
-
-    from batch_public_spark.operators.textops import (
-        quality_score,
-        normalized_text,
-        tokens as _tokens,
-    )
-    from batch_public_spark.plans.curation_queries import _tok_weight
-    from batch_public_spark.sources.tables import load_table
-
-    d = load_table(spark, SF_DIR, "documents").withColumn(
-        "toks", _tokens(normalized_text(F.col("text")))
-    )
-    w_sum = F.expr(
-        f"aggregate(transform(toks, t -> cast({_tok_weight('t')} as bigint)), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    sig = F.lit(1.0) / (
-        F.lit(1.0)
-        + F.exp(-(F.col("w_sum").cast("double") / (F.col("n_tokens") * F.lit(410.0))))
-    )
-    rows = (
-        d.select(F.size("toks").alias("n_tokens"), w_sum.alias("w_sum"),
-                 (F.round(quality_score(F.col("text")), 6).cast("decimal(10,6)")
-                  >= 0.85).cast("int").alias("y"))
-        .select(
-            F.round(F.when(F.col("n_tokens") > 0, sig).otherwise(0.5), 6)
-            .cast("decimal(10,6)")
-            .alias("pd"),
-            "y",
-        )
-        .collect()
-    )
-    pts = [(float(r["pd"]), r["y"]) for r in rows]
-    zq = [round(math.log(p / (1 - p)), 6) for p, _ in pts]
-    sw = sum(round(p * (1 - p), 10) for p, _ in pts)
-    swz = sum(round(p * (1 - p) * z, 10) for (p, _), z in zip(pts, zq))
-    swzz = sum(round((p * (1 - p) * z) * z, 10) for (p, _), z in zip(pts, zq))
-    g0 = sum(p - y for p, y in pts)
-    g1 = sum((p - y) * z for (p, y), z in zip(pts, zq))
-    det = swzz * sw - swz * swz
-    a1 = 1.0 - (sw * g1 - swz * g0) / det
-    b1 = 0.0 - (swzz * g0 - swz * g1) / det
-    assert abs(out["slope_a"] - a1) <= 1e-4, (out["slope_a"], a1)
-    assert abs(out["intercept_b"] - b1) <= 1e-4, (out["intercept_b"], b1)
-    assert abs(out["grad_b"] - g0) <= 1e-3
-
-    def nll(a, b):
-        tot = 0.0
-        for (p, y), z in zip(pts, zq):
-            m = a * z + b
-            # log(1+e^m) stable form
-            tot += (math.log1p(math.exp(-abs(m))) + max(m, 0.0)) - y * m
-        return tot
-
-    assert nll(a1, b1) < nll(1.0, 0.0) - 1e-9, (nll(a1, b1), nll(1.0, 0.0))
 
 
 def test_substring_dedup_planted_duplicates(spark, tmp_path):

@@ -45,20 +45,6 @@ def test_burstiness_identity_and_bounds(spark):
         assert abs(r.burstiness - ident) < 1e-5, r
 
 
-def test_preference_pairs_are_disjoint_and_positive_margin(spark):
-    rows = _rows(spark, "llmops_preference_pairs")
-    assert rows, "fixture must produce pairs"
-    used: dict[str, set] = {}
-    for r in rows:
-        assert r.chosen_reward > r.rejected_reward, r
-        assert r.margin == r.chosen_reward - r.rejected_reward, r
-        s = used.setdefault(r.source, set())
-        assert r.chosen_id not in s and r.rejected_id not in s, (
-            f"doc reused within source {r.source}"
-        )
-        s.update({r.chosen_id, r.rejected_id})
-
-
 def test_code_detector_separates_both_classes_exactly(spark):
     rows = _rows(spark, "llmops_code_detect")
     inj = [r for r in rows if r.injected]
@@ -199,27 +185,6 @@ def test_entropy_chain_rule_and_bounds(spark, ddb):
             r.h_joint_nats - r.h_cond_nats,
             hprev,
         )
-
-
-def test_best_of_n_curve_mean_anchor_and_monotone(spark, ddb):
-    rows = _rows(spark, "llmops_best_of_n_curve")
-    by_src: dict[str, dict[int, float]] = {}
-    for r in rows:
-        by_src.setdefault(r.source, {})[r.n_samples] = r.expected_best_reward
-    means = dict(
-        ddb.sql("""
-          WITH d AS (SELECT doc_id, source,
-                 list_filter(string_split_regex(
-                   regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'), ' '),
-                   x -> length(x) > 0) AS toks FROM documents)
-          SELECT source, count(*) FROM d GROUP BY 1
-        """).fetchall()
-    )
-    for src, curve in by_src.items():
-        assert set(curve) == {1, 2, 4, 8}, (src, curve)
-        # E[max of 1] == group mean; curve non-decreasing in n
-        assert curve[1] <= curve[2] <= curve[4] <= curve[8] + 1e-9, (src, curve)
-        assert src in means
 
 
 def test_ess_bounds(spark):

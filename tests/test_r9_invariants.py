@@ -112,13 +112,6 @@ def test_knn_audit_counts_consistent(spark):
     assert r.max_k_occurrence >= 1
 
 
-def test_length_bias_measures_bounded(spark):
-    (r,) = _rows(spark, "llmops_response_length_bias")
-    assert 0 <= r.frac_chosen_longer <= 1
-    assert -1 <= r.corr_margin_len_delta <= 1
-    assert r.n_chosen_longer <= r.n_pairs
-
-
 def test_arrival_gap_rates_consistent(spark):
     for r in _rows(spark, "dq_arrival_gap_audit"):
         assert r.max_gap_s >= r.mean_gap_s, r
