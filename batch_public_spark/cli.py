@@ -27,6 +27,9 @@ import json
 import os
 import sys
 
+from pyspark.sql import Observation
+from pyspark.sql import functions as F
+
 from batch_public_spark.pipeline import (
     JobLedger,
     Orchestrator,
@@ -153,9 +156,11 @@ def run_table(
     )
     n_parsed = None
     if result.parsed is not None:
+        # The write's own job counts the rows; no read-back count job.
         path = os.path.join(orch.output_dir, "parsed", f"{table}_{result.batch_id}")
-        result.parsed.write.parquet(path)
-        n_parsed = spark.read.parquet(path).count()
+        written = Observation()
+        result.parsed.observe(written, F.count(F.lit(1)).alias("n")).write.parquet(path)
+        n_parsed = written.get["n"]
     return {
         "table": table,
         "batch_id": result.batch_id,

@@ -1,7 +1,6 @@
 from batch_public_spark.functions.json_repair import (
     loosen_json,
     loosen_json_py,
-    loosen_json_udf,
     strip_fences,
 )
 from batch_public_spark.functions.text import (
@@ -11,7 +10,6 @@ from batch_public_spark.functions.text import (
     dedup_key,
     extract_text,
     sanitize_tag,
-    usable_text,
 )
 from batch_public_spark.functions.timestamps import (
     TIMESTAMP_KEYS,
@@ -29,9 +27,7 @@ __all__ = [
     "extract_text",
     "loosen_json",
     "loosen_json_py",
-    "loosen_json_udf",
     "normalize_ts",
     "sanitize_tag",
     "strip_fences",
-    "usable_text",
 ]

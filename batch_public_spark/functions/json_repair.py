@@ -9,15 +9,14 @@ Rules 1-3 are plain substitutions → native ``regexp_replace`` (JVM,
 codegen). Rule 4 needs a replacement *callback* (strip commas inside the
 matched number only), which regexp_replace can't express — a bounded
 fixed-point of a one-comma-at-a-time rewrite is equivalent and stays native.
-An Arrow-vectorized pandas UDF implementing the exact four Python regexes is
-provided as ``loosen_json_udf`` for bit-parity-critical paths.
+``loosen_json_py`` is the exact Python-regex reference the native form is
+tested against.
 """
 
 from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -68,23 +67,3 @@ def loosen_json_py(text: str) -> str:
     out = _TRAILING_COMMA_RE.sub(r"\1", out)
     out = _COMMA_NUMBER_RE.sub(lambda m: m.group(1) + m.group(2).replace(",", ""), out)
     return out
-
-
-def _loosen_json_batch(s: pd.Series) -> pd.Series:
-    return s.map(lambda v: loosen_json_py(v) if isinstance(v, str) else v)
-
-
-def loosen_json_udf(col: Column) -> Column:
-    """Arrow-batched exact repair — the approved slow-path fallback.
-
-    (Builds the pandas UDF lazily: decorating at module import would require
-    an active SparkSession.)
-    """
-    from pyspark.sql import SparkSession
-
-    from batch_public_spark.util import ensure_workers_can_import
-
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        ensure_workers_can_import(active)
-    return F.pandas_udf(_loosen_json_batch, "string")(col)

@@ -112,11 +112,6 @@ def extract_text(df: DataFrame, fields: tuple[str, ...] = TEXT_FIELDS) -> Column
     return F.coalesce(*parts)
 
 
-def usable_text(df: DataFrame, fields: tuple[str, ...] = TEXT_FIELDS) -> Column:
-    """Non-empty-text predicate (reference F4)."""
-    return extract_text(df, fields).isNotNull()
-
-
 def dedup_key(df: DataFrame) -> Column:
     """Priority dedup key (reference D1): ``url:<lower(trim(url-ish))>``
     else ``id:<str(pk-ish)>`` else NULL.

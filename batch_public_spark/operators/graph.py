@@ -18,7 +18,7 @@ computes true components with hash-min label propagation:
 iterated to fixpoint. Each round is two hash joins + an aggregation —
 all shuffles on the vertex key, no driver-side graph. Rounds needed =
 graph diameter (near-dup clusters are shallow: usually 2-4). Lineage is
-truncated per round with ``localCheckpoint`` so the plan doesn't grow
+truncated per round with ``sources.tables.cut`` so the plan doesn't grow
 exponentially across iterations — the classic Spark iterative-algorithm
 trap.
 
@@ -35,6 +35,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from batch_public_spark.operators.textops import tokens
+from batch_public_spark.sources.tables import cut
 
 # Per-bucket participant cap for the co-presence graphs (see
 # copresence_edges). Mirrored verbatim in every co-presence oracle as
@@ -75,7 +76,7 @@ def copresence_edges(events: DataFrame, typed: bool) -> DataFrame:
     results are the uncapped ones; tests/test_graph.py plants a hot bucket
     above the cap and checks Spark against DuckDB on the capped graph.
 
-    The result is cut lazily (``localCheckpoint(eager=False)``): every
+    The result is cut lazily (``sources.tables.cut``): every
     caller reads it more than once (mirroring, landmark, degree, peel
     rounds), and the first action that needs it materializes it inside a
     job that runs anyway."""
@@ -93,7 +94,7 @@ def copresence_edges(events: DataFrame, typed: bool) -> DataFrame:
         .filter(F.col("x") < F.col("y"))
         .select("x", "y")
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
 
 
@@ -116,7 +117,7 @@ def term_cooccurrence(documents: DataFrame) -> DataFrame:
             F.explode(F.transform(tokens(F.col("text")), F.lower)).alias("term"),
         )
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     vocab = (
         dt.groupBy("term")
@@ -173,7 +174,7 @@ def connected_components(
     # Lazy checkpoint: the first iteration's `changed` action materializes
     # it inside a job that was running anyway (eager would schedule a
     # dedicated driver-blocking job just for the cut).
-    sym = sym.localCheckpoint(eager=False)
+    sym = cut(sym)
 
     # label(v) starts as v's min direct neighbor (or itself).
     labels = (
@@ -206,7 +207,7 @@ def connected_components(
                     "label"
                 ),
             )
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
         changed = upd.filter(F.col("label") != F.col("old_label")).limit(1).count()
         labels = upd.select("id", "label")
@@ -259,8 +260,8 @@ def pagerank_weighted(
     the vertex key, so a cluster reuses the partitioning across rounds.
     Ranks are rounded to ``round_at`` per iteration, which makes the whole
     computation bit-reproducible across engines/partitionings (and
-    oracle-checkable); lineage is truncated per round with
-    ``localCheckpoint`` for deep runs.
+    oracle-checkable); lineage is truncated per round with ``cut`` for
+    deep runs.
 
     Dangling vertices (no out-edges) leak their mass — acceptable for the
     co-occurrence graphs this serves (symmetrized ⇒ no danglers)."""
@@ -272,12 +273,12 @@ def pagerank_weighted(
     # twice.)
     e0 = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     verts = (
         e0.select(F.col("u").alias("vertex"))
         .union(e0.select(F.col("v").alias("vertex")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     # The count materializes e0 and verts in ONE job (lazy checkpoints cut
     # lineage at first computation without scheduling a dedicated job each
@@ -288,7 +289,7 @@ def pagerank_weighted(
         # empty graph → empty (vertex, pr) result, not ZeroDivisionError
         return verts.withColumn("pr", F.lit(0.0))
     wdeg = e0.groupBy("u").agg(F.sum("w").alias("wdeg"))
-    e = e0.join(wdeg, "u").localCheckpoint(eager=False)
+    e = e0.join(wdeg, "u").transform(cut)
 
     pr = verts.withColumn("pr", F.round(F.lit(1.0 / n), round_at))
     base = (1.0 - damping) / n
@@ -311,7 +312,7 @@ def pagerank_weighted(
                     round_at,
                 ).alias("pr"),
             )
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
     return pr
 
@@ -349,7 +350,7 @@ def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
                     % F.lit(1000000000)
                 ).alias("lab")
             )
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
     return labels
 

@@ -1164,7 +1164,7 @@ def kmeans_lloyd(
     means gather). Means and distances are rounded to ``round_at`` so
     every iteration is bit-reproducible — that is what makes a full
     DuckDB oracle possible for an iterative algorithm. For deep runs,
-    localCheckpoint each iteration like operators.graph's label
+    cut each iteration (sources.tables.cut) like operators.graph's label
     propagation to keep lineage bounded; 1-3 iterations need no such
     truncation.
 

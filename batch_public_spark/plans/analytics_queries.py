@@ -35,6 +35,7 @@ from batch_public_spark.operators.textops import (
 )
 from batch_public_spark.plans.lint import bounded_window_key
 from batch_public_spark.plans.registry import query
+from batch_public_spark.sources.tables import cut
 from batch_public_spark.sources.tables import inline_rows
 from batch_public_spark.sources.tables import load_table as t
 from batch_public_spark.sources.tables import scratch_dir
@@ -1040,7 +1041,7 @@ def llmops_term_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark-first: edges from operators.graph.term_cooccurrence, mirrored by
     symmetric; each PageRank round is one edge⋈rank join + one
     aggregation, both shuffled on the vertex key (pagerank_weighted —
-    localCheckpoint per round bounds lineage). At 100 TB the rank vector
+    a cut per round bounds lineage). At 100 TB the rank vector
     is ~|vocab| rows and broadcasts; the edge list is the only large
     operand."""
     sym = symmetric(term_cooccurrence(t(spark, sf_dir, "documents")), "u", "v")
@@ -1489,7 +1490,7 @@ def llmops_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (
         tok.groupBy("doc_id", "term")
         .agg(F.count("*").cast("double").alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     dlen = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dlen.agg(
@@ -1709,7 +1710,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (
         term_cooccurrence(t(spark, sf_dir, "documents"))
         .select("u", "v")
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     return triangles(edges).withColumnRenamed("vertex", "term")
 
@@ -2312,13 +2313,13 @@ def llmops_rouge_overlap_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # tokenize+explode+count runs once, not once per consumer
         # (measured with ckpt on lens too: warm ~2.0 -> ~1.25 s at
         # sf0.1, fresh-plan-per-rep; values row-identical).
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     # Three consumers (pair window, both length sides): same cut.
     lens = (
         tokc.groupBy("doc_id", "source")
         .agg(F.sum("c").alias("n"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     w = W.partitionBy("source").orderBy("doc_id")
     pairs = lens.select(
@@ -2890,7 +2891,7 @@ def llmops_embedding_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
         # sf0.1; values row-identical). spread() was A/B'd and LOST
         # (explode feeding hash aggregations is exchange-bound — the
         # batch-4/7 boundary).
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     dims = x.select("dim").distinct()
     d = dims.agg(F.count("*").cast("double").alias("n"))
@@ -3605,7 +3606,7 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             cur.join(keep.select(F.col("u").alias("x")), "x", "left_semi")
             .join(keep.select(F.col("u").alias("y")), "y", "left_semi")
             .select("x", "y")
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
         stats = keep.agg(F.count("*").cast("bigint").alias("n_nodes")).crossJoin(
             cur.agg(F.count("*").cast("bigint").alias("n_edges"))
@@ -3684,12 +3685,12 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets. The fifth graph operator: CC and PageRank propagate values,
     k-core iterates a degree constraint, BFS iterates set expansion."""
     e0 = copresence_edges(t(spark, sf_dir, "events"), typed=True)
-    edges = symmetric(e0, "x", "y").localCheckpoint(eager=False)
+    edges = cut(symmetric(e0, "x", "y"))
     # 1-row landmark, no collect; the isNotNull filter drops the row (and
     # the whole BFS degenerates to zero counts) when the graph is empty —
     # the sf0.001 smoke fixture has no typed co-presence edges at all.
     frontier = e0.agg(F.min("x").alias("u")).filter(F.col("u").isNotNull())
-    visited = frontier.localCheckpoint(eager=False)
+    visited = cut(frontier)
     rows = [
         frontier.agg(F.count("*").cast("bigint").alias("n_users")).select(
             F.lit(0).cast("bigint").alias("dist"), "n_users"
@@ -3705,9 +3706,9 @@ def graph_bfs_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("y").alias("u"))
             .distinct()
             .join(visited, "u", "left_anti")
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
-        visited = visited.unionAll(nxt).localCheckpoint(eager=False)
+        visited = visited.unionAll(nxt).transform(cut)
         frontier = nxt
         rows.append(
             nxt.agg(F.count("*").cast("bigint").alias("n_users")).select(
@@ -3777,7 +3778,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the community-size histogram — the chart that says whether the graph
     has real cluster structure before anyone pays for Louvain."""
     e0 = copresence_edges(t(spark, sf_dir, "events"), typed=True)
-    edges = symmetric(e0, "x", "y").localCheckpoint(eager=False)
+    edges = cut(symmetric(e0, "x", "y"))
     labels = label_propagation(edges, rounds=2)
     sizes = labels.groupBy("lab").agg(F.count("*").cast("bigint").alias("sz"))
     return sizes.groupBy(F.col("sz").alias("community_size")).agg(
@@ -4180,7 +4181,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg = (
         adj.groupBy(F.col("w").alias("u"))
         .agg(F.count("*").cast("bigint").alias("d"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     # Attach the witness degree (hence its Adamic-Adar term) to the
     # adjacency BEFORE the quadratic self-join, so the 16M-row wedge
@@ -4673,7 +4674,7 @@ def llmops_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     double literals — 1/(60+r) is exact-input division in both engines.
 
     Spark-first: both rankers share ONE tokenized scan's tf/dlen/stats
-    subtrees (localCheckpoint pins the reuse); the query side is 3 rows
+    subtrees (a cut pins the reuse); the query side is 3 rows
     and the corpus stats 1 row, both broadcast; each top-20 is
     TakeOrdered; the fusion is a 20×20 full outer join. At 100 TB the
     only heavy ops are the postings probes — the QL leg's LEFT join keeps
@@ -4689,12 +4690,12 @@ def llmops_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     tf = (
         tok.groupBy("doc_id", "term")
         .agg(F.count("*").cast("double").alias("tf"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     dlen = (
         tok.groupBy("doc_id")
         .agg(F.count("*").cast("double").alias("dl"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     stats = dlen.agg(
         F.count("*").cast("double").alias("n_docs"),
@@ -5319,7 +5320,7 @@ def _merge_train(docs: DataFrame, k: int, pick) -> DataFrame:
         toks.groupBy("tok")
         .agg(F.count("*").alias("freq"))
         .select(F.concat(F.lit(" "), chars, F.lit(" ")).alias("sym"), "freq")
-        .localCheckpoint(eager=False)  # k rounds re-read this frame
+        .transform(cut)  # k rounds re-read this frame
     )
     syms = F.split(F.trim(F.col("sym")), " ")
     n_sym = F.size(syms)
@@ -5351,7 +5352,7 @@ def _merge_train(docs: DataFrame, k: int, pick) -> DataFrame:
         sym_df = (
             sym_df.crossJoin(F.broadcast(win.select("pair")))
             .select(F.replace(F.col("sym"), pat, rep).alias("sym"), "freq")
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
     vocab = (
         sym_df.select(F.explode(F.split(F.trim("sym"), " ")).alias("s"))
@@ -5567,7 +5568,7 @@ def _wordpiece_pick(sym_df: DataFrame, pc: DataFrame) -> DataFrame:
         sym_df.select(F.explode(F.split(F.trim(F.col("sym")), " ")).alias("s"), "freq")
         .groupBy("s")
         .agg(F.sum("freq").cast("bigint").alias("n"))
-        .localCheckpoint(eager=False)  # joined twice (count(a), count(b))
+        .transform(cut)  # joined twice (count(a), count(b))
     )
     ua = ug.select(F.col("s").alias("_a"), F.col("n").alias("na"))
     ub = ug.select(F.col("s").alias("_b"), F.col("n").alias("nb"))
@@ -5804,12 +5805,12 @@ def llmops_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     (DuckDB 1.0 has no seeded fold) must agree bit-for-bit, which is
     exactly what the hash attests.
 
-    Spark-first / 100 TB: one corpus scan builds the localCheckpointed
+    Spark-first / 100 TB: one corpus scan builds the cut
     token-TYPE table; every EM round is ONE in-row projection over
     types (the DP rides inside whole-stage codegen — no join, no
     shuffle, no Python) + one map-side-combinable grouped count + two
     TakeOrdered prunes of a <= 40-row frame + broadcast map
-    rebuild, with localCheckpoint cuts between rounds (the WordPiece
+    rebuild, with lineage cuts between rounds (the WordPiece
     trainer's quadratic-recompute fix). Type count, not corpus size,
     prices the loop; the corpus is touched exactly once."""
     d = t(spark, sf_dir, "documents").filter(F.col("doc_id") < 400)
@@ -5818,7 +5819,7 @@ def llmops_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.length("tok") <= _ULM_LMAX)
         .groupBy("tok")
         .agg(F.count("*").cast("bigint").alias("freq"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     subs = (
         ty.select(
@@ -5841,7 +5842,7 @@ def llmops_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("cnt"), "piece")
             .limit(_ULM_SEED)
         )
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
 
     def _norm(vdf: DataFrame) -> DataFrame:
@@ -5853,7 +5854,7 @@ def llmops_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("lp"),
         )
 
-    vn = _norm(v).localCheckpoint(eager=False)
+    vn = cut(_norm(v))
     for _ in range(_ULM_ROUNDS):
         vm = vn.agg(
             F.map_from_entries(F.collect_list(F.struct("piece", "lp"))).alias("mp")
@@ -5884,8 +5885,8 @@ def llmops_unigram_lm_train(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.desc("cnt"), "piece")
             .limit(_ULM_KEEP)
         )
-        v = multi.unionByName(chars).localCheckpoint(eager=False)
-        vn = _norm(v).localCheckpoint(eager=False)
+        v = multi.unionByName(chars).transform(cut)
+        vn = cut(_norm(v))
     return v.join(vn, "piece").select(
         "piece",
         (F.length("piece") == 1).alias("is_char"),
@@ -6231,7 +6232,7 @@ def source_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFra
     # ONLY the internal corrupt-record column (the `bad` branch), and a
     # checkpoint is the documented way to materialize the parsed rows
     # before filtering on _bad alone.
-    back = back.localCheckpoint(eager=False)
+    back = cut(back)
     good = back.filter(F.col("_bad").isNull()).groupBy(
         F.col("o_orderstatus").alias("status")
     ).agg(
@@ -6340,7 +6341,7 @@ def graph_modularity_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the community key; everything after the (shared, lazily
     checkpointed) edge build is bounded by |nodes|."""
     e0 = copresence_edges(t(spark, sf_dir, "events"), typed=True)
-    edges = symmetric(e0, "x", "y").localCheckpoint(eager=False)
+    edges = cut(symmetric(e0, "x", "y"))
     labels = label_propagation(edges, rounds=2)
     m = e0.agg(F.count("*").cast("bigint").alias("m"))
     lx = labels.select(F.col("u").alias("x"), F.col("lab").alias("labx"))
@@ -6467,7 +6468,7 @@ def events_user_lifecycle_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     wcol = F.datediff(
         F.date_trunc("day", "ts").cast("date"), F.lit("2024-01-01").cast("date")
     ).cast("bigint")
-    wk = ev.select("user_id", wcol.alias("w")).distinct().localCheckpoint(eager=False)
+    wk = ev.select("user_id", wcol.alias("w")).distinct().transform(cut)
     bounds = wk.agg(
         F.min("w").alias("mn"), F.max("w").alias("mx")
     )
@@ -6479,7 +6480,7 @@ def events_user_lifecycle_states(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w",
         F.lag("w").over(uw).alias("prev_w"),
         F.lead("w").over(uw).alias("next_w"),
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     states = seq.groupBy("w").agg(
         F.sum(F.when(F.col("prev_w").isNull(), 1).otherwise(0))
         .cast("bigint")
@@ -6652,7 +6653,7 @@ def events_session_anomaly_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type").alias("cur"),
         F.lag("event_type").over(w).alias("prev"),
     ).filter(F.col("prev").isNotNull())
-    seq = seq.localCheckpoint(eager=False)  # model build + scoring share it
+    seq = cut(seq)  # model build + scoring share it
     trans = seq.groupBy("prev", "cur").agg(F.count("*").cast("bigint").alias("n"))
     tot = trans.groupBy("prev").agg(F.sum("n").cast("bigint").alias("row_n"))
     # count_distinct mirrors COUNT(DISTINCT …): a NULL event_type must

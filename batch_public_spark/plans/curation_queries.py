@@ -37,6 +37,7 @@ from batch_public_spark.plans.llmops_queries import (
     _TOKS_NORM,
 )
 from batch_public_spark.plans.registry import query
+from batch_public_spark.sources.tables import cut
 from batch_public_spark.sources.tables import inline_rows
 from batch_public_spark.sources.tables import load_table as t
 from batch_public_spark.sources.tables import spread
@@ -113,7 +114,7 @@ def llmops_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = F.array(*[F.expr(_bloom_pos("ch", k)) for k in range(_BLOOM_K)])
     # Three consumers (bitmap build, exact-dup side, probe side) — cut the
     # normalize+md5 projection once, lazily (see the incremental query).
-    d = d.withColumn("pos", pos).localCheckpoint(eager=False)
+    d = d.withColumn("pos", pos).transform(cut)
     hist = d.filter(F.col("doc_id") % 10 < 7)
     inc = d.filter(F.col("doc_id") % 10 >= 7)
 
@@ -321,7 +322,7 @@ def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring), one 10-key hash aggregation, two 1-row broadcast scalars.
     At 100 TB this replaces nothing — it IS the cheap way."""
     # feeds the bin agg AND the Brier agg
-    scored = _calibration_pairs(spark, sf_dir, 0.5).localCheckpoint(eager=False)
+    scored = cut(_calibration_pairs(spark, sf_dir, 0.5))
     bins = (
         scored.groupBy(
             F.least(F.floor(F.col("pd") * 10).cast("bigint"), F.lit(9).cast("bigint")).alias(
@@ -333,7 +334,7 @@ def eval_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("pd").alias("sum_p"),
             F.sum("y").cast("bigint").alias("pos"),
         )
-        .localCheckpoint(eager=False)  # per-bin rows AND the ECE scalar
+        .transform(cut)  # per-bin rows AND the ECE scalar
     )
     ece = bins.agg(
         F.round(
@@ -785,7 +786,7 @@ def llmops_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two consumers (sizes + pairs): cut once, lazily, instead of
         # betting on runtime exchange reuse to dedupe the corpus shingle
         # explode under both branches
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     # Per-source totals derive from by_gram (not a second pass over grams);
     # |srcs| sums to exactly the distinct (source, gram) count.
@@ -968,7 +969,7 @@ def llmops_bloom_incremental_roundtrip(spark: SparkSession, sf_dir: str) -> Data
     # bitmap builds, two probes, the survivor filter); cut it once so the
     # regex normalization runs one time, not per branch. Lazy: the first
     # broadcast-build job materializes it, no dedicated cut job.
-    d = d.localCheckpoint(eager=False)
+    d = cut(d)
     day0 = d.filter(F.col("doc_id") % 10 < 6)
     day1 = d.filter((F.col("doc_id") % 10).isin(6, 7))
     day2 = d.filter(F.col("doc_id") % 10 >= 8)
@@ -1869,13 +1870,12 @@ def _nb_distill_scored(lab: DataFrame, occ: DataFrame) -> DataFrame:
     # r15 single-pass fusion (guide §1.2): vocab, the per-class counts
     # (tc) and the per-doc score sums (docsum) were THREE passes over the
     # tokenize + explode stream. One (doc_id, pos, tok) pre-aggregate
-    # (bounded by per-doc distinct tokens; cut per the multi-consumer
-    # discipline, scale posture in sources/tables.py) feeds all three by
-    # exact-BIGINT sums / exact-decimal cnt·w products.
+    # (bounded by per-doc distinct tokens; cut for its three consumers)
+    # feeds all three by exact-BIGINT sums / exact-decimal cnt·w products.
     dtc = (
         occ.groupBy("doc_id", "pos", "tok")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     vocab = (
         dtc.groupBy("tok")
@@ -2196,16 +2196,15 @@ def llmops_dsir_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15 single-pass fusion (guide §1.2): the bucket counts (bc) and the
     # per-doc log-weight sums (doclw) were two passes over the SAME
     # tokenize + n-gram-explode union. One (doc_id, pos, bucket)
-    # pre-aggregate (≤ docs × 64 rows — bounded, cut per the
-    # multi-consumer discipline, scale posture in sources/tables.py) now
-    # feeds both: bucket counts by exact-BIGINT sums, per-doc sums as
-    # cnt·lw (decimal multiplication is exact — the sum of lw repeated
-    # cnt times IS cnt·lw — cast back to the original sum's
-    # DECIMAL(28,6) so every downstream operand is byte-identical).
+    # pre-aggregate (≤ docs × 64 rows — bounded, cut for its two
+    # consumers) now feeds both: bucket counts by exact-BIGINT sums,
+    # per-doc sums as cnt·lw (decimal multiplication is exact — the sum
+    # of lw repeated cnt times IS cnt·lw — cast back to the original
+    # sum's DECIMAL(28,6) so every downstream operand is byte-identical).
     db = (
         bkt.groupBy("doc_id", "pos", "b")
         .agg(F.count("*").cast("bigint").alias("cnt"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     bc = db.groupBy("b").agg(
         F.sum("cnt").cast("bigint").alias("n_raw"),

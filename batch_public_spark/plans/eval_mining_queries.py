@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from batch_public_spark.operators.graph import term_cooccurrence, triangles
 from batch_public_spark.plans.lint import bounded_window_key
 from batch_public_spark.plans.registry import query
+from batch_public_spark.sources.tables import cut
 from batch_public_spark.sources.tables import inline_rows
 from batch_public_spark.sources.tables import load_table as t
 from batch_public_spark.sources.tables import spread
@@ -179,7 +180,7 @@ def mba_brand_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         # four consumers (order count, singles, both self-join sides) —
         # cut once, lazily; at scale this materializes the basket table a
         # production run would persist anyway
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     n = baskets.agg(F.countDistinct("l_orderkey").cast("bigint").alias("n_orders"))
     singles = baskets.groupBy("p_brand").agg(F.count("*").cast("bigint").alias("n_s"))
@@ -715,7 +716,7 @@ def llmops_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         # two consumers (vocabulary pass + the vocab-filtered projection):
         # cut the corpus explode+distinct once, lazily
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     df_counts = dt.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
     vocab = df_counts.orderBy(F.desc("df"), "term").limit(50)
@@ -805,7 +806,7 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("w"), "u", "v")
         .limit(200)
         .select("u", "v")
-        .localCheckpoint(eager=False)  # degree pass + three join roles
+        .transform(cut)  # degree pass + three join roles
     )
     deg = (
         edges.select(F.col("u").alias("term"))
@@ -2667,12 +2668,12 @@ def llmops_embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFra
             "half"
         ),
         F.col("embedding").cast("array<double>").alias("vv"),
-    ).localCheckpoint(eager=False)  # feeds the dim means AND the half counts
+    ).transform(cut)  # feeds the dim means AND the half counts
     dims = (
         v.select("label", "half", F.posexplode("vv").alias("pos0", "x"))
         .groupBy("label", "half", (F.col("pos0") + 1).alias("pos"))
         .agg(F.round(F.avg("x"), 6).alias("m"))
-        .localCheckpoint(eager=False)  # both join sides filter this frame
+        .transform(cut)  # both join sides filter this frame
     )
     a = dims.filter(F.col("half") == 0).select("label", "pos", F.col("m").alias("ma"))
     b = dims.filter(F.col("half") == 1).select("label", "pos", F.col("m").alias("mb"))
@@ -3522,7 +3523,7 @@ def eval_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Three consumers (model, calib, test) each re-scan events and
     # re-derive the md5 split digit: cut once so the hash projection
     # runs one pass (the mondrian twin's measured lever; row-identical).
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     model = (
         ev.filter(F.col("d").between("0", "7"))
         .groupBy("g")
@@ -3647,7 +3648,7 @@ def eval_conformal_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Three consumers (model, calib, test) each re-scan events and
     # re-derive the md5 split digit: cut once so the hash projection
     # runs one pass (the mondrian twin's measured lever; row-identical).
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     model = (
         ev.filter(F.col("d").between("0", "7"))
         .groupBy("g")
@@ -3664,7 +3665,7 @@ def eval_conformal_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("g", "event_id", F.abs(F.col("value") - F.col("yhat")).alias("score"))
         # Two consumers (exact rank window, percentile-sketch agg): cut
         # so the score projection materializes once.
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     wg = W.partitionBy("g")
     exact_q = (
@@ -3854,7 +3855,7 @@ def eval_conformal_mondrian(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pass (measured 1.0 -> 0.35 s at sf0.1 together with the calib cut
     # below; values row-identical). At scale the same cut stages the
     # split columns once instead of once per split consumer.
-    ).localCheckpoint(eager=False)
+    ).transform(cut)
     model = ev.filter(F.col("d").between("0", "7")).agg(
         (
             F.sum(F.col("value").cast("decimal(18,6)")).cast("double") / F.count("*")
@@ -3868,7 +3869,7 @@ def eval_conformal_mondrian(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Three consumers (total count, fine-rank window, coarse-rank
         # window): cut so the score projection materializes once.
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     total = calib.agg(F.count("*").cast("bigint").alias("n_total"))
     rank_at = F.least(F.ceil(0.9 * (F.col("n") + 1)).cast("bigint"), F.col("n"))
@@ -4089,16 +4090,15 @@ def _dr_policy_frame(
     # payloads differ, so ReuseExchange cannot dedupe them and the split
     # scanned twice. One grouped aggregate now carries both (sum, count);
     # mr and p_a derive from it with the identical arithmetic. The
-    # bounded (context, action) grid is cut once
-    # (localCheckpoint; scale posture: sources/tables.py) for its two
-    # downstream consumers (the argmax window and the propensity join).
+    # bounded (context, action) grid is cut once for its two downstream
+    # consumers (the argmax window and the propensity join).
     g = (
         lrn.groupBy("c", "a")
         .agg(
             F.sum(F.col("r").cast("decimal(18,6)")).alias("sr"),
             F.count("*").alias("na"),
         )
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     learn = g.select("c", "a", (F.col("sr").cast("double") / F.col("na")).alias("mr"))
     wpi = W.partitionBy("c").orderBy(F.desc("mr"), "a")
@@ -4120,8 +4120,7 @@ def _dr_policy_frame(
     match = F.when(F.col("a") == F.col("pi_action"), 1).otherwise(0)
     match_r = F.sum(F.when(F.col("a") == F.col("pi_action"), F.col("r").cast("decimal(18,6)")))
     # The bounded per-context cell grid feeds snips AND the final select —
-    # cut once (localCheckpoint; scale posture: sources/tables.py) so the
-    # evaluation-split join pipeline runs a single time.
+    # cut once so the evaluation-split join pipeline runs a single time.
     cell = (
         j.groupBy("c", "pi_action", "mr_pi", "p_a")
         .agg(
@@ -4133,7 +4132,7 @@ def _dr_policy_frame(
             .cast("double")
             .alias("sum_match_r"),
         )
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     # SNIPS (self-normalized IPS, Swaminathan & Joachims 2015) over the
     # whole evaluation split: Σ_c w_c·r̄_c / Σ_c w_c with w = 1/p̂ —
@@ -4357,16 +4356,15 @@ def eval_bradley_terry_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MM-step frame below re-joins it or its descendants — without a cut
     # the events window + pair aggregation re-inlines into EVERY consumer
     # (r15 measured: 32 parquet scans / 33 Windows / 82 Exchanges in the
-    # executed plan). localCheckpoint cut per the multi-consumer
-    # discipline (scale posture: sources/tables.py module docstring);
-    # everything downstream is grid-sized algebra on ≤25 rows.
+    # executed plan). Cut once; everything downstream is grid-sized
+    # algebra on ≤25 rows.
     grid = (
         sym.groupBy("i", "j")
         .agg(
             F.count("*").cast("bigint").alias("n_ij"),
             F.sum("w").cast("bigint").alias("w_ij"),
         )
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     tot = grid.groupBy("i").agg(
         F.sum("n_ij").cast("bigint").alias("n_i"), F.sum("w_ij").cast("bigint").alias("w_i")
@@ -4381,7 +4379,7 @@ def eval_bradley_terry_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     s1n = (
         s1.crossJoin(z1)
         .select("i", "n_i", "w_i", (F.col("s1_raw") / F.col("z")).alias("s1_norm"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     den = (
         grid.join(s1n.select(F.col("i"), F.col("s1_norm").alias("si")), "i")

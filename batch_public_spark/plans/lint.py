@@ -414,9 +414,9 @@ def _subtree_population_scale(lines: list[str], i: int, end: int, sub: str) -> b
     if body.startswith("Relation "):
         return any(mk in body for mk in _FACT_RELATION_MARKERS.values())
     if body.startswith(("LogicalRDD", "ExistingRDD")):
-        # A localCheckpoint()/RDD-backed frame is a lineage-less leaf: the
-        # walk cannot see what produced it, so an explicit broadcast hint
-        # over one is population-scale-unless-allowlisted. This closes the
+        # A cut (sources.tables.cut) or RDD-backed frame is a lineage-less
+        # leaf: the walk cannot see what produced it, so an explicit broadcast
+        # hint over one is population-scale-unless-allowlisted. This closes the
         # r10 blind spot where graph_link_prediction's checkpointed O(|V|)
         # degree table rendered as a bare LogicalRDD and slipped the gate.
         return True
@@ -594,9 +594,9 @@ def lint_plan_warnings(df: DataFrame) -> list[Finding]:
       Literal fixtures belong on ``inline_rows`` (pure JVM generator; the
       r14 migration removed this from 17 sites). Provenance is read from
       the scan RDD's creation site because the PLAN STRING cannot
-      distinguish this from a ``localCheckpoint`` cut — both print as
-      ``Scan ExistingRDD``, and checkpoint cuts are a deliberate,
-      documented idiom (sources/tables.py module docstring).
+      distinguish this from a lineage cut — both print as
+      ``Scan ExistingRDD``, and cuts are a deliberate, documented idiom
+      (``sources.tables.cut``).
     * **duplicate-percentile-buffers** — see
       :func:`_duplicate_percentile_findings`.
     * **distinct-agg-expand** — see :func:`_distinct_expand_findings`.

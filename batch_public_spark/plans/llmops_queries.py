@@ -57,6 +57,7 @@ from batch_public_spark.operators.textops import (
 from batch_public_spark.plans.lint import bounded_window_key
 from batch_public_spark.plans.registry import query
 from batch_public_spark.sources.bucketing import read_bucketed, write_bucketed
+from batch_public_spark.sources.tables import cut
 from batch_public_spark.sources.tables import inline_rows
 from batch_public_spark.sources.tables import load_table as t
 from batch_public_spark.sources.tables import scratch_dir
@@ -1325,14 +1326,14 @@ def _dedup_waves(base: DataFrame):
     per consumer. The waves use the standalone queries' tokenization
     helpers (operators.textops), so the cascade's keys never drift from
     dedup_exact's and prefix_dedup's."""
-    s1 = dedup_exact(base).select("doc_id").localCheckpoint(eager=False)
+    s1 = dedup_exact(base).select("doc_id").transform(cut)
     toks_lower = tokens(F.lower(F.col("text")))
     s2 = (
         base.join(s1, "doc_id")
         .groupBy(F.array_join(F.slice(toks_lower, 1, 8), " ").alias("prefix"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     toks_norm = tokens(normalized_text(F.col("text")))
     sh = (
@@ -1347,7 +1348,7 @@ def _dedup_waves(base: DataFrame):
                 )
             ).alias("sh"),
         )
-    ).localCheckpoint(eager=False)  # self-joined below: two consumers
+    ).transform(cut)  # self-joined below: two consumers
     a, b = sh.alias("a"), sh.alias("b")
     inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
     union = F.size(F.array_distinct(F.concat(F.col("a.sh"), F.col("b.sh"))))
@@ -1577,7 +1578,7 @@ def llmops_corpus_build_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares, reported as mixture entropy) → sequence packing
     (llmops_sequence_pack's 512-token concatenation windows) → dataset
     card. ONE lazily-assembled plan, one action: each stage's survivor
-    set localCheckpoints (eager=False) and feeds both the next stage and
+    set is cut (lazily) and feeds both the next stage and
     its own one-row funnel count; the 8-row funnel (stage, n_removed,
     n_remaining, metric) is what a training-data team publishes with a
     release. Row semantics: dedup/gate/decon rows carry removal counts
@@ -1606,7 +1607,7 @@ def llmops_corpus_build_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles text except the two dedup key aggregations."""
     base = t(spark, sf_dir, "documents").select("doc_id", "text", "lang", "source")
     s1, s2, removed3 = _dedup_waves(base)
-    removed3 = removed3.localCheckpoint(eager=False)  # counted AND anti-joined below
+    removed3 = cut(removed3)  # counted AND anti-joined below
     s3 = s2.join(removed3, "doc_id", "left_anti")
 
     q6 = F.round(quality_score(F.col("text")), 6).cast("decimal(10,6)")
@@ -1619,7 +1620,7 @@ def llmops_corpus_build_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.greatest(token_count_ws(F.col("text")), F.lit(1)).alias("tok"),
         )
         .filter(F.col("quality") >= 0.5)
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
 
     # Contamination shingles only what can matter: the benchmark side is
@@ -1644,7 +1645,7 @@ def llmops_corpus_build_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     s5 = (
         s4.filter(F.col("doc_id") % 97 != 0)
         .join(contaminated, "doc_id", "left_anti")
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
 
     ps = (
@@ -1653,13 +1654,13 @@ def llmops_corpus_build_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_docs"),
             F.sum("tok").cast("bigint").alias("n_tokens"),
         )
-        .localCheckpoint(eager=False)  # feeds tot AND the entropy term
+        .transform(cut)  # feeds tot AND the entropy term
     )
     tot = ps.agg(
         F.sum("n_tokens").cast("bigint").alias("total_tokens"),
         F.sum("n_docs").cast("bigint").alias("total_docs"),
         F.sum(F.expr("(n_tokens + 511) DIV 512")).cast("bigint").alias("total_windows"),
-    ).localCheckpoint(eager=False)  # entropy, pack row, card row
+    ).transform(cut)  # entropy, pack row, card row
     share = F.col("n_tokens").cast("double") / F.col("total_tokens")
     ent = (
         ps.crossJoin(F.broadcast(tot))
@@ -1923,7 +1924,7 @@ def llmops_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.explode(word_shingles(F.col("text"), 3)).alias("s"))
         # two consumers (df aggregation + the rare-filtered projection):
         # cut the explode once, lazily (the graph.py discipline)
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     rare = d.groupBy("s").agg(F.count("*").cast("bigint").alias("df")).filter(
         F.col("df") <= 50
@@ -1931,7 +1932,7 @@ def llmops_containment_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rare is a bounded shingle-vocabulary table → broadcast the filter so
     # the instance table never shuffles for it; ri then fans into THREE
     # consumers (sizes + both self-join roles) → checkpoint it too.
-    ri = d.join(F.broadcast(rare.select("s")), "s").localCheckpoint(eager=False)
+    ri = d.join(F.broadcast(rare.select("s")), "s").transform(cut)
     sizes = ri.groupBy("doc_id").agg(F.count("*").cast("bigint").alias("sz"))
     a = ri.select(F.col("doc_id").alias("id_a"), "s")
     b = ri.select(F.col("doc_id").alias("id_b"), "s")
@@ -3116,7 +3117,7 @@ def llmops_cluster_label_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = a1.groupBy("cluster_id", "label").agg(
         F.count("*").cast("bigint").alias("n_cl")
     )
-    cell = cell.localCheckpoint(eager=False)
+    cell = cut(cell)
     mc = cell.groupBy("cluster_id").agg(F.sum("n_cl").cast("bigint").alias("n_c"))
     ml = cell.groupBy("label").agg(F.sum("n_cl").cast("bigint").alias("n_l"))
     tot = cell.agg(F.sum("n_cl").cast("bigint").alias("n"))
@@ -3318,7 +3319,7 @@ def llmops_kcenter_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark-first: each of the 3 refinement rounds is one broadcast
     (single-row center) cross, a running-min projection, and a
-    TakeOrdered(1); the distance table threads through localCheckpoint
+    TakeOrdered(1); the distance table threads through a lineage cut
     so round N+1 never recomputes round N — the iterative-graph
     discipline. At 100 TB this is k passes over the corpus, each
     map-side — exactly how distributed k-center seeding runs."""
@@ -3336,13 +3337,13 @@ def llmops_kcenter_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.orderBy(F.md5(F.col("vec_id").cast("string")), "vec_id")
         .limit(1)
         .select(F.col("vec_id").alias("cid"), F.col("vv").alias("cvv"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     d = (
         v.crossJoin(F.broadcast(c1))
         .filter(F.col("vec_id") != F.col("cid"))
         .select("vec_id", "vv", dist_to("cvv").alias("dmin"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     rows = [
         c1.select(
@@ -3360,7 +3361,7 @@ def llmops_kcenter_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("vv").alias("cvv"),
                 F.col("dmin").alias("cdmin"),
             )
-            .localCheckpoint(eager=False)
+            .transform(cut)
         )
         rows.append(
             c.select(
@@ -3378,7 +3379,7 @@ def llmops_kcenter_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "vv",
                     F.least(F.col("dmin"), dist_to("cvv")).alias("dmin"),
                 )
-                .localCheckpoint(eager=False)
+                .transform(cut)
             )
     out = rows[0]
     for r in rows[1:]:
@@ -3449,7 +3450,7 @@ def llmops_spec_decode_acceptance(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("tok").alias("prev"),
         F.lead("tok").over(wlead).alias("actual"),
     ).filter(F.col("actual").isNotNull())
-    trans = trans.localCheckpoint(eager=False)
+    trans = cut(trans)
     big = trans.groupBy("prev", F.col("actual").alias("nxt")).agg(
         F.count("*").cast("bigint").alias("n")
     )
@@ -3779,9 +3780,9 @@ def llmops_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "vv", F.round(cosine(F.col("vv"), F.col("q")), 6).alias("rel"))
         .orderBy(F.desc("rel"), "vec_id")
         .limit(10)
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
-    s1 = cand.orderBy(F.desc("rel"), "vec_id").limit(1).localCheckpoint(eager=False)
+    s1 = cand.orderBy(F.desc("rel"), "vec_id").limit(1).transform(cut)
     pen1 = F.round(cosine(F.col("vv"), F.col("s1v")), 6)
     m2 = (
         cand.crossJoin(
@@ -3795,7 +3796,7 @@ def llmops_mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.lit(0.7) * F.col("rel") - F.lit(0.3) * pen1, 6).alias("mmr"),
         )
     )
-    s2 = m2.orderBy(F.desc("mmr"), "vec_id").limit(1).localCheckpoint(eager=False)
+    s2 = m2.orderBy(F.desc("mmr"), "vec_id").limit(1).transform(cut)
     pen2 = F.greatest(
         F.round(cosine(F.col("vv"), F.col("s1v")), 6),
         F.round(cosine(F.col("vv"), F.col("s2v")), 6),
@@ -3902,7 +3903,7 @@ def llmops_entropy_rate_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = trans.groupBy("source", "prev", "nxt").agg(
         F.count("*").cast("bigint").alias("n")
     )
-    cell = cell.localCheckpoint(eager=False)
+    cell = cut(cell)
     marg = cell.groupBy("source", "prev").agg(
         F.sum("n").cast("bigint").alias("n_prev")
     )
@@ -4222,7 +4223,7 @@ def llmops_knn_graph_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = vecs.join(F.broadcast(qsample), "vec_id", "left_semi")
     e1 = ann_bruteforce_topk(vecs, q, k=5).select("query_id", "neighbor_id")
-    e1 = e1.localCheckpoint(eager=False)  # three consumers below
+    e1 = cut(e1)  # three consumers below
     nset = e1.select(F.col("neighbor_id").alias("vec_id")).distinct()
     nv = vecs.join(F.broadcast(nset), "vec_id", "left_semi")
     e2 = ann_bruteforce_topk(vecs, nv, k=5).select(
@@ -4958,7 +4959,7 @@ def llmops_repeated_span_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.posexplode(word_shingles_all(F.col("text"), 3)).alias("pos", "s"),
         )
         # three consumers (df counts + both self-join roles): cut once
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     rare = sh.groupBy("s").agg(F.count("*").alias("df")).filter(F.col("df") <= 20)
     ri = sh.join(rare.select("s"), "s")
@@ -5083,7 +5084,7 @@ def llmops_repeated_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.posexplode(word_shingles_all(F.col("text"), 3)).alias("pos", "s"),
         )
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     rare = sh.groupBy("s").agg(F.count("*").alias("df")).filter(F.col("df") <= 20)
     ri = sh.join(rare.select("s"), "s")
@@ -5262,7 +5263,7 @@ def llmops_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("a_id", "b_id", F.round(cosine(F.col("av"), F.col("bv")), 6).alias("sim"))
         # four consumers (two top-k windows, the margin join's pair
         # stream): cut once so the 10k-pair cosine fold runs once
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     wa = W.partitionBy("a_id").orderBy(F.desc("sim"), "b_id")
     wb = W.partitionBy("b_id").orderBy(F.desc("sim"), "a_id")
@@ -5401,7 +5402,7 @@ def llmops_bitext_margin_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("sim"),
         )
         # same four-consumer fan-out as the exact twin: cut once
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     wa = W.partitionBy("a_id").orderBy(F.desc("sim"), "b_id")
     wb = W.partitionBy("b_id").orderBy(F.desc("sim"), "a_id")
@@ -5772,7 +5773,7 @@ def _bigram_lm_scores(
     pc = (
         bg.groupBy("w1", "w2")
         .agg(F.count("*").cast("bigint").alias("c_ab"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     doc = (
         bg.join(log_probs(pc, tk), ["w1", "w2"])

@@ -29,6 +29,7 @@ from batch_public_spark.operators.textops import token_count_ws, tokens
 from batch_public_spark.plans.lint import bounded_window_key
 from batch_public_spark.plans.llmops_queries import _TOKS
 from batch_public_spark.plans.registry import query
+from batch_public_spark.sources.tables import cut
 from batch_public_spark.sources.tables import inline_rows
 from batch_public_spark.sources.tables import load_table as t
 from batch_public_spark.sources.tables import spread
@@ -1125,7 +1126,7 @@ def llmops_kl_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tc = (
         toks.groupBy("source", "term")
         .agg(F.count("*").cast("bigint").alias("c"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     vocab = (
         tc.groupBy("term")
@@ -2034,13 +2035,12 @@ def dq_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     # column marginals, N, and the dense grid join), each with a
     # different grouping — ReuseExchange cannot dedupe them, so without a
     # cut the event scan re-inlines into each (r15: 7 scans in the
-    # executed plan). localCheckpoint per the multi-consumer discipline
-    # (scale posture: sources/tables.py).
+    # executed plan).
     cells = (
         d.select("event_type", F.dayofweek(F.date_sub("ts", 1)).alias("dow"))
         .groupBy("event_type", "dow")
         .agg(F.count("*").cast("bigint").alias("o"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     rows_ = cells.groupBy("event_type").agg(F.sum("o").cast("bigint").alias("rl"))
     cols_ = cells.groupBy("dow").agg(F.sum("o").cast("bigint").alias("cl"))
@@ -2706,11 +2706,11 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.unix_timestamp("ts") / 86400).cast("bigint").alias("day"),
         F.round("value", 2).cast("decimal(12,2)").alias("v"),
     )
-    cut = ev.agg(
+    midpoint = ev.agg(
         F.floor((F.min("day") + F.max("day") + 1) / 2).cast("bigint").alias("mid")
     )
     cells = (
-        ev.crossJoin(cut)
+        ev.crossJoin(midpoint)
         .groupBy(
             "event_type",
             "treat",
@@ -3505,9 +3505,8 @@ def dq_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         # The bounded (priority, month) frame (≤ ~420 rows) feeds BOTH
         # self-join sides, the per-priority count AND the tie aggregate —
         # the last two group differently, so ReuseExchange cannot dedupe
-        # and the orders scan re-inlined 4× (r15). localCheckpoint cut
-        # per the multi-consumer discipline (sources/tables.py).
-    ).localCheckpoint(eager=False)
+        # and the orders scan re-inlined 4× (r15). Cut once.
+    ).transform(cut)
     a = monthly.select("prio", F.col("m").alias("m1"), F.col("cents").alias("c1"))
     b = monthly.select("prio", F.col("m").alias("m2"), F.col("cents").alias("c2"))
     s = (

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from batch_public_spark.plans.lint import bounded_window_key
 from batch_public_spark.plans.registry import query
+from batch_public_spark.sources.tables import cut
 from batch_public_spark.sources.tables import inline_rows
 from batch_public_spark.sources.tables import load_table as t
 
@@ -270,12 +271,11 @@ def dq_orders_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every later stage — uncut, each join re-inlines the upstream
     # percentile aggregation (and its own orders scan) into the consumer
     # (7 inlined scans total; the three-pass shape itself is the MAD
-    # algorithm). localCheckpoint cuts per the multi-consumer discipline
-    # (sources/tables.py) bound it at the algorithmic three.
+    # algorithm). Cutting both frames bounds it at the algorithmic three.
     med = (
         o.groupBy("o_orderpriority")
         .agg(F.round(F.percentile(F.col("o_totalprice"), F.lit(0.5)), 6).alias("med"))
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     dev = (
         o.join(med, "o_orderpriority")
@@ -285,7 +285,7 @@ def dq_orders_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.percentile(F.abs(F.col("o_totalprice") - F.col("med")), F.lit(0.5)), 6
             ).alias("mad")
         )
-        .localCheckpoint(eager=False)
+        .transform(cut)
     )
     thresh = F.round(F.lit(3) * F.lit(1.4826) * F.col("mad"), 6)
     return (

@@ -8,25 +8,11 @@ pruning supplied by Catalyst. A production DynamoDB path would be the
 S3-export → parquet route (preferred at 100 TB) or a parallel Segment scan
 mapped one-segment-per-partition; both land in the same ``load_table`` shape.
 
-The catalog-listing affordance (reference main.py:624-634, S2) maps to
-``spark.catalog.listTables`` once views are registered.
+The catalog-listing affordance (reference main.py:624-634, S2) is the
+CLI's ``--list-tables``, which lists the parquet tables in the data dir.
 
-Scale posture of ``localCheckpoint(eager=False)`` (the note of record —
-query modules reference this instead of re-deriving it): the engine uses
-lazy localCheckpoint as a WITHIN-QUERY cut wherever one subtree feeds
-multiple consumers (conformal family, pca_power, rouge, bm25, q-family
-pair aggregates) or a plan must be truncated (iterative graph/trainer
-loops). It materializes the first execution's blocks to EXECUTOR storage
-and pins them there: no lineage is kept, so an executor loss kills the
-job where lineage would have recovered it, and the pinned blocks occupy
-executor memory/disk for the query's lifetime. That trade is correct for
-this engine's bench contract (single-process local mode — executors
-cannot be lost independently, and the cut is always inside the timed
-region, never cross-run caching). At real cluster scale, swap
-load-bearing cuts for persisted scratch tables (write parquet + read
-back: fault-tolerant, spillable, shareable across jobs) or
-``reliableCheckpoint`` when a checkpoint dir exists; keep localCheckpoint
-only for small frames whose recompute-on-loss is acceptable.
+Lineage cuts go through ``cut``, the one local checkpoint in the
+package; its docstring is the note of record on their scale posture.
 """
 
 from __future__ import annotations
@@ -111,6 +97,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.expr(_NTZ_AS_UTC))
     per[key] = df
     return df
+
+
+def cut(df: DataFrame) -> DataFrame:
+    """Cut ``df``'s lineage: the one lineage cut in the package.
+
+    A lazy local checkpoint (``eager=False``), used as a WITHIN-QUERY cut
+    wherever one subtree feeds multiple consumers (conformal family,
+    pca_power, rouge, bm25, q-family pair aggregates) or a plan must be
+    truncated (iterative graph/trainer loops). Each call site states its
+    reason in one line. It materializes the first execution's blocks to
+    EXECUTOR storage and pins them there: no lineage is kept, so an
+    executor loss kills the job where lineage would have recovered it, and
+    the pinned blocks occupy executor memory/disk for the query's
+    lifetime. That trade is correct for this engine's bench contract
+    (single-process local mode — executors cannot be lost independently,
+    and the cut is always inside the timed region, never cross-run
+    caching). Under AQE the lazy form still launches the cut subtree's
+    shuffle-map job when the cut is built, before any action.
+
+    At real cluster scale, swap load-bearing cuts for persisted scratch
+    tables (write parquet + read back: fault-tolerant, spillable,
+    shareable across jobs) or ``reliableCheckpoint`` when a checkpoint dir
+    exists, keeping localCheckpoint only for small frames whose
+    recompute-on-loss is acceptable — an edit to this one function."""
+    return df.localCheckpoint(eager=False)
 
 
 # Session-timezone-independent TIMESTAMP_NTZ → TIMESTAMP(LTZ) conversion:
@@ -280,10 +291,6 @@ def _scan_file_parts(df: DataFrame, max_bytes: int) -> int | None:
     return max(1, total // max(max_bytes, 1))
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
-
-
 def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> None:
     """Register every table as a temp view so spark.sql() queries and
     spark.catalog.listTables() (reference S2) work against the catalog.
@@ -297,11 +304,6 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
         from batch_public_spark.sources.partsupp import load_partsupp
 
         load_partsupp(spark, sf_dir).createOrReplaceTempView("partsupp")
-
-
-def list_tables(spark: SparkSession) -> list[str]:
-    """Catalog listing (reference main.py:624-634)."""
-    return [t.name for t in spark.catalog.listTables()]
 
 
 def read_evolving(spark: SparkSession, path: str) -> DataFrame:

@@ -4,11 +4,13 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
 import pytest
 
 from batch_public_spark import agent_api
-from batch_public_spark.cli import main
+from batch_public_spark.cli import main, orchestrator, run_table
+from batch_public_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -71,6 +73,25 @@ def test_blocking_run_writes_parsed_output(spark, tmp_path, capsys):
     ids = {r["_source_custom_id"] for r in parsed.select("_source_custom_id").collect()}
     assert len(ids) == info["n_requests"]
     assert parsed.filter("is_raw").count() == 0
+
+
+def test_run_table_counts_parsed_rows_in_the_write_job(spark, tmp_path):
+    """A blocking run_table launches exactly its two writes (the JSONL
+    and the parsed parquet): n_parsed is observed on the parsed write, so
+    no read-back of the parsed output (schema job + count jobs) follows."""
+    load_table(spark, SF, "documents")  # resolve the source outside the group
+    sc = spark.sparkContext
+    group = f"run_table_{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "run_table")
+    try:
+        orch = orchestrator(str(tmp_path / "out"))
+        info = run_table(spark, orch, "documents", data_dir=SF, hours=1e9)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the status store lags the jobs
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    path = tmp_path / "out" / "parsed" / f"documents_{info['batch_id']}"
+    assert info["n_parsed"] == spark.read.parquet(str(path)).count() > 0
 
 
 def test_multi_table_forces_async_and_resume_closes(spark, tmp_path, capsys):

@@ -39,14 +39,21 @@ from tests import conftest
 SF_DIR = "/root/testdata/sf0.001"
 
 
+# load_table returns one memoized frame per table, so caching it swaps the
+# scan for an InMemoryRelation in every later plan over that table, in
+# other test modules too: unpersist when the module is done.
 @pytest.fixture(scope="module")
 def documents(spark):
-    return load_table(spark, SF_DIR, "documents").cache()
+    df = load_table(spark, SF_DIR, "documents").cache()
+    yield df
+    df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def embeddings(spark):
-    return load_table(spark, SF_DIR, "embeddings").cache()
+    df = load_table(spark, SF_DIR, "embeddings").cache()
+    yield df
+    df.unpersist()
 
 
 def _exact_pairs(documents, threshold):

@@ -58,12 +58,12 @@ ALLOWLIST: set[tuple[str, str]] = {
     # rows (5 queries × k = 5), bounded through a rank-cap window.
     ("llmops_ann_ivf_lloyd_recall", "unbounded-broadcast"),
     # --- unbounded-broadcast (r11): the LogicalRDD lint rule is
-    # deliberately conservative — a localCheckpoint()/createDataFrame
-    # frame is a lineage-less leaf, so a hint over one is flagged unless
-    # allowlisted here with its structural bound stated. ---
+    # deliberately conservative — a cut (sources.tables.cut) or
+    # createDataFrame frame is a lineage-less leaf, so a hint over one is
+    # flagged unless allowlisted here with its structural bound stated. ---
     # Checkpoint-cut frames with a structural bound upstream of the cut:
     # the near-dup anchor set of `llmops_queries._dedup_waves` is
-    # `doc_id < 150`-bounded before its localCheckpoint (docstring
+    # `doc_id < 150`-bounded before its cut (docstring
     # documents the cap; the hint prevents a CartesianProduct on the
     # <-join).
     ("llmops_dedup_cascade_e2e", "unbounded-broadcast"),
@@ -106,56 +106,98 @@ WARN_ALLOWLIST: set[tuple[str, str]] = {
 }
 
 
-# (module, function) sites under plans/ allowed to write session conf.
+# (module, top-level function) sites in the package allowed to write
+# session conf, module paths relative to batch_public_spark/.
 CONF_WRITE_ALLOWLIST: set[tuple[str, str]] = {
     # The scripting toggle: the battery needs spark.sql.scripting.enabled
     # for its one spark.sql() call and restores the prior value (or unsets
     # it) in a finally, so the caller's session is left as it was.
-    ("sql_surface.py", "sql_scripting_battery"),
+    ("plans/sql_surface.py", "sql_scripting_battery"),
+    # nanosAsLong: events.parquet is TIMESTAMP(NANOS), and a read on the
+    # driver's vanilla session needs the flag when the scan executes, after
+    # the loader has returned, so it cannot be restored on return.
+    ("sources/tables.py", "load_table"),
+    ("streaming/ops.py", "read_events_stream"),
+    # Python data-source filter pushdown is read when the optimizer plans
+    # the scan, after registration returns.
+    ("sources/kvscan.py", "register_kv_source"),
+    # The RocksDB state-store provider is read when the stateful stream
+    # starts, after the builder returns.
+    ("streaming/tws.py", "running_user_stats"),
+    # Sets the stream's shuffle partitions and restores the prior value
+    # once the stream has run.
+    ("streaming/ops.py", "_run_to_completion"),
 }
 
 
-def test_builders_do_not_write_session_conf():
-    """A builder leaves the caller's session conf alone: no module under
-    plans/ calls ``<x>.conf.set`` or ``<x>.conf.unset`` outside the
-    allowlist. A conf write in a builder changes every later query in the
-    session (a pinned time zone, for one)."""
-    plans = Path(__file__).resolve().parent.parent / "batch_public_spark" / "plans"
-    modules = sorted(plans.glob("*.py"))
-    assert len(modules) > 5, plans
-    found = []
+def _package_calls(attrs: tuple[str, ...]):
+    """Yield (module path relative to the package, top-level owner name,
+    line, receiver node ``<x>``) for every ``<x>.<attr>(...)`` call in
+    batch_public_spark/ whose attribute is in ``attrs``."""
+    root = Path(__file__).resolve().parent.parent / "batch_public_spark"
+    modules = sorted(root.rglob("*.py"))
+    assert len(modules) > 20, root
     for path in modules:
+        rel = path.relative_to(root).as_posix()
         for top in ast.parse(path.read_text()).body:
             owner = getattr(top, "name", "<module>")
             for node in ast.walk(top):
                 if (
                     isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
-                    and node.func.attr in ("set", "unset")
-                    and isinstance(node.func.value, ast.Attribute)
-                    and node.func.value.attr == "conf"
-                    and (path.name, owner) not in CONF_WRITE_ALLOWLIST
+                    and node.func.attr in attrs
                 ):
-                    found.append((path.name, owner, node.lineno))
-    assert not found, f"session conf written while building a plan: {sorted(set(found))}"
+                    yield rel, owner, node.lineno, node.func.value
+
+
+def test_builders_do_not_write_session_conf():
+    """Package code leaves the caller's session conf alone: no module under
+    batch_public_spark/ calls ``<x>.conf.set`` or ``<x>.conf.unset``
+    outside the allowlist, and every allowlisted site still writes. A
+    conf write in a builder changes every later query in the session (a
+    pinned time zone, for one)."""
+    found, matched = [], set()
+    for rel, owner, line, recv in _package_calls(("set", "unset")):
+        if not (isinstance(recv, ast.Attribute) and recv.attr == "conf"):
+            continue
+        if (rel, owner) in CONF_WRITE_ALLOWLIST:
+            matched.add((rel, owner))
+        else:
+            found.append((rel, owner, line))
+    assert not found, f"session conf written outside the allowlist: {sorted(set(found))}"
+    stale = CONF_WRITE_ALLOWLIST - matched
+    assert not stale, f"CONF_WRITE_ALLOWLIST entries that no longer write conf: {sorted(stale)}"
+
+
+def test_cut_is_the_only_local_checkpoint():
+    """``sources.tables.cut`` is the one lineage cut: no other code in the
+    package calls ``localCheckpoint``, so the cluster-scale swap the
+    cut's docstring describes is an edit to one function."""
+    sites = [site[:3] for site in _package_calls(("localCheckpoint",))]
+    assert [site[:2] for site in sites] == [("sources/tables.py", "cut")], sites
 
 
 def test_registry_plans_are_scale_clean(spark):
     bad, warns, built = [], [], 0
+    fired, warn_fired = set(), set()
     for name, spec in QUERIES.items():
         df = spec.fn(spark, SF_DIR)
         if df.isStreaming:
             continue
         built += 1
         for f in lint_plan(df):
+            fired.add((name, f.kind))
             if (name, f.kind) not in ALLOWLIST:
                 bad.append((name, f.kind, f.detail[:90]))
         for f in lint_plan_warnings(df):
+            warn_fired.add((name, f.kind))
             if (name, f.kind) not in WARN_ALLOWLIST:
                 warns.append((name, f.kind, f.detail[:90]))
     assert built > 200  # the sweep really covered the registry
     assert not bad, f"scale antipatterns in {len(bad)} plans: {bad}"
     assert not warns, f"unacknowledged warn-level findings in {len(warns)} plans: {warns}"
+    stale = sorted((ALLOWLIST - fired) | (WARN_ALLOWLIST - warn_fired))
+    assert not stale, f"allowlist entries whose finding no longer fires: {stale}"
 
 
 # --- warn-rule fixtures: each rule must catch its deliberately-bad shape
@@ -165,18 +207,13 @@ def test_registry_plans_are_scale_clean(spark):
 def test_warn_python_rdd_scan(spark):
     bad = spark.createDataFrame([(1, "a"), (2, "b")], "id int, s string")
     assert any(f.kind == "python-rdd-scan" for f in lint_plan_warnings(bad))
-    from batch_public_spark.sources.tables import inline_rows
+    from batch_public_spark.sources.tables import cut, inline_rows
 
     good = inline_rows(spark, "id int, s string", [(1, "a"), (2, "b")])
     assert not any(f.kind == "python-rdd-scan" for f in lint_plan_warnings(good))
-    # localCheckpoint cuts also print as `Scan ExistingRDD` but are a
+    # Lineage cuts also print as `Scan ExistingRDD` but are a
     # deliberate idiom — provenance-based detection must NOT flag them.
-    ck = (
-        spark.range(100)
-        .groupBy((F.col("id") % 3).alias("g"))
-        .count()
-        .localCheckpoint(eager=False)
-    )
+    ck = cut(spark.range(100).groupBy((F.col("id") % 3).alias("g")).count())
     assert not any(f.kind == "python-rdd-scan" for f in lint_plan_warnings(ck))
 
 
