@@ -15,9 +15,10 @@ dates, engine-portable regex classes only.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.window import WindowSpec
 
 from batch_public_spark.operators.graph import (
     copresence_edges,
@@ -1435,6 +1436,21 @@ def agg_approx_percentile_accuracy(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
+def _doc_tf(d: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The lowercased token stream ``(doc_id, term)`` of ``d`` and its
+    per-doc term-frequency table ``(doc_id, term, tf)``, cut once so every
+    consumer of the postings reuses one aggregation."""
+    tok = d.select(
+        "doc_id", F.explode(F.transform(tokens(F.col("text")), F.lower)).alias("term")
+    )
+    tf = (
+        tok.groupBy("doc_id", "term")
+        .agg(F.count("*").cast("double").alias("tf"))
+        .transform(cut)
+    )
+    return tok, tf
+
+
 @query(
     "llmops_bm25_topk",
     oracle=r"""
@@ -1478,20 +1494,13 @@ def llmops_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring touches only postings of query terms (the equi-join IS the
     inverted-index probe); top-10 is TakeOrdered, never a global sort."""
     d = t(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.transform(tokens(F.col("text")), F.lower)).alias("term")
-    )
     # The tf postings feed two differently-keyed consumers (df count by
     # term, scoring join by doc) which exchange reuse cannot dedupe, and
     # doc length is exactly the per-doc SUM of tf (same token count) —
-    # so ONE aggregated postings frame, cut once, subsumes what used to
-    # be three tokenize+explode passes. Counts are exact either way;
-    # row-identical, warm ~1.1 -> ~1.0 s at sf0.1 (cold 4.1 -> 1.5).
-    tf = (
-        tok.groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-        .transform(cut)
-    )
+    # so ONE aggregated postings frame subsumes what used to be three
+    # tokenize+explode passes. Counts are exact either way; row-identical,
+    # warm ~1.1 -> ~1.0 s at sf0.1 (cold 4.1 -> 1.5).
+    _, tf = _doc_tf(d)
     dlen = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dlen.agg(
         F.count("*").cast("double").alias("n_docs"),
@@ -2198,6 +2207,22 @@ def llmops_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _week_offset() -> Column:
+    """Whole ISO weeks from an event's ``cohort`` week to its ``ts`` week,
+    the column of both weekly cohort matrices."""
+    return (
+        (
+            F.datediff(
+                F.date_trunc("week", F.col("ts")).cast("date"),
+                F.col("cohort").cast("date"),
+            )
+            / 7
+        )
+        .cast("bigint")
+        .alias("week_offset")
+    )
+
+
 @query(
     "events_cohort_retention_matrix",
     oracle="""
@@ -2234,19 +2259,7 @@ def events_cohort_retention_matrix(spark: SparkSession, sf_dir: str) -> DataFram
     )
     act = (
         e.join(firstw, "user_id")
-        .select(
-            "user_id",
-            "cohort",
-            (
-                F.datediff(
-                    F.date_trunc("week", F.col("ts")).cast("date"),
-                    F.col("cohort").cast("date"),
-                )
-                / 7
-            )
-            .cast("bigint")
-            .alias("week_offset"),
-        )
+        .select("user_id", "cohort", _week_offset())
         .distinct()
     )
     return act.groupBy(
@@ -3786,6 +3799,54 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _span_risk_grid(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, WindowSpec]:
+    """The survival family's risk grid: one span rollup per (user,
+    event_type) touches the heavy table, then a +1 at span start / −1 the
+    day after span end interval sweep, grouped per day and cumulated over
+    the bounded calendar grid (the events_max_concurrency discipline), so
+    every window runs on the ≤|days| grid under bounded_window_key.
+    Returns ``(d, at_risk, churned)`` — a stream churns on its last day —
+    and the running window ``wd`` the callers accumulate over."""
+    ev = t(spark, sf_dir, "events")
+    span = ev.groupBy("user_id", "event_type").agg(
+        F.date_trunc("day", F.min("ts")).alias("f"),
+        F.date_trunc("day", F.max("ts")).alias("l"),
+    )
+    bounds = span.agg(F.min("f").alias("lo"), F.max("l").alias("hi"))
+    days = bounds.select(
+        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 DAY"))).alias("d")
+    )
+    deltas = (
+        span.select(F.col("f").alias("d"), F.lit(1).alias("delta"))
+        .unionAll(
+            span.select(
+                (F.col("l") + F.expr("INTERVAL 1 DAY")).alias("d"),
+                F.lit(-1).alias("delta"),
+            )
+        )
+        .groupBy("d")
+        .agg(F.sum("delta").alias("net"))
+    )
+    churns = span.groupBy(F.col("l").alias("d")).agg(
+        F.count("*").cast("bigint").alias("churned")
+    )
+    wd = (
+        W.partitionBy(bounded_window_key(F.unix_timestamp("d").cast("bigint")))
+        .orderBy("d")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    base = (
+        days.join(deltas, "d", "left")
+        .join(churns, "d", "left")
+        .select(
+            "d",
+            F.sum(F.coalesce(F.col("net"), F.lit(0))).over(wd).cast("bigint").alias("at_risk"),
+            F.coalesce(F.col("churned"), F.lit(0)).cast("bigint").alias("churned"),
+        )
+    )
+    return base, wd
+
+
 @query(
     "events_survival_curve",
     oracle="""
@@ -3837,50 +3898,9 @@ def events_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-vacuous: 14 of 30 days carry churn, hazard spans 0.002 → 1.0.
 
     Spark-first: the at-risk count is NOT a per-day correlated count —
-    it is an interval sweep: +1 at span start, −1 the day after span
-    end, grouped per day and cumulated over the bounded calendar grid
-    (the events_max_concurrency discipline), so the heavy table is
-    touched once and every window runs on the ≤|days| grid under
-    bounded_window_key."""
-    ev = t(spark, sf_dir, "events")
-    span = ev.groupBy("user_id", "event_type").agg(
-        F.date_trunc("day", F.min("ts")).alias("f"),
-        F.date_trunc("day", F.max("ts")).alias("l"),
-    )
-    bounds = span.agg(
-        F.min("f").alias("lo"), F.max("l").alias("hi")
-    )
-    days = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 DAY"))).alias("d")
-    )
-    deltas = (
-        span.select(F.col("f").alias("d"), F.lit(1).alias("delta"))
-        .unionAll(
-            span.select(
-                (F.col("l") + F.expr("INTERVAL 1 DAY")).alias("d"),
-                F.lit(-1).alias("delta"),
-            )
-        )
-        .groupBy("d")
-        .agg(F.sum("delta").alias("net"))
-    )
-    churns = span.groupBy(F.col("l").alias("d")).agg(
-        F.count("*").cast("bigint").alias("churned")
-    )
-    wd = (
-        W.partitionBy(bounded_window_key(F.unix_timestamp("d").cast("bigint")))
-        .orderBy("d")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    base = (
-        days.join(deltas, "d", "left")
-        .join(churns, "d", "left")
-        .select(
-            "d",
-            F.sum(F.coalesce(F.col("net"), F.lit(0))).over(wd).cast("bigint").alias("at_risk"),
-            F.coalesce(F.col("churned"), F.lit(0)).cast("bigint").alias("churned"),
-        )
-    )
+    it is _span_risk_grid's interval sweep, so the heavy table is touched
+    once."""
+    base, wd = _span_risk_grid(spark, sf_dir)
     terms = base.withColumn(
         "lt",
         F.when(
@@ -3940,8 +3960,8 @@ def events_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NELSON-AALEN cumulative-hazard estimator (Nelson 1972; Aalen
-    1978) — the third estimator of the survival family, over the exact
-    span grid events_survival_curve (Kaplan-Meier) uses: H(t) =
+    1978) — the third estimator of the survival family, over the
+    _span_risk_grid events_survival_curve (Kaplan-Meier) uses: H(t) =
     sum_{d<=t} churned_d/at_risk_d with the Poisson-type variance
     sum d_j/n_j^2 (se = its sqrt). KM and NA answer the same question
     through different algebra — KM multiplies survival factors, NA adds
@@ -3956,51 +3976,8 @@ def events_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact integers from the interval sweep; each day's h and v
     terms are one double division quantized round-10 into
     DECIMAL(28,10), so the cumulative sums are exact decimal and only
-    the final round-6 emission (and IEEE sqrt) run in doubles.
-
-    Spark-first: identical plan shape to events_survival_curve — one
-    span rollup touches the heavy table, +1/-1 interval sweep, every
-    window on the bounded calendar grid under bounded_window_key."""
-    ev = t(spark, sf_dir, "events")
-    span = ev.groupBy("user_id", "event_type").agg(
-        F.date_trunc("day", F.min("ts")).alias("f"),
-        F.date_trunc("day", F.max("ts")).alias("l"),
-    )
-    bounds = span.agg(F.min("f").alias("lo"), F.max("l").alias("hi"))
-    days = bounds.select(
-        F.explode(F.sequence("lo", "hi", F.expr("INTERVAL 1 DAY"))).alias("d")
-    )
-    deltas = (
-        span.select(F.col("f").alias("d"), F.lit(1).alias("delta"))
-        .unionAll(
-            span.select(
-                (F.col("l") + F.expr("INTERVAL 1 DAY")).alias("d"),
-                F.lit(-1).alias("delta"),
-            )
-        )
-        .groupBy("d")
-        .agg(F.sum("delta").alias("net"))
-    )
-    churns = span.groupBy(F.col("l").alias("d")).agg(
-        F.count("*").cast("bigint").alias("churned")
-    )
-    wd = (
-        W.partitionBy(bounded_window_key(F.unix_timestamp("d").cast("bigint")))
-        .orderBy("d")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    base = (
-        days.join(deltas, "d", "left")
-        .join(churns, "d", "left")
-        .select(
-            "d",
-            F.sum(F.coalesce(F.col("net"), F.lit(0)))
-            .over(wd)
-            .cast("bigint")
-            .alias("at_risk"),
-            F.coalesce(F.col("churned"), F.lit(0)).cast("bigint").alias("churned"),
-        )
-    )
+    the final round-6 emission (and IEEE sqrt) run in doubles."""
+    base, wd = _span_risk_grid(spark, sf_dir)
     h = F.round(
         F.coalesce(
             F.try_divide(F.col("churned") * F.lit(1.0), F.nullif(F.col("at_risk"), F.lit(0))),
@@ -4246,6 +4223,44 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scored.orderBy(F.desc("adamic_adar"), "x", "y").limit(25)
 
 
+def _holt_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The Holt linear-trend fold of events_holt_linear and
+    events_forecast_backtest: one shuffle builds the |days|-bounded daily
+    count grid, collected date-sorted into one array ``s`` of (day, y),
+    and the higher-order ``aggregate`` folds it in-row into ``hw``, the
+    per-day (l, b) state array (α=0.3, β=0.2, l_1=y_1, b_1=0; constants
+    spelled ``0.3D`` so the fold runs in pure binary doubles)."""
+    ev = t(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day")
+    ).agg(F.count("*").cast("bigint").alias("y"))
+    series = daily.agg(
+        F.array_sort(F.collect_list(F.struct("day", "y"))).alias("s")
+    )
+    # Fold: acc is array<struct<l,b>>; first element seeds (y, 0.0), later
+    # steps read the previous state with element_at(acc, -1). The new level
+    # expression is repeated inside the trend update (same IEEE ops as the
+    # oracle's textual recomputation).
+    return series.select(
+        "s",
+        F.expr(
+            """
+            aggregate(
+              s,
+              cast(array() as array<struct<l: double, b: double>>),
+              (acc, e) -> CASE WHEN size(acc) = 0
+                THEN array(struct(e.y * 1.0D AS l, 0.0D AS b))
+                ELSE array_append(acc, struct(
+                  0.3D * e.y + 0.7D * (element_at(acc, -1).l + element_at(acc, -1).b) AS l,
+                  0.2D * ((0.3D * e.y + 0.7D * (element_at(acc, -1).l + element_at(acc, -1).b))
+                         - element_at(acc, -1).l)
+                    + 0.8D * element_at(acc, -1).b AS b))
+              END)
+            """
+        ).alias("hw"),
+    )
+
+
 @query(
     "events_holt_linear",
     oracle="""
@@ -4292,41 +4307,13 @@ def events_holt_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-exact against a pure-Python reference in
     tests/test_r8_properties.py.
 
-    Spark-first: one shuffle builds the |days|-bounded daily grid; the
-    fold then runs in-row on a single array (the calendar is bounded —
-    the MinHash-signature fold discipline). The per-step state is
+    Spark-first: _holt_fold builds the |days|-bounded daily grid and runs
+    the fold in-row on a single array (the calendar is bounded — the
+    MinHash-signature fold discipline). The per-step state is
     appended to an array accumulator so every day's (level, trend) is
     emitted, then posexploded back to rows. At 100 TB the daily grid is
     still tiny; the heavy table is touched exactly once."""
-    ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day")
-    ).agg(F.count("*").cast("bigint").alias("y"))
-    series = daily.agg(
-        F.array_sort(F.collect_list(F.struct("day", "y"))).alias("s")
-    )
-    # Fold: acc is array<struct<l,b>>; first element seeds (y, 0.0), later
-    # steps read the previous state with element_at(acc, -1). The new level
-    # expression is repeated inside the trend update (same IEEE ops as the
-    # oracle's textual recomputation).
-    folded = series.select(
-        "s",
-        F.expr(
-            """
-            aggregate(
-              s,
-              cast(array() as array<struct<l: double, b: double>>),
-              (acc, e) -> CASE WHEN size(acc) = 0
-                THEN array(struct(e.y * 1.0D AS l, 0.0D AS b))
-                ELSE array_append(acc, struct(
-                  0.3D * e.y + 0.7D * (element_at(acc, -1).l + element_at(acc, -1).b) AS l,
-                  0.2D * ((0.3D * e.y + 0.7D * (element_at(acc, -1).l + element_at(acc, -1).b))
-                         - element_at(acc, -1).l)
-                    + 0.8D * element_at(acc, -1).b AS b))
-              END)
-            """
-        ).alias("hw"),
-    )
+    folded = _holt_fold(spark, sf_dir)
     ex = folded.select(
         F.posexplode(F.arrays_zip("s", "hw")).alias("i", "z")
     )
@@ -4684,14 +4671,7 @@ def llmops_hybrid_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise runs on the 1-task fixture scan — and the lazy checkpoints
     # materialize it at build time under AQE (guide §2.5); no-op at scale.
     d = spread(t(spark, sf_dir, "documents").select("doc_id", "text"))
-    tok = d.select(
-        "doc_id", F.explode(F.transform(tokens(F.col("text")), F.lower)).alias("term")
-    )
-    tf = (
-        tok.groupBy("doc_id", "term")
-        .agg(F.count("*").cast("double").alias("tf"))
-        .transform(cut)
-    )
+    tok, tf = _doc_tf(d)
     dlen = (
         tok.groupBy("doc_id")
         .agg(F.count("*").cast("double").alias("dl"))
@@ -4865,34 +4845,10 @@ def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     KL/entropy discipline), because unlike the fold itself the SUM of
     errors has no defined order.
 
-    Spark-first: same single-shuffle daily grid; the backtest join is
-    arrays_zip against the grid shifted by one — in-row, no second
-    exchange."""
-    ev = t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias("day")
-    ).agg(F.count("*").cast("bigint").alias("y"))
-    series = daily.agg(
-        F.array_sort(F.collect_list(F.struct("day", "y"))).alias("s")
-    )
-    folded = series.select(
-        "s",
-        F.expr(
-            """
-            aggregate(
-              s,
-              cast(array() as array<struct<l: double, b: double>>),
-              (acc, e) -> CASE WHEN size(acc) = 0
-                THEN array(struct(e.y * 1.0D AS l, 0.0D AS b))
-                ELSE array_append(acc, struct(
-                  0.3D * e.y + 0.7D * (element_at(acc, -1).l + element_at(acc, -1).b) AS l,
-                  0.2D * ((0.3D * e.y + 0.7D * (element_at(acc, -1).l + element_at(acc, -1).b))
-                         - element_at(acc, -1).l)
-                    + 0.8D * element_at(acc, -1).b AS b))
-              END)
-            """
-        ).alias("hw"),
-    )
+    Spark-first: the single-shuffle daily grid of _holt_fold; the
+    backtest join is arrays_zip against the grid shifted by one —
+    in-row, no second exchange."""
+    folded = _holt_fold(spark, sf_dir)
     # forecast at index i (1-based) predicts actual at i+1. The
     # size >= 2 filter is empty-input safety (F7): sequence(1, size-1)
     # DESCENDS when size(s) < 2 and element_at would probe an empty
@@ -5008,18 +4964,7 @@ def events_cohort_ltv_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell = (
         e.filter(F.col("event_type") == "purchase")
         .join(firstw, "user_id")
-        .groupBy(
-            "cohort",
-            (
-                F.datediff(
-                    F.date_trunc("week", F.col("ts")).cast("date"),
-                    F.col("cohort").cast("date"),
-                )
-                / 7
-            )
-            .cast("bigint")
-            .alias("week_offset"),
-        )
+        .groupBy("cohort", _week_offset())
         .agg(
             F.sum(F.round(F.col("value") * 100, 0).cast("bigint"))
             .cast("bigint")
@@ -6742,77 +6687,15 @@ def agg_bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LOGRANK_ZCRIT = "1.959964"
 
 
-@query(
-    "events_logrank_test",
-    oracle=f"""
-    WITH span AS (
-      SELECT CAST(user_id % 2 AS BIGINT) AS cohort,
-             date_trunc('day', min(ts)) AS f, date_trunc('day', max(ts)) AS l
-      FROM events GROUP BY user_id % 2, user_id, event_type
-    ), cd AS (SELECT DISTINCT l AS d FROM span),
-    base AS (
-      SELECT d,
-        (SELECT CAST(count(*) AS BIGINT) FROM span
-          WHERE cohort = 0 AND f <= d AND l >= d) AS n1,
-        (SELECT CAST(count(*) AS BIGINT) FROM span
-          WHERE cohort = 1 AND f <= d AND l >= d) AS n2,
-        (SELECT CAST(count(*) AS BIGINT) FROM span
-          WHERE cohort = 0 AND l = d) AS d1,
-        (SELECT CAST(count(*) AS BIGINT) FROM span
-          WHERE cohort = 1 AND l = d) AS d2
-      FROM cd
-    ), terms AS (
-      SELECT d, n1, n2, d1, d2,
-        CAST(round(d1 - ((d1 + d2) * n1) * 1.0 / (n1 + n2), 10)
-             AS DECIMAL(28,10)) AS oe,
-        CAST(round(CASE WHEN n1 + n2 > 1
-                        THEN ((d1 + d2) * n1 * n2 * (n1 + n2 - (d1 + d2))) * 1.0
-                             / ((n1 + n2) * (n1 + n2) * (n1 + n2 - 1))
-                        ELSE 0.0 END, 10) AS DECIMAL(28,10)) AS v
-      FROM base WHERE d1 + d2 > 0
-    )
-    SELECT CAST(count(*) AS BIGINT) AS n_event_days,
-           CAST(sum(d1) AS BIGINT) AS o1,
-           CAST(sum(d2) AS BIGINT) AS o2,
-           round(CAST(sum(d1) AS DOUBLE) - CAST(sum(oe) AS DOUBLE), 6) AS e1,
-           round(CAST(sum(oe) AS DOUBLE), 6) AS oe_sum,
-           round(CAST(sum(v) AS DOUBLE), 6) AS var_sum,
-           round(CAST(sum(oe) AS DOUBLE) / sqrt(CAST(sum(v) AS DOUBLE)), 6)
-             AS z_stat,
-           abs(CAST(sum(oe) AS DOUBLE) / sqrt(CAST(sum(v) AS DOUBLE)))
-             > {_LOGRANK_ZCRIT} AS reject_null
-    FROM terms
-    """,
-)
-def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LOG-RANK TEST (Mantel 1966) between two cohorts' survival curves —
-    the significance test that completes events_survival_curve's
-    Kaplan-Meier point estimate: split the per-(user, event_type)
-    activity streams into cohorts by user_id parity (the deterministic
-    stand-in for treatment/control), and at every day with any churn
-    compare cohort 1's observed churn d1 against its hypergeometric
-    expectation e1 = dt*n1/n under the null that both cohorts share one
-    hazard; z = sum(d1-e1)/sqrt(sum v) with the per-day hypergeometric
-    variance v = dt*n1*n2*(n-dt)/(n^2*(n-1)). The A/B question a
-    retention team actually asks ("did the treatment change churn?"),
-    asked of the same spans the survival curve plots.
-
-    Parity discipline: at-risk and churn counts are exact integers, so
-    each day's e1 and v are a single double division of exact bigint
-    products (identical operands, identical result in both engines);
-    per-day terms are quantized round-10 into DECIMAL(28,10) and summed
-    exactly (the survival-curve ln-term discipline — accumulation order
-    cannot drift); sqrt is IEEE-correctly-rounded and the critical value
-    is the same double literal, so `reject_null` compares identical
-    doubles.
-
-    Spark-first: the per-day at-risk counts are NOT correlated
-    subqueries (that is oracle-clarity form) — they are ONE interval
-    sweep: +1 at span start, -1 the day after span end, zero-filled at
-    churn days, cumulated per cohort over the bounded calendar grid
-    (the events_survival_curve / events_max_concurrency discipline).
-    The heavy table is touched once for the span rollup; every later
-    stage runs on the <= 2x|days| grid."""
+def _cohort_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The two-cohort risk sweep of the log-rank and Cox builders: spans
+    per (user, event_type) split by user_id parity, +1 at span start, −1
+    the day after span end, zero-filled at churn days and cumulated per
+    cohort over the bounded churn-day grid (the events_survival_curve /
+    events_max_concurrency discipline). The heavy table is touched once
+    for the span rollup; every later stage runs on the <= 2x|days| grid.
+    Returns ``(d, n1, n2, d1, d2)`` per churn day: cohort 0 and 1 at-risk
+    and churn counts, exact bigints."""
     ev = t(spark, sf_dir, "events")
     span = ev.groupBy(
         (F.col("user_id") % 2).cast("bigint").alias("cohort"),
@@ -6880,6 +6763,77 @@ def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("d2"),
     )
+    return base
+
+
+@query(
+    "events_logrank_test",
+    oracle=f"""
+    WITH span AS (
+      SELECT CAST(user_id % 2 AS BIGINT) AS cohort,
+             date_trunc('day', min(ts)) AS f, date_trunc('day', max(ts)) AS l
+      FROM events GROUP BY user_id % 2, user_id, event_type
+    ), cd AS (SELECT DISTINCT l AS d FROM span),
+    base AS (
+      SELECT d,
+        (SELECT CAST(count(*) AS BIGINT) FROM span
+          WHERE cohort = 0 AND f <= d AND l >= d) AS n1,
+        (SELECT CAST(count(*) AS BIGINT) FROM span
+          WHERE cohort = 1 AND f <= d AND l >= d) AS n2,
+        (SELECT CAST(count(*) AS BIGINT) FROM span
+          WHERE cohort = 0 AND l = d) AS d1,
+        (SELECT CAST(count(*) AS BIGINT) FROM span
+          WHERE cohort = 1 AND l = d) AS d2
+      FROM cd
+    ), terms AS (
+      SELECT d, n1, n2, d1, d2,
+        CAST(round(d1 - ((d1 + d2) * n1) * 1.0 / (n1 + n2), 10)
+             AS DECIMAL(28,10)) AS oe,
+        CAST(round(CASE WHEN n1 + n2 > 1
+                        THEN ((d1 + d2) * n1 * n2 * (n1 + n2 - (d1 + d2))) * 1.0
+                             / ((n1 + n2) * (n1 + n2) * (n1 + n2 - 1))
+                        ELSE 0.0 END, 10) AS DECIMAL(28,10)) AS v
+      FROM base WHERE d1 + d2 > 0
+    )
+    SELECT CAST(count(*) AS BIGINT) AS n_event_days,
+           CAST(sum(d1) AS BIGINT) AS o1,
+           CAST(sum(d2) AS BIGINT) AS o2,
+           round(CAST(sum(d1) AS DOUBLE) - CAST(sum(oe) AS DOUBLE), 6) AS e1,
+           round(CAST(sum(oe) AS DOUBLE), 6) AS oe_sum,
+           round(CAST(sum(v) AS DOUBLE), 6) AS var_sum,
+           round(CAST(sum(oe) AS DOUBLE) / sqrt(CAST(sum(v) AS DOUBLE)), 6)
+             AS z_stat,
+           abs(CAST(sum(oe) AS DOUBLE) / sqrt(CAST(sum(v) AS DOUBLE)))
+             > {_LOGRANK_ZCRIT} AS reject_null
+    FROM terms
+    """,
+)
+def events_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LOG-RANK TEST (Mantel 1966) between two cohorts' survival curves —
+    the significance test that completes events_survival_curve's
+    Kaplan-Meier point estimate: split the per-(user, event_type)
+    activity streams into cohorts by user_id parity (the deterministic
+    stand-in for treatment/control), and at every day with any churn
+    compare cohort 1's observed churn d1 against its hypergeometric
+    expectation e1 = dt*n1/n under the null that both cohorts share one
+    hazard; z = sum(d1-e1)/sqrt(sum v) with the per-day hypergeometric
+    variance v = dt*n1*n2*(n-dt)/(n^2*(n-1)). The A/B question a
+    retention team actually asks ("did the treatment change churn?"),
+    asked of the same spans the survival curve plots.
+
+    Parity discipline: at-risk and churn counts are exact integers, so
+    each day's e1 and v are a single double division of exact bigint
+    products (identical operands, identical result in both engines);
+    per-day terms are quantized round-10 into DECIMAL(28,10) and summed
+    exactly (the survival-curve ln-term discipline — accumulation order
+    cannot drift); sqrt is IEEE-correctly-rounded and the critical value
+    is the same double literal, so `reject_null` compares identical
+    doubles.
+
+    Spark-first: the per-day at-risk counts are NOT correlated
+    subqueries (that is oracle-clarity form) — they are ONE interval
+    sweep, _cohort_sweep."""
+    base = _cohort_sweep(spark, sf_dir)
     n = F.col("n1") + F.col("n2")
     dt = F.col("d1") + F.col("d2")
     oe = F.round(
@@ -6983,79 +6937,11 @@ def events_cox_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact decimal sums via identical double ops, nullif-guarded in both
     engines so degenerate slices yield NULL, not DIVIDE_BY_ZERO.
 
-    Spark-first: reuses the log-rank's interval sweep verbatim — +1 at
-    span start, -1 the day after span end, per-cohort cumulative sums
-    on the bounded churn-day grid; the heavy table is touched once for
-    the span rollup, and the Newton step is arithmetic on a one-row
-    aggregate. A k-covariate Cox would carry k+k^2 running sums through
-    the same sweep and invert the k x k information on the driver."""
-    ev = t(spark, sf_dir, "events")
-    span = ev.groupBy(
-        (F.col("user_id") % 2).cast("bigint").alias("cohort"),
-        "user_id",
-        "event_type",
-    ).agg(
-        F.date_trunc("day", F.min("ts")).alias("f"),
-        F.date_trunc("day", F.max("ts")).alias("l"),
-    )
-    deltas = (
-        span.select("cohort", F.col("f").alias("d"), F.lit(1).alias("delta"))
-        .unionAll(
-            span.select(
-                "cohort",
-                (F.col("l") + F.expr("INTERVAL 1 DAY")).alias("d"),
-                F.lit(-1).alias("delta"),
-            )
-        )
-        .unionAll(
-            span.select(F.col("l").alias("d"))
-            .distinct()
-            .select(F.explode(F.array(F.lit(0), F.lit(1))).alias("co"), "d")
-            .select(
-                F.col("co").cast("bigint").alias("cohort"),
-                "d",
-                F.lit(0).alias("delta"),
-            )
-        )
-        .groupBy("cohort", "d")
-        .agg(F.sum("delta").alias("net"))
-    )
-    wc = (
-        W.partitionBy("cohort")
-        .orderBy("d")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    at_risk = deltas.select(
-        "cohort", "d", F.sum("net").over(wc).cast("bigint").alias("n_risk")
-    )
-    churns = span.groupBy("cohort", F.col("l").alias("d")).agg(
-        F.count("*").cast("bigint").alias("churned")
-    )
-    churn_days = span.select(F.col("l").alias("d")).distinct()
-    grid = (
-        churn_days.join(at_risk, "d")
-        .join(churns, ["cohort", "d"], "left")
-        .select(
-            "d",
-            "cohort",
-            "n_risk",
-            F.coalesce(F.col("churned"), F.lit(0)).cast("bigint").alias("churned"),
-        )
-    )
-    base = grid.groupBy("d").agg(
-        F.sum(F.when(F.col("cohort") == 0, F.col("n_risk")).otherwise(0))
-        .cast("bigint")
-        .alias("n1"),
-        F.sum(F.when(F.col("cohort") == 1, F.col("n_risk")).otherwise(0))
-        .cast("bigint")
-        .alias("n2"),
-        F.sum(F.when(F.col("cohort") == 0, F.col("churned")).otherwise(0))
-        .cast("bigint")
-        .alias("d1"),
-        F.sum(F.when(F.col("cohort") == 1, F.col("churned")).otherwise(0))
-        .cast("bigint")
-        .alias("d2"),
-    )
+    Spark-first: the log-rank's interval sweep, _cohort_sweep; the
+    Newton step is arithmetic on a one-row aggregate. A k-covariate Cox
+    would carry k+k^2 running sums through the same sweep and invert the
+    k x k information on the driver."""
+    base = _cohort_sweep(spark, sf_dir)
     n = F.col("n1") + F.col("n2")
     dt = F.col("d1") + F.col("d2")
     u = F.round(

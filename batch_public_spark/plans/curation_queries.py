@@ -117,26 +117,9 @@ def llmops_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = d.withColumn("pos", pos).transform(cut)
     hist = d.filter(F.col("doc_id") % 10 < 7)
     inc = d.filter(F.col("doc_id") % 10 >= 7)
-
-    # History → one-row 4096-bit bitmap (array of 64 longs).
-    bitmap = (
-        hist.select(F.explode("pos").alias("p"))
-        .agg(F.collect_set("p").alias("hp"))
-        .select(
-            F.expr(
-                "transform(sequence(0, 63), w -> "
-                "aggregate(filter(hp, p -> p div 64 = w), 0L, "
-                "(acc, p) -> acc | shiftleft(1L, cast(p % 64 as int))))"
-            ).alias("bits")
-        )
-    )
-    probe = F.expr(
-        "forall(pos, p -> (element_at(bits, cast(p div 64 as int) + 1) "
-        "& shiftleft(1L, cast(p % 64 as int))) != 0)"
-    )
     return (
-        inc.crossJoin(F.broadcast(bitmap))
-        .withColumn("probably_seen", probe)
+        inc.crossJoin(F.broadcast(_pos_bitmap(hist)))
+        .withColumn("probably_seen", F.expr(_PROBE))
         .join(hist.select("ch").distinct().withColumn("_dup", F.lit(1)), "ch", "left")
         .select(
             "doc_id",

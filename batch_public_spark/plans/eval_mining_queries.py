@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -3196,10 +3196,8 @@ def agg_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     the MEDIAN of all pairwise slopes of the monthly-revenue series and
     the intercept the median residual under that slope — the classic
     29.3%-breakdown-point alternative to OLS (agg_ols_two_feature) whose
-    fit one wild month cannot move. The pairwise step is quadratic ONLY
-    in the month-grid size (80 months → 3 160 pairs per group at every
-    SF — grid-bounded, the events_max_concurrency discipline), never in
-    row count.
+    fit one wild month cannot move. The pairwise step is stats_queries'
+    _month_pairs, quadratic only in the month-grid size.
 
     Parity discipline: monthly revenue is exact BIGINT cents and the
     month key an exact integer index (year·12+month), so every pairwise
@@ -3207,31 +3205,15 @@ def agg_theil_sen_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolate identical multisets. Both median arguments route through
     the same rounded-at-emission-only rule.
 
-    Spark-first: one shuffle for the monthly rollup; the pair join and
-    both medians run on the tiny grid. The heavy scan is touched once;
-    at 100 TB the grid is still 80×5 rows."""
-    o = t(spark, sf_dir, "orders")
-    monthly = o.groupBy(
-        F.col("o_orderpriority").alias("prio"),
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-        .cast("bigint")
-        .alias("m"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
-    )
-    a = monthly.select("prio", F.col("m").alias("m1"), F.col("cents").alias("c1"))
-    b = monthly.select("prio", F.col("m").alias("m2"), F.col("cents").alias("c2"))
-    slopes = (
-        a.join(b, "prio")
-        .filter(F.col("m1") < F.col("m2"))
-        .select(
-            "prio",
-            ((F.col("c2") - F.col("c1")) * F.lit(1.0) / (F.col("m2") - F.col("m1"))).alias(
-                "slope"
-            ),
-        )
+    Spark-first: one shuffle for the monthly rollup (_monthly_cents);
+    the pair join and both medians run on the tiny grid. The heavy scan
+    is touched once; at 100 TB the grid is still 80×5 rows."""
+    from batch_public_spark.plans.stats_queries import _month_pairs, _monthly_cents
+
+    monthly = _monthly_cents(spark, sf_dir)
+    slopes = _month_pairs(monthly).select(
+        "prio",
+        ((F.col("c2") - F.col("c1")) * F.lit(1.0) / (F.col("m2") - F.col("m1"))).alias("slope"),
     )
     fit = slopes.groupBy("prio").agg(
         F.count("*").cast("bigint").alias("n_pairs"),
@@ -3454,6 +3436,85 @@ def agg_ratio_delta_method_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _conformal_rank() -> Column:
+    """The finite-sample split-conformal rank ⌈0.9·(n+1)⌉, capped at the
+    calibration size ``n`` — integer arithmetic in both engines."""
+    return F.least(F.ceil(0.9 * (F.col("n") + 1)).cast("bigint"), F.col("n"))
+
+
+def _realized_coverage(tst: DataFrame, q: DataFrame, qhat: str) -> DataFrame:
+    """The test-split audit of a conformal quantile: ``q``'s columns plus
+    n_test, n_covered and the realized coverage share of test scores at
+    or under ``q``'s column ``qhat``, per segment g. The coverage
+    booleans compare pre-round doubles."""
+    covered = F.sum(F.when(F.col("score") <= F.col(qhat), 1).otherwise(0))
+    return (
+        tst.join(q, "g")
+        .groupBy(*q.columns)
+        .agg(
+            F.count("*").cast("bigint").alias("n_test"),
+            covered.cast("bigint").alias("n_covered"),
+            F.round(covered.cast("double") / F.count("*"), 6).alias("coverage"),
+        )
+    )
+
+
+def _conformal_scores(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The marginal split-conformal frames of the exact and approx
+    builders: events split by the first md5 digit of event_id (train
+    1/2, calib 1/4, test 1/4) into segments g = user_id % 5, the
+    per-segment mean as the point model (an exact-decimal sum divided
+    once as double), and nonconformity |y − ŷ| on the calibration split
+    ``(g, event_id, score)`` and the test split ``(g, score)``."""
+    ev = t(spark, sf_dir, "events").select(
+        "event_id",
+        (F.col("user_id") % 5).alias("g"),
+        "value",
+        F.substring(F.md5(F.col("event_id").cast("string")), 1, 1).alias("d"),
+    # Three consumers (model, calib, test) each re-scan events and
+    # re-derive the md5 split digit: cut once so the hash projection
+    # runs one pass (the mondrian twin's measured lever; row-identical).
+    ).transform(cut)
+    model = (
+        ev.filter(F.col("d").between("0", "7"))
+        .groupBy("g")
+        .agg(
+            (
+                F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
+                / F.count("*")
+            ).alias("yhat")
+        )
+    )
+    calib = (
+        ev.filter(F.col("d").isin("8", "9", "a", "b"))
+        .join(model, "g")
+        .select("g", "event_id", F.abs(F.col("value") - F.col("yhat")).alias("score"))
+    )
+    tst = (
+        ev.filter(F.col("d").isin("c", "d", "e", "f"))
+        .join(model, "g")
+        .select("g", F.abs(F.col("value") - F.col("yhat")).alias("score"))
+    )
+    return calib, tst
+
+
+def _exact_qhat(calib: DataFrame) -> DataFrame:
+    """``(g, n_calib, qhat)``: the exact conformal quantile per segment,
+    the _conformal_rank-th smallest calibration score (ties broken by
+    event_id) under a window partitioned by segment."""
+    wg = W.partitionBy("g")
+    return (
+        calib.select(
+            "g",
+            "score",
+            F.row_number().over(wg.orderBy("score", "event_id")).alias("rn"),
+            F.count("*").over(wg).alias("n"),
+        )
+        .filter(F.col("rn") == _conformal_rank())
+        .select("g", F.col("n").cast("bigint").alias("n_calib"), F.col("score").alias("qhat"))
+    )
+
+
 @query(
     "eval_conformal_coverage",
     oracle="""
@@ -3511,59 +3572,14 @@ def eval_conformal_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic, and rounding happens only at emission — the
     coverage BOOLEANS compare pre-round doubles, so both engines count
     the same covered rows. Scale: one hash shuffle per split on the
-    segment key; the exact rank window partitions by segment (the 100 TB
-    swap is approx_percentile(score, 0.9) per segment — same plan
-    skeleton, sketch instead of sort; this exact form is its oracle
-    anchor, the ANN-family convention)."""
-    ev = t(spark, sf_dir, "events").select(
-        "event_id",
-        (F.col("user_id") % 5).alias("g"),
-        "value",
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 1).alias("d"),
-    # Three consumers (model, calib, test) each re-scan events and
-    # re-derive the md5 split digit: cut once so the hash projection
-    # runs one pass (the mondrian twin's measured lever; row-identical).
-    ).transform(cut)
-    model = (
-        ev.filter(F.col("d").between("0", "7"))
-        .groupBy("g")
-        .agg(
-            (
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-                / F.count("*")
-            ).alias("yhat")
-        )
-    )
-    calib = (
-        ev.filter(F.col("d").isin("8", "9", "a", "b"))
-        .join(model, "g")
-        .select("g", "event_id", F.abs(F.col("value") - F.col("yhat")).alias("score"))
-    )
-    wg = W.partitionBy("g")
-    ranked = calib.select(
-        "g",
-        "score",
-        F.row_number().over(wg.orderBy("score", "event_id")).alias("rn"),
-        F.count("*").over(wg).alias("n"),
-    )
-    q = ranked.filter(
-        F.col("rn")
-        == F.least(F.ceil(0.9 * (F.col("n") + 1)).cast("bigint"), F.col("n"))
-    ).select("g", F.col("n").cast("bigint").alias("n_calib"), F.col("score").alias("qhat"))
-    tst = (
-        ev.filter(F.col("d").isin("c", "d", "e", "f"))
-        .join(model, "g")
-        .select("g", F.abs(F.col("value") - F.col("yhat")).alias("score"))
-    )
-    covered = F.sum(F.when(F.col("score") <= F.col("qhat"), 1).otherwise(0))
+    segment key (_conformal_scores); the exact rank window (_exact_qhat)
+    partitions by segment (the 100 TB swap is approx_percentile(score,
+    0.9) per segment — same plan skeleton, sketch instead of sort; this
+    exact form is its oracle anchor, the ANN-family convention)."""
+    calib, tst = _conformal_scores(spark, sf_dir)
+    q = _exact_qhat(calib)
     return (
-        tst.join(q, "g")
-        .groupBy("g", "n_calib", "qhat")
-        .agg(
-            F.count("*").cast("bigint").alias("n_test"),
-            covered.cast("bigint").alias("n_covered"),
-            F.round(covered.cast("double") / F.count("*"), 6).alias("coverage"),
-        )
+        _realized_coverage(tst, q, "qhat")
         .select(
             "g",
             "n_calib",
@@ -3618,10 +3634,10 @@ def eval_conformal_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact query's docstring promises (eval_conformal_coverage computes
     q̂ as the exact ⌈0.9·(n+1)⌉-th order statistic, which needs the full
     sorted score set per segment; the GK sketch is the only
-    memory-bounded plan at 100 TB). Same splits, same model, same
-    scores; q̂_approx = approx_percentile(score, 0.9, 10000) per
-    segment, certified two ways against the exact anchor while the data
-    still fits:
+    memory-bounded plan at 100 TB). Same splits, model and scores
+    (_conformal_scores); q̂_approx = approx_percentile(score, 0.9,
+    10000) per segment, certified two ways against the exact anchor
+    while the data still fits:
 
     * ``approx_within_rank_band`` — q̂_approx lands inside the exact
       [p85, p95] calibration band: the RANK-error contract the sketch
@@ -3640,47 +3656,11 @@ def eval_conformal_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle per split on the segment key; the sketch is fixed-size
     mergeable map-side state — the exact variant's sort-window is the
     only piece this plan drops."""
-    ev = t(spark, sf_dir, "events").select(
-        "event_id",
-        (F.col("user_id") % 5).alias("g"),
-        "value",
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 1).alias("d"),
-    # Three consumers (model, calib, test) each re-scan events and
-    # re-derive the md5 split digit: cut once so the hash projection
-    # runs one pass (the mondrian twin's measured lever; row-identical).
-    ).transform(cut)
-    model = (
-        ev.filter(F.col("d").between("0", "7"))
-        .groupBy("g")
-        .agg(
-            (
-                F.sum(F.col("value").cast("decimal(18,6)")).cast("double")
-                / F.count("*")
-            ).alias("yhat")
-        )
-    )
-    calib = (
-        ev.filter(F.col("d").isin("8", "9", "a", "b"))
-        .join(model, "g")
-        .select("g", "event_id", F.abs(F.col("value") - F.col("yhat")).alias("score"))
-        # Two consumers (exact rank window, percentile-sketch agg): cut
-        # so the score projection materializes once.
-        .transform(cut)
-    )
-    wg = W.partitionBy("g")
-    exact_q = (
-        calib.select(
-            "g",
-            "score",
-            F.row_number().over(wg.orderBy("score", "event_id")).alias("rn"),
-            F.count("*").over(wg).alias("n"),
-        )
-        .filter(
-            F.col("rn")
-            == F.least(F.ceil(0.9 * (F.col("n") + 1)).cast("bigint"), F.col("n"))
-        )
-        .select("g", F.col("n").cast("bigint").alias("n_calib"), F.col("score").alias("qhat"))
-    )
+    calib, tst = _conformal_scores(spark, sf_dir)
+    # Two consumers (exact rank window, percentile-sketch agg): cut so
+    # the score projection materializes once.
+    calib = cut(calib)
+    exact_q = _exact_qhat(calib)
     # One percentile buffer for both exact band edges (array form): two
     # separate percentile() aggregates each build their own per-group
     # value-count map over the calibration scores. Bit-equal edges.
@@ -3696,11 +3676,6 @@ def eval_conformal_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at("band", 1).alias("band_lo"),
             F.element_at("band", 2).alias("band_hi"),
         )
-    )
-    tst = (
-        ev.filter(F.col("d").isin("c", "d", "e", "f"))
-        .join(model, "g")
-        .select("g", F.abs(F.col("value") - F.col("yhat")).alias("score"))
     )
     cov_exact = F.sum(F.when(F.col("score") <= F.col("qhat"), 1).otherwise(0)).cast(
         "double"
@@ -3819,9 +3794,9 @@ def eval_conformal_mondrian(spark: SparkSession, sf_dir: str) -> DataFrame:
     Mondrian taxonomy coarsens, it doesn't discard conditioning (Vovk's
     Mondrian taxonomies are nested partitions); and a global exact rank
     is an unpartitioned sort — the coarse quantile keeps every window
-    partitioned (lint-clean) at any scale. The exact ⌈0.9·(n+1)⌉ rank,
-    split digits, and trivial point model are shared verbatim with
-    eval_conformal_coverage, so the marginal gate and this conditional
+    partitioned (lint-clean) at any scale. The exact ⌈0.9·(n+1)⌉ rank
+    (_conformal_rank), split digits, and trivial point model are shared
+    with eval_conformal_coverage, so the marginal gate and this conditional
     one certify the same mechanism.
 
     Parity: same decimal-exact model mean, identical IEEE score
@@ -3872,7 +3847,7 @@ def eval_conformal_mondrian(spark: SparkSession, sf_dir: str) -> DataFrame:
         .transform(cut)
     )
     total = calib.agg(F.count("*").cast("bigint").alias("n_total"))
-    rank_at = F.least(F.ceil(0.9 * (F.col("n") + 1)).cast("bigint"), F.col("n"))
+    rank_at = _conformal_rank()
     wf = W.partitionBy("g")
     qf = (
         calib.select(
@@ -3922,18 +3897,8 @@ def eval_conformal_mondrian(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(model))
         .select("g", F.abs(F.col("value") - F.col("yhat")).alias("score"))
     )
-    covered = F.sum(F.when(F.col("score") <= F.col("qhat_used"), 1).otherwise(0))
     return (
-        tst.join(q, "g")
-        .groupBy(
-            "g", "gc", "n_calib", "used_fallback",
-            "qhat_group", "qhat_coarse", "qhat_used",
-        )
-        .agg(
-            F.count("*").cast("bigint").alias("n_test"),
-            covered.cast("bigint").alias("n_covered"),
-            F.round(covered.cast("double") / F.count("*"), 6).alias("coverage"),
-        )
+        _realized_coverage(tst, q, "qhat_used")
         .select(
             "g",
             "gc",
@@ -3946,6 +3911,45 @@ def eval_conformal_mondrian(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_covered",
             "coverage",
         )
+    )
+
+
+def _bandit_logs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The logged bandit traffic of the off-policy builders: action a =
+    event_type, reward r = value, context c = the 6-hour slot, split by
+    the first md5 digit of event_id into the learning logs ``(a, r, c,
+    d)`` (digits 0-7) and the disjoint evaluation logs ``(c, a, r)``."""
+    ev = t(spark, sf_dir, "events").select(
+        F.col("event_type").alias("a"),
+        F.col("value").alias("r"),
+        F.floor(F.hour("ts") / 6).cast("int").alias("c"),
+        F.substring(F.md5(F.col("event_id").cast("string")), 1, 1).alias("d"),
+    )
+    lrn = ev.filter(F.col("d").between("0", "7"))
+    b = ev.filter(F.col("d") >= "8").select("c", "a", "r")
+    return lrn, b
+
+
+def _policy_join(b: DataFrame, learn: DataFrame, na: DataFrame) -> DataFrame:
+    """Evaluation logs ``b`` joined to the greedy policy and its
+    propensity: π(c) is the argmax of ``learn``'s mean reward mr per
+    context (action-name tie-break; its mr kept as ``mr_pi``) and
+    p̂(π(c)|c) the share of ``na``'s per-(c, a) learning-log counts. Both
+    frames are grid-cardinality-bounded (|contexts| × |actions|)."""
+    wpi = W.partitionBy("c").orderBy(F.desc("mr"), "a")
+    pi = (
+        learn.withColumn("rn", F.row_number().over(wpi))
+        .filter(F.col("rn") == 1)
+        .select("c", F.col("a").alias("pi_action"), F.col("mr").alias("mr_pi"))
+    )
+    prop = na.select(
+        "c",
+        "a",
+        (F.col("na").cast("double") / F.sum("na").over(W.partitionBy("c"))).alias("p_a"),
+    )
+    return b.join(pi, "c").join(
+        prop.select(F.col("c").alias("pc"), F.col("a").alias("pa_action"), "p_a"),
+        (F.col("c") == F.col("pc")) & (F.col("pi_action") == F.col("pa_action")),
     )
 
 
@@ -4011,39 +4015,14 @@ def eval_ips_policy_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break; ips chains two double divisions on exact operands and
     rounds only at emission. Scale: two hash aggregations on (context,
     action) — a bounded grid — plus one pass over evaluation logs; the
-    policy/propensity frames joined to the log stream are
-    grid-cardinality-bounded (|contexts| × |actions|), the canonical
-    broadcast-dim shape, left to AQE."""
-    ev = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("a"),
-        F.col("value").alias("r"),
-        F.floor(F.hour("ts") / 6).cast("int").alias("c"),
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 1).alias("d"),
-    )
-    lrn = ev.filter(F.col("d").between("0", "7"))
+    policy/propensity frames _policy_join joins to the log stream are
+    the canonical broadcast-dim shape, left to AQE."""
+    lrn, b = _bandit_logs(spark, sf_dir)
     learn = lrn.groupBy("c", "a").agg(
         (F.sum(F.col("r").cast("decimal(18,6)")).cast("double") / F.count("*")).alias("mr")
     )
-    wpi = W.partitionBy("c").orderBy(F.desc("mr"), "a")
-    pi = (
-        learn.withColumn("rn", F.row_number().over(wpi))
-        .filter(F.col("rn") == 1)
-        .select("c", F.col("a").alias("pi_action"))
-    )
-    prop = (
-        lrn.groupBy("c", "a")
-        .agg(F.count("*").alias("na"))
-        .select(
-            "c",
-            "a",
-            (F.col("na").cast("double") / F.sum("na").over(W.partitionBy("c"))).alias("p_a"),
-        )
-    )
-    b = ev.filter(F.col("d") >= "8").select("c", "a", "r")
-    j = b.join(pi, "c").join(
-        prop.select(F.col("c").alias("pc"), F.col("a").alias("pa_action"), "p_a"),
-        (F.col("c") == F.col("pc")) & (F.col("pi_action") == F.col("pa_action")),
-    )
+    na = lrn.groupBy("c", "a").agg(F.count("*").alias("na"))
+    j = _policy_join(b, learn, na)
     match = F.when(F.col("a") == F.col("pi_action"), 1).otherwise(0)
     match_r = F.sum(F.when(F.col("a") == F.col("pi_action"), F.col("r").cast("decimal(18,6)")))
     return (
@@ -4077,13 +4056,7 @@ def _dr_policy_frame(
     multiplies the IPS correction term so the DR == DM identity under a
     zeroed correction is pinnable in tests without a second codepath
     (tests/test_r12_invariants.py)."""
-    ev = t(spark, sf_dir, "events").select(
-        F.col("event_type").alias("a"),
-        F.col("value").alias("r"),
-        F.floor(F.hour("ts") / 6).cast("int").alias("c"),
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 1).alias("d"),
-    )
-    lrn = ev.filter(F.col("d").between("0", "7"))
+    lrn, b = _bandit_logs(spark, sf_dir)
     # r15 single-pass fusion (guide §1.2): the reward model (mean r) and
     # the propensities (counts) were two separate aggregations over the
     # SAME groupBy(c, a) of the learning split — their partial-agg
@@ -4101,22 +4074,7 @@ def _dr_policy_frame(
         .transform(cut)
     )
     learn = g.select("c", "a", (F.col("sr").cast("double") / F.col("na")).alias("mr"))
-    wpi = W.partitionBy("c").orderBy(F.desc("mr"), "a")
-    pi = (
-        learn.withColumn("rn", F.row_number().over(wpi))
-        .filter(F.col("rn") == 1)
-        .select("c", F.col("a").alias("pi_action"), F.col("mr").alias("mr_pi"))
-    )
-    prop = g.select(
-        "c",
-        "a",
-        (F.col("na").cast("double") / F.sum("na").over(W.partitionBy("c"))).alias("p_a"),
-    )
-    b = ev.filter(F.col("d") >= "8").select("c", "a", "r")
-    j = b.join(pi, "c").join(
-        prop.select(F.col("c").alias("pc"), F.col("a").alias("pa_action"), "p_a"),
-        (F.col("c") == F.col("pc")) & (F.col("pi_action") == F.col("pa_action")),
-    )
+    j = _policy_join(b, learn, g)
     match = F.when(F.col("a") == F.col("pi_action"), 1).otherwise(0)
     match_r = F.sum(F.when(F.col("a") == F.col("pi_action"), F.col("r").cast("decimal(18,6)")))
     # The bounded per-context cell grid feeds snips AND the final select —

@@ -413,6 +413,12 @@ def _subtree_population_scale(lines: list[str], i: int, end: int, sub: str) -> b
         return False
     if body.startswith("Relation "):
         return any(mk in body for mk in _FACT_RELATION_MARKERS.values())
+    if body.startswith("InMemoryRelation ["):
+        # A cached frame is a leaf whose rendered children are the cached
+        # PHYSICAL plan (no `Relation` line): judge it by its output list,
+        # so a cached fact table is still a fact scan.
+        output = body[len("InMemoryRelation [") :].split("]", 1)[0]
+        return any(mk in output for mk in _FACT_RELATION_MARKERS.values())
     if body.startswith(("LogicalRDD", "ExistingRDD")):
         # A cut (sources.tables.cut) or RDD-backed frame is a lineage-less
         # leaf: the walk cannot see what produced it, so an explicit broadcast

@@ -89,6 +89,29 @@ def llmops_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_exact(t(spark, sf_dir, "documents"))
 
 
+def _blocked_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Candidate pairs of the exact word-3-gram Jaccard builders: documents
+    blocked by their first positional shingle, each block capped at 50
+    members by doc_id (the containment hot-key discipline), self-joined
+    within a block as ``(blk, id_a, sh_a, id_b, sh_b)`` with id_a < id_b."""
+    # spread(): double shingling is per-row text compute over the 1-task
+    # fixture scan (guide §2.5); no-op at scale.
+    d0 = spread(t(spark, sf_dir, "documents").select("doc_id", "text")).select(
+        F.col("doc_id"),
+        word_shingles(F.col("text"), 3).alias("sh"),
+        F.element_at(word_shingles_all(F.col("text"), 3), 1).alias("blk"),
+    )
+    wb = W.partitionBy("blk").orderBy("doc_id")
+    d = (
+        d0.withColumn("rn", F.row_number().over(wb))
+        .filter(F.col("rn") <= 50)
+        .select("doc_id", "sh", "blk")
+    )
+    a = d.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"), "blk")
+    b = d.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"), "blk")
+    return a.join(b, "blk").filter(F.col("id_a") < F.col("id_b"))
+
+
 @query(
     "llmops_ngram_jaccard_pairs",
     oracle=f"""
@@ -120,8 +143,9 @@ def llmops_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def llmops_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact word-3-gram Jaccard near-dup pairs (J ≥ 0.5) via CONTENT
-    BLOCKING — all-pairs only within a first-shingle block (near-dups
-    share their opening 3-gram unless the edit hits the first words), the
+    BLOCKING (_blocked_pairs) — all-pairs only within a first-shingle
+    block (near-dups share their opening 3-gram unless the edit hits the
+    first words), the
     classic record-linkage bounding that replaces the r1 doc_id < 150
     prefix: that prefix went VACUOUS at sf0.1 (planted near-dups scatter
     across the id space; found by the r9 full-SF stress sweep), while
@@ -132,24 +156,8 @@ def llmops_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline) so one viral opening line can't go quadratic; at corpus
     scale the MinHash band join (llmops_minhash_candidates) is the
     higher-recall candidate source and this is the exact verifier."""
-    # spread(): double shingling is per-row text compute over the 1-task
-    # fixture scan (guide §2.5); no-op at scale.
-    d0 = spread(t(spark, sf_dir, "documents").select("doc_id", "text")).select(
-        F.col("doc_id"),
-        word_shingles(F.col("text"), 3).alias("sh"),
-        F.element_at(word_shingles_all(F.col("text"), 3), 1).alias("blk"),
-    )
-    wb = W.partitionBy("blk").orderBy("doc_id")
-    d = (
-        d0.withColumn("rn", F.row_number().over(wb))
-        .filter(F.col("rn") <= 50)
-        .select("doc_id", "sh", "blk")
-    )
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"), "blk")
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"), "blk")
     return (
-        a.join(b, "blk")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _blocked_pairs(spark, sf_dir)
         .select("id_a", "id_b", F.round(jaccard(F.col("sh_a"), F.col("sh_b")), 6).alias("jac"))
         .filter(F.col("jac") >= 0.5)
     )
@@ -641,29 +649,13 @@ def llmops_dedup_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators.graph). The DuckDB oracle computes the same components with
     a recursive CTE — an oracle-checked ITERATIVE algorithm, not just a
     single plan. Edges come from the first-shingle-BLOCKED exact-Jaccard
-    join (llmops_ngram_jaccard_pairs' bounding, block cap 50, mirrored in
+    join (_blocked_pairs, llmops_ngram_jaccard_pairs' bounding, mirrored in
     the oracle — the r1 doc_id prefix went vacuous at sf0.1); at corpus
     scale the same CC runs on the MinHash band candidates."""
     from batch_public_spark.operators.graph import connected_components
 
-    # spread(): double shingling is per-row text compute over the 1-task
-    # fixture scan (guide §2.5); no-op at scale.
-    d0 = spread(t(spark, sf_dir, "documents").select("doc_id", "text")).select(
-        F.col("doc_id"),
-        word_shingles(F.col("text"), 3).alias("sh"),
-        F.element_at(word_shingles_all(F.col("text"), 3), 1).alias("blk"),
-    )
-    wb = W.partitionBy("blk").orderBy("doc_id")
-    d = (
-        d0.withColumn("rn", F.row_number().over(wb))
-        .filter(F.col("rn") <= 50)
-        .select("doc_id", "sh", "blk")
-    )
-    a = d.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"), "blk")
-    b = d.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"), "blk")
     pairs = (
-        a.join(b, "blk")
-        .filter(F.col("id_a") < F.col("id_b"))
+        _blocked_pairs(spark, sf_dir)
         .filter(jaccard(F.col("sh_a"), F.col("sh_b")) >= 0.5)
         .select("id_a", "id_b")
     )
@@ -2084,6 +2076,29 @@ def llmops_chunk_boundary_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pq_subspaces(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, Column]:
+    """Product quantisation's inputs, shared by the codebook and ADC
+    builders: every 64-d embedding split into M=4 contiguous 16-d
+    subspaces as ``dims`` (vec_id, sub, pos, q) with q = floor(x·2²⁰)
+    (exact BIGINT), the K=4 seed codebook ``cw`` (cw_id, sub, pos, qc) —
+    the subvectors of vec_id 0-3 — and ``sq``, the exact squared
+    subvector-to-codeword distance aggregate of a ``dims``×``cw`` join."""
+    e = t(spark, sf_dir, "embeddings")
+    dims = e.select(
+        "vec_id", F.posexplode("embedding").alias("i", "x")
+    ).select(
+        "vec_id",
+        (F.col("i") / F.lit(16)).cast("bigint").alias("sub"),
+        F.pmod("i", F.lit(16)).cast("bigint").alias("pos"),
+        F.floor(F.col("x").cast("double") * 1048576).cast("bigint").alias("q"),
+    )
+    cw = dims.filter(F.col("vec_id") < 4).select(
+        F.col("vec_id").alias("cw_id"), "sub", "pos", F.col("q").alias("qc")
+    )
+    sq = F.sum((F.col("q") - F.col("qc")) * (F.col("q") - F.col("qc"))).cast("bigint")
+    return dims, cw, sq
+
+
 @query(
     "llmops_pq_codebook",
     oracle="""
@@ -2136,26 +2151,11 @@ def llmops_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     the argmin is a row_number window over a high-cardinality
     (vector, subspace) key — no global sort anywhere. The only float is
     the final reported MSE."""
-    e = t(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "vec_id", F.posexplode("embedding").alias("i", "x")
-    ).select(
-        "vec_id",
-        (F.col("i") / F.lit(16)).cast("bigint").alias("sub"),
-        F.pmod("i", F.lit(16)).cast("bigint").alias("pos"),
-        F.floor(F.col("x").cast("double") * 1048576).cast("bigint").alias("q"),
-    )
-    cw = dims.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("cw_id"), "sub", "pos", F.col("q").alias("qc")
-    )
+    dims, cw, sq = _pq_subspaces(spark, sf_dir)
     dist = (
         dims.join(F.broadcast(cw), ["sub", "pos"])
         .groupBy("vec_id", "sub", "cw_id")
-        .agg(
-            F.sum((F.col("q") - F.col("qc")) * (F.col("q") - F.col("qc")))
-            .cast("bigint")
-            .alias("dist")
-        )
+        .agg(sq.alias("dist"))
     )
     rk = F.row_number().over(
         W.partitionBy("vec_id", "sub").orderBy("dist", "cw_id")
@@ -2369,28 +2369,15 @@ def llmops_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the IVF routing (llmops_ann_ivf) it completes the IVF-PQ
     pipeline.
 
-    Spark-first and engine-exact: quantized BIGINT dimensions make
-    codeword assignment, LUT entries, and ADC sums exact integers (ties
+    Spark-first and engine-exact: _pq_subspaces' quantized BIGINT
+    dimensions make codeword assignment, LUT entries, and ADC sums exact
+    integers (ties
     break on ids — no float tolerance anywhere). The LUT is tiny by
     construction (queries × M × K rows) and BROADCASTS onto the assignment
     table, so scoring all candidates is one broadcast-hash-join + hash
     aggregation — no shuffle of the database side beyond its one grouped
     assignment; top-k is a per-query window, never a global sort."""
-    e = t(spark, sf_dir, "embeddings")
-    dims = e.select(
-        "vec_id", F.posexplode("embedding").alias("i", "x")
-    ).select(
-        "vec_id",
-        (F.col("i") / F.lit(16)).cast("bigint").alias("sub"),
-        F.pmod("i", F.lit(16)).cast("bigint").alias("pos"),
-        F.floor(F.col("x").cast("double") * 1048576).cast("bigint").alias("q"),
-    )
-    cw = dims.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("cw_id"), "sub", "pos", F.col("q").alias("qc")
-    )
-    sq = F.sum((F.col("q") - F.col("qc")) * (F.col("q") - F.col("qc"))).cast(
-        "bigint"
-    )
+    dims, cw, sq = _pq_subspaces(spark, sf_dir)
     dbdist = (
         dims.filter(F.col("vec_id") >= 8)
         .join(F.broadcast(cw), ["sub", "pos"])
@@ -2804,6 +2791,37 @@ def llmops_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
+def _sign_bit_vectors(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The sign-bit audits' inputs: every embedding as ``(vec_id, v,
+    bits)``, its doubles and integer-exact sign bits (x ≥ 0); the 5 query
+    rows (vec_id < 5); and their exact full-precision top-10
+    ``(query_id, neighbor_id)``, the recall baseline."""
+    vecs = t(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.col("embedding").cast("array<double>").alias("v"),
+        F.expr(
+            "transform(cast(embedding as array<double>), "
+            "x -> CASE WHEN x >= 0 THEN 1 ELSE 0 END)"
+        ).alias("bits"),
+    )
+    q = vecs.filter(F.col("vec_id") < 5)
+    exact_k = ann_bruteforce_topk(
+        vecs.select("vec_id", F.col("v").alias("embedding")),
+        q.select("vec_id", F.col("v").alias("embedding")),
+        k=10,
+    ).select("query_id", "neighbor_id")
+    return vecs, q, exact_k
+
+
+def _hamming() -> Column:
+    """Integer Hamming distance between query bits ``qb`` and ``bits``."""
+    return F.expr(
+        "cast(aggregate(zip_with(qb, bits, (a, b) -> "
+        "CASE WHEN a != b THEN 1 ELSE 0 END), 0, (acc, x) -> acc + x) "
+        "as bigint)"
+    ).alias("hamming")
+
+
 @query(
     "llmops_binary_embedding_recall",
     oracle="""
@@ -2857,27 +2875,13 @@ def llmops_binary_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFram
     division — no float accumulates anywhere except the already-pinned
     cosine.
 
-    Spark-first: the corpus binarizes in-row on the scan; both legs are
+    Spark-first: the corpus binarizes in-row on the scan
+    (_sign_bit_vectors); both legs are
     the brute-force broadcast shape (queries tiny, corpus never
     shuffles). At 100 TB the bits pack into 64-bit words and Hamming
     becomes popcount(xor) per word — same plan, denser arrays; the
     audit's recall number is what justifies that rollout."""
-    vecs = t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
-        F.expr(
-            "transform(cast(embedding as array<double>), "
-            "x -> CASE WHEN x >= 0 THEN 1 ELSE 0 END)"
-        ).alias("bits"),
-    )
-    from batch_public_spark.operators.semantic import ann_bruteforce_topk
-
-    q = vecs.filter(F.col("vec_id") < 5)
-    full_k = ann_bruteforce_topk(
-        vecs.select("vec_id", F.col("v").alias("embedding")),
-        q.select("vec_id", F.col("v").alias("embedding")),
-        k=10,
-    ).select("query_id", "neighbor_id")
+    vecs, q, full_k = _sign_bit_vectors(spark, sf_dir)
     qb = q.select(F.col("vec_id").alias("query_id"), F.col("bits").alias("qb"))
     ham = (
         vecs.select(F.col("vec_id").alias("neighbor_id"), "bits")
@@ -2886,11 +2890,7 @@ def llmops_binary_embedding_recall(spark: SparkSession, sf_dir: str) -> DataFram
         .select(
             "query_id",
             "neighbor_id",
-            F.expr(
-                "cast(aggregate(zip_with(qb, bits, (a, b) -> "
-                "CASE WHEN a != b THEN 1 ELSE 0 END), 0, (acc, x) -> acc + x) "
-                "as bigint)"
-            ).alias("hamming"),
+            _hamming(),
         )
     )
     wh = W.partitionBy("query_id").orderBy("hamming", "neighbor_id")
@@ -3534,23 +3534,14 @@ def llmops_rerank_cascade_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     audits (integer Hamming, rounded-cosine rank, id tie-breaks,
     exact-input division).
 
-    Spark-first: one binarized scan feeds the shortlist (queries
+    Spark-first: one binarized scan (_sign_bit_vectors) feeds the
+    shortlist (queries
     broadcast, corpus map-side); the rerank touches only 5×50 rows; the
     exact leg is the audited baseline, not a serving cost. At 100 TB
     stage one is popcount(xor) over packed words and stage two stays
     5×50 regardless of corpus size — that asymmetry is the entire
     point."""
-    from batch_public_spark.operators.semantic import ann_bruteforce_topk
-
-    vecs = t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("v"),
-        F.expr(
-            "transform(cast(embedding as array<double>), "
-            "x -> CASE WHEN x >= 0 THEN 1 ELSE 0 END)"
-        ).alias("bits"),
-    )
-    q = vecs.filter(F.col("vec_id") < 5)
+    vecs, q, exact_k = _sign_bit_vectors(spark, sf_dir)
     qside = q.select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
@@ -3565,11 +3556,7 @@ def llmops_rerank_cascade_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             "neighbor_id",
             "qv",
             "v",
-            F.expr(
-                "cast(aggregate(zip_with(qb, bits, (a, b) -> "
-                "CASE WHEN a != b THEN 1 ELSE 0 END), 0, (acc, x) -> acc + x) "
-                "as bigint)"
-            ).alias("hamming"),
+            _hamming(),
         )
     )
     wham = W.partitionBy("query_id").orderBy("hamming", "neighbor_id")
@@ -3589,11 +3576,6 @@ def llmops_rerank_cascade_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r") <= 10)
         .select(F.col("query_id").alias("rq"), F.col("neighbor_id").alias("rn"))
     )
-    exact_k = ann_bruteforce_topk(
-        vecs.select("vec_id", F.col("v").alias("embedding")),
-        q.select("vec_id", F.col("v").alias("embedding")),
-        k=10,
-    ).select("query_id", "neighbor_id")
     j = exact_k.join(
         reranked,
         (F.col("rq") == F.col("query_id")) & (F.col("rn") == F.col("neighbor_id")),
@@ -4883,6 +4865,40 @@ def llmops_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _span_islands(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The rare-seeded gaps-and-islands pipeline of both repeated-span
+    builders: positional 3-gram shingles (docs under 3 tokens excluded)
+    self-join on rare shingles (df ≤ 20, so every join bucket holds ≤ 190
+    pairs at any corpus size), each seed lands on a diagonal pa − pb, and
+    ``grp`` = pa − row_number per (pair, diagonal) numbers its island, so
+    a maximal shared run is one (id_a, id_b, diag, grp) group. Returns
+    the widened documents and ``(id_a, id_b, pa, diag, grp)``."""
+    # spread(): positional-shingle explode is per-row text compute over
+    # the 1-task fixture scan (guide §2.5); no-op at scale.
+    d = spread(t(spark, sf_dir, "documents").select("doc_id", "text"))
+    sh = (
+        d.filter(F.size(tokens(F.col("text"))) >= 3)
+        .select(
+            "doc_id",
+            F.posexplode(word_shingles_all(F.col("text"), 3)).alias("pos", "s"),
+        )
+        # three consumers (df counts + both self-join roles): cut once
+        .transform(cut)
+    )
+    rare = sh.groupBy("s").agg(F.count("*").alias("df")).filter(F.col("df") <= 20)
+    ri = sh.join(rare.select("s"), "s")
+    a = ri.select(F.col("doc_id").alias("id_a"), F.col("pos").alias("pa"), "s")
+    b = ri.select(F.col("doc_id").alias("id_b"), F.col("pos").alias("pb"), "s")
+    seeds = (
+        a.join(b, "s")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .select("id_a", "id_b", "pa", (F.col("pa") - F.col("pb")).alias("diag"))
+    )
+    w = W.partitionBy("id_a", "id_b", "diag").orderBy("pa")
+    isl = seeds.withColumn("grp", F.col("pa") - F.row_number().over(w))
+    return d, isl
+
+
 @query(
     "llmops_repeated_span_extract",
     oracle=f"""
@@ -4940,38 +4956,12 @@ def llmops_repeated_span_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines identically — the measure is honestly "rare-seeded
     maximal runs", mirrored exactly in the oracle.
 
-    Spark-first: one scan explodes positional shingles; the df cap
-    bounds every join bucket at ≤ 20 occurrences (≤ 190 pairs/shingle at
-    any corpus size); the islands window partitions by (pair, diagonal)
-    — thousands of small partitions, no global sort; two hash
+    Spark-first: _span_islands explodes positional shingles in one scan
+    and caps every seed bucket; its islands window partitions by (pair,
+    diagonal) — thousands of small partitions, no global sort; two hash
     aggregates finish. At 100 TB this replaces the suffix-array pass
     with shuffle-bounded relational ops."""
-    from batch_public_spark.operators.semantic import word_shingles_all
-    from batch_public_spark.operators.textops import tokens
-
-    # spread(): positional-shingle explode is per-row text compute over
-    # the 1-task fixture scan (guide §2.5); no-op at scale.
-    d = spread(t(spark, sf_dir, "documents").select("doc_id", "text"))
-    sh = (
-        d.filter(F.size(tokens(F.col("text"))) >= 3)
-        .select(
-            "doc_id",
-            F.posexplode(word_shingles_all(F.col("text"), 3)).alias("pos", "s"),
-        )
-        # three consumers (df counts + both self-join roles): cut once
-        .transform(cut)
-    )
-    rare = sh.groupBy("s").agg(F.count("*").alias("df")).filter(F.col("df") <= 20)
-    ri = sh.join(rare.select("s"), "s")
-    a = ri.select(F.col("doc_id").alias("id_a"), F.col("pos").alias("pa"), "s")
-    b = ri.select(F.col("doc_id").alias("id_b"), F.col("pos").alias("pb"), "s")
-    seeds = (
-        a.join(b, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "pa", (F.col("pa") - F.col("pb")).alias("diag"))
-    )
-    w = W.partitionBy("id_a", "id_b", "diag").orderBy("pa")
-    isl = seeds.withColumn("grp", F.col("pa") - F.row_number().over(w))
+    _, isl = _span_islands(spark, sf_dir)
     runs = (
         isl.groupBy("id_a", "id_b", "diag", "grp")
         .agg(F.count("*").cast("bigint").alias("nsh"))
@@ -5048,8 +5038,8 @@ def llmops_repeated_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document repeated-span REMOVAL — the action step that
     consumes llmops_repeated_span_extract's statistics (Lee et al. 2021:
     after finding verbatim shared spans, REMOVE every occurrence except
-    the first): spans are recomputed with their positions (same
-    rare-seeded gaps-and-islands pipeline, same df ≤ 20 cap), the
+    the first): spans are recomputed with their positions (the
+    extractor's _span_islands), the
     keep-first policy drops each span's occurrence in the HIGHER doc_id
     of every pair (min-id survivorship, matching operators.dedup — for a
     span shared by docs {1,5,9} every pairwise cut lands on 5 and 9, so
@@ -5067,36 +5057,12 @@ def llmops_repeated_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     from it and ≤ the sum of its pairs' shared_span_tokens (union vs
     sum of overlapping cuts).
 
-    Spark-first: identical scale shape to the extractor (capped seed
-    join, (pair, diagonal)-partitioned islands window) plus a per-doc
+    Spark-first: the extractor's _span_islands plus a per-doc
     interval sweep (window partitioned by doc_id), a position anti-join
     for the splice, and ONE ordered collect per AFFECTED doc — bounded
     by document length, the unit a rewriter must hold anyway; unaffected
     docs are semi-join-pruned before tokens ever explode."""
-    from batch_public_spark.operators.semantic import word_shingles_all
-    from batch_public_spark.operators.textops import normalized_text, tokens
-
-    # spread(): same 1-task-scan widening as the extractor (guide §2.5).
-    d = spread(t(spark, sf_dir, "documents").select("doc_id", "text"))
-    sh = (
-        d.filter(F.size(tokens(F.col("text"))) >= 3)
-        .select(
-            "doc_id",
-            F.posexplode(word_shingles_all(F.col("text"), 3)).alias("pos", "s"),
-        )
-        .transform(cut)
-    )
-    rare = sh.groupBy("s").agg(F.count("*").alias("df")).filter(F.col("df") <= 20)
-    ri = sh.join(rare.select("s"), "s")
-    a = ri.select(F.col("doc_id").alias("id_a"), F.col("pos").alias("pa"), "s")
-    b = ri.select(F.col("doc_id").alias("id_b"), F.col("pos").alias("pb"), "s")
-    seeds = (
-        a.join(b, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "pa", (F.col("pa") - F.col("pb")).alias("diag"))
-    )
-    w = W.partitionBy("id_a", "id_b", "diag").orderBy("pa")
-    isl = seeds.withColumn("grp", F.col("pa") - F.row_number().over(w))
+    d, isl = _span_islands(spark, sf_dir)
     cuts = (
         isl.groupBy("id_a", "id_b", "diag", "grp")
         .agg(F.min("pa").alias("pa0"), F.max("pa").alias("pa1"), F.count("*").alias("nsh"))
@@ -5172,6 +5138,56 @@ def llmops_repeated_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _margin_mutual_best(pairs: DataFrame) -> DataFrame:
+    """The Artetxe-Schwenk stage of both bitext miners over an
+    ``(a_id, b_id, sim)`` pair frame: each side's top-4 sims summed in
+    DECIMAL(10,6) (exact), the ratio margin sim·8/(sum_a + sum_b) as one
+    rounded double division (degenerate all-negative neighbourhoods
+    dropped by the ``> 0`` guard), and the pairs that are the mutual
+    best under that margin, every argmax with an id tie-break. Each
+    window is partitioned by one side's id, so nothing here is more than
+    a shuffle on a side's id."""
+    wa = W.partitionBy("a_id").orderBy(F.desc("sim"), "b_id")
+    wb = W.partitionBy("b_id").orderBy(F.desc("sim"), "a_id")
+    fa = (
+        pairs.withColumn("rn", F.row_number().over(wa))
+        .filter(F.col("rn") <= 4)
+        .groupBy("a_id")
+        .agg(F.sum(F.col("sim").cast("decimal(10,6)")).alias("sum_a"))
+    )
+    fb = (
+        pairs.withColumn("rn", F.row_number().over(wb))
+        .filter(F.col("rn") <= 4)
+        .groupBy("b_id")
+        .agg(F.sum(F.col("sim").cast("decimal(10,6)")).alias("sum_b"))
+    )
+    denom = (F.col("sum_a") + F.col("sum_b")).cast("double")
+    m = (
+        pairs.join(fa, "a_id")
+        .join(fb, "b_id")
+        .filter(denom > 0)
+        .select(
+            "a_id",
+            "b_id",
+            "sim",
+            F.round(F.col("sim") * F.lit(8.0) / denom, 6).alias("margin"),
+        )
+    )
+    wma = W.partitionBy("a_id").orderBy(F.desc("margin"), "b_id")
+    wmb = W.partitionBy("b_id").orderBy(F.desc("margin"), "a_id")
+    best_a = (
+        m.withColumn("rn", F.row_number().over(wma))
+        .filter(F.col("rn") == 1)
+        .select("a_id", "b_id", F.col("sim").alias("cosine"), "margin")
+    )
+    best_b = (
+        m.withColumn("rn", F.row_number().over(wmb))
+        .filter(F.col("rn") == 1)
+        .select("a_id", "b_id")
+    )
+    return best_a.join(best_b, ["a_id", "b_id"])
+
+
 @query(
     "llmops_bitext_margin_mining",
     oracle="""
@@ -5233,22 +5249,17 @@ def llmops_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding pools are played by even/odd vec_ids over a fixed sample
     (vec_id < 200: 100 per side, the ANN family's literal-bound idiom).
 
-    Parity discipline: cosines round to 6 before any use; each side's
-    top-4 sum accumulates in DECIMAL(10,6) (exact — no float summation
-    order to drift), and the margin is one double division of exact
-    operands, rounded to 6; every argmax carries an id tie-break. The
-    sum_a + sum_b > 0 guard excludes degenerate all-negative
-    neighborhoods identically in both engines.
+    Parity discipline: cosines round to 6 before any use; the margin and
+    mutual best are _margin_mutual_best (exact decimal top-4 sums, one
+    rounded double division, id tie-breaks).
 
     Spark-first/100 TB: the quadratic score matrix exists only inside
     the bounded sample — at scale the pair stream comes from the ANN
     candidate graph (llmops_ann_ivf / ann_lsh produce exactly the
-    (query, neighbor, sim) triples this consumes), the per-side top-4
-    denominators are two windowed aggregates over that candidate stream
-    partitioned by each side's id, and mutual-best is two rank-1 windows
-    plus an equi-join — nothing here is more than a shuffle on a side's
-    id. The sample variant is the exactness anchor for that path, the
-    same contract as llmops_ann_bruteforce."""
+    (query, neighbor, sim) triples this consumes) and _margin_mutual_best
+    runs over that candidate stream unchanged. The sample variant is the
+    exactness anchor for that path, the same contract as
+    llmops_ann_bruteforce."""
     from batch_public_spark.operators.semantic import cosine
 
     s = t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 200)
@@ -5265,45 +5276,7 @@ def llmops_bitext_margin_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stream): cut once so the 10k-pair cosine fold runs once
         .transform(cut)
     )
-    wa = W.partitionBy("a_id").orderBy(F.desc("sim"), "b_id")
-    wb = W.partitionBy("b_id").orderBy(F.desc("sim"), "a_id")
-    fa = (
-        pairs.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") <= 4)
-        .groupBy("a_id")
-        .agg(F.sum(F.col("sim").cast("decimal(10,6)")).alias("sum_a"))
-    )
-    fb = (
-        pairs.withColumn("rn", F.row_number().over(wb))
-        .filter(F.col("rn") <= 4)
-        .groupBy("b_id")
-        .agg(F.sum(F.col("sim").cast("decimal(10,6)")).alias("sum_b"))
-    )
-    denom = (F.col("sum_a") + F.col("sum_b")).cast("double")
-    m = (
-        pairs.join(fa, "a_id")
-        .join(fb, "b_id")
-        .filter(denom > 0)
-        .select(
-            "a_id",
-            "b_id",
-            "sim",
-            F.round(F.col("sim") * F.lit(8.0) / denom, 6).alias("margin"),
-        )
-    )
-    wma = W.partitionBy("a_id").orderBy(F.desc("margin"), "b_id")
-    wmb = W.partitionBy("b_id").orderBy(F.desc("margin"), "a_id")
-    best_a = (
-        m.withColumn("rn", F.row_number().over(wma))
-        .filter(F.col("rn") == 1)
-        .select("a_id", "b_id", F.col("sim").alias("cosine"), "margin")
-    )
-    best_b = (
-        m.withColumn("rn", F.row_number().over(wmb))
-        .filter(F.col("rn") == 1)
-        .select("a_id", "b_id")
-    )
-    return best_a.join(best_b, ["a_id", "b_id"])
+    return _margin_mutual_best(pairs)
 
 
 @query("llmops_bitext_margin_ann", oracle=None)
@@ -5316,11 +5289,10 @@ def llmops_bitext_margin_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     family is load-bearing: mixing hash families yields zero recall),
     candidates are the bucket-collision pairs across all 8 tables (with
     Hamming-1 multiprobe flips on side A for recall), exact cosine runs
-    only on candidates, the Artetxe-Schwenk top-4 ratio-margin
-    denominators are windowed aggregates OVER THE CANDIDATE STREAM
-    partitioned by each side's id, and mutual-best is two rank-1 windows
-    plus an equi-join. NOTHING here is more than a shuffle on a side's
-    id — no cross join, no broadcast of a pool: both sides can be
+    only on candidates, and the Artetxe-Schwenk margin and mutual best
+    (_margin_mutual_best) run OVER THE CANDIDATE STREAM. NOTHING here is
+    more than a shuffle on a side's id — no cross join, no broadcast of
+    a pool: both sides can be
     corpus-scale (the sample twin broadcasts its 100-vector B side as
     scaffolding; this plan drops even that).
 
@@ -5404,45 +5376,7 @@ def llmops_bitext_margin_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         # same four-consumer fan-out as the exact twin: cut once
         .transform(cut)
     )
-    wa = W.partitionBy("a_id").orderBy(F.desc("sim"), "b_id")
-    wb = W.partitionBy("b_id").orderBy(F.desc("sim"), "a_id")
-    fa = (
-        pairs.withColumn("rn", F.row_number().over(wa))
-        .filter(F.col("rn") <= 4)
-        .groupBy("a_id")
-        .agg(F.sum(F.col("sim").cast("decimal(10,6)")).alias("sum_a"))
-    )
-    fb = (
-        pairs.withColumn("rn", F.row_number().over(wb))
-        .filter(F.col("rn") <= 4)
-        .groupBy("b_id")
-        .agg(F.sum(F.col("sim").cast("decimal(10,6)")).alias("sum_b"))
-    )
-    denom = (F.col("sum_a") + F.col("sum_b")).cast("double")
-    m = (
-        pairs.join(fa, "a_id")
-        .join(fb, "b_id")
-        .filter(denom > 0)
-        .select(
-            "a_id",
-            "b_id",
-            "sim",
-            F.round(F.col("sim") * F.lit(8.0) / denom, 6).alias("margin"),
-        )
-    )
-    wma = W.partitionBy("a_id").orderBy(F.desc("margin"), "b_id")
-    wmb = W.partitionBy("b_id").orderBy(F.desc("margin"), "a_id")
-    best_a = (
-        m.withColumn("rn", F.row_number().over(wma))
-        .filter(F.col("rn") == 1)
-        .select("a_id", "b_id", F.col("sim").alias("cosine"), "margin")
-    )
-    best_b = (
-        m.withColumn("rn", F.row_number().over(wmb))
-        .filter(F.col("rn") == 1)
-        .select("a_id", "b_id")
-    )
-    return best_a.join(best_b, ["a_id", "b_id"])
+    return _margin_mutual_best(pairs)
 
 
 @query(

@@ -14,7 +14,7 @@ the driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
@@ -1021,6 +1021,31 @@ def explode_word_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _click_probes(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
+    """The as-of joins' tagged stream: clicks (probe 0, no event_id) and
+    errors (probe 1) unioned as ``(event_id, user_id, ev_ts, probe)``,
+    and the backward as-of column — the last click ts at or before each
+    row, over a (user_id)-partitioned running window that orders clicks
+    before errors at equal ts so ties honor >= semantics."""
+    ev = t(spark, sf_dir, "events")
+    clicks = ev.filter(F.col("event_type") == "click").select(
+        F.lit(None).cast("long").alias("event_id"),
+        "user_id",
+        F.col("ts").alias("ev_ts"),
+        F.lit(0).alias("probe"),
+    )
+    errors = ev.filter(F.col("event_type") == "error").select(
+        "event_id", "user_id", F.col("ts").alias("ev_ts"), F.lit(1).alias("probe")
+    )
+    u = clicks.unionByName(errors)
+    wb = (
+        W.partitionBy("user_id")
+        .orderBy("ev_ts", "probe")
+        .rowsBetween(W.unboundedPreceding, W.currentRow)
+    )
+    return u, F.last(F.when(F.col("probe") == 0, F.col("ev_ts")), ignorenulls=True).over(wb)
+
+
 @query(
     "join_asof_last_click",
     oracle="""
@@ -1034,30 +1059,14 @@ def join_asof_last_click(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join (SURVEY §2b "range / as-of / interval join"): for each
     error event, the most recent click at-or-before it for the same user.
 
-    Spark-first strategy: NOT a join at all — union the probe and build
-    streams with a tag, then ``last(click_ts, ignorenulls=True)`` over a
-    (user, ts, tag)-ordered running window. One shuffle on user_id, no
-    pair explosion, scales as sort-merge; the tag orders clicks before
-    errors at equal ts so ties honor >= semantics (DuckDB ASOF JOIN is the
-    oracle). Inner semantics: errors with no prior click are dropped
-    (match the default ASOF JOIN; avoids NULL-timestamp rows)."""
-    ev = t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.lit(None).cast("long").alias("event_id"),
-        "user_id",
-        F.col("ts").alias("ev_ts"),
-        F.lit(0).alias("probe"),
-    )
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", F.col("ts").alias("ev_ts"), F.lit(1).alias("probe")
-    )
-    u = clicks.unionByName(errors)
-    w = (
-        W.partitionBy("user_id")
-        .orderBy("ev_ts", "probe")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
-    lc = F.last(F.when(F.col("probe") == 0, F.col("ev_ts")), ignorenulls=True).over(w)
+    Spark-first strategy: NOT a join at all — _click_probes unions the
+    probe and build streams with a tag and takes ``last(click_ts,
+    ignorenulls=True)`` over a (user, ts, tag)-ordered running window.
+    One shuffle on user_id, no pair explosion, scales as sort-merge
+    (DuckDB ASOF JOIN is the oracle). Inner semantics: errors with no
+    prior click are dropped (match the default ASOF JOIN; avoids
+    NULL-timestamp rows)."""
+    u, lc = _click_probes(spark, sf_dir)
     return (
         u.withColumn("last_click_ts", lc)
         .filter((F.col("probe") == 1) & F.col("last_click_ts").isNotNull())
@@ -1493,40 +1502,24 @@ def join_asof_direction_battery(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearer (tie → backward). Completes the as-of family next to
     join_asof_last_click, which covers backward-inner only.
 
-    Spark-first: still NOT a pair join — the same union+running-window
-    trick, run once per direction over ONE (user_id)-partitioned sort:
-    backward is ``last(click_ts, ignorenulls)`` over the preceding frame
-    with clicks ordered before errors at equal ts (>= includes ties);
-    forward is ``first(click_ts, ignorenulls)`` over the following frame
-    with the tag order REVERSED so same-ts clicks land inside the
-    following frame (<= includes ties). Both windows share one shuffle;
+    Spark-first: still NOT a pair join — _click_probes' union and
+    running window, run once per direction over ONE
+    (user_id)-partitioned sort: backward is its ``last(click_ts,
+    ignorenulls)`` over the preceding frame; forward is
+    ``first(click_ts, ignorenulls)`` over the following frame with the
+    tag order REVERSED so same-ts clicks land inside the following frame
+    (<= includes ties). Both windows share one shuffle;
     no pair explosion at any scale. LEFT semantics: errors with no click
     on a side report gap −1 (sentinel instead of NULL — a NULL BIGINT
     column round-trips as float NaN through the oracle harness's pandas
     bridge; the oracle's ASOF LEFT JOIN coalesces identically)."""
-    ev = t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.lit(None).cast("long").alias("event_id"),
-        "user_id",
-        F.col("ts").alias("ev_ts"),
-        F.lit(0).alias("probe"),
-    )
-    errors = ev.filter(F.col("event_type") == "error").select(
-        "event_id", "user_id", F.col("ts").alias("ev_ts"), F.lit(1).alias("probe")
-    )
-    u = clicks.unionByName(errors)
-    wb = (
-        W.partitionBy("user_id")
-        .orderBy("ev_ts", "probe")
-        .rowsBetween(W.unboundedPreceding, W.currentRow)
-    )
+    u, prev_ts = _click_probes(spark, sf_dir)
     wf = (
         W.partitionBy("user_id")
         .orderBy("ev_ts", F.desc("probe"))
         .rowsBetween(W.currentRow, W.unboundedFollowing)
     )
     click_ts = F.when(F.col("probe") == 0, F.col("ev_ts"))
-    prev_ts = F.last(click_ts, ignorenulls=True).over(wb)
     next_ts = F.first(click_ts, ignorenulls=True).over(wf)
     us = F.unix_micros
     tagged = (

@@ -3426,6 +3426,33 @@ def dq_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MK_ZCRIT = "1.959964"
 
 
+def _monthly_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The trend builders' series: ``(prio, m, cents)``, exact BIGINT
+    revenue cents per order priority and month index year·12+month — one
+    shuffle over orders, then a grid of ≤ ~420 rows at any SF."""
+    return (
+        t(spark, sf_dir, "orders")
+        .groupBy(
+            F.col("o_orderpriority").alias("prio"),
+            (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("bigint").alias("m"),
+        )
+        .agg(
+            F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
+            .cast("bigint")
+            .alias("cents")
+        )
+    )
+
+
+def _month_pairs(monthly: DataFrame) -> DataFrame:
+    """Every ordered month pair of a priority's series as ``(prio, m1,
+    c1, m2, c2)`` with m1 < m2: quadratic only in the month grid (80
+    months → 3 160 pairs per priority at every SF), never in row count."""
+    a = monthly.select("prio", F.col("m").alias("m1"), F.col("cents").alias("c1"))
+    b = monthly.select("prio", F.col("m").alias("m2"), F.col("cents").alias("c2"))
+    return a.join(b, "prio").filter(F.col("m1") < F.col("m2"))
+
+
 @query(
     "dq_mann_kendall_trend",
     oracle=f"""
@@ -3479,8 +3506,7 @@ def dq_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum of pairwise sign(x_j - x_i) over the monthly-revenue series,
     Var(S) carries the tie correction sum t(t-1)(2t+5), and the
     continuity-corrected z = (S -/+ 1)/sqrt(Var) drives a two-sided
-    verdict at alpha = 0.05. The same quadratic-ONLY-in-the-month-grid
-    shape as Theil-Sen (80 months -> 3160 pairs per group at every SF).
+    verdict at alpha = 0.05. The same _month_pairs grid as Theil-Sen.
 
     Parity discipline: monthly cents are exact BIGINT so every pairwise
     sign, S, n, and the tie term are exact integers; Var(S) is one
@@ -3489,29 +3515,17 @@ def dq_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal in both plans — the trend verdict compares identical
     doubles end to end.
 
-    Spark-first: one shuffle for the monthly rollup (shared shape with
-    Theil-Sen; a trend dashboard computes both off one cached grid);
-    the pair join, tie count, and verdict all run on the tiny grid."""
-    o = t(spark, sf_dir, "orders")
-    monthly = o.groupBy(
-        F.col("o_orderpriority").alias("prio"),
-        (F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-        .cast("bigint")
-        .alias("m"),
-    ).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100, 0).cast("bigint"))
-        .cast("bigint")
-        .alias("cents")
-        # The bounded (priority, month) frame (≤ ~420 rows) feeds BOTH
-        # self-join sides, the per-priority count AND the tie aggregate —
-        # the last two group differently, so ReuseExchange cannot dedupe
-        # and the orders scan re-inlined 4× (r15). Cut once.
-    ).transform(cut)
-    a = monthly.select("prio", F.col("m").alias("m1"), F.col("cents").alias("c1"))
-    b = monthly.select("prio", F.col("m").alias("m2"), F.col("cents").alias("c2"))
+    Spark-first: one shuffle for the monthly rollup (_monthly_cents,
+    shared with Theil-Sen; a trend dashboard computes both off one cached
+    grid); the pair join, tie count, and verdict all run on the tiny
+    grid."""
+    # The bounded (priority, month) frame (≤ ~420 rows) feeds BOTH
+    # self-join sides, the per-priority count AND the tie aggregate —
+    # the last two group differently, so ReuseExchange cannot dedupe
+    # and the orders scan re-inlined 4× (r15). Cut once.
+    monthly = cut(_monthly_cents(spark, sf_dir))
     s = (
-        a.join(b, "prio")
-        .filter(F.col("m1") < F.col("m2"))
+        _month_pairs(monthly)
         .groupBy("prio")
         .agg(
             F.sum(

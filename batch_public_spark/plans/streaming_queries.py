@@ -16,12 +16,13 @@ TTLs) so it runs in ``append``; the custom stateful op emits per-batch in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from batch_public_spark.plans.registry import query
 from batch_public_spark.streaming import (
     dedup_within_watermark,
+    interval_join_pairs,
     read_events_stream,
     run_available_now,
     running_max_per_key,
@@ -178,20 +179,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark passes click.ts + 1 h); inner joins emit pairs in append
     mode with no held-back tail on a finite stream. The oracle is the
     identical batch interval join."""
-    from batch_public_spark.streaming import interval_join_pairs
-
-    # ONE stream source self-joined (the type filters split it inside
-    # interval_join_pairs) — two read_events_stream calls would scan the
-    # events files twice per micro-batch for identical rows.
-    events = read_events_stream(spark, sf_dir)
-    s = interval_join_pairs(
-        events,
-        events,
-        left_type="click",
-        right_type="view",
-        within="1 hour",
-        watermark="1 day",
-    )
+    s = interval_join_pairs(read_events_stream(spark, sf_dir))
     return run_available_now(s, output_mode="append")
 
 
@@ -246,17 +234,8 @@ def stream_stream_leftouter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: identical state bound to the inner variant (the interval
     condition lets both buffers evict at the watermark); the outer rows
     add no state, only an emit-on-evict flag per buffered left row."""
-    from batch_public_spark.streaming import interval_join_pairs
-
-    events = read_events_stream(spark, sf_dir)
     s = interval_join_pairs(
-        events,
-        events,
-        left_type="click",
-        right_type="view",
-        within="1 hour",
-        watermark="1 hour",
-        how="left_outer",
+        read_events_stream(spark, sf_dir), watermark="1 hour", how="left_outer"
     )
     out = run_available_now(s, output_mode="append")
     # NULL-extended ids encode as -1: a nullable BIGINT column round-trips
@@ -387,17 +366,8 @@ def stream_stream_fullouter(spark: SparkSession, sf_dir: str) -> DataFrame:
     per buffered row on each side. NULL-extended ids encode as -1
     (outside the event_id domain) so the nullable BIGINT never becomes
     pandas NaN in the driver compare."""
-    from batch_public_spark.streaming import interval_join_pairs
-
-    events = read_events_stream(spark, sf_dir)
     s = interval_join_pairs(
-        events,
-        events,
-        left_type="click",
-        right_type="view",
-        within="1 hour",
-        watermark="1 hour",
-        how="full_outer",
+        read_events_stream(spark, sf_dir), watermark="1 hour", how="full_outer"
     )
     out = run_available_now(s, output_mode="append")
     return out.select(
@@ -439,19 +409,43 @@ def stream_stream_leftsemi(spark: SparkSession, sf_dir: str) -> DataFrame:
     (state is O(events within the band)); the left buffer additionally
     clears each row at first match instead of waiting for eviction, so
     semi state is at most the inner join's."""
-    from batch_public_spark.streaming import interval_join_pairs
-
-    events = read_events_stream(spark, sf_dir)
     s = interval_join_pairs(
-        events,
-        events,
-        left_type="click",
-        right_type="view",
-        within="1 hour",
-        watermark="1 hour",
-        how="left_semi",
+        read_events_stream(spark, sf_dir), watermark="1 hour", how="left_semi"
     )
     return run_available_now(s, output_mode="append")
+
+
+def _changelog_line() -> Column:
+    """A documents row as one kvsnapshot JSONL record: ``{k: doc_id,
+    v: n_chars, src: source}`` in the ``value`` column."""
+    return F.to_json(
+        F.struct(
+            F.col("doc_id").alias("k"),
+            F.col("n_chars").alias("v"),
+            F.col("source").alias("src"),
+        )
+    ).alias("value")
+
+
+def _tail_counts(spark: SparkSession, path: str) -> DataFrame:
+    """Tail the changelog at ``path`` (one file or a directory of
+    segments) through ``readStream.format("kvsnapshot")`` and run the
+    per-source count and n_chars sum to completion."""
+    from batch_public_spark.sources.kvscan import register_kv_source
+
+    register_kv_source(spark)
+    stream = (
+        spark.readStream.format("kvsnapshot")
+        .schema("k bigint, v bigint, src string")
+        .option("path", path)
+        .load()
+        .groupBy("src")
+        .agg(
+            F.count("*").cast("bigint").alias("n"),
+            F.sum("v").cast("bigint").alias("sum_chars"),
+        )
+    )
+    return run_available_now(stream, output_mode="complete")
 
 
 @query(
@@ -470,7 +464,8 @@ def stream_changelog_tail_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark 4 Python streaming Data Source API, byte-frontier incremental,
     the streaming face of the reference's high-water-mark pull (reference
     batch/state.py watermark store + main.py look-back; the batch face is
-    source_kvscan_segmented) — and aggregated per source. The oracle
+    source_kvscan_segmented) — and aggregated per source (_tail_counts,
+    shared with the segmented twin). The oracle
     aggregates the ORIGINAL parquet, so the JSON encode, the offset-bounded
     streaming read, and the stateful aggregation are all value-hashed.
 
@@ -483,43 +478,22 @@ def stream_changelog_tail_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
 
-    from batch_public_spark.sources.kvscan import register_kv_source
     from batch_public_spark.sources.tables import load_table as t
     from batch_public_spark.sources.tables import scratch_dir
 
-    register_kv_source(spark)
     out_dir = scratch_dir(spark, sf_dir, "changelog")
     # Deterministic changelog: one JSON line per doc. coalesce(1) is
     # changelog-construction scaffolding (a changelog IS a single
     # append-ordered file); production tails a log it didn't write.
     (
         t(spark, sf_dir, "documents")
-        .select(
-            F.to_json(
-                F.struct(
-                    F.col("doc_id").alias("k"),
-                    F.col("n_chars").alias("v"),
-                    F.col("source").alias("src"),
-                )
-            ).alias("value")
-        )
+        .select(_changelog_line())
         .coalesce(1)
         .write.mode("overwrite")
         .text(out_dir)
     )
     log = glob.glob(os.path.join(out_dir, "part-*"))[0]
-    stream = (
-        spark.readStream.format("kvsnapshot")
-        .schema("k bigint, v bigint, src string")
-        .option("path", log)
-        .load()
-        .groupBy("src")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("v").cast("bigint").alias("sum_chars"),
-        )
-    )
-    return run_available_now(stream, output_mode="complete")
+    return _tail_counts(spark, log)
 
 
 @query(
@@ -535,8 +509,8 @@ def stream_changelog_segmented_agg(spark: SparkSession, sf_dir: str) -> DataFram
     """SEGMENTED changelog streaming round-trip — the corpus-scale twin of
     stream_changelog_tail_agg: the documents table is materialized as a
     DIRECTORY of append-only JSONL segments (4 here; one per log shard at
-    scale) and tailed back through ``readStream.format("kvsnapshot")``
-    (sources/kvscan.py :class:`KVSnapshotStreamReader`): per-file byte
+    scale) and tailed back by _tail_counts (sources/kvscan.py
+    :class:`KVSnapshotStreamReader`): per-file byte
     frontiers as the stream offset, one EXECUTOR-read input partition per
     advancing segment per micro-batch, so ingest parallelism scales with
     segment count instead of funneling through the driver. The oracle
@@ -551,11 +525,9 @@ def stream_changelog_segmented_agg(spark: SparkSession, sf_dir: str) -> DataFram
     import glob
     import os
 
-    from batch_public_spark.sources.kvscan import register_kv_source
     from batch_public_spark.sources.tables import load_table as t
     from batch_public_spark.sources.tables import scratch_dir
 
-    register_kv_source(spark)
     out_dir = scratch_dir(spark, sf_dir, "changelog_segs")
     # Deterministic segmented changelog: 4 append-ordered shards, sharded
     # by a stable key hash (repartition would round-robin rows
@@ -564,13 +536,7 @@ def stream_changelog_segmented_agg(spark: SparkSession, sf_dir: str) -> DataFram
     (
         t(spark, sf_dir, "documents")
         .select(
-            F.to_json(
-                F.struct(
-                    F.col("doc_id").alias("k"),
-                    F.col("n_chars").alias("v"),
-                    F.col("source").alias("src"),
-                )
-            ).alias("value"),
+            _changelog_line(),
             F.pmod(F.col("doc_id"), F.lit(4)).cast("int").alias("shard"),
         )
         .repartition(4, "shard")
@@ -579,15 +545,4 @@ def stream_changelog_segmented_agg(spark: SparkSession, sf_dir: str) -> DataFram
         .text(out_dir)
     )
     assert glob.glob(os.path.join(out_dir, "part-*")), out_dir
-    stream = (
-        spark.readStream.format("kvsnapshot")
-        .schema("k bigint, v bigint, src string")
-        .option("path", out_dir)
-        .load()
-        .groupBy("src")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("v").cast("bigint").alias("sum_chars"),
-        )
-    )
-    return run_available_now(stream, output_mode="complete")
+    return _tail_counts(spark, out_dir)

@@ -192,32 +192,30 @@ def running_max_per_key(events: DataFrame) -> DataFrame:
 
 
 def interval_join_pairs(
-    left: DataFrame,
-    right: DataFrame,
-    *,
-    left_type: str = "click",
-    right_type: str = "view",
-    within: str = "1 hour",
-    watermark: str = "1 day",
-    how: str = "inner",
+    events: DataFrame, *, watermark: str = "1 day", how: str = "inner"
 ) -> DataFrame:
-    """Stream-STREAM join: (left_type, right_type) event pairs for
-    the same user with right.ts in [left.ts, left.ts + within].
+    """Stream-STREAM join: (click, view) event pairs for the same user
+    with view.ts in [click.ts, click.ts + 1 hour].
+
+    ONE events stream is self-joined: the event-type filters split it
+    into the click and view sides, so each micro-batch scans the events
+    files once (two stream sources would scan them twice for identical
+    rows).
 
     Both sides carry watermarks and the join condition carries the time
     band — that pair is what lets Spark BOUND the join state: a buffered
-    left row is droppable once the right watermark passes left.ts +
-    within, so state is O(events within the band), not O(history). An
-    inner stream-stream join emits pairs in append mode as soon as both
-    sides arrive; there is no held-back tail on a finite stream.
+    click is droppable once the view watermark passes click.ts + 1 hour,
+    so state is O(events within the band), not O(history). An inner
+    stream-stream join emits pairs in append mode as soon as both sides
+    arrive; there is no held-back tail on a finite stream.
 
-    ``how="left_outer"`` additionally emits (left, NULL) for unmatched
-    left rows — but only at STATE EVICTION: a null-extended row appears
-    once no future right row can match, i.e. once the global watermark
-    (the MIN over both branches' per-column watermarks, each
-    ms-truncated max event time − delay) passes left.ts + within. On a
-    finite stream the trailing lefts inside that horizon are withheld —
-    deterministic, and mirrored by the batch oracle's watermark cutoff
+    ``how="left_outer"`` additionally emits (click, NULL) for unmatched
+    clicks — but only at STATE EVICTION: a null-extended row appears
+    once no future view can match, i.e. once the global watermark (the
+    MIN over both branches' per-column watermarks, each ms-truncated max
+    event time − delay) passes click.ts + 1 hour. On a finite stream the
+    trailing clicks inside that horizon are withheld — deterministic,
+    and mirrored by the batch oracle's watermark cutoff
     (plans/streaming_queries.py::stream_stream_leftouter).
 
     At 100 TB the state bound is the whole story — without the interval
@@ -244,7 +242,7 @@ def interval_join_pairs(
             "use inner, left_outer, full_outer, or left_semi"
         )
     lt = (
-        left.filter(F.col("event_type") == left_type)
+        events.filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("left_id"),
             F.col("user_id").alias("left_user"),
@@ -253,7 +251,7 @@ def interval_join_pairs(
         .withWatermark("left_ts", watermark)
     )
     rt = (
-        right.filter(F.col("event_type") == right_type)
+        events.filter(F.col("event_type") == "view")
         .select(
             F.col("event_id").alias("right_id"),
             F.col("user_id").alias("right_user"),
@@ -265,7 +263,7 @@ def interval_join_pairs(
         rt,
         (F.col("left_user") == F.col("right_user"))
         & (F.col("right_ts") >= F.col("left_ts"))
-        & (F.col("right_ts") <= F.col("left_ts") + F.expr(f"INTERVAL {within}")),
+        & (F.col("right_ts") <= F.col("left_ts") + F.expr("INTERVAL 1 hour")),
         how,
     )
     # A semi join keeps only the left side's columns — no view_id exists.

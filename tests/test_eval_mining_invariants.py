@@ -583,3 +583,15 @@ def test_survivorship_packing_domain_holds_on_fixture(spark):
     ).first()
     assert 0 <= row.min_id and row.max_id < (1 << 40)
     assert 0 <= row.min_ch and row.max_ch <= 100000
+
+
+def test_conformal_approx_exact_leg_matches_coverage(spark):
+    """The approx builder's exact anchor is the exact builder: per
+    segment, qhat_exact, n_calib and n_test equal
+    eval_conformal_coverage's qhat, n_calib and n_test."""
+    exact = {r.g: r for r in _rows(spark, "eval_conformal_coverage")}
+    approx = {r.g: r for r in _rows(spark, "eval_conformal_approx")}
+    assert exact and set(approx) == set(exact)
+    for g, r in approx.items():
+        e = exact[g]
+        assert (r.qhat_exact, r.n_calib, r.n_test) == (e.qhat, e.n_calib, e.n_test), (r, e)

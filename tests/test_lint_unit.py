@@ -289,6 +289,31 @@ def test_checkpointed_unhinted_frame_not_flagged():
     assert _unbounded_broadcast_findings(plan) == []
 
 
+def test_cached_fact_table_hint_flagged():
+    # A cached table frame renders as an InMemoryRelation leaf whose
+    # children are the cached PHYSICAL plan (FileScan, no `Relation`
+    # line); the fact scan must still be seen through its output list.
+    # Rendered from a live `.cache()` of load_table(..., "embeddings").
+    from batch_public_spark.plans.lint import _unbounded_broadcast_findings
+
+    plan = _join_plan(
+        ", rightHint=(strategy=broadcast)",
+        [
+            "+- Filter isnotnull(vec_id#0L)",
+            "   +- InMemoryRelation [vec_id#0L, embedding#1, label#2], "
+            "StorageLevel(disk, memory, deserialized, 1 replicas)",
+            "         +- *(1) ColumnarToRow",
+            "            +- FileScan parquet [vec_id#0L,embedding#1,label#2] "
+            "Batched: true, DataFilters: [], Format: Parquet, Location: "
+            "InMemoryFileIndex(1 paths)[file:/data/embeddings.parquet], "
+            "PartitionFilters: [], PushedFilters: [], "
+            "ReadSchema: struct<vec_id:bigint,embedding:array<float>,label:int>",
+        ],
+    )
+    kinds = [f.kind for f in _unbounded_broadcast_findings(plan)]
+    assert kinds == ["unbounded-broadcast"]
+
+
 def test_filter_bound_inside_or_branch_does_not_bound():
     # `vec_id = 5 OR isnotnull(x)` selects nothing on its own — the
     # literal comparison must be a top-level conjunct (r10 ADVICE).

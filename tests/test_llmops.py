@@ -800,3 +800,13 @@ def test_kneser_ney_beats_addk_on_training_corpus(spark):
         assert srow["lower"] / srow["n"] >= 0.75, srow
     finally:
         j.unpersist()
+
+
+def test_span_removal_docs_are_extractor_id_b(spark):
+    """Removal keeps the first copy of a shared span, so the only docs it
+    rewrites are the higher ids of the extractor's pairs: every removed
+    doc_id is the id_b of some llmops_repeated_span_extract pair."""
+    id_b = {r.id_b for r in QUERIES["llmops_repeated_span_extract"].fn(spark, SF_DIR).collect()}
+    removed = {r.doc_id for r in QUERIES["llmops_repeated_span_removal"].fn(spark, SF_DIR).collect()}
+    assert removed
+    assert removed <= id_b, sorted(removed - id_b)[:5]

@@ -14,6 +14,10 @@ for the cases where the GLOBAL operator itself is the query's subject.
 from __future__ import annotations
 
 import ast
+import io
+import itertools
+import tokenize
+from collections import defaultdict
 from pathlib import Path
 
 from pyspark.sql import functions as F
@@ -175,6 +179,86 @@ def test_cut_is_the_only_local_checkpoint():
     cut's docstring describes is an edit to one function."""
     sites = [site[:3] for site in _package_calls(("localCheckpoint",))]
     assert [site[:2] for site in sites] == [("sources/tables.py", "cut")], sites
+
+
+# Code lines a window must span before two function bodies count as twins.
+TWIN_WINDOW = 6
+
+# ("module:function", "module:function") pairs, sorted, whose bodies may
+# share a TWIN_WINDOW-line window; the value is why the two bodies must
+# stay apart. Module paths are relative to batch_public_spark/.
+TWIN_ALLOWLIST: dict[tuple[str, str], str] = {}
+
+_LAYOUT_TOKENS = {
+    tokenize.COMMENT,
+    tokenize.NL,
+    tokenize.NEWLINE,
+    tokenize.INDENT,
+    tokenize.DEDENT,
+    tokenize.ENDMARKER,
+}
+_STRING_TOKENS = {tokenize.STRING, getattr(tokenize, "FSTRING_MIDDLE", tokenize.STRING)}
+
+
+def _function_bodies():
+    """Yield ("module:function", code lines) for every top-level function
+    in batch_public_spark/. A code line is the line's tokens joined by one
+    space; docstrings, multi-line string literals, comments, imports and
+    lines holding only brackets or commas are left out."""
+    root = Path(__file__).resolve().parent.parent / "batch_public_spark"
+    modules = sorted(root.rglob("*.py"))
+    assert len(modules) > 20, root
+    for path in modules:
+        src = path.read_text()
+        tree = ast.parse(src)
+        skipped = set()
+        for node in ast.walk(tree):
+            if isinstance(node, (ast.Import, ast.ImportFrom)):
+                skipped.update(range(node.lineno, node.end_lineno + 1))
+            elif isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) and ast.get_docstring(node, clean=False) is not None:
+                doc = node.body[0]
+                skipped.update(range(doc.lineno, doc.end_lineno + 1))
+        lines = defaultdict(list)
+        for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+            if tok.type in _LAYOUT_TOKENS or tok.start[0] in skipped:
+                continue
+            if tok.type in _STRING_TOKENS and tok.start[0] != tok.end[0]:
+                continue
+            lines[tok.start[0]].append(tok.string)
+        rel = path.relative_to(root).as_posix()
+        for top in tree.body:
+            if not isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            code = []
+            for line in range(top.body[0].lineno, top.end_lineno + 1):
+                toks = lines.get(line)
+                if toks and not all(t in "()[]{}," for t in toks):
+                    code.append(" ".join(toks))
+            yield f"{rel}:{top.name}", code
+
+
+def test_no_twin_bodies():
+    """No two top-level functions in the package share a run of
+    TWIN_WINDOW identical code lines: a copied idiom gets one helper
+    beside its callers instead, so a fix to it is an edit to one body.
+    Every TWIN_ALLOWLIST pair must still share a window."""
+    owners = defaultdict(set)
+    for owner, code in _function_bodies():
+        for i in range(len(code) - TWIN_WINDOW + 1):
+            owners[tuple(code[i : i + TWIN_WINDOW])].add(owner)
+    shared = {}
+    for window, funcs in owners.items():
+        for pair in itertools.combinations(sorted(funcs), 2):
+            shared.setdefault(pair, window)
+    twins = {pair: window for pair, window in shared.items() if pair not in TWIN_ALLOWLIST}
+    assert not twins, "function bodies sharing a %d-line window:\n%s" % (
+        TWIN_WINDOW,
+        "\n".join(f"{a} / {b}: {w[0]!r} ..." for (a, b), w in sorted(twins.items())),
+    )
+    stale = sorted(set(TWIN_ALLOWLIST) - set(shared))
+    assert not stale, f"TWIN_ALLOWLIST pairs that no longer share a window: {stale}"
 
 
 def test_registry_plans_are_scale_clean(spark):

@@ -295,14 +295,14 @@ def test_interval_join_how_normalization_and_rejects(spark):
     events = read_events_stream(spark, SF_DIR)
     # alias forms build the same plan shape as the canonical spelling
     for alias in ("fullouter", "full", "outer", "FULL_OUTER"):
-        s = interval_join_pairs(events, events, how=alias)
+        s = interval_join_pairs(events, how=alias)
         assert set(s.columns) == {"user_id", "click_id", "view_id"}
-    semi = interval_join_pairs(events, events, how="leftsemi")
+    semi = interval_join_pairs(events, how="leftsemi")
     assert set(semi.columns) == {"user_id", "click_id"}
     with _pytest.raises(ValueError, match="unsupported how"):
-        interval_join_pairs(events, events, how="right_outer")
+        interval_join_pairs(events, how="right_outer")
     with _pytest.raises(ValueError, match="unsupported how"):
-        interval_join_pairs(events, events, how="cross")
+        interval_join_pairs(events, how="cross")
 
 
 def test_stream_build_leaves_no_view_or_checkpoint(spark):
